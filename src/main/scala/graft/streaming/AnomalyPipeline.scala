@@ -8,6 +8,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types.{StructType, TimestampType}
 
 import graft.core.{Dsl, Durations}
+import graft.functions.Param
 import graft.operators.{Anomaly, Extraction, WindowStats}
 import graft.operators.Extraction.FieldCol
 
@@ -46,6 +47,9 @@ class AnomalyPipeline(
     require(dsl.topics.flatMap(_.fields.flatMap(_.windows)).forall(_ % b == 0),
       s"statsBucketSec=$b requires every DSL window to be a multiple of it")
   }
+
+  // stage ids shift as the segment union widens: id-free class names let triggers share compiled code
+  spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
 
   import spark.implicits._
 
@@ -153,49 +157,50 @@ class AnomalyPipeline(
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Restored store: absent (first start) is empty; a committed
+    * segment that is present but unreadable throws, naming its dir —
+    * dropping it would silently shrink every trailing window.
+    */
   private val segments = new AtomicReference[Vector[Segment]]({
     stateDir.flatMap { d =>
-      try {
-        val storePath = new org.apache.hadoop.fs.Path(s"$d/store")
-        val fsys = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fsys.exists(storePath)) None
-        else {
-          // one subdirectory per persisted segment, named
-          // seg_<maxTsUs>_<unique>; directories are immutable once
-          // written, so reads never race a rewrite and no checkpoint
-          // copy is needed. The manifest is the commit record: dirs it
-          // does not list are leftovers of a crash mid-commit (e.g.
-          // compaction wrote its merged dir but died before deleting
-          // the inputs) and must NOT be restored — doing so would
-          // double-count their rows.
-          val manifest = readManifest(d)
-          val dirs = fsys.listStatus(storePath).filter(_.isDirectory).toVector
-            .filter(_.getPath.getName.startsWith("seg_"))
-          val (live, orphans) = manifest match {
-            case Some(names) => dirs.partition(st => names(st.getPath.getName))
-            case None =>
-              if (dirs.nonEmpty)
-                log.warn(s"no segment manifest under $storePath; restoring all " +
-                  s"${dirs.size} segment dirs (rows may repeat if a crash interrupted compaction)")
-              (dirs, Vector.empty)
-          }
-          orphans.foreach { st =>
-            log.warn(s"removing uncommitted segment dir ${st.getPath} (crash leftover)")
-            try fsys.delete(st.getPath, true) catch { case _: Throwable => () }
-          }
-          val segs = live.flatMap { st =>
-            st.getPath.getName.split('_') match {
-              case Array("seg", ts, _*) =>
-                try {
-                  val df = spark.read.parquet(st.getPath.toString).persist()
-                  Some(Segment(ts.toLong, df, df.count(), Some(st.getPath.toString)))
-                } catch { case _: Throwable => None }
-              case _ => None
-            }
-          }
-          if (segs.isEmpty) None else Some(segs.sortBy(_.maxTsUs))
+      val storePath = new org.apache.hadoop.fs.Path(s"$d/store")
+      val fsys = hadoopFs(storePath)
+      if (!fsys.exists(storePath)) None
+      else {
+        // one subdirectory per persisted segment, named
+        // seg_<maxTsUs>_<unique>; directories are immutable once
+        // written, so reads never race a rewrite and no checkpoint
+        // copy is needed. The manifest is the commit record: dirs it
+        // does not list are leftovers of a crash mid-commit (e.g.
+        // compaction wrote its merged dir but died before deleting
+        // the inputs) and must NOT be restored — doing so would
+        // double-count their rows.
+        val manifest = readManifest(d)
+        val dirs = fsys.listStatus(storePath).filter(_.isDirectory).toVector
+          .filter(_.getPath.getName.startsWith("seg_"))
+        val (live, orphans) = manifest match {
+          case Some(names) => dirs.partition(st => names(st.getPath.getName))
+          case None =>
+            if (dirs.nonEmpty)
+              log.warn(s"no segment manifest under $storePath; restoring all " +
+                s"${dirs.size} segment dirs (rows may repeat if a crash interrupted compaction)")
+            (dirs, Vector.empty)
         }
-      } catch { case _: Throwable => None }
+        orphans.foreach { st =>
+          log.warn(s"removing uncommitted segment dir ${st.getPath} (crash leftover)")
+          try fsys.delete(st.getPath, true) catch { case _: Throwable => () }
+        }
+        val segs = live.map { st =>
+          val p = st.getPath.toString
+          AnomalyPipeline.readingState(p) {
+            val ts = st.getPath.getName.split('_')(1).toLong
+            val df = spark.read.parquet(p).persist()
+            try Segment(ts, df, df.count(), Some(p))
+            catch { case e: Throwable => df.unpersist(); throw e }
+          }
+        }
+        if (segs.isEmpty) None else Some(segs.sortBy(_.maxTsUs))
+      }
     }.getOrElse(Vector.empty)
   })
 
@@ -237,7 +242,7 @@ class AnomalyPipeline(
     import org.apache.spark.sql.types.DecimalType
     val horizonBucketUs = horizonUs / (bucketSec * 1000000L) * (bucketSec * 1000000L)
     bucketState.get().map(_.union(fresh)).getOrElse(fresh)
-      .filter(col("bucket_us") >= lit(horizonBucketUs))
+      .filter(col("bucket_us") >= Param.long(horizonBucketUs))
       .groupBy(col("topic"), col("path"), col("bucket_us"))
       .agg(
         sum(col("p_cnt")).as("p_cnt"),
@@ -261,17 +266,22 @@ class AnomalyPipeline(
     */
   private val cooldownCache =
     new AtomicReference[Map[(String, String, Long), Long]]({
-      stateDir.map { d =>
-        // restore only keys the CURRENT DSL configures: a snapshot
-        // written under an older, wider DSL must not carry stale keys
-        // past the configured-cardinality bound below
-        try spark.read.parquet(s"$d/cooldown")
-          .collect()
-          .map(r => ((r.getString(0), r.getString(1), r.getLong(2)), r.getLong(3)))
-          .filter { case (k, _) => configuredKeys(k) }
-          .toMap
-        catch { case _: Throwable => Map.empty[(String, String, Long), Long] }
-      }.getOrElse(Map.empty)
+      stateDir.map(d => new org.apache.hadoop.fs.Path(s"$d/cooldown"))
+        .filter(p => hadoopFs(p).exists(p)) // absent: first start
+        .map { p =>
+          // present but unreadable throws: an empty map would re-arm
+          // every cooldown and emit duplicate anomaly records. Restore
+          // only keys the CURRENT DSL configures: a snapshot written
+          // under an older, wider DSL must not carry stale keys past
+          // the configured-cardinality bound below
+          AnomalyPipeline.readingState(p.toString) {
+            spark.read.parquet(p.toString)
+              .collect()
+              .map(r => ((r.getString(0), r.getString(1), r.getLong(2)), r.getLong(3)))
+              .filter { case (k, _) => configuredKeys(k) }
+              .toMap
+          }
+        }.getOrElse(Map.empty)
     })
 
   /** The configured stat keys (topic, path, window) — the hard bound on
@@ -311,17 +321,17 @@ class AnomalyPipeline(
           // post-restart stats diverge from a continuous run.
           val horizonBucketUs = horizonUs / (b * 1000000L) * (b * 1000000L)
           val init = WindowStats.bucketPartials(
-            currentStore.filter(unix_micros(col("produced")) >= lit(horizonBucketUs)), b)
+            currentStore.filter(unix_micros(col("produced")) >= Param.long(horizonBucketUs)), b)
             .localCheckpoint(eager = true)
           bucketState.set(Some(init))
           init
         }
         val nowBUs = unixMicrosOf(now) / (b * 1000000L) * (b * 1000000L)
-        WindowStats.rawBucketedStats(buckets, windows, timestamp_micros(lit(nowBUs)))
+        WindowStats.rawBucketedStats(buckets, windows, Param.timestampMicros(nowBUs))
       case None =>
         WindowStats.rawTrailingStats(
-          currentStore.filter(unix_micros(col("produced")) >= lit(horizonUs)),
-          windows, lit(now))
+          currentStore.filter(unix_micros(col("produced")) >= Param.long(horizonUs)),
+          windows, Param.timestamp(now))
     }
 
   /** Stored sample count (reference: Sarkac.getStats db.storedEvents,
@@ -450,7 +460,7 @@ class AnomalyPipeline(
     val anomalies: Dataset[CooldownState.AnomalyEvent] = snapshot.get() match {
       case None => spark.emptyDataset[CooldownState.AnomalyEvent]
       case Some(stats) =>
-        Anomaly.detect(extracted, stats, lit(now))
+        Anomaly.detect(extracted, stats, Param.timestamp(now))
           .select(
             col("topic"), col("path"), col("window_sec"),
             unix_micros(col("produced")).as("produced_us"),
@@ -495,7 +505,7 @@ class AnomalyPipeline(
         val (merged, superseded) =
           if (statsBucketSec.isEmpty && keep.size > AnomalyPipeline.CompactSegments) {
             val all = keep.map(_.df).reduce(_ union _)
-              .filter(unix_micros(col("produced")) >= lit(horizonUs))
+              .filter(unix_micros(col("produced")) >= Param.long(horizonUs))
               .localCheckpoint(eager = true)
             val maxTs = keep.map(_.maxTsUs).max
             val nRows = all.count()
@@ -598,6 +608,17 @@ object AnomalyPipeline {
 
   /** Segment-count threshold that triggers store compaction. */
   val CompactSegments = 12
+
+  /** Run one restore read of persisted state at `path`; any failure
+    * rethrows naming the path (present-but-unreadable state must not
+    * restore as empty).
+    */
+  private[streaming] def readingState[T](path: String)(read: => T): T =
+    try read
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        throw new IllegalStateException(s"persisted state at $path is present but unreadable: $e", e)
+    }
 
   /** Recursively delete one persisted-segment directory. */
   private[streaming] def deletePath(spark: SparkSession, p: String): Unit =

@@ -10,7 +10,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   * JDK's built-in HttpServer (no extra dependencies):
   *
   *  - GET    /                   index of endpoints
-  *  - GET    /status             counters + stored-event count
+  *  - GET    /status             counters + stored-event count + codegen totals
   *  - GET    /healthcheck        200 empty
   *  - GET    /dsl                the active (static + discovered) DSL
   *  - GET    /dsl/computed       per-(topic:path:window) {median, stdDev}
@@ -84,10 +84,14 @@ class StatusServer(
           counters.snapshot.toSeq.sortBy(_._1).map { case (k, v) => s"${q(k)}: $v" })
         val db = jsonObject(Seq(
           s"${q("storedEvents")}: ${pipeline.map(_.storedEventCount).getOrElse(0L)}"))
+        val (compiles, compileMs) = StatusServer.codegenTotals
+        val codegen = jsonObject(Seq(
+          s"${q("compiles")}: $compiles", s"${q("compileMs")}: $compileMs"))
         (200, jsonObject(Seq(
           s"${q("stream")}: null", // no broker wired in this environment
           s"${q("db")}: $db",
-          s"${q("sarkac")}: $sarkac")))
+          s"${q("sarkac")}: $sarkac",
+          s"${q("codegen")}: $codegen")))
     })
     s.createContext("/healthcheck", exchange => route(exchange) {
       case ("GET", _) => (200, "")
@@ -121,11 +125,15 @@ class StatusServer(
     s.createContext("/metrics", exchange => route(exchange) {
       case ("GET", _) =>
         // Prometheus text exposition (beyond the reference surface):
-        // counters as monotonic totals plus the stored-event gauge
-        val counterLines = counters.snapshot.toSeq.sortBy(_._1).flatMap { case (k, v) =>
-          val name = "graft_" + k.replaceAll("([A-Z])", "_$1").toLowerCase + "_total"
-          Seq(s"# TYPE $name counter", s"$name $v")
-        }
+        // counters as monotonic totals, Spark's codegen totals (a
+        // steady stream compiles nothing, so a climbing count flags a
+        // per-trigger value inlined into generated code) and the
+        // stored-event gauge
+        val (compiles, compileMs) = StatusServer.codegenTotals
+        val totals = counters.snapshot.toSeq.sortBy(_._1).map { case (k, v) =>
+          ("graft_" + k.replaceAll("([A-Z])", "_$1").toLowerCase + "_total", v)
+        } ++ Seq("graft_codegen_compiles_total" -> compiles, "graft_codegen_compile_ms_total" -> compileMs)
+        val counterLines = totals.flatMap { case (name, v) => Seq(s"# TYPE $name counter", s"$name $v") }
         val gauge = Seq(
           "# TYPE graft_stored_events gauge",
           s"graft_stored_events ${pipeline.map(_.storedEventCount).getOrElse(0L)}")
@@ -182,4 +190,14 @@ class StatusServer(
       s"${q(tc.topic)}: ${jsonObject(tc.fields.map(f =>
         s"${q(f.path)}: [${f.windows.mkString(",")}]"))}"
     })
+}
+
+object StatusServer {
+
+  /** Spark's process-wide codegen totals: classes Janino compiled
+    * (CodegenMetrics) and the milliseconds spent compiling them.
+    */
+  private def codegenTotals: (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L)
 }

@@ -16,6 +16,12 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // Spark's default codegen cache (100 entries, 4 LRU segments of
+      // 25) can hold a stream's steady working set (~70-80 entries: each
+      // whole-stage class is cached once per class loader) or thrash,
+      // depending on per-JVM hashing; a larger cache keeps
+      // AnomalyPipelineSpec's compile count a test of the generated code
+      .config("spark.sql.codegen.cache.maxEntries", "512")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

@@ -198,4 +198,22 @@ class RestartSpec extends SparkSpec {
     assert(p2.cooldownSnapshot.keySet == Set(("test-topic", "sub.one", 300L)),
       "restore must filter to configured keys")
   }
+
+  test("an unreadable cooldown snapshot fails the restore, naming its path") {
+    val dir = Files.createTempDirectory("graft_state_badcd").toFile.getAbsolutePath
+    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"))))
+    val p1 = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
+    p1.processBatch(script(0, 60).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 60000))
+    p1.processBatch(script(60, 120).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 120000))
+    assert(p1.cooldownSnapshot.nonEmpty)
+
+    // an empty map would re-arm every cooldown (duplicate records)
+    val parts = new java.io.File(s"$dir/cooldown").listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.nonEmpty)
+    parts.foreach(f => Files.write(f.toPath, "not parquet".getBytes("UTF-8")))
+    val e = intercept[IllegalStateException] {
+      new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
+    }
+    assert(e.getMessage.contains(s"$dir/cooldown"), e.getMessage)
+  }
 }

@@ -81,6 +81,17 @@ class StatusServerSpec extends SparkSpec {
       val (cm, metrics) = send(port, "/metrics")
       assert(cm == 200 && metrics.contains("graft_analysed_messages_total 7"))
       assert(metrics.contains(s"graft_stored_events ${pipeline.storedEventCount}"))
+      // Spark's codegen totals, the same values on /metrics and /status
+      // (the driven pipeline compiled its first triggers' classes)
+      def series(name: String) =
+        s"(?m)^$name (\\d+)$$".r.findFirstMatchIn(metrics).map(_.group(1).toLong)
+      val compiles = series("graft_codegen_compiles_total")
+      val compileMs = series("graft_codegen_compile_ms_total")
+      assert(compiles.exists(_ > 0L) && compileMs.isDefined, metrics)
+      assert(metrics.contains("# TYPE graft_codegen_compiles_total counter"))
+      assert(metrics.contains("# TYPE graft_codegen_compile_ms_total counter"))
+      assert(send(port, "/status")._2.contains(
+        s"\"codegen\": {\"compiles\": ${compiles.get}, \"compileMs\": ${compileMs.get}}"))
       // unknown path 404s; wrong method 405s
       assert(send(port, "/nope")._1 == 404)
       assert(send(port, "/status", "POST")._1 == 405)

@@ -89,4 +89,20 @@ class StoreManifestSpec extends SparkSpec {
     val p2 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
     assert(p2.storedEventCount == 0)
   }
+
+  test("an unreadable segment the manifest lists fails the restore, naming its dir") {
+    val dir = Files.createTempDirectory("graft_manifest_bad").toFile.getAbsolutePath
+    val p1 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
+    p1.processBatch(batch(0, 60), new Timestamp(t0 + 60000))
+    p1.processBatch(batch(60, 120), new Timestamp(t0 + 120000))
+    val segs = new java.io.File(s"$dir/store").listFiles().filter(_.getName.startsWith("seg_"))
+    assert(segs.length == 2)
+
+    // dropping the segment would silently shrink every trailing window
+    val bad = segs.minBy(_.getName)
+    bad.listFiles().filter(_.getName.startsWith("part-"))
+      .foreach(f => Files.write(f.toPath, "not parquet".getBytes("UTF-8")))
+    val e = intercept[IllegalStateException](new AnomalyPipeline(spark, dsl, stateDir = Some(dir)))
+    assert(e.getMessage.contains(bad.getName), e.getMessage)
+  }
 }

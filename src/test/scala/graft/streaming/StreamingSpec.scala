@@ -209,6 +209,28 @@ class AnomalyPipelineSpec extends SparkSpec {
     assert(emitted(0) == 0L) // no snapshot on first trigger
     assert(emitted(1) > 0L) // spikes alarm on second trigger
   }
+
+  test("steady-state triggers compile no generated code (exact and bucketed stats)") {
+    // per-trigger values (now, horizons) enter plans as bound params,
+    // so from trigger 2 on every stage's source repeats and hits the
+    // codegen cache; a value inlined as a literal recompiles per trigger
+    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"), "two" -> Seq("5m"))))
+    for (bucketSec <- Seq(None, Some(60L))) {
+      val dir = java.nio.file.Files.createTempDirectory("graft_codegen").toFile.getAbsolutePath
+      val p = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L,
+        stateDir = Some(dir), statsBucketSec = bucketSec)
+      val compiles = (0 until 6).map { tr =>
+        val emitted = p.processBatch(
+          generatorScript(tr * 60L, (tr + 1) * 60L).toDF("topic", "key", "value", "ts"),
+          new Timestamp(t0 + (tr + 1) * 60000L))
+        p.toAnomalyRecords(emitted).collect()
+        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      }
+      assert(p.storedEventCount > 0L && p.cooldownSnapshot.nonEmpty, "the triggers did no work")
+      assert(compiles.drop(2).distinct.size == 1,
+        s"statsBucketSec=$bucketSec: Janino compile count per trigger end moved after trigger 2: $compiles")
+    }
+  }
 }
 
 class CooldownStateSpec extends SparkSpec {
