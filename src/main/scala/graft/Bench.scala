@@ -94,14 +94,13 @@ object Bench {
       .getOrElse(Set.empty[String])
 
     // SPARK_GRAFT_MEMO=0: memo-off mode (round-17, VERDICT r16 Next #2b)
-    // — every materialized per-(application, dataset) memo is released
-    // before EVERY timed run, so each run pays the full construction of
-    // whatever artifacts its query composes. The driver can compare
-    // memo-on and memo-off records to see exactly what the memo
-    // discipline is worth; `memo_mode` in the JSON says which this is.
-    // (Scalar snapshot anchors — max/min ts, row counts — are TrieMap
-    // singletons outside the Memo registry and stay; they are one-row
-    // collect jobs, not materialized relations.)
+    // — every per-(application, dataset) memo entry is released before
+    // EVERY timed run, so each run pays the full construction of
+    // whatever artifacts its query composes: materialized relations,
+    // scalar snapshot anchors (max/min ts, row counts), persisted index
+    // tables and frozen fits alike. Comparing memo-on and memo-off
+    // records shows exactly what the memo discipline is worth;
+    // `memo_mode` in the JSON says which this is.
     val memoOff = sys.env.get("SPARK_GRAFT_MEMO").contains("0")
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]

@@ -3,100 +3,130 @@ package graft.core
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** Bounded, timed, releasable memo for per-(application, dataset)
-  * materialized DataFrames — the shared home for the engine's
-  * "materialize the artifact once, every consumer reads the layout"
-  * discipline (keep list, cluster pair graph, component labels, corpus
-  * signatures, passage spans, phash index, ...).
+/** The one cache for per-dataset artifacts: materialized DataFrames
+  * (keep list, cluster pair graph, component labels, corpus
+  * signatures, passage spans, ...), scalar snapshot anchors (max/min
+  * ts, row counts), persisted-table names, frozen fits, and tuples of
+  * those. Every consumer writes `memo(spark, sfDir) { build }`; the
+  * memo forms the per-(application, dataset) key itself, and a
+  * `variant` discriminates the artifacts one dataset has several of
+  * (a band width, a posting cap, a key set).
   *
-  * Three contracts the bare per-object TrieMaps could not give:
+  * Contracts:
   *
-  *  - '''Bounded.''' Entries are LRU-evicted past [[maxEntries]]
-  *    datasets, and eviction RELEASES the evicted relation's
-  *    checkpointed blocks (best-effort unpersist of the underlying
-  *    checkpointed RDDs, then the strong reference drops so the
-  *    ContextCleaner can finish the job). A long-lived session touching
-  *    many datasets no longer accumulates pinned block-manager storage
-  *    without bound.
+  *  - '''Bounded.''' Entries are LRU-evicted past [[maxEntries]], and
+  *    eviction RELEASES every checkpoint the evicted value holds
+  *    (best-effort unpersist of the checkpointed RDDs, then the strong
+  *    reference drops so the ContextCleaner can finish the job). A
+  *    long-lived session touching many datasets does not accumulate
+  *    pinned block-manager storage without bound.
   *  - '''Timed.''' Each build's wall-clock lands in a process-wide
-  *    registry ([[Memo.buildLog]]), so the bench artifact can report
-  *    the COLD construction cost of every memoized artifact explicitly
-  *    (an `artifacts` map) instead of silently folding it into the
-  *    first consumer's first run — warm per-query medians and the cold
-  *    pass are then both visible, and round-over-round totals compare
-  *    like for like.
-  *  - '''Releasable.''' [[Memo.releaseAll]] is the PUBLIC API a library
-  *    caller (not just the test seams) uses to drop every materialized
-  *    artifact when a composition is done with a dataset.
+  *    registry ([[Memo.buildLog]]), so the bench reports the COLD
+  *    construction cost of every artifact explicitly instead of
+  *    folding it into the first consumer's first run.
+  *  - '''Releasable.''' [[Memo.releaseAll]] is the public "done with
+  *    these datasets" path: it drops every entry of every memo —
+  *    scalars and fits included — so a dataset rewritten in place is
+  *    re-derived from its new contents. It is also the test seam.
+  *  - '''Not transparent.''' A build inside
+  *    [[Mat.withTransparent]] is returned but neither read from nor
+  *    written to the cache: the plan-inspection seam must see the full
+  *    operator tree, and an un-materialized plan must never be served
+  *    to a later production call.
   *
-  * Builds are serialized per memo (a concurrent `getOrElseUpdate` on a
-  * TrieMap could run the expensive build twice and leak the loser's
-  * checkpoint); distinct memos build concurrently — the keep-list
-  * legs' concurrent materialization crosses two different memos and
-  * stays parallel.
+  * A checkpoint held by a value — the value itself, or a component of
+  * a pair or triple — is re-laid to a size-derived partition count
+  * ([[Mat.rightSizeStored]]), released with its entry, and counted by
+  * [[Memo.storageBytes]].
+  *
+  * Builds are serialized per memo (a concurrent build of the same
+  * entry would run the expensive work twice and leak the loser's
+  * checkpoint); distinct memos build concurrently.
   */
-final class Memo(val name: String, val maxEntries: Int = 4) {
+final class Memo[V] private (val name: String, val maxEntries: Int, perApplication: Boolean) {
   Memo.register(this)
 
   // LinkedHashMap in access order via explicit re-insertion: last = MRU
-  private val entries = mutable.LinkedHashMap.empty[String, DataFrame]
+  private val entries = mutable.LinkedHashMap.empty[String, V]
 
-  def getOrElseUpdate(key: String, build: => DataFrame): DataFrame = synchronized {
-    entries.remove(key) match {
-      case Some(df) =>
-        entries.put(key, df) // refresh recency
-        df
-      case None =>
-        val t0 = System.nanoTime()
-        // size-derived storage layout for checkpointed entries: a small
-        // artifact built 32-wide must not pin one scan task per build
-        // core for every later consumer (Mat.rightSizeStored — a no-op
-        // for non-checkpoint entries and for genuinely large layouts);
-        // the re-layout pass is part of the timed cold build
-        val df = Mat.rightSizeStored(build)
-        Memo.logBuild(name, key, (System.nanoTime() - t0) / 1e9)
-        entries.put(key, df)
-        while (entries.size > maxEntries) {
-          val (_, evicted) = entries.head
-          entries.remove(entries.head._1)
-          Memo.release(evicted)
-        }
-        df
+  def apply(spark: SparkSession, dataset: String, variant: String = "")(build: => V): V =
+    if (Mat.isTransparent) build
+    else synchronized {
+      val base = if (perApplication) s"${spark.sparkContext.applicationId}|$dataset" else dataset
+      val key = if (variant.isEmpty) base else s"$base|$variant"
+      entries.remove(key) match {
+        case Some(v) =>
+          entries.put(key, v) // refresh recency
+          v
+        case None =>
+          val t0 = System.nanoTime()
+          // size-derived storage layout: a small artifact built 32-wide
+          // must not pin one scan task per build core for every later
+          // consumer; the re-layout pass is part of the timed cold build
+          val v = Memo.mapFrames(build)(Mat.rightSizeStored(_)).asInstanceOf[V]
+          Memo.logBuild(name, key, (System.nanoTime() - t0) / 1e9)
+          entries.put(key, v)
+          while (entries.size > maxEntries) {
+            val (k, evicted) = entries.head
+            entries.remove(k)
+            Memo.release(evicted)
+          }
+          v
+      }
     }
-  }
 
-  /** Drop (and release) every entry — the test seam and the public
-    * release path.
-    */
+  /** Drop (and release) every entry. */
   def clear(): Unit = synchronized {
     entries.valuesIterator.foreach(Memo.release)
     entries.clear()
   }
 
+  /** Key → value of every entry (a fit memo's keys are its datasets). */
+  private[graft] def snapshot: Map[String, V] = synchronized(entries.toMap)
+
+  private def size: Int = synchronized(entries.size)
+
   /** Ids of the checkpointed RDDs currently pinned by this memo's
     * entries (the blocks [[Memo.storageBytes]] attributes to the memo
     * estate).
     */
-  private[core] def rddIds: Set[Int] = synchronized {
-    entries.valuesIterator.flatMap { df =>
-      try df.queryExecution.analyzed.collect {
-        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
-      } catch { case _: Throwable => Nil }
-    }.toSet
+  private def rddIds: Set[Int] = synchronized {
+    entries.valuesIterator.flatMap(Memo.checkpointRdds).map(_.id).toSet
   }
 }
 
 object Memo {
-  private val all = TrieMap.empty[String, Memo]
+  private val all = TrieMap.empty[String, Memo[_]]
 
-  /** (memo name, dataset key, seconds) per build, in build order. */
+  /** (memo name, entry key, seconds) per build, in build order. */
   private val builds = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Double)]
+  private val buildsTotal = new java.util.concurrent.atomic.AtomicLong
 
-  private def register(m: Memo): Unit = all.put(m.name, m)
-  private def logBuild(name: String, key: String, sec: Double): Unit =
+  /** A per-(application, dataset) memo holding at most `maxEntries`
+    * entries.
+    */
+  def apply[V](name: String, maxEntries: Int = 4): Memo[V] =
+    new Memo[V](name, maxEntries, perApplication = true)
+
+  /** A frozen-fit memo: keyed by the dataset alone (one dataset fitted
+    * under two sessions is still one fit) and never evicting, so
+    * [[graft.pipeline.FrozenFit.single]] sees every dataset fitted in
+    * this JVM.
+    */
+  def fits[V](name: String): Memo[V] =
+    new Memo[V](name, Int.MaxValue, perApplication = false)
+
+  private def register(m: Memo[_]): Unit =
+    require(all.putIfAbsent(m.name, m).isEmpty,
+      s"a memo named ${m.name} is already registered; a second one would hide " +
+        "the first from releaseAll and storageBytes")
+
+  private def logBuild(name: String, key: String, sec: Double): Unit = {
     builds.add((name, key, sec))
+    buildsTotal.incrementAndGet()
+  }
 
   /** Snapshot of every build since [[resetLog]]: memo name → seconds
     * (latest build wins when a memo built more than once — one dataset
@@ -110,20 +140,14 @@ object Memo {
 
   def resetLog(): Unit = builds.clear()
 
-  /** Time a one-off artifact construction into the same build log —
-    * for materializations that are not DataFrame memo entries (e.g.
-    * persisted bucketed snapshot tables), so the bench `artifacts`
-    * map sees every corpus pass regardless of its storage form.
-    */
-  def timed[T](name: String, key: String)(body: => T): T = {
-    val t0 = System.nanoTime()
-    val r = body
-    logBuild(name, key, (System.nanoTime() - t0) / 1e9)
-    r
-  }
+  /** Builds since the JVM started (not reset by [[resetLog]]). */
+  def buildCount: Long = buildsTotal.get()
 
-  /** Release every materialized artifact in every memo — the library
-    * caller's "done with these datasets" hook.
+  /** Entries currently held across every memo. */
+  def entryCount: Int = all.values.map(_.size).sum
+
+  /** Release every entry of every memo — the library caller's "done
+    * with these datasets" hook.
     */
   def releaseAll(): Unit = all.values.foreach(_.clear())
 
@@ -132,25 +156,46 @@ object Memo {
     * bench reports it at run end, so "a long session's memo estate
     * stays bounded" is a number in every round record, not a claim.
     */
-  def storageBytes(spark: org.apache.spark.sql.SparkSession): Long = {
+  def storageBytes(spark: SparkSession): Long = {
     val ids = all.values.flatMap(_.rddIds).toSet
     spark.sparkContext.getRDDStorageInfo
       .filter(i => ids.contains(i.id))
       .map(i => i.memSize + i.diskSize).sum
   }
 
-  /** Best-effort release of a checkpointed relation's storage: unpersist
-    * the checkpointed RDDs inside the plan (an eager `localCheckpoint`
-    * leaves `LogicalRDD` leaves whose RDDs hold the materialized
-    * blocks), then let the dropped strong reference finish the job via
-    * the ContextCleaner. Never throws — release is an optimization, not
-    * a correctness step.
+  /** Apply `f` to every DataFrame a value holds — the value itself or
+    * a component of a pair or triple — rebuilding the tuple around the
+    * results; any other value passes through.
     */
-  private def release(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        try l.rdd.unpersist(blocking = false)
-        catch { case _: Throwable => () }
-      case _ => ()
-    } catch { case _: Throwable => () }
+  private def mapFrames(v: Any)(f: DataFrame => DataFrame): Any = v match {
+    case df: Dataset[_] => f(df.asInstanceOf[DataFrame])
+    case (a, b) => (mapFrames(a)(f), mapFrames(b)(f))
+    case (a, b, c) => (mapFrames(a)(f), mapFrames(b)(f), mapFrames(c)(f))
+    case other => other
+  }
+
+  /** The checkpointed RDDs inside the plans of a value's DataFrames
+    * (an eager `localCheckpoint` leaves `LogicalRDD` leaves whose RDDs
+    * hold the materialized blocks).
+    */
+  private def checkpointRdds(v: Any): Seq[org.apache.spark.rdd.RDD[_]] = {
+    val out = mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+    mapFrames(v) { df =>
+      try df.queryExecution.analyzed.foreach {
+        case l: org.apache.spark.sql.execution.LogicalRDD => out += l.rdd
+        case _ => ()
+      } catch { case _: Throwable => () }
+      df
+    }
+    out.toSeq
+  }
+
+  /** Best-effort release of the storage a value's checkpoints hold:
+    * unpersist the checkpointed RDDs, then let the dropped strong
+    * reference finish the job via the ContextCleaner. Never throws —
+    * release is an optimization, not a correctness step.
+    */
+  private def release(v: Any): Unit = checkpointRdds(v).foreach { r =>
+    try r.unpersist(blocking = false) catch { case _: Throwable => () }
+  }
 }

@@ -193,7 +193,7 @@ object Audio {
       .select(col("asset_id"), col("fp"), col("slot"),
         expr("shiftright(fp, 9 * slot) % 512").as("lmv"))
 
-  private val fpsMemo = new graft.core.Memo("audio_fps")
+  private val fpsMemo = graft.core.Memo[DataFrame]("audio_fps")
 
   /** The corpus fingerprint relation — memoized per (application,
     * dataset) AND persisted per dataset (the `ProfileStateStore`
@@ -211,13 +211,10 @@ object Audio {
     * — a stale table would hash-mismatch every audio query.
     */
   private[graft] def corpusFps(spark: SparkSession, sfDir: String): DataFrame =
-    fpsMemo.getOrElseUpdate(s"${spark.sparkContext.applicationId}|$sfDir",
+    fpsMemo(spark, sfDir)(
       graft.core.DatasetStore.persisted(spark, sfDir, "audio_fps",
         version = DerivationVersion)(
         packedFps(Tables.documents(spark, sfDir))))
-
-  /** Test seam: forget the memoized fingerprints. */
-  private[graft] def resetMemos(): Unit = { fpsMemo.clear(); dupPairsMemo.clear() }
 
   /** q_audio_dup_pairs: near-duplicate track pairs at ≥
     * [[MinLandmarkAgree]]/7 aligned-landmark agreement, with the
@@ -227,15 +224,14 @@ object Audio {
     */
   def audioDupPairs(spark: SparkSession, sfDir: String): DataFrame =
     if (graft.core.Mat.isTransparent) audioDupPairsFromFp(corpusFps(spark, sfDir))
-    else dupPairsMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    else dupPairsMemo(spark, sfDir)(
       audioDupPairsFromFp(corpusFps(spark, sfDir)).localCheckpoint(eager = true))
 
   // the verified member-pair relation is output-sized and read by TWO
   // registered consumers (the pair query itself and the recall eval's
   // candidate leg) — one posting self-join per snapshot, not one per
   // consumer (the phash_rep_pairs convention, audio modality)
-  private val dupPairsMemo = new graft.core.Memo("audio_dup_pairs")
+  private val dupPairsMemo = graft.core.Memo[DataFrame]("audio_dup_pairs")
 
   /** The pair pipeline over any (doc_id, text) relation (spec seam). */
   private[graft] def audioDupPairsOf(docs: DataFrame): DataFrame =
@@ -606,14 +602,13 @@ object Audio {
   def audioIncremental(spark: SparkSession, sfDir: String): DataFrame =
     // persisted per dataset like the text/image merged states
     // (deterministic, oracle-hash-gated), memoized per application
-    mergedStateMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    mergedStateMemo(spark, sfDir)(
       graft.core.DatasetStore.persisted(spark, sfDir, "audio_merged_state",
         version = DerivationVersion)(
         computeAudioIncremental(spark, sfDir)))
 
-  private val mergedStateMemo = new graft.core.Memo("audio_merged_state")
-  private val estateMemo = new graft.core.Memo("audio_estate_components")
+  private val mergedStateMemo = graft.core.Memo[DataFrame]("audio_merged_state")
+  private val estateMemo = graft.core.Memo[DataFrame]("audio_estate_components")
 
   private def computeAudioIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val (ta, tb) = graft.sources.AudioIndex.snapshotTables(spark, sfDir)
@@ -648,8 +643,7 @@ object Audio {
       .filter(expr(agreeSql("fp", "fp_c")) >= MinLandmarkAgree)
       .select(col("n.rep").as("b_doc"), col("a_rep").as("a_doc"))
       .distinct())
-    val aLabels = estateMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    val aLabels = estateMemo(spark, sfDir)(
       Dedup.componentsOfPairs(stars(0).unionAll(repPairs(bandsA)))
         .select(col("doc_id"), col("cluster_root"))
         .localCheckpoint(eager = true))

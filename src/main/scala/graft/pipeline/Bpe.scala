@@ -67,14 +67,10 @@ object Bpe {
     * must never gate another's parquet (see also the single-dataset
     * assertion in [[tokenCountBpeOracleSql]]).
     */
-  private val fitted =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String)]]
-
-  /** Test seam: drop all frozen merge tables. */
-  private[graft] def resetFit(): Unit = fitted.clear()
+  private val fitted = graft.core.Memo.fits[Seq[(String, String)]]("bpe_merges")
 
   def mergesFor(spark: SparkSession, sfDir: String): Seq[(String, String)] =
-    fitted.getOrElseUpdate(sfDir, learn(spark, sfDir))
+    fitted(spark, sfDir)(learn(spark, sfDir))
 
   /** Code-point string order for the fit tie-break. Java's natural
     * String order compares UTF-16 code units, which ranks
@@ -350,11 +346,7 @@ object Bpe {
   /** Distributed training trajectories (lhs, rhs, weighted pair count)
     * per dataset dir.
     */
-  private val trained =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, String, Long)]]
-
-  /** Test seam: drop the distributed-training trajectories. */
-  private[graft] def resetTrain(): Unit = trained.clear()
+  private val trained = graft.core.Memo.fits[Seq[(String, String, Long)]]("bpe_trajectory")
 
   // Shared trainer/vocab building blocks — the wrapping, the merge
   // chain, and the symbol extraction each exist ONCE per engine so the
@@ -403,7 +395,7 @@ object Bpe {
     )"""
 
   def trainedFor(spark: SparkSession, sfDir: String): Seq[(String, String, Long)] =
-    trained.getOrElseUpdate(sfDir, trainDistributed(spark, sfDir))
+    trained(spark, sfDir)(trainDistributed(spark, sfDir))
 
   /** The DISTRIBUTED BPE fit — same algorithm as [[learn]] (weighted
     * adjacent-pair counts over the word-frequency table, argmax per

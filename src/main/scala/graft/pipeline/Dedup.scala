@@ -256,8 +256,7 @@ object Dedup {
     // materialized lists). At the 100× probe scale the un-memoized form
     // re-shingled 500 k docs on every warm run (24.6 s); everything
     // downstream of the lists is key-bounded and stays per-query.
-    val lists = postingListsMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir#cap=$capI",
+    val lists = postingListsMemo(spark, sfDir, s"cap=$capI")(
       graft.core.DatasetStore.persisted(spark, sfDir, s"shingle_postings_cap$capI",
         version = s"v1-${ShingleN}gram-kmv")(
         shingleHashes(docs)
@@ -395,12 +394,10 @@ object Dedup {
     * report from the materialized output — re-running the shingle
     * explode + posting-list aggregation per report is the redundant
     * full-corpus pass the keepList memo already eliminated one level
-    * up. Deterministic, so memoization is observationally pure;
-    * [[resetClusterMemo]] is the test seam.
+    * up. Deterministic, so memoization is observationally pure.
     */
   def clusterPairs(spark: SparkSession, sfDir: String): DataFrame =
-    clusterPairsMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    clusterPairsMemo(spark, sfDir)(
       cappedPairScaffold(spark, sfDir, ClusterShingleFreqCap)(jaccardFinish)
         .localCheckpoint(eager = true))
 
@@ -408,12 +405,12 @@ object Dedup {
   // with the evicted checkpoint's blocks released, build seconds logged
   // for the bench `artifacts` map, and Memo.releaseAll() as the public
   // library-caller release API
-  private val clusterPairsMemo = new graft.core.Memo("cluster_pairs")
+  private val clusterPairsMemo = graft.core.Memo[DataFrame]("cluster_pairs")
 
   // keyed (dataset, cap): several caps are live per dataset
   // (PairGuardFreqCap, ShingleFreqCap, ClusterShingleFreqCap), so the
   // entry budget is wider than the usual 4
-  private val postingListsMemo = new graft.core.Memo("shingle_postings", maxEntries = 8)
+  private val postingListsMemo = graft.core.Memo[DataFrame]("shingle_postings", maxEntries = 8)
 
   // The corpus's exploded 5-gram relation (doc_id, sh), checkpointed
   // once per dataset: the UNCAPPED shingle universe read by the
@@ -430,33 +427,17 @@ object Dedup {
   // shape) must not have its blocks pulled mid-action. Two entries
   // cover the pairwise pattern; strictly-sequential single-dataset
   // consumers never notice (r14 advisory).
-  private val shingleExplodeMemo = new graft.core.Memo("shingle_explode", maxEntries = 2)
+  private val shingleExplodeMemo = graft.core.Memo[DataFrame]("shingle_explode", maxEntries = 2)
 
   private def shingleExplode(spark: SparkSession, sfDir: String): DataFrame =
-    shingleExplodeMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    shingleExplodeMemo(spark, sfDir)(
       shingleHashes(Tables.documents(spark, sfDir))
         .select(col("doc_id"), explode(col("hs")).as("sh"))
         .localCheckpoint(eager = true))
 
-  private val componentsMemo = new graft.core.Memo("components")
+  private val componentsMemo = graft.core.Memo[DataFrame]("components")
 
-  /** Test seam: drop the materialized pair graphs and cluster labels
-    * (specs that rewrite a dataset in place must reset — the
-    * `resetIvfFits` contract).
-    */
-  private[pipeline] def resetClusterMemo(): Unit = {
-    clusterPairsMemo.clear()
-    postingListsMemo.clear()
-    shingleExplodeMemo.clear()
-    componentsMemo.clear()
-    signaturesMemo.clear()
-    passageSpansMemo.clear()
-    estateComponentsMemo.clear()
-    mergedStateMemo.clear()
-  }
-
-  private val estateComponentsMemo = new graft.core.Memo("estate_components")
+  private val estateComponentsMemo = graft.core.Memo[DataFrame]("estate_components")
 
   val ngramJaccardCappedSql: String =
     s"""
@@ -589,14 +570,12 @@ object Dedup {
     * cluster pipeline, the ingest check's corpus side) read these
     * narrow (doc_id, 16-long) rows; the tokenize + rolling-hash +
     * 16-permutation pass runs once per dataset, not once per report.
-    * [[resetClusterMemo]] clears it.
     */
   private[pipeline] def corpusSignatures(spark: SparkSession, sfDir: String): DataFrame =
-    signaturesMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    signaturesMemo(spark, sfDir)(
       signatures(Tables.documents(spark, sfDir)).localCheckpoint(eager = true))
 
-  private val signaturesMemo = new graft.core.Memo("corpus_signatures")
+  private val signaturesMemo = graft.core.Memo[DataFrame]("corpus_signatures")
 
   /** MinHash + LSH near-dup pairs: 4 bands x 4 rows; candidates share a
     * band hash; similarity = matching signature positions / 16,
@@ -1294,16 +1273,15 @@ object Dedup {
     // md5 + simhash fold is the corpus_signatures class of artifact;
     // spread: per-row-heavy on the single-split scan (Tables.spread)
     simhash64PairsOfBands(
-      simhash64BandsMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
+      simhash64BandsMemo(spark, sfDir)(
         simhash64Bands(simhashes64(
           Tables.spread(Tables.documents(spark, sfDir), col("doc_id"))))
           .localCheckpoint(eager = true)),
       cap)
 
-  private val simhash64BandsMemo = new graft.core.Memo("simhash64_bands")
-  private val sourceShinglesMemo = new graft.core.Memo("source_shingles")
-  private val boilerShinglesMemo = new graft.core.Memo("boiler_shingles")
+  private val simhash64BandsMemo = graft.core.Memo[DataFrame]("simhash64_bands")
+  private val sourceShinglesMemo = graft.core.Memo[DataFrame]("source_shingles")
+  private val boilerShinglesMemo = graft.core.Memo[DataFrame]("boiler_shingles")
 
   /** The pair pipeline over explicit band rows (spec seam for planted
     * hot buckets).
@@ -1401,11 +1379,10 @@ object Dedup {
     // exit), and the driver-side filter build (corpus count + collect
     // of the filter bits) re-ran per call — once per snapshot is the
     // batch-dedup contract, like every memoized dedup artifact
-    bloomDedupMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    bloomDedupMemo(spark, sfDir)(
       computeBloomDedup(spark, sfDir))
 
-  private val bloomDedupMemo = new graft.core.Memo("bloom_dedup")
+  private val bloomDedupMemo = graft.core.Memo[DataFrame]("bloom_dedup")
 
   private def computeBloomDedup(spark: SparkSession, sfDir: String): DataFrame = {
     val chunks = TextAnalysis.chunk(spark, sfDir)
@@ -1652,11 +1629,10 @@ object Dedup {
     * dataset), like [[clusterPairs]]: the canonical/cluster-size/
     * keep-list readouts all join these labels, and a dedup pass
     * resolves its components once — the iterative propagation must
-    * not re-run per report ([[resetClusterMemo]] is the test seam).
+    * not re-run per report.
     */
   def components(spark: SparkSession, sfDir: String): DataFrame =
-    componentsMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    componentsMemo(spark, sfDir)(
       componentsOfPairs(
         clusterPairs(spark, sfDir).select(col("doc_a"), col("doc_b")))
         .localCheckpoint(eager = true))
@@ -1971,15 +1947,12 @@ object Dedup {
     * (application, dataset) — the MinHash twin of [[clusterPairs]].
     */
   private def minhashPairsMat(spark: SparkSession, sfDir: String): DataFrame =
-    minhashPairsMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    minhashPairsMemo(spark, sfDir)(
       minhashLshPairs(spark, sfDir, Some(MinhashBucketCap))
         .select(col("doc_a"), col("doc_b"))
         .localCheckpoint(eager = true))
 
-  private val minhashPairsMemo = new graft.core.Memo("minhash_pairs")
-
-  private[pipeline] def resetMinhashComponentsMemo(): Unit = minhashPairsMemo.clear()
+  private val minhashPairsMemo = graft.core.Memo[DataFrame]("minhash_pairs")
 
   val minhashComponentsSql: String =
     s"""
@@ -2071,13 +2044,12 @@ object Dedup {
     // deterministic function of the corpus, hash-gated by the oracle
     // on every Verify) and materialize once per (application, dataset)
     // on top (cold cost lands in the bench `artifacts` map)
-    mergedStateMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    mergedStateMemo(spark, sfDir)(
       graft.core.DatasetStore.persisted(spark, sfDir, "merged_estate_state",
         version = s"1:$MinhashBucketCap")(
         computeComponentsIncremental(spark, sfDir)))
 
-  private val mergedStateMemo = new graft.core.Memo("merged_estate_state")
+  private val mergedStateMemo = graft.core.Memo[DataFrame]("merged_estate_state")
 
   private def computeComponentsIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     // everything runs off the persisted estate indexes: the same two
@@ -2104,8 +2076,7 @@ object Dedup {
     // labels table the last full run wrote; only the quotient work
     // below is the incremental cost) — extended with bridge-touched
     // A docs that had no A-internal pair (their root is themselves)
-    val aComps = estateComponentsMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    val aComps = estateComponentsMemo(spark, sfDir)(
       componentsOfPairs(lshPairsOfBandRows(bandsA, MinhashBucketCap))
         .select(col("doc_id"), col("cluster_root"))
         .localCheckpoint(eager = true))
@@ -2275,8 +2246,7 @@ object Dedup {
     // source-level distinct is itself deterministic per snapshot and
     // read three times (sizes + both self-join sides) — memoized per
     // (application, dataset) like the explode it derives from
-    val ss = sourceShinglesMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    val ss = sourceShinglesMemo(spark, sfDir)(
       shingleExplode(spark, sfDir)
         .join(docs.select(col("doc_id"), col("source")), "doc_id")
         .select(col("source"), col("sh"))
@@ -2345,8 +2315,7 @@ object Dedup {
     // read twice (document-frequency agg + scoring re-join) — memoized
     // per (application, dataset); spread: the bigram build is
     // per-row-heavy and the single-split scan would run it on one core
-    val sh = boilerShinglesMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    val sh = boilerShinglesMemo(spark, sfDir)(
       shingleHashes(Tables.spread(docs, col("doc_id")), BoilerN, keep = Seq("source"))
         .select(col("doc_id"), col("source"), explode(col("hs")).as("sh"))
         .localCheckpoint(eager = true))
@@ -2763,13 +2732,11 @@ object Dedup {
     // dataset): coverage and strip both post-process these narrow
     // span rows, and a passage-dedup pass extracts its spans once —
     // the anchor-join/merge/verify subtree must not re-run per
-    // report ([[resetClusterMemo]] clears it with the other
-    // materialized dedup artifacts)
-    passageSpansMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    // report
+    passageSpansMemo(spark, sfDir)(
       dupPassagesOf(passageAnchors(spark, sfDir)).localCheckpoint(eager = true))
 
-  private val passageSpansMemo = new graft.core.Memo("passage_spans")
+  private val passageSpansMemo = graft.core.Memo[DataFrame]("passage_spans")
 
   /** Test hook: the pipeline over explicit docs and an explicit anchor
     * cap, so specs can plant hot-anchor corpora small enough to bind.

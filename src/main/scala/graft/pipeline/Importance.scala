@@ -101,16 +101,10 @@ object Importance {
     * cost lands in the bench `artifacts` map like every memo build.
     */
   def scoredWeightsMat(spark: SparkSession, sfDir: String): DataFrame =
-    scoredMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    scoredMemo(spark, sfDir)(
       scoredWeights(spark, sfDir).localCheckpoint(eager = true))
 
-  private val scoredMemo = new graft.core.Memo("dsir_scored")
-
-  /** Test seam (datasets rewritten in place must reset, the
-    * resetKeepListMemo contract).
-    */
-  private[pipeline] def resetScoredMemo(): Unit = scoredMemo.clear()
+  private val scoredMemo = graft.core.Memo[DataFrame]("dsir_scored")
 
   /** The boundary-free scored relation (doc_id, source, tk,
     * dsir_weight) — exposed so composers (q_curate) that need only the

@@ -74,24 +74,21 @@ object IncrementalCurate {
         "is_eval", "is_target", "bks", "n_ws"))
   }
 
-  private val stateMemoA = new graft.core.Memo("curate_state_a")
-  private val stateMemoB = new graft.core.Memo("curate_state_b")
-  private val evalGramsMemo = new graft.core.Memo("eval_grams_history")
-  private val contamMemo = new graft.core.Memo("contam_history")
-  private val keepListMemo = new graft.core.Memo("keep_list_incremental")
-
-  private def key(spark: SparkSession, sfDir: String): String =
-    s"${spark.sparkContext.applicationId}|$sfDir"
+  private val stateMemoA = graft.core.Memo[DataFrame]("curate_state_a")
+  private val stateMemoB = graft.core.Memo[DataFrame]("curate_state_b")
+  private val evalGramsMemo = graft.core.Memo[DataFrame]("eval_grams_history")
+  private val contamMemo = graft.core.Memo[DataFrame]("contam_history")
+  private val keepListMemo = graft.core.Memo[DataFrame]("keep_list_incremental")
 
   /** Snapshot A's state (even doc ids — the historical estate). */
   private[pipeline] def stateA(spark: SparkSession, sfDir: String): DataFrame =
-    stateMemoA.getOrElseUpdate(key(spark, sfDir),
+    stateMemoA(spark, sfDir)(
       stateOf(Tables.documents(spark, sfDir).filter(col("doc_id") % 2 === 0))
         .localCheckpoint(eager = true))
 
   /** Snapshot B's state (odd doc ids — the arriving crawl). */
   private[pipeline] def stateB(spark: SparkSession, sfDir: String): DataFrame =
-    stateMemoB.getOrElseUpdate(key(spark, sfDir),
+    stateMemoB(spark, sfDir)(
       stateOf(Tables.documents(spark, sfDir).filter(col("doc_id") % 2 === 1))
         .localCheckpoint(eager = true))
 
@@ -100,7 +97,7 @@ object IncrementalCurate {
     * the DELTA grams).
     */
   private def evalGramsA(spark: SparkSession, sfDir: String): DataFrame =
-    evalGramsMemo.getOrElseUpdate(key(spark, sfDir),
+    evalGramsMemo(spark, sfDir)(
       stateA(spark, sfDir).filter(col("is_eval"))
         .select(explode(col("hs")).as("sh")).distinct()
         .localCheckpoint(eager = true))
@@ -109,19 +106,14 @@ object IncrementalCurate {
     * verdict bits A's last full run already paid for.
     */
   private def historyContam(spark: SparkSession, sfDir: String): DataFrame =
-    contamMemo.getOrElseUpdate(key(spark, sfDir), {
+    contamMemo(spark, sfDir) {
       val sA = stateA(spark, sfDir)
       sA.filter(!col("is_eval"))
         .select(col("doc_id"), explode(col("hs")).as("sh"))
         .join(broadcast(evalGramsA(spark, sfDir)), Seq("sh"), "left_semi")
         .select(col("doc_id")).distinct()
         .localCheckpoint(eager = true)
-    })
-
-  /** Test seam: forget all incremental-curation artifacts. */
-  private[pipeline] def resetMemos(): Unit =
-    Seq(stateMemoA, stateMemoB, evalGramsMemo, contamMemo, keepListMemo, curateIncMemo)
-      .foreach(_.clear())
+    }
 
   /** q_keep_list_incremental: the keep list over A∪B assembled from
     * the two snapshot states — same columns and same verdict rules as
@@ -131,7 +123,7 @@ object IncrementalCurate {
     * cost of each state lands in the bench `artifacts` map.
     */
   def keepListIncremental(spark: SparkSession, sfDir: String): DataFrame =
-    keepListMemo.getOrElseUpdate(key(spark, sfDir),
+    keepListMemo(spark, sfDir)(
       assemble(spark, sfDir).localCheckpoint(eager = true))
 
   /** The narrow nightly pass (the spec seam — not memoized). */
@@ -156,10 +148,10 @@ object IncrementalCurate {
     * build per invocation).
     */
   private[pipeline] def curateIncremental(spark: SparkSession, sfDir: String): DataFrame =
-    curateIncMemo.getOrElseUpdate(key(spark, sfDir),
+    curateIncMemo(spark, sfDir)(
       computeCurateIncremental(spark, sfDir).localCheckpoint(eager = true))
 
-  private val curateIncMemo = new graft.core.Memo("curate_incremental")
+  private val curateIncMemo = graft.core.Memo[DataFrame]("curate_incremental")
 
   private def computeCurateIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     import Curate.LowImportanceQuantile

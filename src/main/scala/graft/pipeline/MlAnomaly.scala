@@ -35,13 +35,7 @@ object MlAnomaly {
   /** Centroids of the most recent [[kmeansAnomaly]] fit (see scaladoc
     * above for the frozen-centroid oracle contract).
     */
-  private val fits =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[Array[Double]]]
-
-  /** Test seam: drop all frozen fits (multi-dataset specs must reset so
-    * the single-dataset oracle guard stays meaningful).
-    */
-  private[pipeline] def resetFits(): Unit = fits.clear()
+  private val fits = graft.core.Memo.fits[IndexedSeq[Array[Double]]]("kmeans_anomaly_fit")
 
   /** DuckDB oracle for q_kmeans_anomaly, available once
     * [[kmeansAnomaly]] has run in this JVM (None → rows-only check).
@@ -91,12 +85,12 @@ object MlAnomaly {
     // fit memoized per dataset (seed-fixed, deterministic — same as the
     // IVF/PCA/BPE fits): repeated invocations time the codegen scoring,
     // not a redundant refit
-    val centers = fits.getOrElseUpdate(sfDir, {
+    val centers = fits(spark, sfDir) {
       val fitInput = raw.select(col("vec_id"), col("label"),
         array_to_vector(col("embedding").cast("array<double>")).as("features"))
       new KMeans().setK(K).setSeed(42L).setMaxIter(20).setFeaturesCol("features")
         .fit(fitInput).clusterCenters.map(_.toArray).toIndexedSeq
-    })
+    }
     val x = col("embedding").cast("array<double>")
     val xx = VectorFunctions.dotProduct(x, x)
     val candidates = array(centers.zipWithIndex.toIndexedSeq.map { case (c, i) =>

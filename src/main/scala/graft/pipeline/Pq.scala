@@ -62,17 +62,11 @@ object Pq {
     */
   val Refine = 50
 
-  private val pqFits =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[IndexedSeq[Array[Double]]]]
-
-  /** Test seam: drop all frozen codebooks (multi-dataset specs must
-    * reset so the single-dataset oracle guard stays meaningful).
-    */
-  private[pipeline] def resetFits(): Unit = pqFits.clear()
+  private val pqFits = graft.core.Memo.fits[IndexedSeq[IndexedSeq[Array[Double]]]]("pq_codebooks")
 
   /** Test seam: the fitted codebooks for one dataset. */
   private[pipeline] def codebooksFor(sfDir: String): Option[IndexedSeq[IndexedSeq[Array[Double]]]] =
-    pqFits.get(sfDir)
+    pqFits.snapshot.get(sfDir)
 
   /** Per-subspace codebooks, fit on the same deterministic 1/3 sample
     * discipline as the IVF quantizer: the heavy part (distinct + count
@@ -86,7 +80,7 @@ object Pq {
     * is both total and exactly the right quantizer objective.)
     */
   def codebooks(spark: SparkSession, sfDir: String): IndexedSeq[IndexedSeq[Array[Double]]] =
-    pqFits.getOrElseUpdate(sfDir, {
+    pqFits(spark, sfDir) {
       val x = col("embedding").cast("array<double>")
       val sliced = Tables.embeddings(spark, sfDir)
         .filter(col("vec_id") % 3 === 0)
@@ -96,7 +90,7 @@ object Pq {
         (0 until M).map(m =>
           KmeansFit.fitFromDistinctSample(sliced.select(col(s"a$m")), col(s"a$m"), K))
       } finally sliced.unpersist()
-    })
+    }
 
   /** Nearest codebook entry for subspace m: struct(d2, code) via the
     * [[graft.functions.NearestCenter]] codegen argmin (one generated

@@ -60,16 +60,10 @@ object QualityClassifier {
   /** Frozen fitted model per dataset dir. */
   final case class Fitted(bias: Double, weights: IndexedSeq[Double])
 
-  private val fits =
-    scala.collection.concurrent.TrieMap.empty[String, Fitted]
-
-  /** Test seam: drop all frozen fits (multi-dataset specs must reset so
-    * the single-dataset oracle guard stays meaningful).
-    */
-  private[pipeline] def resetFits(): Unit = fits.clear()
+  private val fits = graft.core.Memo.fits[Fitted]("quality_classifier_fit")
 
   /** Test seam: the fitted model for one dataset. */
-  private[pipeline] def fittedFor(sfDir: String): Option[Fitted] = fits.get(sfDir)
+  private[pipeline] def fittedFor(sfDir: String): Option[Fitted] = fits.snapshot.get(sfDir)
 
   /** Unigrams ++ bigrams of the whitespace tokenization — the fasttext
     * feature set (word + word-bigram hashes).
@@ -89,7 +83,7 @@ object QualityClassifier {
         ELSE CAST([] AS VARCHAR[]) END)"""
 
   def weightsFor(spark: SparkSession, sfDir: String): Fitted =
-    fits.getOrElseUpdate(sfDir, learn(spark, sfDir))
+    fits(spark, sfDir)(learn(spark, sfDir))
 
   /** Driver-side deterministic full-batch logistic regression: the
     * per-doc (bucket, count) matrix comes back from one Spark

@@ -154,19 +154,16 @@ object Sampling {
     * build per invocation). Spread first — the gram build is the
     * per-row-heavy class (Tables.spread).
     */
-  private val decontamGramsMemo = new graft.core.Memo("decontam_grams")
-
-  private[pipeline] def resetDecontamGramsMemo(): Unit = decontamGramsMemo.clear()
+  private val decontamGramsMemo = graft.core.Memo[DataFrame]("decontam_grams")
 
   private def decontamGrams(spark: SparkSession, sfDir: String): DataFrame =
-    decontamGramsMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir", {
-        val docs = Tables.documents(spark, sfDir)
-        Dedup.shingleHashes(Tables.spread(docs, col("doc_id")), n = DecontamN)
-          .join(evalTag(docs), "doc_id")
-          .select(col("doc_id"), col("is_eval"), col("hs"))
-          .localCheckpoint(eager = true)
-      })
+    decontamGramsMemo(spark, sfDir) {
+      val docs = Tables.documents(spark, sfDir)
+      Dedup.shingleHashes(Tables.spread(docs, col("doc_id")), n = DecontamN)
+        .join(evalTag(docs), "doc_id")
+        .select(col("doc_id"), col("is_eval"), col("hs"))
+        .localCheckpoint(eager = true)
+    }
 
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {
     val tagged = decontamGrams(spark, sfDir).select(col("doc_id"), col("is_eval"))

@@ -56,22 +56,8 @@ object Similarity {
     * corpus size); top 5 neighbors by (rounded cosine desc, vec_id asc).
     * This is the declared exact baseline that anchors LSH/IVF recall.
     */
-  /** Memoized-materialization helper shared by the similarity lanes:
-    * one eager checkpoint per (application, dataset), EXCEPT inside
-    * [[graft.core.Mat.withTransparent]] — the plan-inspection seam must
-    * see the full operator tree, and a transparently-built plan must
-    * never be cached where a later production call would read it
-    * un-materialized.
-    */
-  private def memoized(memo: graft.core.Memo, spark: SparkSession, sfDir: String)(
-      build: => DataFrame): DataFrame =
-    if (graft.core.Mat.isTransparent) build
-    else memo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
-      build.localCheckpoint(eager = true))
-
   def annTopk(spark: SparkSession, sfDir: String): DataFrame =
-    memoized(annTopkMemo, spark, sfDir)(annTopkBuild(spark, sfDir))
+    annTopkMemo(spark, sfDir)(annTopkBuild(spark, sfDir).mat)
 
   // the exact-truth leg is read by q_ann_topk, three recall evals, AND
   // the probe-width calibration's ladder walk — one O(probes · n) scan
@@ -79,7 +65,7 @@ object Similarity {
   // the tiny probes×k result is what checkpoints). maxEntries = 2: the
   // shingle-memo eviction rationale — an evicted localCheckpoint
   // cannot rebuild, so the pairwise cross-corpus pattern must fit.
-  private val annTopkMemo = new graft.core.Memo("ann_topk_truth", maxEntries = 2)
+  private val annTopkMemo = graft.core.Memo[DataFrame]("ann_topk_truth", maxEntries = 2)
 
   private def annTopkBuild(spark: SparkSession, sfDir: String): DataFrame = {
     // norms are precomputed per vector BEFORE the pairwise join — at
@@ -228,23 +214,10 @@ object Similarity {
     * deterministic scalar property of the snapshot (it sizes the band
     * width), and the per-call lanes ran the count job on every call.
     */
-  private val embCountMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val embCountMemo = graft.core.Memo[Long]("embeddings_count")
 
   private[pipeline] def embeddingsCount(spark: SparkSession, sfDir: String): Long =
-    embCountMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
-      Tables.embeddings(spark, sfDir).count())
-
-  /** Test seam beside [[resetSignBandStats]]. */
-  private[pipeline] def resetEmbeddingsCount(): Unit = embCountMemo.clear()
-
-  /** The band-stats memo key for the full-corpus banded relation at
-    * width r — shared by the pair lane, the recall eval, and the
-    * calibration report (all three band the identical relation).
-    */
-  private def signStatsKey(spark: SparkSession, sfDir: String, r: Int): String =
-    s"${spark.sparkContext.applicationId}|$sfDir|$r"
+    embCountMemo(spark, sfDir)(Tables.embeddings(spark, sfDir).count())
 
   /** One-row CTE body computing the band width from the corpus count —
     * the DuckDB mirror of [[signBandWidthOf]] as an exact integer
@@ -334,18 +307,18 @@ object Similarity {
     */
   private[pipeline] def signKeptBands(banded: DataFrame,
       lane: String, budget: Long = SignPairVolumeBudget,
-      statsKey: Option[String] = None): DataFrame = {
+      memoAt: Option[(SparkSession, String, Int)] = None): DataFrame = {
     // the histogram readout (volume + hot set) is a deterministic
-    // property of the banded corpus snapshot: with `statsKey` it is
-    // memoized per (application, dataset, width) so the per-call lanes
+    // property of the banded corpus snapshot: with `memoAt` =
+    // (session, dataset, width) it is memoized so the per-call lanes
     // (the recall eval ran it as a driver-synchronous job on EVERY
-    // call) pay it once; each lane still applies its OWN budget to the
-    // memoized volume, so PairVolumeExceeded semantics are unchanged
-    val (vol, hotCount, hot) = statsKey match {
-      case Some(k) => signBandStatsMemo.synchronized {
-        signBandStatsMemo.getOrElseUpdate(k,
-          graft.core.Memo.timed("sign_band_stats", k)(signBandStats(banded)))
-      }
+    // call) pay it once — the pair lane, the recall eval and the
+    // calibration report band the identical relation; each lane still
+    // applies its OWN budget to the memoized volume, so
+    // PairVolumeExceeded semantics are unchanged
+    val (vol, hotCount, hot) = memoAt match {
+      case Some((spark, sfDir, r)) =>
+        signBandStatsMemo(spark, sfDir, r.toString)(signBandStats(banded))
       case None => signBandStats(banded)
     }
     if (vol > budget) throw new graft.core.PairVolumeExceeded(lane, vol, budget)
@@ -355,12 +328,7 @@ object Similarity {
 
   // (pair volume, hot-bucket count, checkpointed hot keys) per banded
   // corpus — tiny by construction (≤ rows/cap keys, usually empty)
-  private val signBandStatsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (Long, Long, DataFrame)]
-
-  /** Test seam (the resetSignPairs contract). */
-  private[pipeline] def resetSignBandStats(): Unit =
-    signBandStatsMemo.synchronized(signBandStatsMemo.clear())
+  private val signBandStatsMemo = graft.core.Memo[(Long, Long, DataFrame)]("sign_band_stats")
 
   private def signBandStats(banded: DataFrame): (Long, Long, DataFrame) = {
     // NOT materialized: the common (all-thin) path reads this once for
@@ -405,7 +373,7 @@ object Similarity {
     * stop-loss on top.
     */
   def annLsh(spark: SparkSession, sfDir: String): DataFrame =
-    memoized(signPairsMemo, spark, sfDir)(annLshBuild(spark, sfDir))
+    signPairsMemo(spark, sfDir)(annLshBuild(spark, sfDir).mat)
 
   // bounded + timed + releasable (graft.core.Memo): q_dedup_embed IS
   // annLsh filtered — one LSH pair build per corpus snapshot, read by
@@ -415,17 +383,7 @@ object Similarity {
   // localCheckpoint's truncated lineage cannot rebuild, so a consumer
   // holding the relation across ONE interleaved second-dataset fetch
   // must keep its blocks.
-  private val signPairsMemo = new graft.core.Memo("sign_lsh_pairs", maxEntries = 2)
-
-  /** Test seam (the resetIvfFits contract): specs that rewrite a
-    * dataset dir in place must drop the memoized pair relation — and
-    * with it the banded-corpus stats and count scalars it derives from.
-    */
-  private[pipeline] def resetSignPairs(): Unit = {
-    signPairsMemo.clear()
-    resetSignBandStats()
-    resetEmbeddingsCount()
-  }
+  private val signPairsMemo = graft.core.Memo[DataFrame]("sign_lsh_pairs", maxEntries = 2)
 
   private def annLshBuild(spark: SparkSession, sfDir: String): DataFrame = {
     // codes/norms are consumed three times (band explode + two gather
@@ -442,7 +400,7 @@ object Similarity {
     // must not shuffle its 64-float payload k times; vectors gather
     // back by id after the candidate distinct.
     val kept = signKeptBands(signBandRows(emb, Seq("vec_id"), r),
-      "q_ann_lsh/q_dedup_embed", statsKey = Some(signStatsKey(spark, sfDir, r)))
+      "q_ann_lsh/q_dedup_embed", memoAt = Some((spark, sfDir, r)))
     val cand = kept.as("a")
       .join(kept.as("b"),
         col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
@@ -806,11 +764,10 @@ object Similarity {
       if (nQueries == 0) 0.0 else totalHits.toDouble / (IvfTopK.toDouble * nQueries)
   }
 
-  private val ivfCalibrations =
-    scala.collection.concurrent.TrieMap.empty[String, IvfCalibration]
+  private val ivfCalibrations = graft.core.Memo.fits[IvfCalibration]("ivf_calibration")
 
   private[pipeline] def ivfCalibrationInfo(sfDir: String): Option[IvfCalibration] =
-    ivfCalibrations.get(sfDir)
+    ivfCalibrations.snapshot.get(sfDir)
 
   /** The RECALL-CALIBRATED production probe width — the policy that
     * replaced the fixed [[ivfProbeOf]]-width probe (which paid the
@@ -835,7 +792,10 @@ object Similarity {
     * as the k-means sample fit.
     */
   private[pipeline] def ivfCalibratedWidth(spark: SparkSession, sfDir: String): Int =
-    ivfCalibrations.getOrElseUpdate(sfDir, {
+    ivfCalibration(spark, sfDir).width
+
+  private def ivfCalibration(spark: SparkSession, sfDir: String): IvfCalibration =
+    ivfCalibrations(spark, sfDir) {
       val k = ivfCenters(spark, sfDir).length
       val ladder = ivfWidthLadder(k)
       // integer evidence: (queries, total hits) — exact at any engine
@@ -851,7 +811,7 @@ object Similarity {
       val walked = ladder.to(LazyList).map { w => val (n, h) = hitsAt(w); (w, n, h) }
       val (w, n, h) = walked.find { case (_, n, h) => meets(n, h) }.getOrElse(walked.last)
       IvfCalibration(w, n, h, meets(n, h))
-    }).width
+    }
 
   /** q_ivf_calibration: the calibration DECISION as a first-class
     * relation (the `q_ivf_stats` discipline applied to the probe
@@ -877,8 +837,7 @@ object Similarity {
     computeIvfCalibrationReport(spark, sfDir)
 
   private def computeIvfCalibrationReport(spark: SparkSession, sfDir: String): DataFrame = {
-    ivfCalibratedWidth(spark, sfDir)
-    val c = ivfCalibrations(sfDir)
+    val c = ivfCalibration(spark, sfDir)
     // r15 stretch: a target_met=false row must also DECIDE — measure
     // the shipped alternative lane (sign-LSH, the same bounded probe
     // set and exact truth) and recommend the better of it and the
@@ -974,10 +933,11 @@ object Similarity {
     * query BEFORE dumping oracle_sql.json, so the dumped SQL always
     * scores with the very centroids that produced the parquet under
     * compare (the [[KmeansFit]] fit is bit-deterministic within a run
-    * regardless).
+    * regardless). Each entry carries the fit's decision record
+    * ([[IvfFitInfo]]) beside the centers.
     */
   private val ivfFits =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[Array[Double]]]
+    graft.core.Memo.fits[(IndexedSeq[Array[Double]], IvfFitInfo)]("ivf_centroids")
 
   /** The frozen coarse-quantizer centroids, also consumed by [[Pq]]'s
     * IVF+PQ oracle. The fit cache is keyed by dataset dir and this
@@ -986,7 +946,7 @@ object Similarity {
     * per JVM).
     */
   private[pipeline] def ivfFrozen: Option[IndexedSeq[Array[Double]]] =
-    FrozenFit.single(ivfFits, "IVF centroids")
+    FrozenFit.single(ivfFits, "IVF centroids").map(_._1)
 
   /** DuckDB oracle for q_ann_ivf, available once [[annIvf]] has run in
     * this JVM (None → the driver falls back to its rows-only check).
@@ -1026,7 +986,7 @@ object Similarity {
     */
   private def frozenOrDerivedCalibration: Option[IvfCalibration] =
     FrozenFit.single(ivfCalibrations, "IVF probe calibration").orElse {
-      val fittedDirs = ivfFits.readOnlySnapshot().keys.toSeq
+      val fittedDirs = ivfFits.snapshot.keys.toSeq
       val session = org.apache.spark.sql.SparkSession.getActiveSession
         .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
       (fittedDirs, session) match {
@@ -1100,7 +1060,7 @@ object Similarity {
     * the scoring plan, not a redundant refit.
     */
   private[pipeline] def ivfCenters(spark: SparkSession, sfDir: String): IndexedSeq[Array[Double]] =
-    ivfFits.getOrElseUpdate(sfDir, {
+    ivfFits(spark, sfDir) {
       // Spark does the heavy part (distinct + count over the sample);
       // the driver runs [[KmeansFit]]'s deterministic weighted Lloyd
       // over ≤ DistinctCap (point, count) rows. Density is preserved
@@ -1124,9 +1084,8 @@ object Similarity {
       val k2 = math.min(2 * k, IvfCellsMax)
       val refit = share > threshold && k2 > k
       val centers = if (refit) KmeansFit.fit(pts, k2, KmeansFit.Iters) else first
-      ivfFitLog.put(sfDir, IvfFitInfo(n, k, share, refit, centers.length))
-      centers
-    })
+      (centers, IvfFitInfo(n, k, share, refit, centers.length))
+    }._1
 
   /** One fit decision record (test/observability seam — the
     * auto-sizing and the skew re-fit must be assertable without
@@ -1135,11 +1094,8 @@ object Similarity {
   case class IvfFitInfo(n: Long, k0: Int, sampleMaxSharePpm: Long,
       refit: Boolean, finalCenters: Int)
 
-  private val ivfFitLog =
-    scala.collection.concurrent.TrieMap.empty[String, IvfFitInfo]
-
   private[pipeline] def ivfFitInfo(sfDir: String): Option[IvfFitInfo] =
-    ivfFitLog.get(sfDir)
+    ivfFits.snapshot.get(sfDir).map(_._2)
 
   /** Literal-centroid (d2, cell) distance array over the fixed
     * (embedding, nsq) column names — the codegen'd assignment shared by
@@ -1164,14 +1120,14 @@ object Similarity {
     * [[knnGraph]] so the assignment cannot drift between them.
     */
   private def assignedCells(spark: SparkSession, sfDir: String): DataFrame =
-    memoized(assignedCellsMemo, spark, sfDir)(assignedCellsBuild(spark, sfDir))
+    assignedCellsMemo(spark, sfDir)(assignedCellsBuild(spark, sfDir).mat)
 
   // the corpus-side assignment (the IVF index itself) is read by
   // q_ann_ivf, q_ivf_stats, the recall evals, and every width of the
   // calibration ladder — one full-corpus nearest-center pass per
   // snapshot, consumers read the layout. maxEntries = 2 (see
   // annTopkMemo).
-  private val assignedCellsMemo = new graft.core.Memo("ivf_assigned", maxEntries = 2)
+  private val assignedCellsMemo = graft.core.Memo[DataFrame]("ivf_assigned", maxEntries = 2)
 
   private def assignedCellsBuild(spark: SparkSession, sfDir: String): DataFrame = {
     val centers = ivfCenters(spark, sfDir)
@@ -1360,7 +1316,7 @@ object Similarity {
     // pair-volume budget does not apply — the probe join is bounded by
     // the probe count, not C(bucket, 2) — so it is disabled here.
     val banded = signKeptBands(bandsOf(emb), "q_ann_lsh_recall",
-      budget = Long.MaxValue, statsKey = Some(signStatsKey(spark, sfDir, r)))
+      budget = Long.MaxValue, memoAt = Some((spark, sfDir, r)))
     val probeBands = bandsOf(
       emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < TopkQueryCap))
       .select(col("vec_id").as("q_id"), col("band"), col("bv"))
@@ -1528,7 +1484,7 @@ object Similarity {
     // SHIPPED (stop-loss applied; volume budget is the PAIR lane's,
     // probe joins are probe-bounded — disabled, the annLshRecall rule)
     val kept = signKeptBands(banded, "q_lsh_calibration",
-      budget = Long.MaxValue, statsKey = Some(signStatsKey(spark, sfDir, r)))
+      budget = Long.MaxValue, memoAt = Some((spark, sfDir, r)))
     val probes = emb.filter(col("vec_id") % 100 === 0 && col("vec_id") < TopkQueryCap)
     val probeBands = signBandRows(probes, Seq("vec_id"), r)
       .select(col("vec_id").as("q_id"), col("band"), col("bv"))
@@ -1935,7 +1891,7 @@ object Similarity {
     * JVM, refuses to render after fits on two datasets.
     */
   def semanticDedupOracleSql: Option[String] = {
-    FrozenFit.single(ivfFits, "IVF centroids").map { centers =>
+    ivfFrozen.map { centers =>
       s"""
     WITH cents(cell, cc, cv) AS (VALUES
       ${centroidValuesSql(centers)}),
@@ -2018,22 +1974,13 @@ object Similarity {
     * dataset ([[graft.core.DatasetStore]]) and memoize per application.
     */
   def embedIncremental(spark: SparkSession, sfDir: String): DataFrame =
-    embedMergedMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    embedMergedMemo(spark, sfDir)(
       graft.core.DatasetStore.persisted(spark, sfDir, "embed_merged_state",
         version = s"1:$KnnCellCap:$SemDedupThreshold")(
         computeEmbedIncremental(spark, sfDir)))
 
-  private val embedMergedMemo = new graft.core.Memo("embed_merged_state")
-  private val embedEstateMemo = new graft.core.Memo("embed_estate_components")
-
-  /** Test seam: forget the memoized incremental artifacts (specs that
-    * rebuild a dataset must call this — the Memo-estate contract).
-    */
-  private[graft] def resetEmbedIncrementalMemos(): Unit = {
-    embedMergedMemo.clear()
-    embedEstateMemo.clear()
-  }
+  private val embedMergedMemo = graft.core.Memo[DataFrame]("embed_merged_state")
+  private val embedEstateMemo = graft.core.Memo[DataFrame]("embed_estate_components")
 
   /** The three edge legs (A-lane pairs, B-lane pairs, B→A bridges) —
     * the seam the from-scratch spec re-clusters over.
@@ -2061,8 +2008,7 @@ object Similarity {
 
   private def computeEmbedIncremental(spark: SparkSession, sfDir: String): DataFrame = {
     val (aPairs, bPairs, bridges) = embedIncrementalEdges(spark, sfDir)
-    val aLabels = embedEstateMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    val aLabels = embedEstateMemo(spark, sfDir)(
       Dedup.componentsOfPairs(aPairs)
         .select(col("doc_id"), col("cluster_root"))
         .localCheckpoint(eager = true))
@@ -2143,29 +2089,26 @@ object Similarity {
   /** Fitted principal components, keyed by dataset dir: PcaDims vectors
     * of input-dim doubles (the frozen-fit pattern — see [[ivfFits]]).
     */
-  private val pcaFits =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[Array[Double]]]
+  private val pcaFits = graft.core.Memo.fits[IndexedSeq[Array[Double]]]("pca_components")
 
   /** Test seam: the fitted components for one dataset. */
   private[pipeline] def pcaComponents(sfDir: String): Option[IndexedSeq[Array[Double]]] =
-    pcaFits.get(sfDir)
+    pcaFits.snapshot.get(sfDir)
 
-  /** Test seam: drop all frozen PCA fits (multi-dataset specs must
-    * reset so the single-dataset oracle guard stays meaningful).
-    */
-  private[pipeline] def resetPcaFits(): Unit = pcaFits.clear()
-
-  /** Test seam: drop all frozen IVF fits (same contract). */
-  private[pipeline] def resetIvfFits(): Unit = {
-    ivfFits.clear()
-    ivfCalibrations.clear()
-    // derived-from-the-fit materializations must fall with the fit:
-    // a spec that rewrites a dataset dir in place would otherwise read
-    // a stale assignment/truth checkpoint against fresh centroids
-    assignedCellsMemo.clear()
-    annTopkMemo.clear()
-    signPairsMemo.clear()
-  }
+  // fit once per dataset (the Bpe.mergesFor pattern — deterministic,
+  // so caching changes nothing but work): without this, every
+  // invocation re-ran the full Gram-matrix pass + eigendecomposition,
+  // and q_ann_pca paid it a second time on top of q_pca_project
+  private def pcaFit(spark: SparkSession, sfDir: String): IndexedSeq[Array[Double]] =
+    pcaFits(spark, sfDir) {
+      import org.apache.spark.ml.feature.PCA
+      import org.apache.spark.ml.functions.array_to_vector
+      val fitInput = Tables.embeddings(spark, sfDir).select(
+        array_to_vector(col("embedding").cast("array<double>")).as("features"))
+      val pc = new PCA().setK(PcaDims).setInputCol("features").setOutputCol("pca")
+        .fit(fitInput).pc // column-major: numRows = input dim, numCols = PcaDims
+      (0 until PcaDims).map(j => Array.tabulate(pc.numRows)(i => pc(i, j)))
+    }
 
   /** Dev instrument (spec-only): per probe, the sorted-cell d2/d2min
     * ratio at each rank — the raw signal the [[IvfProbeSlackSq]] gate
@@ -2193,11 +2136,10 @@ object Similarity {
     * re-fit discipline as [[ivfCenters]]; memoized per dataset, frozen
     * into the cross-snapshot oracle via [[estateFrozen]].
     */
-  private val estateFits =
-    scala.collection.concurrent.TrieMap.empty[String, IndexedSeq[Array[Double]]]
+  private val estateFits = graft.core.Memo.fits[IndexedSeq[Array[Double]]]("estate_centroids")
 
   private[graft] def estateCenters(spark: SparkSession, sfDir: String): IndexedSeq[Array[Double]] =
-    estateFits.getOrElseUpdate(sfDir, {
+    estateFits(spark, sfDir) {
       val emb = Tables.embeddings(spark, sfDir).filter(col("vec_id") % 2 === 0)
       val n = emb.count()
       val k = ivfCellsOf(n)
@@ -2210,16 +2152,13 @@ object Similarity {
       val threshold = IvfMaxShareMultiple * 1000000L / k
       val k2 = math.min(2 * k, IvfCellsMax)
       if (share > threshold && k2 > k) KmeansFit.fit(pts, k2, KmeansFit.Iters) else first
-    })
+    }
 
   /** The frozen estate centroids (single-dataset oracle guard — the
     * [[ivfFrozen]] contract).
     */
   private[graft] def estateFrozen: Option[IndexedSeq[Array[Double]]] =
     FrozenFit.single(estateFits, "estate centroids")
-
-  /** Test seam: drop all frozen estate fits (same contract). */
-  private[graft] def resetEstateFits(): Unit = estateFits.clear()
 
   /** q_pca_project: dimensionality reduction for the embedding column —
     * the standard preprocessing step before an ANN index (smaller
@@ -2238,19 +2177,7 @@ object Similarity {
     */
   def pcaProject(spark: SparkSession, sfDir: String): DataFrame = {
     val raw = Tables.embeddings(spark, sfDir)
-    // fit once per dataset (the Bpe.mergesFor pattern — deterministic,
-    // so caching changes nothing but work): without this, every
-    // invocation re-ran the full Gram-matrix pass + eigendecomposition,
-    // and q_ann_pca paid it a second time on top of q_pca_project
-    val comps = pcaFits.getOrElseUpdate(sfDir, {
-      import org.apache.spark.ml.feature.PCA
-      import org.apache.spark.ml.functions.array_to_vector
-      val fitInput = raw.select(
-        array_to_vector(col("embedding").cast("array<double>")).as("features"))
-      val pc = new PCA().setK(PcaDims).setInputCol("features").setOutputCol("pca")
-        .fit(fitInput).pc // column-major: numRows = input dim, numCols = PcaDims
-      (0 until PcaDims).map(j => Array.tabulate(pc.numRows)(i => pc(i, j)))
-    })
+    val comps = pcaFit(spark, sfDir)
     val x = col("embedding").cast("array<double>")
     raw.select(col("vec_id") +: col("label").cast("long").as("label") +:
       comps.zipWithIndex.map { case (v, j) =>
@@ -2274,7 +2201,7 @@ object Similarity {
     */
   def annPca(spark: SparkSession, sfDir: String): DataFrame = {
     val proj = pcaProject(spark, sfDir)
-    val comps = pcaFits(sfDir)
+    val comps = pcaFit(spark, sfDir)
     val pcArr = array((1 to comps.length).map(j => col(s"pc$j")): _*)
     val emb = proj.select(col("vec_id"), pcArr.as("p"))
       .select(col("vec_id"), col("p"), dot(col("p"), col("p")).as("nsq"))

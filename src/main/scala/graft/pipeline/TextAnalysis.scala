@@ -416,14 +416,10 @@ object TextAnalysis {
     * artifacts map.
     */
   private[graft] def bm25Topn(spark: SparkSession, sfDir: String): DataFrame =
-    bm25Memo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    bm25Memo(spark, sfDir)(
       bm25Build(spark, sfDir).localCheckpoint(eager = true))
 
-  private val bm25Memo = new graft.core.Memo("bm25_topn")
-
-  /** Test seam (the resetIvfFits contract). */
-  private[graft] def resetBm25(): Unit = bm25Memo.clear()
+  private val bm25Memo = graft.core.Memo[DataFrame]("bm25_topn")
 
   private def bm25Build(spark: SparkSession, sfDir: String): DataFrame = {
     // the narrow per-doc term-frequency relation is read twice (the

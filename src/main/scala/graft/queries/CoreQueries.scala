@@ -42,11 +42,10 @@ object CoreQueries {
     * the stats family used to pay the max(ts) collect job per CALL —
     * ~8 registered queries × 3 bench runs of the same one-row scan.
     */
-  private val nowMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val nowMemo = graft.core.Memo[Long]("events_max_ts")
 
   private def nowUsOfDataset(spark: SparkSession, sfDir: String): Long =
-    nowMemo.getOrElseUpdate(s"${spark.sparkContext.applicationId}|$sfDir",
+    nowMemo(spark, sfDir)(
       Tables.events(spark, sfDir).agg(max(unix_micros(col("ts")))).head().getLong(0))
 
   private def nowOfDataset(spark: SparkSession, sfDir: String): Column =
@@ -61,21 +60,19 @@ object CoreQueries {
     * cache (the streaming pipeline already keeps one); cold cost lands
     * in the bench `artifacts` map.
     */
-  private val statsMemo = new graft.core.Memo("trailing_stats")
+  private val statsMemo = graft.core.Memo[DataFrame]("trailing_stats")
 
   private def rawStatsOfDataset(spark: SparkSession, sfDir: String): DataFrame =
-    statsMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    statsMemo(spark, sfDir)(
       WindowStats.rawTrailingStats(
         eventSamplesMat(spark, sfDir).select("topic", "path", "value", "produced"),
         Windows, nowOfDataset(spark, sfDir)).localCheckpoint(eager = true))
 
   /** min(ts) twin of [[nowUsOfDataset]] (q_set_diff's anchor). */
-  private val minUsMemo =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
+  private val minUsMemo = graft.core.Memo[Long]("events_min_ts")
 
   private def minUsOfDataset(spark: SparkSession, sfDir: String): Long =
-    minUsMemo.getOrElseUpdate(s"${spark.sparkContext.applicationId}|$sfDir",
+    minUsMemo(spark, sfDir)(
       Tables.events(spark, sfDir).agg(min(unix_micros(col("ts")))).head().getLong(0))
 
   /** The long-format samples relation WITH event identity, memoized
@@ -86,35 +83,30 @@ object CoreQueries {
     * don't need the id drop it; the relation is narrow (topic, path,
     * value, produced, event_id).
     */
-  private val samplesMemo = new graft.core.Memo("event_samples")
-
-  private[graft] def resetSamplesMemo(): Unit = {
-    samplesMemo.clear(); nowMemo.clear(); minUsMemo.clear(); statsMemo.clear(); discoveredMemo.clear()
-  }
+  private val samplesMemo = graft.core.Memo[DataFrame]("event_samples")
 
   def eventSamplesMat(spark: SparkSession, sfDir: String): DataFrame =
-    samplesMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir", {
-        val ev = Tables.events(spark, sfDir)
-        Extraction.longFormat(
-          Tables.spread(ev, col("event_id")),
-          topic = col("event_type"),
-          ts = col("ts"),
-          fields = Seq(
-            FieldCol("value", col("value")),
-            FieldCol("props.k", SchemaFlatten.jsonByPath(col("props"), "k").try_cast("double")),
-          ),
-          // event identity for the detection joins. The raw props
-          // payload deliberately does NOT ride the spine: it was ~25 of
-          // the checkpoint's 29 MB and localCheckpoint readers pay full
-          // row width regardless of their projection, so every family
-          // member re-deserialized the payload it never used.
-          // q_anomaly_records (the one consumer that needs it) attaches
-          // props post-detection by event identity instead (guide §8:
-          // decide on the narrow rows, attach the heavy bytes once).
-          carry = Seq("event_id" -> col("event_id")),
-        ).localCheckpoint(eager = true)
-      })
+    samplesMemo(spark, sfDir) {
+      val ev = Tables.events(spark, sfDir)
+      Extraction.longFormat(
+        Tables.spread(ev, col("event_id")),
+        topic = col("event_type"),
+        ts = col("ts"),
+        fields = Seq(
+          FieldCol("value", col("value")),
+          FieldCol("props.k", SchemaFlatten.jsonByPath(col("props"), "k").try_cast("double")),
+        ),
+        // event identity for the detection joins. The raw props
+        // payload deliberately does NOT ride the spine: it was ~25 of
+        // the checkpoint's 29 MB and localCheckpoint readers pay full
+        // row width regardless of their projection, so every family
+        // member re-deserialized the payload it never used.
+        // q_anomaly_records (the one consumer that needs it) attaches
+        // props post-detection by event identity instead (guide §8:
+        // decide on the narrow rows, attach the heavy bytes once).
+        carry = Seq("event_id" -> col("event_id")),
+      ).localCheckpoint(eager = true)
+    }
 
   /** The two tracked fields of the events table in long format.
     * The input is spread first (Tables.spread): extraction JSON-parses
@@ -319,28 +311,26 @@ object CoreQueries {
     // driver-side collects) and the discovered-path extraction are
     // deterministic per snapshot: memoized like the samples spine, so
     // per call only the stats aggregation runs
-    val (samples, windows) = discoveredMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir", {
-        val ev = Tables.events(spark, sfDir)
-        val discovery = new graft.streaming.Discovery(
-          spark, graft.core.Dsl(Nil), defaultWindows = Seq("1d", "1w"))
-        discovery.discoverFields(
-          ev.select(col("event_type").as("topic"), col("props").as("value")))
-        val dsl = discovery.dsl
-        // project exactly the discovered paths, per topic
-        val s = Extraction.fromJsonMessages(
-          Tables.spread(ev, col("event_id"))
-            .select(col("event_type").as("topic"), col("props").as("value"), col("ts")),
-          col("topic"), col("value"), col("ts"),
-          dsl.topics.flatMap(_.fields.map(_.path)).distinct)
-          .localCheckpoint(eager = true)
-        (s, dsl.topics.flatMap(_.fields.flatMap(_.windows)).distinct)
-      })
+    val (samples, windows) = discoveredMemo(spark, sfDir) {
+      val ev = Tables.events(spark, sfDir)
+      val discovery = new graft.streaming.Discovery(
+        spark, graft.core.Dsl(Nil), defaultWindows = Seq("1d", "1w"))
+      discovery.discoverFields(
+        ev.select(col("event_type").as("topic"), col("props").as("value")))
+      val dsl = discovery.dsl
+      // project exactly the discovered paths, per topic
+      val s = Extraction.fromJsonMessages(
+        Tables.spread(ev, col("event_id"))
+          .select(col("event_type").as("topic"), col("props").as("value"), col("ts")),
+        col("topic"), col("value"), col("ts"),
+        dsl.topics.flatMap(_.fields.map(_.path)).distinct)
+        .localCheckpoint(eager = true)
+      (s, dsl.topics.flatMap(_.fields.flatMap(_.windows)).distinct)
+    }
     WindowStats.trailingStats(samples, windows, nowOfDataset(spark, sfDir))
   }
 
-  private val discoveredMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (DataFrame, Seq[Long])]
+  private val discoveredMemo = graft.core.Memo[(DataFrame, Seq[Long])]("discovered_samples")
 
   val discoveredStatsSql: String =
     s"""

@@ -29,23 +29,20 @@ object DriftQueries {
     * barriers from every later consumer call. Unfiltered (mad = 0 rows
     * kept); consumers apply their own mad > 0 guard.
     */
-  private val robustStatsMemo = new graft.core.Memo("topic_robust_stats")
-
-  private[graft] def resetRobustStatsMemo(): Unit = robustStatsMemo.clear()
+  private val robustStatsMemo = graft.core.Memo[DataFrame]("topic_robust_stats")
 
   private def topicRobustStats(spark: SparkSession, sfDir: String): DataFrame =
-    robustStatsMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir", {
-        val ev = Tables.events(spark, sfDir)
-          .filter(col("event_type").isNotNull && col("value").isNotNull)
-        val med = ev.groupBy(col("event_type").as("topic"))
-          .agg(round(percentile(col("value"), lit(0.5)), 6).as("med"))
-        ev.as("e")
-          .join(broadcast(med).as("m"), col("e.event_type") === col("m.topic"))
-          .groupBy(col("m.topic").as("topic"), col("m.med").as("med"))
-          .agg(round(percentile(abs(col("e.value") - col("m.med")), lit(0.5)), 6).as("mad"))
-          .localCheckpoint(eager = true)
-      })
+    robustStatsMemo(spark, sfDir) {
+      val ev = Tables.events(spark, sfDir)
+        .filter(col("event_type").isNotNull && col("value").isNotNull)
+      val med = ev.groupBy(col("event_type").as("topic"))
+        .agg(round(percentile(col("value"), lit(0.5)), 6).as("med"))
+      ev.as("e")
+        .join(broadcast(med).as("m"), col("e.event_type") === col("m.topic"))
+        .groupBy(col("m.topic").as("topic"), col("m.med").as("med"))
+        .agg(round(percentile(abs(col("e.value") - col("m.med")), lit(0.5)), 6).as("mad"))
+        .localCheckpoint(eager = true)
+    }
 
   // ---- q_mad_anomaly -------------------------------------------------
 

@@ -97,15 +97,12 @@ object IncrementalProfile {
     base.join(broadcast(tops), Seq("col_name"), "left")
   }
 
-  private val stateMemoA = new Memo("profile_state_a")
-  private val stateMemoB = new Memo("profile_state_b")
-
-  private def key(spark: SparkSession, sfDir: String): String =
-    s"${spark.sparkContext.applicationId}|$sfDir"
+  private val stateMemoA = Memo[DataFrame]("profile_state_a")
+  private val stateMemoB = Memo[DataFrame]("profile_state_b")
 
   /** Snapshot A's state (even event ids — the historical estate). */
   private[queries] def stateA(spark: SparkSession, sfDir: String): DataFrame =
-    stateMemoA.getOrElseUpdate(key(spark, sfDir),
+    stateMemoA(spark, sfDir)(
       stateOf(Tables.events(spark, sfDir)
         .filter(coalesce(pmod(col("event_id"), lit(2)), lit(1L)) === 0))
         .localCheckpoint(eager = true))
@@ -114,14 +111,10 @@ object IncrementalProfile {
     * the coalesce keeps A ∪ B == the whole table even for null ids).
     */
   private[queries] def stateB(spark: SparkSession, sfDir: String): DataFrame =
-    stateMemoB.getOrElseUpdate(key(spark, sfDir),
+    stateMemoB(spark, sfDir)(
       stateOf(Tables.events(spark, sfDir)
         .filter(coalesce(pmod(col("event_id"), lit(2)), lit(1L)) =!= 0))
         .localCheckpoint(eager = true))
-
-  /** Test seam: forget the profile states. */
-  private[queries] def resetMemos(): Unit =
-    Seq(stateMemoA, stateMemoB).foreach(_.clear())
 
   private def kmvEstimate(nk: Column, kth: Column): Column =
     coalesce(

@@ -232,29 +232,20 @@ object AudioIndex {
         min(when(col("rk") === 1, col("n_agree"))).as("best_agree"))
   }
 
-  private val snapshotTablesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  private val snapshotTablesMemo = graft.core.Memo[(String, String)]("audio_snapshots")
 
   private[graft] def snapshotTables(spark: SparkSession, sfDir: String): (String, String) =
-    snapshotTablesMemo.synchronized {
-      snapshotTablesMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("audio_snapshots", sfDir) {
-          // lanes derive from the memoized corpus fingerprints — one
-          // sampling pass per dataset ever, shared with the pair and
-          // recall queries
-          val fps = Audio.corpusFps(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val (ta, tb) = (s"graft_audio_snap_a_$sfx", s"graft_audio_snap_b_$sfx")
-          writeFps(fps.filter(col("asset_id") % 2 === 0), ta)
-          writeFps(fps.filter(col("asset_id") % 2 === 1), tb)
-          (ta, tb)
-        })
+    snapshotTablesMemo(spark, sfDir) {
+      // lanes derive from the memoized corpus fingerprints — one
+      // sampling pass per dataset ever, shared with the pair and
+      // recall queries
+      val fps = Audio.corpusFps(spark, sfDir)
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val (ta, tb) = (s"graft_audio_snap_a_$sfx", s"graft_audio_snap_b_$sfx")
+      writeFps(fps.filter(col("asset_id") % 2 === 0), ta)
+      writeFps(fps.filter(col("asset_id") % 2 === 1), tb)
+      (ta, tb)
     }
-
-  /** Test seam: forget the written snapshot tables. */
-  private[graft] def resetSnapshotTables(): Unit =
-    snapshotTablesMemo.synchronized(snapshotTablesMemo.clear())
 
   /** The live audio gate: each arriving track's 7 posting rows probe
     * the bucketed index; strict-majority agreement verifies map-side
@@ -535,29 +526,20 @@ object AudioIndex {
 
   // ---- q_audio_estate_merge ------------------------------------------------
 
-  private val estateTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val estateTableMemo = graft.core.Memo[String]("audio_estate")
 
   /** The COMPACTED estate index of a dataset: snapshots A and B merged
     * by [[merge]] into one bucketed table, written once per
     * (application, dataset) and timed into the bench `artifacts` map.
     */
   private[graft] def estateTable(spark: SparkSession, sfDir: String): String =
-    estateTableMemo.synchronized {
-      estateTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("audio_estate", sfDir) {
-          val (ta, tb) = snapshotTables(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_audio_estate_$sfx"
-          merge(spark, Seq(ta, tb), t)
-          t
-        })
+    estateTableMemo(spark, sfDir) {
+      val (ta, tb) = snapshotTables(spark, sfDir)
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val t = s"graft_audio_estate_$sfx"
+      merge(spark, Seq(ta, tb), t)
+      t
     }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetEstateTable(): Unit =
-    estateTableMemo.synchronized(estateTableMemo.clear())
 
   /** q_audio_estate_merge: the compacted estate's fingerprint-group
     * table — one row per distinct fingerprint with its GLOBAL
@@ -586,8 +568,7 @@ object AudioIndex {
 
   // ---- q_audio_retention ---------------------------------------------------
 
-  private val retainedTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val retainedTableMemo = graft.core.Memo[String]("audio_retained")
 
   /** The estate AFTER snapshot B expires: [[removeSnapshot]] applied to
     * the compacted estate with B's own index as the tombstone and A's
@@ -595,22 +576,14 @@ object AudioIndex {
     * timed into the bench `artifacts` map.
     */
   private[graft] def retainedTable(spark: SparkSession, sfDir: String): String =
-    retainedTableMemo.synchronized {
-      retainedTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("audio_retained", sfDir) {
-          val (ta, tb) = snapshotTables(spark, sfDir)
-          val est = estateTable(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_audio_retained_$sfx"
-          removeSnapshot(spark, est, tb, Seq(ta), t)
-          t
-        })
+    retainedTableMemo(spark, sfDir) {
+      val (ta, tb) = snapshotTables(spark, sfDir)
+      val est = estateTable(spark, sfDir)
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val t = s"graft_audio_retained_$sfx"
+      removeSnapshot(spark, est, tb, Seq(ta), t)
+      t
     }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetRetainedTable(): Unit =
-    retainedTableMemo.synchronized(retainedTableMemo.clear())
 
   /** q_audio_retention: the audio estate's DELETE leg, gated — crawl B
     * expires from the compacted estate via the subtract-and-repair

@@ -227,31 +227,22 @@ object EmbedIndex {
 
   // ---- q_cross_snapshot_embed --------------------------------------------
 
-  private val snapshotTablesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  private val snapshotTablesMemo = graft.core.Memo[(String, String)]("embed_snapshots")
 
   /** The two persisted snapshot indexes of a dataset (A = even vec
     * ids, the estate; B = odd, the new batch), both written under the
     * A-side fit — the [[SignatureIndex.snapshotTables]] contract.
     */
   private[graft] def snapshotTables(spark: SparkSession, sfDir: String): (String, String) =
-    snapshotTablesMemo.synchronized {
-      snapshotTablesMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("embed_snapshots", sfDir) {
-          val emb = Tables.embeddings(spark, sfDir)
-          val centers = Similarity.estateCenters(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val (ta, tb) = (s"graft_embed_snap_a_$sfx", s"graft_embed_snap_b_$sfx")
-          write(emb.filter(col("vec_id") % 2 === 0), ta, centers)
-          write(emb.filter(col("vec_id") % 2 === 1), tb, centers)
-          (ta, tb)
-        })
+    snapshotTablesMemo(spark, sfDir) {
+      val emb = Tables.embeddings(spark, sfDir)
+      val centers = Similarity.estateCenters(spark, sfDir)
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val (ta, tb) = (s"graft_embed_snap_a_$sfx", s"graft_embed_snap_b_$sfx")
+      write(emb.filter(col("vec_id") % 2 === 0), ta, centers)
+      write(emb.filter(col("vec_id") % 2 === 1), tb, centers)
+      (ta, tb)
     }
-
-  /** Test seam ([[SignatureIndex.resetSnapshotTables]]' contract). */
-  private[graft] def resetSnapshotTables(): Unit =
-    snapshotTablesMemo.synchronized(snapshotTablesMemo.clear())
 
   /** q_cross_snapshot_embed: the registered cross-snapshot SEMANTIC
     * sweep — the third modality's estate query beside
@@ -416,29 +407,20 @@ object EmbedIndex {
 
   // ---- q_embed_index_stats -------------------------------------------------
 
-  private val estateTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val estateTableMemo = graft.core.Memo[String]("embed_estate")
 
   /** The COMPACTED estate index of a dataset: snapshots A and B merged
     * by [[merge]] into one bucketed table, written once per
     * (application, dataset) and timed into the bench `artifacts` map.
     */
   private[graft] def estateTable(spark: SparkSession, sfDir: String): String =
-    estateTableMemo.synchronized {
-      estateTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("embed_estate", sfDir) {
-          val (ta, tb) = snapshotTables(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_embed_estate_$sfx"
-          merge(spark, Seq(ta, tb), t)
-          t
-        })
+    estateTableMemo(spark, sfDir) {
+      val (ta, tb) = snapshotTables(spark, sfDir)
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val t = s"graft_embed_estate_$sfx"
+      merge(spark, Seq(ta, tb), t)
+      t
     }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetEstateTable(): Unit =
-    estateTableMemo.synchronized(estateTableMemo.clear())
 
   /** q_embed_index_stats: health readout of the COMPACTED estate index
     * — per cell, the posting-list size, the rk-capped prototypical
@@ -486,8 +468,7 @@ object EmbedIndex {
 
   // ---- q_embed_retention ---------------------------------------------------
 
-  private val retainedTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val retainedTableMemo = graft.core.Memo[String]("embed_retained")
 
   /** The estate AFTER snapshot B expires ([[SignatureIndex
     * .retainedTable]]'s contract on the vector side): [[removeSnapshot]]
@@ -496,22 +477,14 @@ object EmbedIndex {
     * `artifacts` map.
     */
   private[graft] def retainedTable(spark: SparkSession, sfDir: String): String =
-    retainedTableMemo.synchronized {
-      retainedTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("embed_retained", sfDir) {
-          val (_, tb) = snapshotTables(spark, sfDir)
-          val est = estateTable(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_embed_retained_$sfx"
-          removeSnapshot(spark, est, tb, t)
-          t
-        })
+    retainedTableMemo(spark, sfDir) {
+      val (_, tb) = snapshotTables(spark, sfDir)
+      val est = estateTable(spark, sfDir)
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val t = s"graft_embed_retained_$sfx"
+      removeSnapshot(spark, est, tb, t)
+      t
     }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetRetainedTable(): Unit =
-    retainedTableMemo.synchronized(retainedTableMemo.clear())
 
   /** q_embed_retention: the vector side of the estate's DELETE leg,
     * gated — snapshot B expires via the zero-exchange anti join + gap-

@@ -203,33 +203,24 @@ object PhashIndex {
 
   // ---- q_cross_snapshot_phash --------------------------------------------
 
-  private val snapshotTablesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  private val snapshotTablesMemo = graft.core.Memo[(String, String)]("phash_snapshots")
 
   private[graft] def snapshotTables(spark: SparkSession, sfDir: String): (String, String) =
-    snapshotTablesMemo.synchronized {
-      snapshotTablesMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("phash_snapshots", sfDir) {
-          // lanes derive from the memoized corpus membership (one
-          // payload decode per dataset EVER, shared with every other
-          // phash consumer) — each write then only regroups its lane's
-          // codes and pays the bucket co-location shuffle. Before this
-          // seam the two lane writes re-decoded the corpus from raw
-          // docs: 28.2 s → ~4 s measured at sf0.1.
-          val codes = Multimodal.phashMembership(spark, sfDir)
-            .select(col("asset_id"), col("phash"))
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val (ta, tb) = (s"graft_phash_snap_a_$sfx", s"graft_phash_snap_b_$sfx")
-          writeCodes(codes.filter(col("asset_id") % 2 === 0), ta)
-          writeCodes(codes.filter(col("asset_id") % 2 === 1), tb)
-          (ta, tb)
-        })
+    snapshotTablesMemo(spark, sfDir) {
+      // lanes derive from the memoized corpus membership (one
+      // payload decode per dataset EVER, shared with every other
+      // phash consumer) — each write then only regroups its lane's
+      // codes and pays the bucket co-location shuffle. Before this
+      // seam the two lane writes re-decoded the corpus from raw
+      // docs: 28.2 s → ~4 s measured at sf0.1.
+      val codes = Multimodal.phashMembership(spark, sfDir)
+        .select(col("asset_id"), col("phash"))
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val (ta, tb) = (s"graft_phash_snap_a_$sfx", s"graft_phash_snap_b_$sfx")
+      writeCodes(codes.filter(col("asset_id") % 2 === 0), ta)
+      writeCodes(codes.filter(col("asset_id") % 2 === 1), tb)
+      (ta, tb)
     }
-
-  /** Test seam ([[SignatureIndex.resetSnapshotTables]]' contract). */
-  private[graft] def resetSnapshotTables(): Unit =
-    snapshotTablesMemo.synchronized(snapshotTablesMemo.clear())
 
   /** q_cross_snapshot_phash: the registered cross-snapshot IMAGE sweep —
     * snapshot A = even asset ids (the historical estate), snapshot B =
@@ -288,29 +279,20 @@ object PhashIndex {
 
   // ---- q_phash_estate_merge ------------------------------------------------
 
-  private val estateTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val estateTableMemo = graft.core.Memo[String]("phash_estate")
 
   /** The COMPACTED estate index of a dataset: snapshots A and B merged
     * by [[merge]] into one bucketed table, written once per
     * (application, dataset) and timed into the bench `artifacts` map.
     */
   private[graft] def estateTable(spark: SparkSession, sfDir: String): String =
-    estateTableMemo.synchronized {
-      estateTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("phash_estate", sfDir) {
-          val (ta, tb) = snapshotTables(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_phash_estate_$sfx"
-          merge(spark, Seq(ta, tb), t)
-          t
-        })
+    estateTableMemo(spark, sfDir) {
+      val (ta, tb) = snapshotTables(spark, sfDir)
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val t = s"graft_phash_estate_$sfx"
+      merge(spark, Seq(ta, tb), t)
+      t
     }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetEstateTable(): Unit =
-    estateTableMemo.synchronized(estateTableMemo.clear())
 
   /** q_phash_estate_merge: the compacted estate index's code-group
     * table — one row per distinct code with its GLOBAL representative

@@ -216,28 +216,17 @@ object SignatureIndex {
     * timed into [[graft.core.Memo]]'s build log so the bench artifact
     * reports the snapshot passes explicitly.
     */
-  private val snapshotTablesMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
+  private val snapshotTablesMemo = graft.core.Memo[(String, String)]("signature_snapshots")
 
   private[graft] def snapshotTables(spark: SparkSession, sfDir: String): (String, String) =
-    snapshotTablesMemo.synchronized {
-      snapshotTablesMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("signature_snapshots", sfDir) {
-          val docs = Tables.documents(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val (ta, tb) = (s"graft_sig_snap_a_$sfx", s"graft_sig_snap_b_$sfx")
-          write(docs.filter(col("doc_id") % 2 === 0), ta)
-          write(docs.filter(col("doc_id") % 2 === 1), tb)
-          (ta, tb)
-        })
+    snapshotTablesMemo(spark, sfDir) {
+      val docs = Tables.documents(spark, sfDir)
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val (ta, tb) = (s"graft_sig_snap_a_$sfx", s"graft_sig_snap_b_$sfx")
+      write(docs.filter(col("doc_id") % 2 === 0), ta)
+      write(docs.filter(col("doc_id") % 2 === 1), tb)
+      (ta, tb)
     }
-
-  /** Test seam: forget the written snapshot tables (specs that rewrite
-    * a dataset in place must reset, the `resetIvfFits` contract).
-    */
-  private[graft] def resetSnapshotTables(): Unit =
-    snapshotTablesMemo.synchronized(snapshotTablesMemo.clear())
 
   /** q_cross_snapshot_dedup: the registered form of the marquee
     * cross-JOB capability — re-deduplicating one corpus snapshot
@@ -303,29 +292,20 @@ object SignatureIndex {
 
   // ---- q_sig_index_stats ---------------------------------------------------
 
-  private val estateTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val estateTableMemo = graft.core.Memo[String]("sig_estate")
 
   /** The COMPACTED estate index of a dataset: snapshots A and B merged
     * by [[merge]] into one bucketed table, written once per
     * (application, dataset) and timed into the bench `artifacts` map.
     */
   private[graft] def estateTable(spark: SparkSession, sfDir: String): String =
-    estateTableMemo.synchronized {
-      estateTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("sig_estate", sfDir) {
-          val (ta, tb) = snapshotTables(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_sig_estate_$sfx"
-          merge(spark, Seq(ta, tb), t)
-          t
-        })
+    estateTableMemo(spark, sfDir) {
+      val (ta, tb) = snapshotTables(spark, sfDir)
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val t = s"graft_sig_estate_$sfx"
+      merge(spark, Seq(ta, tb), t)
+      t
     }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetEstateTable(): Unit =
-    estateTableMemo.synchronized(estateTableMemo.clear())
 
   /** q_sig_index_stats: the [[graft.pipeline.Dedup.bandStats]] health
     * readout computed over the COMPACTED PERSISTED estate index instead
@@ -359,8 +339,7 @@ object SignatureIndex {
 
   // ---- q_sig_retention -------------------------------------------------
 
-  private val retainedTableMemo =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val retainedTableMemo = graft.core.Memo[String]("sig_retained")
 
   /** The estate AFTER snapshot B expires: [[removeSnapshot]] applied to
     * the compacted estate with B's own index as the tombstone set —
@@ -368,22 +347,14 @@ object SignatureIndex {
     * `artifacts` map.
     */
   private[graft] def retainedTable(spark: SparkSession, sfDir: String): String =
-    retainedTableMemo.synchronized {
-      retainedTableMemo.getOrElseUpdate(
-        s"${spark.sparkContext.applicationId}|$sfDir",
-        graft.core.Memo.timed("sig_retained", sfDir) {
-          val (_, tb) = snapshotTables(spark, sfDir)
-          val est = estateTable(spark, sfDir)
-          val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-          val t = s"graft_sig_retained_$sfx"
-          removeSnapshot(spark, est, tb, t)
-          t
-        })
+    retainedTableMemo(spark, sfDir) {
+      val (_, tb) = snapshotTables(spark, sfDir)
+      val est = estateTable(spark, sfDir)
+      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
+      val t = s"graft_sig_retained_$sfx"
+      removeSnapshot(spark, est, tb, t)
+      t
     }
-
-  /** Test seam ([[resetSnapshotTables]]' contract). */
-  private[graft] def resetRetainedTable(): Unit =
-    retainedTableMemo.synchronized(retainedTableMemo.clear())
 
   /** q_sig_retention: the estate lifecycle's DELETE leg, gated — crawl
     * B expires from the compacted estate via the exchange-free anti

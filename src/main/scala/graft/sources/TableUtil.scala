@@ -64,8 +64,7 @@ private[graft] object TableUtil {
   def hotBuckets(spark: SparkSession, table: String, keys: Seq[String],
       cap: Long): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    hotBucketsMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$table|${keys.mkString(",")}|$cap",
+    hotBucketsMemo(spark, table, s"${keys.mkString(",")}|$cap")(
       spark.table(table)
         .groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
         .filter(col("c") > cap)
@@ -74,13 +73,8 @@ private[graft] object TableUtil {
   }
 
   // one entry per (dataset, family) index table a session gates against
-  private val hotBucketsMemo = new graft.core.Memo("gate_hot_buckets", maxEntries = 8)
-
-  /** Test seam: forget memoized hot sets (a spec that rewrites an
-    * index table in place must reset — the `resetSnapshotTables`
-    * contract).
-    */
-  private[graft] def resetHotBuckets(): Unit = hotBucketsMemo.clear()
+  private val hotBucketsMemo =
+    graft.core.Memo[org.apache.spark.sql.DataFrame]("gate_hot_buckets", maxEntries = 8)
 
   /** Delete a filesystem path recursively (no catalog interaction). */
   def deletePath(path: String): Unit = {

@@ -122,44 +122,46 @@ class AnomalyPipeline(
     * that are part of the store. Written (tmp + rename) AFTER new dirs
     * exist and BEFORE superseded ones are deleted — the commit point
     * that makes compaction crash-safe: a crash between the merged-dir
-    * write and the input deletion no longer double-restores those rows,
+    * write and the input deletion does not double-restore those rows,
     * because restore trusts only manifest-listed dirs and removes the
-    * rest as orphans.
+    * rest as orphans. A failed commit throws: continuing would delete
+    * the dirs the old manifest still lists while the new segment stays
+    * unlisted, so a restart would restore fewer rows than were stored.
+    * The rename replaces the old manifest in one step where the file
+    * system allows it (the local one does); elsewhere the old one is
+    * deleted first.
     */
-  private def writeManifest(d: String, live: Vector[Segment]): Unit =
-    try {
-      val mf = manifestPath(d)
-      val fs = hadoopFs(mf)
-      val tmp = new org.apache.hadoop.fs.Path(s"$d/store/_MANIFEST.tmp")
-      val out = fs.create(tmp, true)
-      out.write(live.flatMap(_.path)
-        .map(p => new org.apache.hadoop.fs.Path(p).getName)
-        .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
-      fs.delete(mf, false)
-      if (!fs.rename(tmp, mf))
-        log.warn(s"segment manifest rename failed for $mf; restore will fall back to directory listing")
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        log.warn(s"segment manifest write failed: $e; restore will fall back to directory listing")
-    }
+  private def writeManifest(d: String, live: Vector[Segment]): Unit = {
+    val mf = manifestPath(d)
+    val fs = hadoopFs(mf)
+    val tmp = new org.apache.hadoop.fs.Path(s"$d/store/_MANIFEST.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(live.flatMap(_.path)
+      .map(p => new org.apache.hadoop.fs.Path(p).getName)
+      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    if (!fs.rename(tmp, mf) && !(fs.delete(mf, false) && fs.rename(tmp, mf)))
+      throw new java.io.IOException(s"segment manifest commit failed: cannot rename $tmp to $mf")
+  }
 
-  /** Names listed in the store manifest, if one exists. */
-  private def readManifest(d: String): Option[Set[String]] =
-    try {
-      val mf = manifestPath(d)
-      val fs = hadoopFs(mf)
-      if (!fs.exists(mf)) None
-      else {
-        val in = fs.open(mf)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        Some(txt.split('\n').map(_.trim).filter(_.nonEmpty).toSet)
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+  /** Names listed in the store manifest; None when no manifest exists.
+    * A manifest that is present but unreadable throws, naming it.
+    */
+  private def readManifest(d: String): Option[Set[String]] = {
+    val mf = manifestPath(d)
+    val fs = hadoopFs(mf)
+    if (!fs.exists(mf)) None
+    else Some(AnomalyPipeline.readingState(mf.toString) {
+      val in = fs.open(mf)
+      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      txt.split('\n').map(_.trim).filter(_.nonEmpty).toSet
+    })
+  }
 
-  /** Restored store: absent (first start) is empty; a committed
-    * segment that is present but unreadable throws, naming its dir —
-    * dropping it would silently shrink every trailing window.
+  /** Restored store: absent (first start) is empty; the manifest is
+    * the only record of what was committed, so with none, nothing was.
+    * A committed segment that is missing or unreadable throws, naming
+    * its dir — dropping it would silently shrink every trailing window.
     */
   private val segments = new AtomicReference[Vector[Segment]]({
     stateDir.flatMap { d =>
@@ -175,17 +177,15 @@ class AnomalyPipeline(
         // compaction wrote its merged dir but died before deleting
         // the inputs) and must NOT be restored — doing so would
         // double-count their rows.
-        val manifest = readManifest(d)
+        val names = readManifest(d).getOrElse(Set.empty)
         val dirs = fsys.listStatus(storePath).filter(_.isDirectory).toVector
           .filter(_.getPath.getName.startsWith("seg_"))
-        val (live, orphans) = manifest match {
-          case Some(names) => dirs.partition(st => names(st.getPath.getName))
-          case None =>
-            if (dirs.nonEmpty)
-              log.warn(s"no segment manifest under $storePath; restoring all " +
-                s"${dirs.size} segment dirs (rows may repeat if a crash interrupted compaction)")
-            (dirs, Vector.empty)
-        }
+        val missing = names -- dirs.map(_.getPath.getName)
+        if (missing.nonEmpty)
+          throw new IllegalStateException(
+            s"segment dirs listed in ${manifestPath(d)} are missing: " +
+              missing.toSeq.sorted.map(n => s"$storePath/$n").mkString(", "))
+        val (live, orphans) = dirs.partition(st => names(st.getPath.getName))
         orphans.foreach { st =>
           log.warn(s"removing uncommitted segment dir ${st.getPath} (crash leftover)")
           try fsys.delete(st.getPath, true) catch { case _: Throwable => () }

@@ -148,17 +148,10 @@ object IngestGate {
     * index every ingest pipeline already maintains; cold cost lands in
     * the bench `artifacts` map.
     */
-  private val keeperMemo = new graft.core.Memo("gate_keeper_map", maxEntries = 8)
-
-  /** Test seam: forget memoized keeper maps (the resetHotBuckets
-    * contract — a spec that rewrites an index table in place with a
-    * different corpus must reset).
-    */
-  private[graft] def resetKeeperMaps(): Unit = keeperMemo.clear()
+  private val keeperMemo = graft.core.Memo[DataFrame]("gate_keeper_map", maxEntries = 8)
 
   private def keeperMap(corpus: DataFrame, indexTable: String): DataFrame =
-    keeperMemo.getOrElseUpdate(
-      s"${corpus.sparkSession.sparkContext.applicationId}|$indexTable",
+    keeperMemo(corpus.sparkSession, indexTable)(
       corpus.groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("keeper"))
         .localCheckpoint(eager = true))
 
@@ -583,11 +576,10 @@ object IngestGate {
     * map.
     */
   def estateAdmission(spark: SparkSession, sfDir: String): DataFrame =
-    admissionMemo.getOrElseUpdate(
-      s"${spark.sparkContext.applicationId}|$sfDir",
+    admissionMemo(spark, sfDir)(
       computeEstateAdmission(spark, sfDir).localCheckpoint(eager = true))
 
-  private val admissionMemo = new graft.core.Memo("estate_admission")
+  private val admissionMemo = graft.core.Memo[DataFrame]("estate_admission")
 
   private[graft] def computeEstateAdmission(spark: SparkSession, sfDir: String): DataFrame = {
     val text = ingestGateQuery(spark, sfDir)

@@ -11,6 +11,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   *
   *  - GET    /                   index of endpoints
   *  - GET    /status             counters + stored-event count + codegen totals
+  *                               + memo inventory (entries, builds, bytes)
   *  - GET    /healthcheck        200 empty
   *  - GET    /dsl                the active (static + discovered) DSL
   *  - GET    /dsl/computed       per-(topic:path:window) {median, stdDev}
@@ -87,11 +88,16 @@ class StatusServer(
         val (compiles, compileMs) = StatusServer.codegenTotals
         val codegen = jsonObject(Seq(
           s"${q("compiles")}: $compiles", s"${q("compileMs")}: $compileMs"))
+        val (entries, builds, bytes) = StatusServer.memoTotals
+        val memo = jsonObject(Seq(
+          s"${q("entries")}: $entries", s"${q("builds")}: $builds",
+          s"${q("storageBytes")}: $bytes"))
         (200, jsonObject(Seq(
           s"${q("stream")}: null", // no broker wired in this environment
           s"${q("db")}: $db",
           s"${q("sarkac")}: $sarkac",
-          s"${q("codegen")}: $codegen")))
+          s"${q("codegen")}: $codegen",
+          s"${q("memo")}: $memo")))
     })
     s.createContext("/healthcheck", exchange => route(exchange) {
       case ("GET", _) => (200, "")
@@ -127,17 +133,22 @@ class StatusServer(
         // Prometheus text exposition (beyond the reference surface):
         // counters as monotonic totals, Spark's codegen totals (a
         // steady stream compiles nothing, so a climbing count flags a
-        // per-trigger value inlined into generated code) and the
-        // stored-event gauge
+        // per-trigger value inlined into generated code), the memo
+        // build count, and gauges for the stored events and the memo
+        // inventory (entries held, block-manager bytes they pin)
         val (compiles, compileMs) = StatusServer.codegenTotals
+        val (entries, builds, bytes) = StatusServer.memoTotals
         val totals = counters.snapshot.toSeq.sortBy(_._1).map { case (k, v) =>
           ("graft_" + k.replaceAll("([A-Z])", "_$1").toLowerCase + "_total", v)
-        } ++ Seq("graft_codegen_compiles_total" -> compiles, "graft_codegen_compile_ms_total" -> compileMs)
+        } ++ Seq("graft_codegen_compiles_total" -> compiles,
+          "graft_codegen_compile_ms_total" -> compileMs, "graft_memo_builds_total" -> builds)
         val counterLines = totals.flatMap { case (name, v) => Seq(s"# TYPE $name counter", s"$name $v") }
-        val gauge = Seq(
-          "# TYPE graft_stored_events gauge",
-          s"graft_stored_events ${pipeline.map(_.storedEventCount).getOrElse(0L)}")
-        (200, (counterLines ++ gauge).mkString("", "\n", "\n"))
+        val gauges = Seq(
+          "graft_stored_events" -> pipeline.map(_.storedEventCount).getOrElse(0L),
+          "graft_memo_entries" -> entries.toLong,
+          "graft_memo_storage_bytes" -> bytes,
+        ).flatMap { case (name, v) => Seq(s"# TYPE $name gauge", s"$name $v") }
+        (200, (counterLines ++ gauges).mkString("", "\n", "\n"))
     })
     s.createContext("/anomalies/cooldown", exchange => route(exchange) {
       case ("GET", _) =>
@@ -200,4 +211,13 @@ object StatusServer {
   private def codegenTotals: (Long, Long) = (
     org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
     org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1000000L)
+
+  /** The memo inventory: entries held across every memo, builds since
+    * the JVM started, and the block-manager bytes the entries pin.
+    */
+  private def memoTotals: (Int, Long, Long) = (
+    graft.core.Memo.entryCount,
+    graft.core.Memo.buildCount,
+    org.apache.spark.sql.SparkSession.getDefaultSession
+      .map(graft.core.Memo.storageBytes).getOrElse(0L))
 }

@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -8,7 +9,7 @@ import graft.SparkSpec
   * artifact built wide is re-laid to a size-derived partition count
   * with IDENTICAL content, and anything that is not a pure checkpoint
   * leaf passes through untouched (Mat.rightSizeStored via
-  * Memo.getOrElseUpdate).
+  * Memo.apply).
   */
 class RightSizeSpec extends SparkSpec {
   import spark.implicits._
@@ -34,10 +35,10 @@ class RightSizeSpec extends SparkSpec {
   }
 
   test("the memo applies the policy to checkpointed entries") {
-    val memo = new Memo("right_size_spec")
-    val stored = memo.getOrElseUpdate("k", {
+    val memo = Memo[DataFrame]("right_size_spec")
+    val stored = memo(spark, "k") {
       spark.range(0, 500).toDF("id").repartition(32).localCheckpoint(true)
-    })
+    }
     assert(stored.rdd.getNumPartitions < 32)
     assert(stored.count() == 500)
     memo.clear()

@@ -47,7 +47,7 @@ class AnnPcaRecallSpec extends SparkSpec {
       val r = recall(exact, proj)
       info(f"rank-8 recall: $r%.3f")
       assert(r >= 0.9, f"projection must preserve rank-8 neighborhoods, got $r%.3f")
-    } finally Similarity.resetPcaFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("isotropic corpus: projected top-5 still carries signal above random") {
@@ -59,6 +59,6 @@ class AnnPcaRecallSpec extends SparkSpec {
       val r = recall(exact, proj)
       info(f"isotropic-corpus recall: $r%.3f (random baseline ~0.01)")
       assert(r >= 0.05, f"projected ranking degenerated to random: $r%.3f")
-    } finally Similarity.resetPcaFits()
+    } finally graft.core.Memo.releaseAll()
   }
 }

@@ -16,7 +16,7 @@ class PqSpec extends SparkSpec {
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
 
   test("identical vectors get identical codes and identical error; codes are deterministic across refits") {
-    Pq.resetFits()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("pqenc").toString
       // 20 groups x 3 identical one-hot vectors (the SemanticDedupSpec
@@ -36,14 +36,13 @@ class PqSpec extends SparkSpec {
           s"clones of group $g encode differently")
       }
       assert(first.values.forall(_._2 >= 0.0), "negative quantization error")
-      Pq.resetFits()
+      graft.core.Memo.releaseAll()
       assert(snapshot() == first, "refit on the same data changed codes")
-    } finally Pq.resetFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("ADC ranks a query's exact clones first") {
-    Pq.resetFits()
-    Similarity.resetIvfFits() // annIvfPq also fits the shared coarse quantizer
+    graft.core.Memo.releaseAll() // annIvfPq also fits the shared coarse quantizer
     try {
       val dir = java.nio.file.Files.createTempDirectory("pqadc").toString
       // vec 0/100/200 are identical; 100 is a query (vec_id % 100 == 0).
@@ -63,12 +62,11 @@ class PqSpec extends SparkSpec {
       assert(q100.take(2).map(_._1).toSet == Set(0L, 200L),
         s"clones not ranked first: ${q100.toSeq}")
       assert(q100.take(2).forall(_._2 == 0.0), "exact refine distance of a clone must be 0")
-    } finally { Pq.resetFits(); Similarity.resetIvfFits() }
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("IVF+PQ top-5 recall vs exact-L2 top-5 on the driver corpus") {
-    Pq.resetFits()
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     try {
       val sf = "/root/testdata/sf0.001"
       val emb = graft.queries.Tables.embeddings(spark, sf)
@@ -91,19 +89,18 @@ class PqSpec extends SparkSpec {
       assert(got.nonEmpty)
       val recall = (truth & got).size.toDouble / truth.size
       assert(recall >= 0.4, f"IVF+PQ recall regressed: $recall%.3f")
-    } finally { Pq.resetFits(); Similarity.resetIvfFits() }
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("oracles render only after the fits, with codebooks inlined") {
-    Pq.resetFits()
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     try {
       assert(Pq.pqEncodeOracleSql.isEmpty, "no fit yet -> no oracle")
       assert(Pq.annIvfPqOracleSql.isEmpty, "no fit yet -> no oracle")
       Pq.annIvfPq(spark, "/root/testdata/sf0.001").count()
       assert(Pq.pqEncodeOracleSql.get.contains("cb(m, code, scc, scv)"))
       assert(Pq.annIvfPqOracleSql.get.contains("cents(cell, cc, cv)"))
-    } finally { Pq.resetFits(); Similarity.resetIvfFits() }
+    } finally graft.core.Memo.releaseAll()
   }
 }
 
@@ -115,7 +112,7 @@ class HardNegativesSpec extends graft.SparkSpec {
   import spark.implicits._
 
   test("identical other-label clone ranks first; same-label candidates are excluded") {
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("hardneg").toString
       // 20 one-hot groups of 3 identical vectors; members 0,1 labeled A,
@@ -133,17 +130,17 @@ class HardNegativesSpec extends graft.SparkSpec {
         s"hardest negative should be the identical B-labeled clone: ${q0.toSeq}")
       assert(out.forall(r => r.getAs[String]("label") != r.getAs[String]("q_label")),
         "a same-label candidate leaked into the negatives")
-    } finally Similarity.resetIvfFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("oracle renders only after the fit, with the label predicate") {
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     try {
       assert(Similarity.hardNegativesOracleSql.isEmpty, "no fit yet -> no oracle")
       Similarity.hardNegatives(spark, "/root/testdata/sf0.001").count()
       val sql = Similarity.hardNegativesOracleSql
       assert(sql.nonEmpty && sql.get.contains("a.label <> p.q_label"))
-    } finally Similarity.resetIvfFits()
+    } finally graft.core.Memo.releaseAll()
   }
 }
 
@@ -233,7 +230,7 @@ class QualityClassifierSpec extends SparkSpec {
   }
 
   test("planted signal: curated-source docs classify positive, web docs negative") {
-    QualityClassifier.resetFits()
+    graft.core.Memo.releaseAll()
     try {
       // even doc_ids (source src0, positive class) draw from one token
       // set, odd (src9) from a disjoint set — linearly separable, and
@@ -256,33 +253,33 @@ class QualityClassifierSpec extends SparkSpec {
       }
       // margins are symmetric-ish and nonzero: positives strictly above 0
       assert(out.filter(_.getAs[Long]("doc_id") % 2 == 0).forall(_.getAs[Double]("score") > 0))
-    } finally QualityClassifier.resetFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("fit is deterministic: identical weights across refits") {
-    QualityClassifier.resetFits()
+    graft.core.Memo.releaseAll()
     try {
       val dir = "/root/testdata/sf0.001"
       QualityClassifier.classify(spark, dir).count()
       val first = QualityClassifier.fittedFor(dir).get
-      QualityClassifier.resetFits()
+      graft.core.Memo.releaseAll()
       QualityClassifier.classify(spark, dir).count()
       assert(QualityClassifier.fittedFor(dir).get == first, "refit changed weights")
-    } finally QualityClassifier.resetFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("oracle renders only after the fit, with the weights inlined") {
-    QualityClassifier.resetFits()
+    graft.core.Memo.releaseAll()
     try {
       assert(QualityClassifier.classifyOracleSql.isEmpty, "no fit yet -> no oracle")
       QualityClassifier.classify(spark, "/root/testdata/sf0.001").count()
       val sql = QualityClassifier.classifyOracleSql
       assert(sql.nonEmpty && sql.get.contains("list_reduce(list_prepend(CAST(0 AS DOUBLE)"))
-    } finally QualityClassifier.resetFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("calibration: separable corpus fills top bins with positives, capture reaches 1") {
-    QualityClassifier.resetFits()
+    graft.core.Memo.releaseAll()
     try {
       val rows = (0L until 60L).map { i =>
         val words =
@@ -312,6 +309,6 @@ class QualityClassifierSpec extends SparkSpec {
           BigDecimal(r.getAs[Long]("bin") * QualityClassifier.CalBinWidth)
             .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
       }
-    } finally QualityClassifier.resetFits()
+    } finally graft.core.Memo.releaseAll()
   }
 }

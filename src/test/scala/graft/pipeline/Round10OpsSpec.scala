@@ -16,7 +16,7 @@ class Round10OpsSpec extends SparkSpec {
 
   test("identical payloads collapse to one representative before the band join") {
     import org.apache.spark.sql.functions._
-    Multimodal.resetPhashMemo()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("phx10").toString
       // 70 byte-identical payloads (one code group) + two distinct
@@ -66,7 +66,7 @@ class Round10OpsSpec extends SparkSpec {
       assert(mega.length == 70 && mega.forall(_._2 == 1L),
         s"the 70 copies must cluster to their min id: ${cl.take(8).toSeq}")
     } finally {
-      Multimodal.resetPhashMemo()
+      graft.core.Memo.releaseAll()
       spark.catalog.clearCache()
     }
   }
@@ -96,7 +96,7 @@ class Round10OpsSpec extends SparkSpec {
 
   test("incremental components: the new snapshot merges into the estate state exactly") {
     import org.apache.spark.sql.functions._
-    Dedup.resetClusterMemo()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("inc10").toString
       def txt(base: String, edit: Int = -1) =
@@ -129,7 +129,7 @@ class Round10OpsSpec extends SparkSpec {
       // full-graph node set
       assert(!got.exists(_._1 == 109L))
     } finally {
-      Dedup.resetClusterMemo()
+      graft.core.Memo.releaseAll()
       spark.catalog.clearCache()
     }
   }
@@ -166,8 +166,7 @@ class Round10OpsSpec extends SparkSpec {
 
   test("incremental phash clusters: the image snapshot merges through the same quotient") {
     import org.apache.spark.sql.functions._
-    Multimodal.resetPhashMemo()
-    graft.sources.PhashIndex.resetSnapshotTables()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("phinc10").toString
       def txt(base: String) = (1 to 40).map(i => s"$base$i").mkString(" ")
@@ -240,8 +239,7 @@ class Round10OpsSpec extends SparkSpec {
         (10L, 10L, 2L), (107L, 10L, 2L)),
         s"planted layout diverged: $got")
     } finally {
-      Multimodal.resetPhashMemo()
-      graft.sources.PhashIndex.resetSnapshotTables()
+      graft.core.Memo.releaseAll()
       spark.catalog.clearCache()
     }
   }
@@ -265,8 +263,7 @@ class Round10OpsSpec extends SparkSpec {
 
   test("cross-snapshot recall eval: planted near-identical pair caught; invariants hold") {
     import org.apache.spark.sql.functions._
-    Dedup.resetClusterMemo()
-    graft.sources.SignatureIndex.resetSnapshotTables()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("csr10").toString
       def txt(base: String, edit: Int = -1) =
@@ -295,16 +292,14 @@ class Round10OpsSpec extends SparkSpec {
       assert(b10.exists(b => b._2 >= 1 && b._3 >= 1),
         s"identical cross-parity pair must be caught at J = 1.0: ${got.toSeq}")
     } finally {
-      Dedup.resetClusterMemo()
-      graft.sources.SignatureIndex.resetSnapshotTables()
+      graft.core.Memo.releaseAll()
       spark.catalog.clearCache()
     }
   }
 
   test("image sweep recall eval: planted identical cross-parity pair caught") {
     import org.apache.spark.sql.functions._
-    Multimodal.resetPhashMemo()
-    graft.sources.PhashIndex.resetSnapshotTables()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("psr10").toString
       val same = (1 to 80).map(i => ('a' + (i % 17)).toChar).mkString(" ")
@@ -323,8 +318,7 @@ class Round10OpsSpec extends SparkSpec {
         s"probe 11's identical estate twin must be caught at recall 1.0: ${got.toSeq}")
       got.foreach { case (_, nt, nh, _) => assert(nh <= nt) }
     } finally {
-      Multimodal.resetPhashMemo()
-      graft.sources.PhashIndex.resetSnapshotTables()
+      graft.core.Memo.releaseAll()
       spark.catalog.clearCache()
     }
   }

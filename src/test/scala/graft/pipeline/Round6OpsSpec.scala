@@ -297,7 +297,7 @@ class PcaProjectSpec extends SparkSpec {
       v.map(x => (x - m) * (x - m)).sum / n
     }
     assert(vars.head == vars.max, "pc1 must carry the largest variance")
-    } finally Similarity.resetPcaFits()
+    } finally graft.core.Memo.releaseAll()
   }
 }
 
@@ -318,7 +318,7 @@ class BpeSpec extends SparkSpec {
   }
 
   test("fit learns hand-checked merge ranks with deterministic tie-break") {
-    Bpe.resetFit()
+    graft.core.Memo.releaseAll()
     try {
       // words: aaab(2) ab(1) aab(1) xq(1) -> pair counts round 1:
       // (a,a)=5 (a,b)=4 (x,q)=1; then (a,b)=3; then (aa,ab)=2; then the
@@ -326,11 +326,11 @@ class BpeSpec extends SparkSpec {
       val dir = writeDocs(Seq(1L -> "aaab aaab ab", 2L -> "aab xq"))
       val ms = Bpe.mergesFor(spark, dir)
       assert(ms == Seq(("a", "a"), ("a", "b"), ("aa", "ab"), ("aa", "b"), ("x", "q")))
-    } finally Bpe.resetFit()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("token counts match hand-computed BPE segmentations") {
-    Bpe.resetFit()
+    graft.core.Memo.releaseAll()
     try {
       val dir = writeDocs(Seq(1L -> "aaab aaab ab", 2L -> "aab xq", 3L -> "aaa"))
       val out = Bpe.tokenCountBpe(spark, dir).collect()
@@ -340,11 +340,11 @@ class BpeSpec extends SparkSpec {
       // aaa: (a)(a)(a) -> (aa)(a) -> (aaa): with aaa in the corpus the
       // count-1 tie resolves to (aa,a) before (aa,b), so aaa fully merges
       assert(out(3L) == ((1L, 1L)))
-    } finally Bpe.resetFit()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("consecutive spaces produce empty words that count zero BPE tokens") {
-    Bpe.resetFit()
+    graft.core.Memo.releaseAll()
     try {
       // "a  b" splits to [a, '', b]: ws count 3, BPE count 2 — the empty
       // word must contribute 0 (the DuckDB mirror filters the phantom
@@ -352,11 +352,11 @@ class BpeSpec extends SparkSpec {
       val dir = writeDocs(Seq(1L -> "a  b"))
       val out = Bpe.tokenCountBpe(spark, dir).collect().head
       assert((out.getLong(1), out.getLong(2)) == ((3L, 2L)))
-    } finally Bpe.resetFit()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("fertility aggregates the per-doc BPE counts by source") {
-    Bpe.resetFit()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("bpe_f").toString
       Seq((1L, "aaab aaab ab", "s1"), (2L, "aab xq", "s1"), (3L, "aaa", "s2"))
@@ -372,11 +372,11 @@ class BpeSpec extends SparkSpec {
       assert(bySource("s1") == ((2L, ws1, bpe1, bpe1.toDouble / ws1)))
       val (ws2, bpe2) = perDoc(3L)
       assert(bySource("s2") == ((1L, ws2, bpe2, bpe2.toDouble / ws2)))
-    } finally Bpe.resetFit()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("context fit cross-checks the per-doc BPE counts against each window") {
-    Bpe.resetFit()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("bpe_cf").toString
       // one long doc (> 2048 BPE tokens, so the smallest window must
@@ -403,11 +403,11 @@ class BpeSpec extends SparkSpec {
       }
       val fits = Bpe.ContextSizes.map(c => fit(c).getAs[Long]("n_docs_fit"))
       assert(fits == fits.sorted, "fit count must be monotonic in context size")
-    } finally Bpe.resetFit()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("oracle SQL refuses to render after fits on two datasets") {
-    Bpe.resetFit()
+    graft.core.Memo.releaseAll()
     try {
       val d1 = writeDocs(Seq(1L -> "aa bb"))
       val d2 = writeDocs(Seq(1L -> "cc dd"))
@@ -415,11 +415,11 @@ class BpeSpec extends SparkSpec {
       assert(Bpe.tokenCountBpeOracleSql.nonEmpty)
       Bpe.mergesFor(spark, d2)
       intercept[IllegalArgumentException] { Bpe.tokenCountBpeOracleSql }
-    } finally Bpe.resetFit()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("distributed trainer reproduces the driver-side trajectory with counts") {
-    Bpe.resetFit(); Bpe.resetTrain()
+    graft.core.Memo.releaseAll()
     try {
       // same fixture as the driver-side fit test; each trajectory count
       // is the pair's weighted count AT ITS OWN ROUND, i.e. after the
@@ -435,11 +435,11 @@ class BpeSpec extends SparkSpec {
       val rows = Bpe.bpeTrain(spark, dir).collect()
         .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
       assert(rows.toSeq == tr.zipWithIndex.map { case ((l, r, c), i) => (i + 1, l, r, c) })
-    } finally { Bpe.resetFit(); Bpe.resetTrain() }
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("vocab export: final symbols, weighted frequencies, and merge flags") {
-    Bpe.resetTrain()
+    graft.core.Memo.releaseAll()
     try {
       // after all 5 learned merges every fixture word collapses to one
       // symbol: aaab (freq 2), aab, ab, xq (freq 1 each)
@@ -449,7 +449,7 @@ class BpeSpec extends SparkSpec {
           r.getAs[Long]("n_chars"), r.getAs[Boolean]("is_merged")))
       assert(rows.toSeq == Seq(("aaab", 2L, 4L, true), ("aab", 1L, 3L, true),
         ("ab", 1L, 2L, true), ("xq", 1L, 2L, true)))
-    } finally Bpe.resetTrain()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("property: distributed fit == driver fit and argmax counts never increase") {
@@ -461,7 +461,7 @@ class BpeSpec extends SparkSpec {
     // driver-side implementation on generated corpora.
     val rng = new scala.util.Random(7)
     (1 to 5).foreach { _ =>
-      Bpe.resetFit(); Bpe.resetTrain()
+      graft.core.Memo.releaseAll()
       try {
         val docs = (1L to 4L).map { id =>
           val words = Seq.fill(3 + rng.nextInt(5))(
@@ -477,22 +477,22 @@ class BpeSpec extends SparkSpec {
         // distributed one TrainMerges (12): the common prefix must agree
         assert(tr.map(m => (m._1, m._2)) == Bpe.mergesFor(spark, dir).take(tr.size),
           s"distributed and driver fits diverged on $docs")
-      } finally { Bpe.resetFit(); Bpe.resetTrain() }
+      } finally graft.core.Memo.releaseAll()
     }
   }
 
   test("trainer stops when no pairs remain and caps at TrainMerges") {
-    Bpe.resetTrain()
+    graft.core.Memo.releaseAll()
     try {
       // single-char words only: zero adjacent pairs -> empty trajectory
       val d1 = writeDocs(Seq(1L -> "a b c"))
       assert(Bpe.trainedFor(spark, d1) == Seq.empty)
       assert(Bpe.bpeTrain(spark, d1).count() == 0L)
-      Bpe.resetTrain()
+      graft.core.Memo.releaseAll()
       // long repetitive word: more mergeable pairs than rounds
       val d2 = writeDocs(Seq(1L -> Seq.fill(4)("abcdefghijklmnopqrstuvwxyz").mkString(" ")))
       assert(Bpe.trainedFor(spark, d2).size == Bpe.TrainMerges)
-    } finally Bpe.resetTrain()
+    } finally graft.core.Memo.releaseAll()
   }
 }
 
@@ -563,7 +563,7 @@ class SemanticDedupSpec extends SparkSpec {
   import spark.implicits._
 
   test("each identical triple keeps exactly its lowest-id member; orthogonal groups untouched") {
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     try {
       // 20 groups x 3 identical one-hot vectors (64-dim). Within a group
       // cosine = 1 (>= threshold, same cell, identical bands); across
@@ -585,16 +585,16 @@ class SemanticDedupSpec extends SparkSpec {
       (0 until 20).foreach { g =>
         assert(cellOf(g * 3L) == cellOf(g * 3L + 1) && cellOf(g * 3L) == cellOf(g * 3L + 2))
       }
-    } finally Similarity.resetIvfFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("oracle renders only after the fit, with the fitted centroids inlined") {
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     try {
       assert(Similarity.semanticDedupOracleSql.isEmpty, "no fit yet -> no oracle")
       Similarity.semanticDedup(spark, "/root/testdata/sf0.001").count()
       val sql = Similarity.semanticDedupOracleSql
       assert(sql.nonEmpty && sql.get.contains("cents(cell, cc, cv)"))
-    } finally Similarity.resetIvfFits()
+    } finally graft.core.Memo.releaseAll()
   }
 }

@@ -569,7 +569,7 @@ class Round7OpsSpec extends SparkSpec {
   // ---- q_knn_graph ---------------------------------------------------
 
   test("knn graph: top-k bound, rank contiguity, and mutual-flag symmetry") {
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("knng").toString
       // two tight 64-dim clusters of 20 vectors each; within-cluster
@@ -596,7 +596,7 @@ class Round7OpsSpec extends SparkSpec {
       assert(edges.exists(_._5), "tight clusters must produce mutual edges")
       // neighbors never cross the planted cluster boundary
       assert(edges.forall { case (s, _, d, _, _) => (s / 20) == (d / 20) })
-    } finally Similarity.resetIvfFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   // ---- q_epoch_plan --------------------------------------------------

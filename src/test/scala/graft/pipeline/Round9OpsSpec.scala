@@ -58,7 +58,7 @@ class Round9OpsSpec extends SparkSpec {
   }
 
   test("IVF auto-sizing: k derives from the corpus (~sqrt n), no hand constant") {
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     try {
       Similarity.ivfCenters(spark, sf)
       val info = Similarity.ivfFitInfo(sf).get
@@ -70,12 +70,12 @@ class Round9OpsSpec extends SparkSpec {
         s"fit log inconsistent with shipped centers: $info")
       assert(Similarity.ivfCellsOf(100L * 1000 * 1000) == Similarity.IvfCellsMax,
         "k must clamp at IvfCellsMax for web-scale corpora")
-    } finally Similarity.resetIvfFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("IVF skew re-fit: a planted giant cell triggers one re-fit at 2k and splits") {
     import org.apache.spark.sql.functions._
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("ivfskew9").toString
       // n = 255 -> k0 = 16. 20 sample-visible far outliers (ids 0,3,..,57:
@@ -106,7 +106,7 @@ class Round9OpsSpec extends SparkSpec {
       val after = KmeansFit.maxSharePpm(pts, centers)
       assert(after < info.sampleMaxSharePpm / 2,
         s"re-fit did not split the giant cell: $after ppm vs ${info.sampleMaxSharePpm}")
-    } finally Similarity.resetIvfFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("dedup sweep: every threshold reports, the curve is monotone, 0.5 matches the cluster pair graph") {
@@ -163,7 +163,7 @@ class Round9OpsSpec extends SparkSpec {
 
   test("dup inflation: near-dup copies inflate exactly their token mass, solo docs count fully") {
     import org.apache.spark.sql.functions._
-    Dedup.resetClusterMemo()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("inflate9").toString
       // source A: an identical 6-token trio (cluster keeper = min id) +
@@ -184,12 +184,12 @@ class Round9OpsSpec extends SparkSpec {
       // dup ppm = 1e6 * 12 / 28 = 428571 (floor)
       assert(out("A") == (4L, 28L, 16L, 428571L), s"source A: ${out("A")}")
       assert(out("B") == (1L, 8L, 8L, 0L), s"source B: ${out("B")}")
-    } finally Dedup.resetClusterMemo()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("source dup matrix and cluster purity: planted cross-source mirror resolves exactly") {
     import org.apache.spark.sql.functions._
-    Dedup.resetClusterMemo()
+    graft.core.Memo.releaseAll()
     try {
       val dir = java.nio.file.Files.createTempDirectory("prov9").toString
       // a 3-copy mirror spanning sources A (docs 1,2) and B (doc 3),
@@ -216,7 +216,7 @@ class Round9OpsSpec extends SparkSpec {
       assert(purity == Map(
         1L -> (3L, 2L, 1L, "A"),
         10L -> (2L, 1L, 1L, "B")), s"cluster provenance wrong: $purity")
-    } finally Dedup.resetClusterMemo()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("component resolver converges on a 300-link chain (log rounds, not diameter rounds)") {

@@ -124,7 +124,7 @@ class IvfRecallSpec extends SparkSpec {
     // a corpus of tight planted cliques: every probe's true top-5 are
     // its own clique-mates, co-celled by construction — recall@5 at
     // nprobe = 1 is already 1.0, so the calibrated width must be 1
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     import spark.implicits._
     try {
       val dir = java.nio.file.Files.createTempDirectory("ivfcal").toString
@@ -149,7 +149,7 @@ class IvfRecallSpec extends SparkSpec {
       assert(rep.getAs[String]("recommended_lane") == "ivf")
       assert(rep.isNullAt(rep.fieldIndex("alt_recall_ppm")),
         "met path must not carry alternative evidence")
-    } finally Similarity.resetIvfFits()
+    } finally graft.core.Memo.releaseAll()
   }
 
   test("oracle derives the calibration on demand when only explicit-nprobe paths ran") {
@@ -158,7 +158,7 @@ class IvfRecallSpec extends SparkSpec {
     // the q_ann_ivf oracle gate — annIvfOracleSql derives the missing
     // calibration from the frozen centroids via the active session
     val sf = "/root/testdata/sf0.001"
-    Similarity.resetIvfFits()
+    graft.core.Memo.releaseAll()
     try {
       Similarity.annRecallProbe(spark, sf, Some(2)).count() // fits centers, no calibration
       assert(Similarity.ivfCalibrationInfo(sf).isEmpty,
@@ -168,6 +168,6 @@ class IvfRecallSpec extends SparkSpec {
       val cal = Similarity.ivfCalibrationInfo(sf).get
       assert(sql.get.contains(s"crk <= ${cal.width}"),
         "derived calibration width must be frozen into the oracle SQL")
-    } finally Similarity.resetIvfFits()
+    } finally graft.core.Memo.releaseAll()
   }
 }

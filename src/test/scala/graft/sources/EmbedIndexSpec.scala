@@ -113,8 +113,7 @@ class EmbedIndexSpec extends SparkSpec {
   }
 
   test("registered estate queries: verdicts and full recall under the frozen estate codebook") {
-    Similarity.resetEstateFits()
-    EmbedIndex.resetSnapshotTables()
+    graft.core.Memo.releaseAll()
     val dir = java.nio.file.Files.createTempDirectory("embest10").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -136,8 +135,7 @@ class EmbedIndexSpec extends SparkSpec {
       assert(rec == Set((1L, 6L, 6L, 1.0), (21L, 6L, 6L, 1.0), (41L, 6L, 6L, 1.0)),
         s"cell-scoped sweep must have full recall on the planted families: $rec")
     } finally {
-      Similarity.resetEstateFits()
-      EmbedIndex.resetSnapshotTables()
+      graft.core.Memo.releaseAll()
       spark.sql(s"DROP TABLE IF EXISTS graft_embed_snap_a_${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
       spark.sql(s"DROP TABLE IF EXISTS graft_embed_snap_b_${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
       spark.catalog.clearCache()
@@ -145,9 +143,7 @@ class EmbedIndexSpec extends SparkSpec {
   }
 
   test("embed incremental: quotient merge == from-scratch; families cluster whole") {
-    Similarity.resetEstateFits()
-    EmbedIndex.resetSnapshotTables()
-    Similarity.resetEmbedIncrementalMemos()
+    graft.core.Memo.releaseAll()
     val dir = java.nio.file.Files.createTempDirectory("embinc13").toString
     rows.toDF("vec_id", "embedding", "label")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
@@ -173,9 +169,7 @@ class EmbedIndexSpec extends SparkSpec {
       assert(Similarity.embedIncrementalOracleSql.isDefined,
         "the from-scratch oracle must freeze once the estate fit has run")
     } finally {
-      Similarity.resetEstateFits()
-      EmbedIndex.resetSnapshotTables()
-      Similarity.resetEmbedIncrementalMemos()
+      graft.core.Memo.releaseAll()
       spark.sql(s"DROP TABLE IF EXISTS graft_embed_snap_a_${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
       spark.sql(s"DROP TABLE IF EXISTS graft_embed_snap_b_${dir.replaceAll("[^A-Za-z0-9]+", "_")}")
       spark.catalog.clearCache()

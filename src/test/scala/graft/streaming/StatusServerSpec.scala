@@ -83,8 +83,8 @@ class StatusServerSpec extends SparkSpec {
       assert(metrics.contains(s"graft_stored_events ${pipeline.storedEventCount}"))
       // Spark's codegen totals, the same values on /metrics and /status
       // (the driven pipeline compiled its first triggers' classes)
-      def series(name: String) =
-        s"(?m)^$name (\\d+)$$".r.findFirstMatchIn(metrics).map(_.group(1).toLong)
+      def series(name: String, text: String = metrics) =
+        s"(?m)^$name (\\d+)$$".r.findFirstMatchIn(text).map(_.group(1).toLong)
       val compiles = series("graft_codegen_compiles_total")
       val compileMs = series("graft_codegen_compile_ms_total")
       assert(compiles.exists(_ > 0L) && compileMs.isDefined, metrics)
@@ -92,6 +92,23 @@ class StatusServerSpec extends SparkSpec {
       assert(metrics.contains("# TYPE graft_codegen_compile_ms_total counter"))
       assert(send(port, "/status")._2.contains(
         s"\"codegen\": {\"compiles\": ${compiles.get}, \"compileMs\": ${compileMs.get}}"))
+      // the memo inventory: one checkpointed entry makes all three
+      // series non-zero; /status carries the same values under "memo"
+      val probe = graft.core.Memo[org.apache.spark.sql.DataFrame]("status_server_spec")
+      probe(spark, "ds")(spark.range(1000).toDF("id").localCheckpoint(eager = true))
+      try {
+        val (_, m2) = send(port, "/metrics")
+        val entries = series("graft_memo_entries", m2)
+        val builds = series("graft_memo_builds_total", m2)
+        val bytes = series("graft_memo_storage_bytes", m2)
+        assert(entries.exists(_ >= 1L) && builds.exists(_ >= 1L) && bytes.exists(_ > 0L), m2)
+        assert(m2.contains("# TYPE graft_memo_entries gauge"))
+        assert(m2.contains("# TYPE graft_memo_builds_total counter"))
+        assert(m2.contains("# TYPE graft_memo_storage_bytes gauge"))
+        val st = send(port, "/status")._2
+        assert(st.contains(s"\"memo\": {\"entries\": ${entries.get}, " +
+          s"\"builds\": ${builds.get}, \"storageBytes\": ${bytes.get}}"), st)
+      } finally probe.clear()
       // unknown path 404s; wrong method 405s
       assert(send(port, "/nope")._1 == 404)
       assert(send(port, "/status", "POST")._1 == 405)

@@ -11,7 +11,9 @@ import graft.core.Dsl
   * the two crash windows it closes — compaction's write-then-delete
   * (uncommitted dirs must not double-restore) — and the deferred
   * truncate (a truncate landing mid-trigger must survive a crash even
-  * though its segment release waits for the trigger boundary).
+  * though its segment release waits for the trigger boundary) — and
+  * that a commit or restore which cannot honor the manifest fails
+  * loudly instead of silently restoring a different row set.
   */
 class StoreManifestSpec extends SparkSpec {
   import spark.implicits._
@@ -104,5 +106,64 @@ class StoreManifestSpec extends SparkSpec {
       .foreach(f => Files.write(f.toPath, "not parquet".getBytes("UTF-8")))
     val e = intercept[IllegalStateException](new AnomalyPipeline(spark, dsl, stateDir = Some(dir)))
     assert(e.getMessage.contains(bad.getName), e.getMessage)
+  }
+
+  private def rmrf(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmrf))
+    f.delete()
+  }
+
+  private def segDirs(dir: String) =
+    new java.io.File(s"$dir/store").listFiles().filter(_.getName.startsWith("seg_")).sortBy(_.getName)
+
+  test("a failed manifest commit fails the trigger; a restart restores every committed row") {
+    val dir = Files.createTempDirectory("graft_manifest_commit").toFile.getAbsolutePath
+    val p1 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
+    p1.processBatch(batch(0, 60), new Timestamp(t0 + 60000))
+    val committedRows = p1.storedEventCount
+    // the commit's tmp file cannot be created: a non-empty directory
+    // stands in its place
+    val blocker = new java.io.File(s"$dir/store/_MANIFEST.tmp")
+    assert(blocker.mkdirs() && new java.io.File(blocker, "x").createNewFile())
+    intercept[java.io.IOException](p1.processBatch(batch(60, 120), new Timestamp(t0 + 120000)))
+    assert(p1.storedEventCount == committedRows, "an uncommitted segment must not join the store")
+    rmrf(blocker)
+    val p2 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
+    assert(p2.storedEventCount == committedRows,
+      s"restart must restore the committed rows: ${p2.storedEventCount} vs $committedRows")
+    assert(segDirs(dir).length == 1, "the uncommitted segment dir is removed as an orphan")
+  }
+
+  test("an unreadable manifest fails the restore, naming it") {
+    val dir = Files.createTempDirectory("graft_manifest_unreadable").toFile.getAbsolutePath
+    val p1 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
+    p1.processBatch(batch(0, 60), new Timestamp(t0 + 60000))
+    val mf = new java.io.File(s"$dir/store/_MANIFEST")
+    assert(mf.delete() && mf.mkdir() && new java.io.File(mf, "x").createNewFile())
+    val e = intercept[IllegalStateException](new AnomalyPipeline(spark, dsl, stateDir = Some(dir)))
+    assert(e.getMessage.contains("_MANIFEST"), e.getMessage)
+    assert(segDirs(dir).length == 1, "a failed restore must not delete committed segments")
+  }
+
+  test("a segment dir the manifest lists but that is missing fails the restore, naming it") {
+    val dir = Files.createTempDirectory("graft_manifest_missing").toFile.getAbsolutePath
+    val p1 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
+    p1.processBatch(batch(0, 60), new Timestamp(t0 + 60000))
+    p1.processBatch(batch(60, 120), new Timestamp(t0 + 120000))
+    val gone = segDirs(dir).head
+    rmrf(gone)
+    val e = intercept[IllegalStateException](new AnomalyPipeline(spark, dsl, stateDir = Some(dir)))
+    assert(e.getMessage.contains(gone.getName), e.getMessage)
+  }
+
+  test("no manifest means nothing was committed: segment dirs are removed as orphans") {
+    val dir = Files.createTempDirectory("graft_manifest_absent").toFile.getAbsolutePath
+    val p1 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
+    p1.processBatch(batch(0, 60), new Timestamp(t0 + 60000))
+    assert(segDirs(dir).nonEmpty)
+    new java.io.File(s"$dir/store").listFiles().filter(_.getName.contains("_MANIFEST")).foreach(rmrf)
+    val p2 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
+    assert(p2.storedEventCount == 0L, "an uncommitted store must not restore")
+    assert(segDirs(dir).isEmpty, "uncommitted segment dirs are removed")
   }
 }

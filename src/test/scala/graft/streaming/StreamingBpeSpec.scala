@@ -14,7 +14,7 @@ class StreamingBpeSpec extends SparkSpec {
   import spark.implicits._
 
   test("streamed BPE counts equal batch counts under the same frozen merges") {
-    Bpe.resetFit()
+    graft.core.Memo.releaseAll()
     try {
       val docs: Seq[(Long, String)] = Seq(
         1L -> "aaab aaab ab", 2L -> "aab xq", 3L -> "aaa", 4L -> "a  b")
@@ -40,6 +40,6 @@ class StreamingBpeSpec extends SparkSpec {
         // sanity from the hand-derived BpeSpec fixture: full merges
         assert(batch(1L) == ((3L, 3L)) && batch(3L) == ((1L, 1L)))
       } finally q.stop()
-    } finally Bpe.resetFit()
+    } finally graft.core.Memo.releaseAll()
   }
 }
