@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Audio
@@ -32,72 +32,49 @@ import graft.queries.Tables
   * on both sides). `EstateLifecycleSpec` drives all four modalities
   * through add → sweep → compact → expire → sweep == from-scratch.
   */
-object AudioIndex {
+object AudioIndex extends EstateIndex("audio", "audio_snapshots",
+    keys = Seq("slot", "lmv"), cols = Seq("rep", "fp", "slot", "lmv")) {
 
   /** Write a snapshot's landmark posting index. One co-locating
     * shuffle per snapshot, ever.
     */
-  def write(docs: DataFrame, table: String, buckets: Int = 8,
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    writeFps(Audio.packedFps(docs), table, buckets, mode)
+  def write(docs: DataFrame, table: String): Unit =
+    writeFps(Audio.packedFps(docs), table)
 
   /** [[write]] from an already-computed `(asset_id, fp)` relation —
     * the seam that lets the snapshot writer reuse the memoized corpus
     * fingerprints instead of re-running the sampling chain per lane
     * (the [[PhashIndex.writeCodes]] discipline).
     */
-  def writeFps(fps: DataFrame, table: String, buckets: Int = 8,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      TableUtil.dropTableAndLocation(fps.sparkSession, table)
-    val reps = fps.groupBy(col("fp")).agg(min(col("asset_id")).as("rep"))
-    reps
+  def writeFps(fps: DataFrame, table: String): Unit =
+    save(colocate(fps.groupBy(col("fp")).agg(min(col("asset_id")).as("rep"))
       .select(col("rep"), col("fp"), explode(sequence(lit(0), lit(6))).as("slot"))
-      .withColumn("lmv", expr("shiftright(fp, 9 * slot) % 512"))
-      .repartition(buckets, col("slot"), col("lmv"))
-      .write
-      .mode(mode)
-      .bucketBy(buckets, "slot", "lmv")
-      .sortBy("slot", "lmv")
-      .format("parquet")
-      .saveAsTable(table)
+      .withColumn("lmv", expr("shiftright(fp, 9 * slot) % 512"))), table)
+
+  protected def lanes(spark: SparkSession, sfDir: String): (Int, String) => Unit = {
+    // lanes derive from the memoized corpus fingerprints — one
+    // sampling pass per dataset ever, shared with the pair and
+    // recall queries
+    val fps = Audio.corpusFps(spark, sfDir)
+    (parity, table) => writeFps(fps.filter(col("asset_id") % 2 === parity), table)
   }
 
-  /** COMPACTION: merge N snapshot indexes into one estate index table.
-    * Like the phash index (and unlike the signature index), audio
-    * posting rows are fp-GROUP facts — one representative per distinct
-    * fingerprint per snapshot — and the same fingerprint can hold a
-    * representative in several snapshots (a re-crawled identical
-    * track), so the merge RE-COLLAPSES: group by (fp, slot, lmv), keep
-    * the global minimum representative. The result is bit-identical to
-    * [[writeFps]] over the union of the snapshots' fingerprints
-    * (IndexMergeSpec pins it) with no re-sampling: landmark rows are a
-    * function of the fingerprint, so the stored rows already carry
-    * them. One aggregation riding the ONE co-locating bucket shuffle.
+  /** The COMPACTION collapse. Like the phash index (and unlike the
+    * signature index), audio posting rows are fp-GROUP facts — one
+    * representative per distinct fingerprint per snapshot — and the
+    * same fingerprint can hold a representative in several snapshots (a
+    * re-crawled identical track), so [[merge]] RE-COLLAPSES: group by
+    * (fp, slot, lmv), keep the global minimum representative. The
+    * result is bit-identical to [[writeFps]] over the union of the
+    * snapshots' fingerprints (IndexMergeSpec pins it) with no
+    * re-sampling: landmark rows are a function of the fingerprint, so
+    * the stored rows already carry them. The re-collapse (group keys a
+    * superset of the partition keys) rides the ONE co-locating shuffle.
     */
-  def merge(spark: SparkSession, inputs: Seq[String], out: String,
-      buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // rawTable (not spark.table) is load-bearing: a union of
-    // identically-bucketed SCANS claims a partitioning the union does
-    // not honor and the re-collapse would emit duplicate keys — see
-    // TableUtil.rawTable's docstring. The explicit repartition is the
-    // one compaction shuffle; the re-collapse (group keys a superset
-    // of the partition keys) and the bucketed write both ride it.
-    inputs.map(TableUtil.rawTable(spark, _)
-        .select(col("rep"), col("fp"), col("slot"), col("lmv")))
-      .reduce(_.unionByName(_))
-      .repartition(buckets, col("slot"), col("lmv"))
-      .groupBy(col("fp"), col("slot"), col("lmv"))
+  override protected def collapse(rows: DataFrame): DataFrame =
+    rows.groupBy(col("fp"), col("slot"), col("lmv"))
       .agg(min(col("rep")).as("rep"))
       .select(col("rep"), col("fp"), col("slot"), col("lmv"))
-      .write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "slot", "lmv")
-      .sortBy("slot", "lmv")
-      .format("parquet")
-      .saveAsTable(out)
-  }
 
   /** RETENTION: expire one snapshot from a compacted estate. The naive
     * anti join (the signature index's retention) is LOSSY here because
@@ -131,14 +108,9 @@ object AudioIndex {
     * fingerprints (EstateLifecycleSpec pins the composition).
     */
   def removeSnapshot(spark: SparkSession, estate: String, removed: String,
-      survivors: Seq[String], out: String, buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // join keys (slot, lmv, fp) are a superset of the bucket keys: the
-    // SignatureIndex.removeSnapshot subset-co-partition scoping
-    val key = "spark.sql.requireAllClusterKeysForCoPartition"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
+      survivors: Seq[String], out: String): Unit =
+    // join keys (slot, lmv, fp) are a superset of the bucket keys
+    EstateIndex.coPartitioned(spark) {
       val keys = Seq("slot", "lmv", "fp")
       val tomb = spark.table(removed)
         .select(col("slot"), col("lmv"), col("fp"), lit(true).as("tomb"))
@@ -167,28 +139,22 @@ object AudioIndex {
             .select(when(col("tomb").isNull, col("rep")).otherwise(col("srep")).as("rep"),
               col("fp"), col("slot"), col("lmv"))
         }
-      retained.write
-        .mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "slot", "lmv")
-        .sortBy("slot", "lmv")
-        .format("parquet")
-        .saveAsTable(out)
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+      save(retained, out)
     }
-  }
+
+  protected def expire(spark: SparkSession, estate: String, removed: String,
+      survivors: Seq[String], out: String): Unit =
+    removeSnapshot(spark, estate, removed, survivors, out)
+
+  private def agreement(a: String, b: String) = expr(Audio.agreeSql(a, b)).as("n_agree")
 
   /** Pair-level cross-snapshot matches — every (B rep, A rep) landmark
     * candidate at ≥ [[Audio.MinLandmarkAgree]]/7 aligned agreement, one
     * row per pair. Bucket-capped like the batch pipeline: a (slot,
     * lmv) bucket exceeding [[Audio.AudioBucketCap]] representatives on
     * EITHER side is a saturated stop-landmark and drops before the
-    * join (declared semantics, mirrored in the oracle; non-binding on
-    * the gate corpus). Both cap counts group by the bucket key, so
-    * they read the bucket files exchange-free; the candidate join
-    * between the two identically-bucketed tables plans no exchange on
-    * either side; agreement verifies MAP-SIDE from the two packed
+    * join ([[cappedPairs]]; mirrored in the oracle; non-binding on the
+    * gate corpus); agreement verifies MAP-SIDE from the two packed
     * fingerprints in the join's own projection.
     */
   def crossSnapshotPairs(spark: SparkSession, indexA: String, indexB: String): DataFrame =
@@ -196,22 +162,12 @@ object AudioIndex {
 
   /** [[crossSnapshotPairs]] with an explicit cap — the spec seam. */
   private[graft] def crossSnapshotPairsCapped(spark: SparkSession, indexA: String,
-      indexB: String, cap: Long): DataFrame = {
-    def cool(table: String) = spark.table(table)
-      .groupBy(col("slot"), col("lmv")).agg(count(lit(1)).as("c"))
-      .filter(col("c") <= cap).select(col("slot"), col("lmv"))
-    val keep = cool(indexA).join(cool(indexB), Seq("slot", "lmv"), "left_semi")
-    val a = spark.table(indexA)
-      .select(col("slot"), col("lmv"), col("rep").as("corpus_rep"), col("fp").as("fp_c"))
-    val b = spark.table(indexB)
-      .select(col("slot"), col("lmv"), col("rep"), col("fp"))
-    b.join(broadcast(keep), Seq("slot", "lmv"), "left_semi")
-      .join(a, Seq("slot", "lmv"))
-      .select(col("rep"), col("corpus_rep"),
-        expr(Audio.agreeSql("fp", "fp_c")).as("n_agree"))
-      .filter(col("n_agree") >= Audio.MinLandmarkAgree)
-      .distinct() // a pair agreeing in several slots emits once
-  }
+      indexB: String, cap: Long): DataFrame =
+    cappedPairs(spark, indexA, indexB, cap,
+      a = Seq(col("rep").as("corpus_rep"), col("fp").as("fp_c")),
+      b = Seq(col("rep"), col("fp")))(_
+      .select(col("rep"), col("corpus_rep"), agreement("fp", "fp_c"))
+      .filter(col("n_agree") >= Audio.MinLandmarkAgree))
 
   /** Cross-snapshot audio near-dup verdicts: every representative of
     * snapshot B with a majority-agreement match in snapshot A, with
@@ -219,33 +175,9 @@ object AudioIndex {
     * tie-break) — the [[SignatureIndex.crossSnapshotMatches]] verdict
     * shape for the audio modality.
     */
-  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val matches = crossSnapshotPairs(spark, indexA, indexB)
-    val w = Window.partitionBy(col("rep"))
-      .orderBy(col("n_agree").desc, col("corpus_rep").asc)
-    matches
-      .withColumn("rk", row_number().over(w))
-      .groupBy(col("rep"))
-      .agg(count(lit(1)).as("n_matches"),
-        min(when(col("rk") === 1, col("corpus_rep"))).as("dup_of"),
-        min(when(col("rk") === 1, col("n_agree"))).as("best_agree"))
-  }
-
-  private val snapshotTablesMemo = graft.core.Memo[(String, String)]("audio_snapshots")
-
-  private[graft] def snapshotTables(spark: SparkSession, sfDir: String): (String, String) =
-    snapshotTablesMemo(spark, sfDir) {
-      // lanes derive from the memoized corpus fingerprints — one
-      // sampling pass per dataset ever, shared with the pair and
-      // recall queries
-      val fps = Audio.corpusFps(spark, sfDir)
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val (ta, tb) = (s"graft_audio_snap_a_$sfx", s"graft_audio_snap_b_$sfx")
-      writeFps(fps.filter(col("asset_id") % 2 === 0), ta)
-      writeFps(fps.filter(col("asset_id") % 2 === 1), tb)
-      (ta, tb)
-    }
+  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame =
+    EstateIndex.verdicts(crossSnapshotPairs(spark, indexA, indexB), "rep", "corpus_rep",
+      col("n_agree").desc, "n_agree" -> "best_agree")
 
   /** The live audio gate: each arriving track's 7 posting rows probe
     * the bucketed index; strict-majority agreement verifies map-side
@@ -267,22 +199,14 @@ object AudioIndex {
     * structure is identical.
     */
   private[graft] def ingestStreamFromPostings(postings: DataFrame, indexTable: String,
-      bucketCap: Long = Audio.AudioBucketCap): DataFrame = {
-    val spark = postings.sparkSession
-    // hot-bucket stop-loss on the index side, the crossSnapshotPairs
-    // convention extended to the gate (see IngestGate.scoredRows for
-    // the estate-scale rationale): posting buckets over the cap are
-    // dropped whole. Oracle mirror: auhot in audioIngestCtesSql.
-    val hot = TableUtil.hotBuckets(spark, indexTable, Seq("slot", "lmv"), bucketCap)
-    val idx = spark.table(indexTable)
-      .join(broadcast(hot), Seq("slot", "lmv"), "left_anti")
-      .select(col("slot"), col("lmv"), col("rep").as("corpus_rep"), col("fp").as("fp_c"))
+      bucketCap: Long = Audio.AudioBucketCap): DataFrame =
+    // posting buckets over the cap are dropped whole ([[gateSide]]).
+    // Oracle mirror: auhot in audioIngestCtesSql.
     postings
-      .join(idx, Seq("slot", "lmv"))
-      .select(col("asset_id"), col("corpus_rep"),
-        expr(Audio.agreeSql("fp", "fp_c")).as("n_agree"))
+      .join(gateSide(postings.sparkSession, indexTable, bucketCap,
+        col("rep").as("corpus_rep"), col("fp").as("fp_c")), Seq("slot", "lmv"))
+      .select(col("asset_id"), col("corpus_rep"), agreement("fp", "fp_c"))
       .filter(col("n_agree") >= Audio.MinLandmarkAgree)
-  }
 
   /** q_audio_ingest_gate: the gate's batch execution — odd-id tracks
     * arrive against the even-id corpus's persisted landmark index.
@@ -458,18 +382,12 @@ object AudioIndex {
     val aReps = spark.table(ta).filter(col("slot") === 0)
       .select(col("rep").as("a_rep"), col("fp").as("a_fp"))
     val truth = broadcast(probes).join(aReps)
-      .select(col("q_rep"), col("a_rep"),
-        expr(Audio.agreeSql("q_fp", "a_fp")).as("n_agree"))
+      .select(col("q_rep"), col("a_rep"), agreement("q_fp", "a_fp"))
       .filter(col("n_agree") >= Audio.MinLandmarkAgree)
     val hits = crossSnapshotPairs(spark, ta, tb)
       .filter(col("rep") % SweepProbeMod === 1 && col("rep") < SweepProbeMax)
-      .select(col("rep").as("q_rep"), col("corpus_rep").as("a_rep"), lit(1L).as("hit"))
-    truth.join(hits, Seq("q_rep", "a_rep"), "left")
-      .groupBy(col("q_rep"))
-      .agg(count(lit(1)).as("n_true"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("q_rep"), col("n_true"), col("n_hits"),
-        round(col("n_hits").cast("double") / col("n_true"), 6).as("recall"))
+      .select(col("rep").as("q_rep"), col("corpus_rep").as("a_rep"))
+    EstateIndex.recall(truth, hits, "q_rep", "a_rep")
   }
 
   /** DuckDB mirror: per-parity representative collapse, brute-force
@@ -526,21 +444,6 @@ object AudioIndex {
 
   // ---- q_audio_estate_merge ------------------------------------------------
 
-  private val estateTableMemo = graft.core.Memo[String]("audio_estate")
-
-  /** The COMPACTED estate index of a dataset: snapshots A and B merged
-    * by [[merge]] into one bucketed table, written once per
-    * (application, dataset) and timed into the bench `artifacts` map.
-    */
-  private[graft] def estateTable(spark: SparkSession, sfDir: String): String =
-    estateTableMemo(spark, sfDir) {
-      val (ta, tb) = snapshotTables(spark, sfDir)
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val t = s"graft_audio_estate_$sfx"
-      merge(spark, Seq(ta, tb), t)
-      t
-    }
-
   /** q_audio_estate_merge: the compacted estate's fingerprint-group
     * table — one row per distinct fingerprint with its GLOBAL
     * representative, read straight off the merged table's slot-0 lane
@@ -567,23 +470,6 @@ object AudioIndex {
     SELECT min(asset_id) AS rep, fp FROM fpt GROUP BY fp"""
 
   // ---- q_audio_retention ---------------------------------------------------
-
-  private val retainedTableMemo = graft.core.Memo[String]("audio_retained")
-
-  /** The estate AFTER snapshot B expires: [[removeSnapshot]] applied to
-    * the compacted estate with B's own index as the tombstone and A's
-    * as the repair source — written once per (application, dataset),
-    * timed into the bench `artifacts` map.
-    */
-  private[graft] def retainedTable(spark: SparkSession, sfDir: String): String =
-    retainedTableMemo(spark, sfDir) {
-      val (ta, tb) = snapshotTables(spark, sfDir)
-      val est = estateTable(spark, sfDir)
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val t = s"graft_audio_retained_$sfx"
-      removeSnapshot(spark, est, tb, Seq(ta), t)
-      t
-    }
 
   /** q_audio_retention: the audio estate's DELETE leg, gated — crawl B
     * expires from the compacted estate via the subtract-and-repair

@@ -53,11 +53,6 @@ object CorpusSink {
     // task emits a file into every bucket (tasks × buckets files), and
     // multi-file buckets force Spark to re-sort at read time, losing
     // the sortBy sort-elimination this sink exists for
-    df.repartition(buckets, col(bucketCol))
-      .write
-      .mode(mode)
-      .bucketBy(buckets, bucketCol)
-      .sortBy(bucketCol)
-      .format("parquet")
-      .saveAsTable(table)
+    EstateIndex.saveBucketed(df.repartition(buckets, col(bucketCol)), table, Seq(bucketCol),
+      buckets, mode)
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -33,7 +33,8 @@ import graft.queries.Tables
   * admission gate: live vectors assign against the frozen codebook
   * and probe only their cell's bucket files).
   */
-object EmbedIndex {
+object EmbedIndex extends EstateIndex("embed", "embed_snapshots",
+    keys = Seq("cell"), cols = Seq("vec_id", "cell", "d2", "embedding", "nsq")) {
 
   /** Cosine bar for a semantic duplicate — [[Similarity
     * .SemDedupThreshold]], so cross-snapshot verdicts are comparable
@@ -48,114 +49,62 @@ object EmbedIndex {
     * what lets [[merge]] re-rank a compacted estate table EXACTLY,
     * with no re-assignment pass over the historical vectors.
     */
-  def write(emb: DataFrame, table: String, centers: IndexedSeq[Array[Double]],
-      buckets: Int = 8, mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      TableUtil.dropTableAndLocation(emb.sparkSession, table)
-    val assigned = emb
+  def write(emb: DataFrame, table: String, centers: IndexedSeq[Array[Double]]): Unit =
+    save(collapse(colocate(emb
       .select(col("vec_id"), col("embedding"),
         Similarity.dot(col("embedding"), col("embedding")).as("nsq"))
       .withColumn("best",
         graft.functions.VectorFunctions
           .nearestCenter(col("embedding"), 0, centers.head.length, centers))
       .select(col("vec_id"), col("best.code").as("cell"),
-        col("best.d2").as("d2"), col("embedding"), col("nsq"))
-    writeRanked(assigned, table, buckets, mode)
+        col("best.d2").as("d2"), col("embedding"), col("nsq")))), table)
+
+  /** Both lanes are assigned under the A-side fit — ONE codebook. */
+  protected def lanes(spark: SparkSession, sfDir: String): (Int, String) => Unit = {
+    val emb = Tables.embeddings(spark, sfDir)
+    val centers = Similarity.estateCenters(spark, sfDir)
+    (parity, table) => write(emb.filter(col("vec_id") % 2 === parity), table, centers)
   }
 
-  /** Rank + bucket + write an assigned `(vec_id, cell, d2, embedding,
-    * nsq)` relation — the shared tail of [[write]] and [[merge]].
+  /** The per-cell prototypicality rank of an assigned `(vec_id, cell,
+    * d2, embedding, nsq)` relation — the step [[write]], [[merge]] and
+    * [[removeSnapshot]] all end with. [[merge]] needs no re-assignment
+    * and no distance recomputation: every input row already carries
+    * its cell and stored `d2`, and rank order (d2 asc, vec_id asc) is a
+    * global property of the frozen assignment, so interleaving
+    * snapshots cannot perturb it — the result is bit-identical to
+    * [[write]] over the union of the snapshots' vectors (IndexMergeSpec
+    * pins it).
     */
-  private def writeRanked(assigned: DataFrame, table: String, buckets: Int,
-      mode: SaveMode): Unit = {
+  override protected def collapse(rows: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("cell")).orderBy(col("d2").asc, col("vec_id").asc)
-    // co-locate BEFORE the window, and let the window and the bucketed
-    // write both ride the one shuffle. Ordering the repartition first
-    // is also load-bearing for [[merge]]: a union of identically-
-    // bucketed scans satisfies per-CHILD clustering, and Spark 4.1 will
-    // otherwise run a clustering-requiring operator straight over the
-    // Union with no exchange — same-cell rows from different snapshots
-    // never meet (the PhashIndex.merge aggregate hit exactly this;
-    // IndexMergeSpec pins both).
-    assigned
-      .repartition(buckets, col("cell"))
+    // the window rides the co-location shuffle of [[write]] / [[merge]]
+    // (co-locating BEFORE the window is load-bearing for merge: Spark
+    // 4.1 would otherwise run a clustering-requiring operator straight
+    // over a Union of bucketed scans with no exchange — same-cell rows
+    // from different snapshots never meet; IndexMergeSpec pins it), and
+    // the preserved cell partitioning of [[removeSnapshot]]'s anti join
+    rows
       .withColumn("rk", row_number().over(w))
       .select(col("vec_id"), col("cell"), col("rk"), col("d2"),
         col("embedding"), col("nsq"))
-      .write
-      .mode(mode)
-      .bucketBy(buckets, "cell")
-      .sortBy("cell")
-      .format("parquet")
-      .saveAsTable(table)
-  }
-
-  /** COMPACTION: merge N snapshot indexes (all written by [[write]]
-    * under the SAME frozen codebook) into one estate index table. No
-    * re-assignment and no distance recomputation — every input row
-    * already carries its cell and stored `d2`, so the merge is a union
-    * plus ONE co-locating shuffle (shared by the per-cell re-rank and
-    * the bucket write), exactly the cost of writing the estate index
-    * from scratch MINUS the assignment pass over every historical
-    * vector. The result is bit-identical to [[write]] over the union
-    * of the snapshots' vectors (IndexMergeSpec pins it): rank order
-    * (d2 asc, vec_id asc) is a global property of the frozen
-    * assignment, so interleaving snapshots cannot perturb it.
-    */
-  def merge(spark: SparkSession, inputs: Seq[String], out: String,
-      buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // rawTable: see its docstring — the rank window over a union of
-    // bucketed scans would inherit a partitioning claim the union does
-    // not honor and rank each snapshot's cells separately
-    val union = inputs.map(TableUtil.rawTable(spark, _)
-        .select(col("vec_id"), col("cell"), col("d2"), col("embedding"), col("nsq")))
-      .reduce(_.unionByName(_))
-    writeRanked(union, out, buckets, SaveMode.Overwrite)
   }
 
   /** RETENTION: delete one snapshot's vectors from a compacted estate
-    * index without re-assignment. Index rows are per-vector facts, so
-    * removal is a LEFT ANTI join on (cell, vec_id) between two
-    * identically-bucketed tables — exchange-free on both sides — and
-    * the per-cell re-rank (ranks must close the gaps the deletions
-    * open, or `rk <= KnnCellCap` would silently shrink the prototypical
-    * core) rides the anti-join's PRESERVED cell partitioning: this is
-    * single-table-derived partitioning through a two-table bucketed
-    * join, the genuine case — not the union lie [[TableUtil.rawTable]]
-    * exists for. Net: expiring a crawl re-shuffles nothing.
+    * index without re-assignment — [[subtract]]'s exchange-free anti
+    * join on (cell, vec_id), then the per-cell re-rank (ranks must
+    * close the gaps the deletions open, or `rk <= KnnCellCap` would
+    * silently shrink the prototypical core), which rides the anti
+    * join's PRESERVED cell partitioning: single-table-derived
+    * partitioning through a two-table bucketed join, the genuine case —
+    * not the union lie [[TableUtil.rawTable]] exists for. Net: expiring
+    * a crawl re-shuffles nothing.
     */
-  def removeSnapshot(spark: SparkSession, estate: String, removed: String,
-      out: String, buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // (cell, vec_id) is a superset of the bucket key — scope the
-    // subset-co-partition setting exactly like
-    // [[SignatureIndex.removeSnapshot]] (see the comment there), so the
-    // anti join AND the re-rank window both ride the stored bucketing
-    val key = "spark.sql.requireAllClusterKeysForCoPartition"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      val e = spark.table(estate)
-        .select(col("vec_id"), col("cell"), col("d2"), col("embedding"), col("nsq"))
-      val r = spark.table(removed).select(col("cell"), col("vec_id"))
-      val kept = e.join(r, Seq("cell", "vec_id"), "left_anti")
-      val w = Window.partitionBy(col("cell")).orderBy(col("d2").asc, col("vec_id").asc)
-      kept
-        .withColumn("rk", row_number().over(w))
-        .select(col("vec_id"), col("cell"), col("rk"), col("d2"),
-          col("embedding"), col("nsq"))
-        .write
-        .mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "cell")
-        .sortBy("cell")
-        .format("parquet")
-        .saveAsTable(out)
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def removeSnapshot(spark: SparkSession, estate: String, removed: String, out: String): Unit =
+    subtract(spark, estate, removed, out, "vec_id")
+
+  protected def expire(spark: SparkSession, estate: String, removed: String,
+      survivors: Seq[String], out: String): Unit = removeSnapshot(spark, estate, removed, out)
 
   private def cosCol(nsqA: Column, nsqB: Column, embA: Column, embB: Column): Column =
     round(Similarity.dot(embA, embB) / sqrt(nsqA * nsqB), 6)
@@ -188,16 +137,9 @@ object EmbedIndex {
     * either side; only the per-B-vec verdict window shuffles, keyed on
     * the match-bounded B ids.
     */
-  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame = {
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("cos").desc, col("corpus_vec").asc)
-    crossSnapshotPairs(spark, indexA, indexB)
-      .withColumn("rk", row_number().over(w))
-      .groupBy(col("vec_id"))
-      .agg(count(lit(1)).as("n_matches"),
-        min(when(col("rk") === 1, col("corpus_vec"))).as("dup_of"),
-        min(when(col("rk") === 1, col("cos"))).as("best_cos"))
-  }
+  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame =
+    EstateIndex.verdicts(crossSnapshotPairs(spark, indexA, indexB), "vec_id", "corpus_vec",
+      col("cos").desc, "cos" -> "best_cos")
 
   /** Stream-static ingest gate against the persisted index: each
     * in-flight vector assigns to its estate cell (literal-codebook
@@ -226,23 +168,6 @@ object EmbedIndex {
   }
 
   // ---- q_cross_snapshot_embed --------------------------------------------
-
-  private val snapshotTablesMemo = graft.core.Memo[(String, String)]("embed_snapshots")
-
-  /** The two persisted snapshot indexes of a dataset (A = even vec
-    * ids, the estate; B = odd, the new batch), both written under the
-    * A-side fit — the [[SignatureIndex.snapshotTables]] contract.
-    */
-  private[graft] def snapshotTables(spark: SparkSession, sfDir: String): (String, String) =
-    snapshotTablesMemo(spark, sfDir) {
-      val emb = Tables.embeddings(spark, sfDir)
-      val centers = Similarity.estateCenters(spark, sfDir)
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val (ta, tb) = (s"graft_embed_snap_a_$sfx", s"graft_embed_snap_b_$sfx")
-      write(emb.filter(col("vec_id") % 2 === 0), ta, centers)
-      write(emb.filter(col("vec_id") % 2 === 1), tb, centers)
-      (ta, tb)
-    }
 
   /** q_cross_snapshot_embed: the registered cross-snapshot SEMANTIC
     * sweep — the third modality's estate query beside
@@ -366,14 +291,8 @@ object EmbedIndex {
     val approx = crossSnapshotPairs(spark, ta, tb)
       .filter(col("vec_id") % RecallSampleMod === 1 &&
         col("vec_id") < RecallSampleMax)
-      .select(col("vec_id").as("q_id"), col("corpus_vec").as("vec_id"),
-        lit(1L).as("hit"))
-    truth.join(approx, Seq("q_id", "vec_id"), "left")
-      .groupBy(col("q_id"))
-      .agg(count(lit(1)).as("n_true"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("q_id"), col("n_true"), col("n_hits"),
-        round(col("n_hits").cast("double") / col("n_true"), 6).as("recall"))
+      .select(col("vec_id").as("q_id"), col("corpus_vec").as("vec_id"))
+    EstateIndex.recall(truth, approx, "q_id", "vec_id")
   }
 
   /** DuckDB oracle for q_embed_sweep_recall (post-fit). */
@@ -406,21 +325,6 @@ object EmbedIndex {
     }
 
   // ---- q_embed_index_stats -------------------------------------------------
-
-  private val estateTableMemo = graft.core.Memo[String]("embed_estate")
-
-  /** The COMPACTED estate index of a dataset: snapshots A and B merged
-    * by [[merge]] into one bucketed table, written once per
-    * (application, dataset) and timed into the bench `artifacts` map.
-    */
-  private[graft] def estateTable(spark: SparkSession, sfDir: String): String =
-    estateTableMemo(spark, sfDir) {
-      val (ta, tb) = snapshotTables(spark, sfDir)
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val t = s"graft_embed_estate_$sfx"
-      merge(spark, Seq(ta, tb), t)
-      t
-    }
 
   /** q_embed_index_stats: health readout of the COMPACTED estate index
     * — per cell, the posting-list size, the rk-capped prototypical
@@ -467,24 +371,6 @@ object EmbedIndex {
     }
 
   // ---- q_embed_retention ---------------------------------------------------
-
-  private val retainedTableMemo = graft.core.Memo[String]("embed_retained")
-
-  /** The estate AFTER snapshot B expires ([[SignatureIndex
-    * .retainedTable]]'s contract on the vector side): [[removeSnapshot]]
-    * applied to the compacted estate with B's index as the tombstone,
-    * written once per (application, dataset), timed into the bench
-    * `artifacts` map.
-    */
-  private[graft] def retainedTable(spark: SparkSession, sfDir: String): String =
-    retainedTableMemo(spark, sfDir) {
-      val (_, tb) = snapshotTables(spark, sfDir)
-      val est = estateTable(spark, sfDir)
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val t = s"graft_embed_retained_$sfx"
-      removeSnapshot(spark, est, tb, t)
-      t
-    }
 
   /** q_embed_retention: the vector side of the estate's DELETE leg,
     * gated — snapshot B expires via the zero-exchange anti join + gap-

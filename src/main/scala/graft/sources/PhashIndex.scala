@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Multimodal
@@ -24,88 +24,75 @@ import graft.pipeline.Multimodal
   * batch-join shape of [[graft.streaming.PhashState]] pointed at the
   * historical estate).
   */
-object PhashIndex {
+object PhashIndex extends EstateIndex("phash", "phash_snapshots",
+    keys = Seq("band", "bv"), cols = Seq("phash", "rep", "band", "bv", "n_members")) {
 
   /** Write a snapshot's phash band index. One shuffle (the bucket
     * co-location) per snapshot, ever. One row per (representative,
     * band); identical codes are already collapsed.
     */
-  def write(docs: DataFrame, table: String, buckets: Int = 8,
-      mode: SaveMode = SaveMode.Overwrite): Unit =
-    writeCodes(Multimodal.phashCodesOf(docs), table, buckets, mode)
+  def write(docs: DataFrame, table: String): Unit =
+    writeCodes(Multimodal.phashCodesOf(docs), table)
 
   /** [[write]] from an already-computed `(asset_id, phash)` relation —
     * the seam that lets a caller holding the memoized corpus codes
     * write a snapshot lane WITHOUT re-running the payload decode (the
     * decode is the dominant cost of an index build; see
-    * [[snapshotTables]]).
+    * [[lanes]]).
     */
-  def writeCodes(codes: DataFrame, table: String, buckets: Int = 8,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      TableUtil.dropTableAndLocation(codes.sparkSession, table)
+  def writeCodes(codes: DataFrame, table: String): Unit = {
     // .mat: groups feeds BOTH the band explode and the multiplicity
     // join — without the boundary CollapseProject inlines the quadratic
     // pixel fold into both join sides (the documented phashMembership
     // trap; measured 13 s vs ~4 s per snapshot at sf0.1)
     val groups = graft.core.Mat(codes.groupBy(col("phash"))
       .agg(min(col("asset_id")).as("rep"), count(lit(1)).as("n_members")))
-    Multimodal.phashBandRows(groups.select(col("rep").as("asset_id"), col("phash")))
-      .select(col("asset_id").as("rep"), col("phash"), col("band"), col("bv"))
-      .join(groups.select(col("phash"), col("n_members")), Seq("phash"))
-      .repartition(buckets, col("band"), col("bv"))
-      .write
-      .mode(mode)
-      .bucketBy(buckets, "band", "bv")
-      .sortBy("band", "bv")
-      .format("parquet")
-      .saveAsTable(table)
+    save(colocate(
+      Multimodal.phashBandRows(groups.select(col("rep").as("asset_id"), col("phash")))
+        .select(col("asset_id").as("rep"), col("phash"), col("band"), col("bv"))
+        .join(groups.select(col("phash"), col("n_members")), Seq("phash"))), table)
   }
 
-  /** COMPACTION: merge N snapshot indexes into one estate index table.
-    * Unlike the signature index, phash rows are NOT per-asset facts —
-    * they are representative + multiplicity per code GROUP, and the
-    * same code can have a representative in several snapshots — so the
-    * merge RE-COLLAPSES: group by (phash, band, bv), keep the global
-    * minimum representative, sum the multiplicities. The result is
-    * bit-identical to [[writeCodes]] over the union of the snapshots'
-    * codes (IndexMergeSpec pins it), with no payload decode and no
-    * band re-derivation: band rows are a function of the code, so the
-    * stored rows already carry them. One aggregation + the co-locating
-    * bucket shuffle; a million-asset identical-code group enters and
-    * leaves as one row per band.
+  protected def lanes(spark: SparkSession, sfDir: String): (Int, String) => Unit = {
+    // lanes derive from the memoized corpus membership (one payload
+    // decode per dataset EVER, shared with every other phash consumer)
+    // — each write then only regroups its lane's codes and pays the
+    // bucket co-location shuffle. Before this seam the two lane writes
+    // re-decoded the corpus from raw docs: 28.2 s → ~4 s measured at
+    // sf0.1.
+    val codes = Multimodal.phashMembership(spark, sfDir)
+      .select(col("asset_id"), col("phash"))
+    (parity, table) => writeCodes(codes.filter(col("asset_id") % 2 === parity), table)
+  }
+
+  /** The COMPACTION collapse. Unlike the signature index, phash rows
+    * are NOT per-asset facts — they are representative + multiplicity
+    * per code GROUP, and the same code can have a representative in
+    * several snapshots — so [[merge]] RE-COLLAPSES: group by (phash,
+    * band, bv), keep the global minimum representative, sum the
+    * multiplicities. The result is bit-identical to [[writeCodes]] over
+    * the union of the snapshots' codes (IndexMergeSpec pins it), with
+    * no payload decode and no band re-derivation: band rows are a
+    * function of the code, so the stored rows already carry them. The
+    * re-collapse rides the one co-locating shuffle; a million-asset
+    * identical-code group enters and leaves as one row per band.
     */
-  def merge(spark: SparkSession, inputs: Seq[String], out: String,
-      buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // rawTable (not spark.table) is load-bearing: see its docstring —
-    // a union of identically-bucketed SCANS would get no exchange
-    // before this aggregate and emit duplicate keys. The explicit
-    // repartition is the one co-locating compaction shuffle; the
-    // re-collapse and the bucketed write both ride it.
-    inputs.map(TableUtil.rawTable(spark, _)
-        .select(col("phash"), col("rep"), col("band"), col("bv"), col("n_members")))
-      .reduce(_.unionByName(_))
-      .repartition(buckets, col("band"), col("bv"))
-      .groupBy(col("phash"), col("band"), col("bv"))
+  override protected def collapse(rows: DataFrame): DataFrame =
+    rows.groupBy(col("phash"), col("band"), col("bv"))
       .agg(min(col("rep")).as("rep"), sum(col("n_members")).as("n_members"))
       .select(col("phash"), col("rep"), col("band"), col("bv"), col("n_members"))
-      .write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "band", "bv")
-      .sortBy("band", "bv")
-      .format("parquet")
-      .saveAsTable(out)
-  }
 
-  /** Cross-snapshot image near-dup verdicts: every representative of
-    * snapshot B within Hamming [[Multimodal.PhashRadius]] of some
-    * representative in snapshot A, with the match count, the best
-    * match (lowest Hamming, lowest rep tie-break) and B's group
-    * multiplicity (how many actual assets the verdict covers). With
-    * both tables written by [[write]] at the same bucket count, the
-    * band join plans NO exchange on either side.
+  /** The phash index has NO subtractive form on purpose: its rows are
+    * code-group AGGREGATES — summed multiplicities subtract, but the
+    * min-representative does not — so image-side retention is a
+    * [[merge]] over the surviving snapshot tables.
     */
+  protected def expire(spark: SparkSession, estate: String, removed: String,
+      survivors: Seq[String], out: String): Unit = merge(spark, survivors, out)
+
+  private def hamming(a: String, b: String) =
+    bit_count(col(a).bitwiseXOR(col(b))).cast("int").as("hamming")
+
   /** Pair-level cross-snapshot matches — every (B rep, A rep) band
     * candidate within Hamming [[Multimodal.PhashRadius]], one row per
     * pair. The seam [[crossSnapshotMatches]] aggregates and the
@@ -119,9 +106,7 @@ object PhashIndex {
     * [[Multimodal.PhashBucketCap]] on EITHER side is dropped before
     * the join — the [[graft.streaming.PhashState]] /
     * [[Multimodal.repPairsOfReps]] declared-cap semantics, mirrored in
-    * the oracle (non-binding on every gate corpus). Bucket counts
-    * group by the bucket key itself, so both count passes read the
-    * bucket files exchange-free.
+    * the oracle (non-binding on every gate corpus).
     */
   def crossSnapshotPairs(spark: SparkSession, indexA: String, indexB: String): DataFrame =
     crossSnapshotPairsCapped(spark, indexA, indexB, Multimodal.PhashBucketCap)
@@ -131,36 +116,24 @@ object PhashIndex {
     * buckets small enough to bind.
     */
   private[graft] def crossSnapshotPairsCapped(spark: SparkSession, indexA: String,
-      indexB: String, cap: Int): DataFrame = {
-    def cool(table: String) = spark.table(table)
-      .groupBy(col("band"), col("bv")).agg(count(lit(1)).as("c"))
-      .filter(col("c") <= cap).select(col("band"), col("bv"))
-    val keep = cool(indexA).join(cool(indexB), Seq("band", "bv"), "left_semi")
-    val a = spark.table(indexA)
-      .select(col("band"), col("bv"), col("rep").as("corpus_rep"), col("phash").as("phash_c"))
-    val b = spark.table(indexB)
-      .select(col("band"), col("bv"), col("rep"), col("phash"), col("n_members"))
-    b.join(broadcast(keep), Seq("band", "bv"), "left_semi")
-      .join(a, Seq("band", "bv"))
-      .select(col("rep"), col("n_members"), col("corpus_rep"),
-        bit_count(col("phash").bitwiseXOR(col("phash_c"))).cast("int").as("hamming"))
-      .filter(col("hamming") <= Multimodal.PhashRadius)
-      .distinct() // a pair agreeing in several bands emits once
-  }
+      indexB: String, cap: Long): DataFrame =
+    cappedPairs(spark, indexA, indexB, cap,
+      a = Seq(col("rep").as("corpus_rep"), col("phash").as("phash_c")),
+      b = Seq(col("rep"), col("phash"), col("n_members")))(_
+      .select(col("rep"), col("n_members"), col("corpus_rep"), hamming("phash", "phash_c"))
+      .filter(col("hamming") <= Multimodal.PhashRadius))
 
-  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val matches = crossSnapshotPairs(spark, indexA, indexB)
-    val w = Window.partitionBy(col("rep"))
-      .orderBy(col("hamming").asc, col("corpus_rep").asc)
-    matches
-      .withColumn("rk", row_number().over(w))
-      .groupBy(col("rep"))
-      .agg(count(lit(1)).as("n_matches"),
-        min(when(col("rk") === 1, col("corpus_rep"))).as("dup_of"),
-        min(when(col("rk") === 1, col("hamming"))).as("best_hamming"),
-        min(col("n_members")).as("n_copies"))
-  }
+  /** Cross-snapshot image near-dup verdicts: every representative of
+    * snapshot B within Hamming [[Multimodal.PhashRadius]] of some
+    * representative in snapshot A, with the match count, the best
+    * match (lowest Hamming, lowest rep tie-break) and B's group
+    * multiplicity (how many actual assets the verdict covers). With
+    * both tables written by [[write]], the band join plans NO exchange
+    * on either side.
+    */
+  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame =
+    EstateIndex.verdicts(crossSnapshotPairs(spark, indexA, indexB), "rep", "corpus_rep",
+      col("hamming").asc, "hamming" -> "best_hamming", min(col("n_members")).as("n_copies"))
 
   /** Stream-static ingest gate against the persisted image index: each
     * in-flight asset's banded code rows join the bucketed table and
@@ -183,44 +156,16 @@ object PhashIndex {
     * [[ingestStream]]; the join/verify structure is char-identical.
     */
   private[graft] def ingestStreamCoded(codes: DataFrame, indexTable: String,
-      bucketCap: Long = Multimodal.PhashBucketCap): DataFrame = {
-    val spark = codes.sparkSession
-    // hot-bucket stop-loss on the index side, the crossSnapshotPairs
-    // convention extended to the gate (see IngestGate.scoredRows for
-    // the estate-scale rationale): buckets whose REPRESENTATIVE count
-    // exceeds the cap are dropped whole. Oracle mirror: imghot in
-    // phashIngestCtesSql.
-    val hot = TableUtil.hotBuckets(spark, indexTable, Seq("band", "bv"), bucketCap)
-    val idx = spark.table(indexTable)
-      .join(broadcast(hot), Seq("band", "bv"), "left_anti")
-      .select(col("band"), col("bv"), col("rep").as("corpus_rep"), col("phash").as("phash_c"))
+      bucketCap: Long = Multimodal.PhashBucketCap): DataFrame =
+    // buckets whose REPRESENTATIVE count exceeds the cap are dropped
+    // whole ([[gateSide]]). Oracle mirror: imghot in phashIngestCtesSql.
     Multimodal.phashBandRows(codes)
-      .join(idx, Seq("band", "bv"))
-      .select(col("asset_id"), col("corpus_rep"),
-        bit_count(col("phash").bitwiseXOR(col("phash_c"))).cast("int").as("hamming"))
+      .join(gateSide(codes.sparkSession, indexTable, bucketCap,
+        col("rep").as("corpus_rep"), col("phash").as("phash_c")), Seq("band", "bv"))
+      .select(col("asset_id"), col("corpus_rep"), hamming("phash", "phash_c"))
       .filter(col("hamming") <= Multimodal.PhashRadius)
-  }
 
   // ---- q_cross_snapshot_phash --------------------------------------------
-
-  private val snapshotTablesMemo = graft.core.Memo[(String, String)]("phash_snapshots")
-
-  private[graft] def snapshotTables(spark: SparkSession, sfDir: String): (String, String) =
-    snapshotTablesMemo(spark, sfDir) {
-      // lanes derive from the memoized corpus membership (one
-      // payload decode per dataset EVER, shared with every other
-      // phash consumer) — each write then only regroups its lane's
-      // codes and pays the bucket co-location shuffle. Before this
-      // seam the two lane writes re-decoded the corpus from raw
-      // docs: 28.2 s → ~4 s measured at sf0.1.
-      val codes = Multimodal.phashMembership(spark, sfDir)
-        .select(col("asset_id"), col("phash"))
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val (ta, tb) = (s"graft_phash_snap_a_$sfx", s"graft_phash_snap_b_$sfx")
-      writeCodes(codes.filter(col("asset_id") % 2 === 0), ta)
-      writeCodes(codes.filter(col("asset_id") % 2 === 1), tb)
-      (ta, tb)
-    }
 
   /** q_cross_snapshot_phash: the registered cross-snapshot IMAGE sweep —
     * snapshot A = even asset ids (the historical estate), snapshot B =
@@ -278,21 +223,6 @@ object PhashIndex {
     FROM ranked GROUP BY 1"""
 
   // ---- q_phash_estate_merge ------------------------------------------------
-
-  private val estateTableMemo = graft.core.Memo[String]("phash_estate")
-
-  /** The COMPACTED estate index of a dataset: snapshots A and B merged
-    * by [[merge]] into one bucketed table, written once per
-    * (application, dataset) and timed into the bench `artifacts` map.
-    */
-  private[graft] def estateTable(spark: SparkSession, sfDir: String): String =
-    estateTableMemo(spark, sfDir) {
-      val (ta, tb) = snapshotTables(spark, sfDir)
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val t = s"graft_phash_estate_$sfx"
-      merge(spark, Seq(ta, tb), t)
-      t
-    }
 
   /** q_phash_estate_merge: the compacted estate index's code-group
     * table — one row per distinct code with its GLOBAL representative
@@ -352,18 +282,12 @@ object PhashIndex {
     val aReps = spark.table(ta).filter(col("band") === 0)
       .select(col("rep").as("a_rep"), col("phash").as("a_code"))
     val truth = broadcast(probes).join(aReps)
-      .select(col("q_rep"), col("a_rep"),
-        bit_count(col("q_code").bitwiseXOR(col("a_code"))).cast("int").as("hamming"))
+      .select(col("q_rep"), col("a_rep"), hamming("q_code", "a_code"))
       .filter(col("hamming") <= Multimodal.PhashRadius)
     val hits = crossSnapshotPairs(spark, ta, tb)
       .filter(col("rep") % SweepProbeMod === 1 && col("rep") < SweepProbeMax)
-      .select(col("rep").as("q_rep"), col("corpus_rep").as("a_rep"), lit(1L).as("hit"))
-    truth.join(hits, Seq("q_rep", "a_rep"), "left")
-      .groupBy(col("q_rep"))
-      .agg(count(lit(1)).as("n_true"),
-        sum(coalesce(col("hit"), lit(0L))).as("n_hits"))
-      .select(col("q_rep"), col("n_true"), col("n_hits"),
-        round(col("n_hits").cast("double") / col("n_true"), 6).as("recall"))
+      .select(col("rep").as("q_rep"), col("corpus_rep").as("a_rep"))
+    EstateIndex.recall(truth, hits, "q_rep", "a_rep")
   }
 
   /** DuckDB mirror: per-parity representative groups, brute-force

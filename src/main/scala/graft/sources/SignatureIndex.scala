@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.pipeline.Dedup
@@ -24,138 +24,40 @@ import graft.queries.Tables
   * re-deduplicating crawl N against crawls 1..N-1 never re-shuffles
   * the historical corpus.
   */
-object SignatureIndex {
+object SignatureIndex extends EstateIndex("sig", "signature_snapshots",
+    keys = Seq("band", "bh"), cols = Seq("doc_id", "sig", "band", "bh")) {
 
   /** Number of signature-agreement positions (of 16) for est ≥ 0.5. */
   private val MinAgree = 8
 
   /** Write a corpus snapshot's banded signature index. One shuffle
-    * (the bucket co-location) per snapshot, ever.
+    * (the bucket co-location) per snapshot, ever. Compaction
+    * ([[merge]]) is a pure union: signature band rows are per-document
+    * facts (a doc's banded signature never depends on any other doc),
+    * so crawls 1..N compact into one index a sweep band-joins in one
+    * pass instead of N, with no signature recomputed and no raw
+    * document read.
     */
-  def write(docs: DataFrame, table: String, buckets: Int = 8,
-      mode: SaveMode = SaveMode.Overwrite): Unit = {
-    if (mode == SaveMode.Overwrite)
-      TableUtil.dropTableAndLocation(docs.sparkSession, table)
-    Dedup.bandedSignatures(docs)
-      .repartition(buckets, col("band"), col("bh"))
-      .write
-      .mode(mode)
-      .bucketBy(buckets, "band", "bh")
-      .sortBy("band", "bh")
-      .format("parquet")
-      .saveAsTable(table)
-  }
+  def write(docs: DataFrame, table: String): Unit =
+    save(colocate(Dedup.bandedSignatures(docs)), table)
 
-  /** COMPACTION: merge N snapshot indexes into one estate index table.
-    * Signature band rows are per-document facts (a doc's banded
-    * signature never depends on any other doc), so the merge is a pure
-    * union plus the ONE co-locating bucket shuffle — no recomputation
-    * of any signature, no read of any raw document. At estate scale
-    * this is how crawls 1..N compact into a single index a sweep can
-    * band-join in one pass instead of N.
-    */
-  def merge(spark: SparkSession, inputs: Seq[String], out: String,
-      buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // rawTable: see its docstring — bucketed scans under a union make
-    // a partitioning claim the union does not honor; the raw file read
-    // keeps the repartition (and any later clustering) real
-    inputs.map(TableUtil.rawTable(spark, _)
-        .select(col("doc_id"), col("sig"), col("band"), col("bh")))
-      .reduce(_.unionByName(_))
-      .repartition(buckets, col("band"), col("bh"))
-      .write
-      .mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "band", "bh")
-      .sortBy("band", "bh")
-      .format("parquet")
-      .saveAsTable(out)
+  protected def lanes(spark: SparkSession, sfDir: String): (Int, String) => Unit = {
+    val docs = Tables.documents(spark, sfDir)
+    (parity, table) => write(docs.filter(col("doc_id") % 2 === parity), table)
   }
 
   /** RETENTION: delete one snapshot's documents from a compacted
-    * estate index without recompaction. Signature band rows are
-    * per-document facts and the estate was built by pure union, so the
-    * removed snapshot's index rows are exactly the rows to delete —
-    * a LEFT ANTI join on (band, bh, doc_id) between two
-    * identically-bucketed tables, which plans NO exchange on either
-    * side (a two-table bucketed join is the supported exchange-free
-    * case; only unions of bucketed scans carry the partitioning lie —
-    * see [[TableUtil.rawTable]]), and the bucketed write rides the
-    * preserved partitioning. Expiring crawl N from a 100 TB estate
-    * costs one co-located pass over the bucket files it shares with
-    * the tombstone — the historical corpus never re-shuffles.
-    *
-    * (The phash index has NO subtractive form on purpose: its rows are
-    * code-group AGGREGATES — summed multiplicities subtract, but the
-    * min-representative does not — so image-side retention is a
-    * [[PhashIndex.merge]] over the remaining snapshot tables.)
+    * estate index without recompaction. The estate was built by pure
+    * union, so the removed snapshot's index rows are exactly the rows
+    * to delete — the exchange-free anti join on (band, bh, doc_id) of
+    * [[subtract]].
     */
-  def removeSnapshot(spark: SparkSession, estate: String, removed: String,
-      out: String, buckets: Int = 8): Unit = {
-    TableUtil.dropTableAndLocation(spark, out)
-    // the anti-join keys (band, bh, doc_id) are a SUPERSET of the
-    // bucket keys: partitioning on (band, bh) genuinely satisfies
-    // clustering on the superset, but Spark's default
-    // requireAllClusterKeysForCoPartition=true refuses subset
-    // co-partitioning and would disable the bucketed scan and shuffle
-    // BOTH sides — scope the permissive setting to this one write
-    // (IndexMergeSpec asserts the resulting zero-exchange plan)
-    val key = "spark.sql.requireAllClusterKeysForCoPartition"
-    val prior = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try {
-      val e = spark.table(estate)
-        .select(col("doc_id"), col("sig"), col("band"), col("bh"))
-      val r = spark.table(removed)
-        .select(col("band"), col("bh"), col("doc_id"))
-      e.join(r, Seq("band", "bh", "doc_id"), "left_anti")
-        .select(col("doc_id"), col("sig"), col("band"), col("bh"))
-        .write
-        .mode(SaveMode.Overwrite)
-        .bucketBy(buckets, "band", "bh")
-        .sortBy("band", "bh")
-        .format("parquet")
-        .saveAsTable(out)
-    } finally prior match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def removeSnapshot(spark: SparkSession, estate: String, removed: String, out: String): Unit =
+    subtract(spark, estate, removed, out, "doc_id")
 
-  /** Stream-static ingest gate against the persisted index: each
-    * in-flight document's banded signature rows join the index table
-    * and verify by signature agreement — the
-    * [[graft.streaming.LshState.contaminationStream]] shape pointed at
-    * the HISTORICAL CORPUS instead of the eval set, so a live crawl
-    * rejects re-crawls-with-edits the moment they arrive. STATELESS:
-    * no streaming state, no watermark; the stream side is the narrow
-    * codegen band projection, and the index side is the bucketed
-    * table (at 100 TB the join reads only the matching bucket files —
-    * never a full index scan per trigger). A doc matching in several
-    * bands emits once per band; consumers take DISTINCT, as with the
-    * batch verdicts.
-    */
-  def ingestStream(docs: DataFrame, indexTable: String): DataFrame = {
-    val spark = docs.sparkSession
-    val idx = spark.table(indexTable)
-      .select(col("band"), col("bh"), col("doc_id").as("corpus_doc"),
-        col("sig").as("sig_c"))
-    Dedup.bandedSignatures(docs)
-      .join(idx, Seq("band", "bh"))
-      .withColumn("est_jaccard",
-        round(size(filter(zip_with(col("sig"), col("sig_c"), (x, y) => x === y), p => p))
-          .cast("double") / lit(16.0), 6))
-      .filter(col("est_jaccard") >= MinAgree / 16.0)
-      .select(col("doc_id"), col("corpus_doc"), col("est_jaccard"))
-  }
+  protected def expire(spark: SparkSession, estate: String, removed: String,
+      survivors: Seq[String], out: String): Unit = removeSnapshot(spark, estate, removed, out)
 
-  /** Cross-snapshot near-dup verdicts: every doc of snapshot B with a
-    * signature-verified match (est ≥ 0.5) in snapshot A, with the best
-    * match (highest estimate, lowest doc tie-break) — the
-    * `q_minhash_incremental` verdict computed index-against-index.
-    * With both tables written by [[write]] at the same bucket count,
-    * the band join plans NO exchange on either side.
-    */
   /** Pair-level cross-snapshot matches — every (B doc, A doc) band
     * candidate whose signature agreement estimates Jaccard ≥ 0.5, one
     * row per pair. The seam [[crossSnapshotMatches]] aggregates and
@@ -168,65 +70,35 @@ object SignatureIndex {
     * bh) bucket is a full 4-hash agreement — its members are almost
     * certainly one near-dup mega-cluster — but C(n, 2) is quadratic
     * whether or not the pairs are genuine, so a bucket exceeding the
-    * cap on either side drops before the join (declared semantics,
-    * mirrored in both oracles; non-binding on every gate corpus). The
-    * guard counts group by the bucket key — exchange-free reads.
+    * cap on either side drops before the join ([[cappedPairs]];
+    * mirrored in both oracles; non-binding on every gate corpus).
     */
   def crossSnapshotPairs(spark: SparkSession, indexA: String, indexB: String): DataFrame =
     crossSnapshotPairsCapped(spark, indexA, indexB, Dedup.MinhashBucketCap)
 
   /** [[crossSnapshotPairs]] with an explicit cap — the spec seam. */
   private[graft] def crossSnapshotPairsCapped(spark: SparkSession, indexA: String,
-      indexB: String, cap: Long): DataFrame = {
-    def cool(table: String) = spark.table(table)
-      .groupBy(col("band"), col("bh")).agg(count(lit(1)).as("c"))
-      .filter(col("c") <= cap).select(col("band"), col("bh"))
-    val keep = cool(indexA).join(cool(indexB), Seq("band", "bh"), "left_semi")
-    val a = spark.table(indexA)
-      .select(col("band"), col("bh"), col("doc_id").as("corpus_doc"), col("sig").as("sig_c"))
-    val b = spark.table(indexB)
-      .select(col("band"), col("bh"), col("doc_id"), col("sig"))
-    b.join(broadcast(keep), Seq("band", "bh"), "left_semi")
-      .join(a, Seq("band", "bh"))
+      indexB: String, cap: Long): DataFrame =
+    cappedPairs(spark, indexA, indexB, cap,
+      a = Seq(col("doc_id").as("corpus_doc"), col("sig").as("sig_c")),
+      b = Seq(col("doc_id"), col("sig")))(_
       .select(col("doc_id"), col("corpus_doc"),
         round(size(filter(zip_with(col("sig"), col("sig_c"), (x, y) => x === y), p => p))
           .cast("double") / lit(16.0), 6).as("est_jaccard"))
-      .filter(col("est_jaccard") >= MinAgree / 16.0)
-      .distinct() // a pair agreeing in several bands emits once
-  }
+      .filter(col("est_jaccard") >= MinAgree / 16.0))
 
-  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val matches = crossSnapshotPairs(spark, indexA, indexB)
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(col("est_jaccard").desc, col("corpus_doc").asc)
-    matches
-      .withColumn("rk", row_number().over(w))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_matches"),
-        min(when(col("rk") === 1, col("corpus_doc"))).as("dup_of"),
-        min(when(col("rk") === 1, col("est_jaccard"))).as("best_est"))
-  }
+  /** Cross-snapshot near-dup verdicts: every doc of snapshot B with a
+    * signature-verified match (est ≥ 0.5) in snapshot A, with the best
+    * match (highest estimate, lowest doc tie-break) — the
+    * `q_minhash_incremental` verdict computed index-against-index.
+    * With both tables written by [[write]], the band join plans NO
+    * exchange on either side.
+    */
+  def crossSnapshotMatches(spark: SparkSession, indexA: String, indexB: String): DataFrame =
+    EstateIndex.verdicts(crossSnapshotPairs(spark, indexA, indexB), "doc_id", "corpus_doc",
+      col("est_jaccard").desc, "est_jaccard" -> "best_est")
 
   // ---- q_cross_snapshot_dedup ------------------------------------------
-
-  /** The two persisted snapshot indexes of a dataset (A = even doc ids,
-    * the "historical corpus"; B = odd, the "new crawl"), written ONCE
-    * per (application, dataset) by [[write]] — the construction is
-    * timed into [[graft.core.Memo]]'s build log so the bench artifact
-    * reports the snapshot passes explicitly.
-    */
-  private val snapshotTablesMemo = graft.core.Memo[(String, String)]("signature_snapshots")
-
-  private[graft] def snapshotTables(spark: SparkSession, sfDir: String): (String, String) =
-    snapshotTablesMemo(spark, sfDir) {
-      val docs = Tables.documents(spark, sfDir)
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val (ta, tb) = (s"graft_sig_snap_a_$sfx", s"graft_sig_snap_b_$sfx")
-      write(docs.filter(col("doc_id") % 2 === 0), ta)
-      write(docs.filter(col("doc_id") % 2 === 1), tb)
-      (ta, tb)
-    }
 
   /** q_cross_snapshot_dedup: the registered form of the marquee
     * cross-JOB capability — re-deduplicating one corpus snapshot
@@ -292,21 +164,6 @@ object SignatureIndex {
 
   // ---- q_sig_index_stats ---------------------------------------------------
 
-  private val estateTableMemo = graft.core.Memo[String]("sig_estate")
-
-  /** The COMPACTED estate index of a dataset: snapshots A and B merged
-    * by [[merge]] into one bucketed table, written once per
-    * (application, dataset) and timed into the bench `artifacts` map.
-    */
-  private[graft] def estateTable(spark: SparkSession, sfDir: String): String =
-    estateTableMemo(spark, sfDir) {
-      val (ta, tb) = snapshotTables(spark, sfDir)
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val t = s"graft_sig_estate_$sfx"
-      merge(spark, Seq(ta, tb), t)
-      t
-    }
-
   /** q_sig_index_stats: the [[graft.pipeline.Dedup.bandStats]] health
     * readout computed over the COMPACTED PERSISTED estate index instead
     * of the session signature memo. The oracle is `bandStatsSql`
@@ -338,23 +195,6 @@ object SignatureIndex {
   val sigIndexStatsSql: String = Dedup.bandStatsSql
 
   // ---- q_sig_retention -------------------------------------------------
-
-  private val retainedTableMemo = graft.core.Memo[String]("sig_retained")
-
-  /** The estate AFTER snapshot B expires: [[removeSnapshot]] applied to
-    * the compacted estate with B's own index as the tombstone set —
-    * written once per (application, dataset), timed into the bench
-    * `artifacts` map.
-    */
-  private[graft] def retainedTable(spark: SparkSession, sfDir: String): String =
-    retainedTableMemo(spark, sfDir) {
-      val (_, tb) = snapshotTables(spark, sfDir)
-      val est = estateTable(spark, sfDir)
-      val sfx = sfDir.replaceAll("[^A-Za-z0-9]+", "_")
-      val t = s"graft_sig_retained_$sfx"
-      removeSnapshot(spark, est, tb, t)
-      t
-    }
 
   /** q_sig_retention: the estate lifecycle's DELETE leg, gated — crawl
     * B expires from the compacted estate via the exchange-free anti

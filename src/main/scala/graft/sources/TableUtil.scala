@@ -30,7 +30,7 @@ private[graft] object TableUtil {
 
   /** Read a bucketed table's parquet files RAW — same rows, but the
     * scan carries NO bucket-partitioning claim. Compaction ([[
-    * SignatureIndex.merge]] and friends) must read its inputs this
+    * EstateIndex.merge]]) must read its inputs this
     * way: Spark 4.1's UnionExec propagates compatible children
     * bucket-partitioning, yet executes a concatenating union — a
     * clustering-requiring operator (aggregate, window) planned over a
@@ -43,17 +43,28 @@ private[graft] object TableUtil {
     * co-locating shuffle it budgets.
     */
   def rawTable(spark: SparkSession, table: String): org.apache.spark.sql.DataFrame = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
+    val meta = metadata(spark, table)
     // the catalog schema, not inference: an EMPTY snapshot lane (a
     // crawl that matched nothing) has a location with no parquet files,
     // and schema inference would fail where the catalog knows the shape
     spark.read.schema(meta.schema).parquet(meta.location.toString)
   }
 
+  private def metadata(spark: SparkSession, table: String) =
+    spark.sessionState.catalog.getTableMetadata(
+      spark.sessionState.sqlParser.parseTableIdentifier(table))
+
+  /** `table` qualified by its catalog creation time — a memo key for a
+    * derivation of the table's contents. Every index write drops and
+    * re-creates its table, so a rewrite under the same name is a new
+    * key and never reads the dropped table's derivation.
+    */
+  def tableVersion(spark: SparkSession, table: String): String =
+    s"$table@${metadata(spark, table).createTime}"
+
   /** The over-cap (hot) bucket keys of a persisted index table — the
     * gate legs' stop-loss anti-join build side — materialized ONCE per
-    * (application, table, cap) and checkpointed: the hot set is a
+    * (application, table version, cap) and checkpointed: the hot set is a
     * static derivation of a static table, and deriving it inside the
     * per-trigger plan re-aggregated the whole index EVERY trigger
     * (measured +2.6 s/trigger at the 5M-doc estate — more than the
@@ -64,7 +75,7 @@ private[graft] object TableUtil {
   def hotBuckets(spark: SparkSession, table: String, keys: Seq[String],
       cap: Long): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    hotBucketsMemo(spark, table, s"${keys.mkString(",")}|$cap")(
+    hotBucketsMemo(spark, tableVersion(spark, table), s"${keys.mkString(",")}|$cap")(
       spark.table(table)
         .groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
         .filter(col("c") > cap)

@@ -139,7 +139,7 @@ object IngestGate {
           .when(col("m").isNotNull, round(col("m.est"), 6)).as("est_jaccard"))
 
   /** The corpus keeper map (content md5 → lowest doc_id), memoized per
-    * (application, index table) and checkpointed — the
+    * (application, index table version) and checkpointed — the
     * `TableUtil.hotBuckets` precedent applied to the gate's other
     * static leg: the map is a deterministic derivation of the static
     * corpus snapshot (1:1 with its signature index table), and building
@@ -151,7 +151,8 @@ object IngestGate {
   private val keeperMemo = graft.core.Memo[DataFrame]("gate_keeper_map", maxEntries = 8)
 
   private def keeperMap(corpus: DataFrame, indexTable: String): DataFrame =
-    keeperMemo(corpus.sparkSession, indexTable)(
+    keeperMemo(corpus.sparkSession,
+        graft.sources.TableUtil.tableVersion(corpus.sparkSession, indexTable))(
       corpus.groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("keeper"))
         .localCheckpoint(eager = true))
 
@@ -176,12 +177,8 @@ object IngestGate {
     // over the cap are dropped WHOLE, the sweep semantics; the hot set
     // is bounded by rows/cap, so the anti-join build side stays small
     // by construction. Oracle mirror: sighot in ingestGateCtesSql.
-    val hot = graft.sources.TableUtil.hotBuckets(
-      spark, indexTable, Seq("band", "bh"), bucketCap)
-    val idx = spark.table(indexTable)
-      .join(broadcast(hot), Seq("band", "bh"), "left_anti")
-      .select(col("band"), col("bh"), col("doc_id").as("corpus_doc"),
-        col("sig").as("sig_c"))
+    val idx = graft.sources.SignatureIndex.gateSide(spark, indexTable, bucketCap,
+      col("doc_id").as("corpus_doc"), col("sig").as("sig_c"))
     // band rows carry the quality/keeper columns THROUGH the signature
     // pipeline (bandedSignaturesKeep) — joining back to the document
     // stream would be a stream-stream self-join; the left outer band
@@ -267,12 +264,8 @@ object IngestGate {
     val corpus = docs.filter(col("doc_id") % 2 === 0)
     val flagged = flaggedOf(arriving, broadcast(keeperMap(corpus, corpusIdx)))
       .select(col("doc_id"), col("pre_verdict"), col("keeper"))
-    val hot = graft.sources.TableUtil.hotBuckets(
-      spark, corpusIdx, Seq("band", "bh"), graft.pipeline.Dedup.MinhashBucketCap)
-    val idx = spark.table(corpusIdx)
-      .join(broadcast(hot), Seq("band", "bh"), "left_anti")
-      .select(col("band"), col("bh"), col("doc_id").as("corpus_doc"),
-        col("sig").as("sig_c"))
+    val idx = graft.sources.SignatureIndex.gateSide(spark, corpusIdx,
+      graft.pipeline.Dedup.MinhashBucketCap, col("doc_id").as("corpus_doc"), col("sig").as("sig_c"))
     val bands = spark.table(arriveIdx).join(broadcast(flagged), Seq("doc_id"))
     collapseVerdictsAgg(scoreBands(bands, idx))
   }

@@ -188,4 +188,20 @@ class EstateLifecycleSpec extends SparkSpec {
     } finally dropAll("lc_em_s1", "lc_em_s2", "lc_em_s3", "lc_em_probe",
       "lc_em_e12", "lc_em_e123", "lc_em_e23", "lc_em_scratch")
   }
+
+  test("one lifecycle: no bucketed write or co-partition scope outside EstateIndex in src/main") {
+    // a family that re-rolls its own write tail or expiry scope drifts
+    // from the shared one (bucket count, table+location drop, conf
+    // restore) — new families supply keys, lane, collapse and verify
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main/scala")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(_.toString.endsWith(".scala"))
+    assert(files.length > 50, s"source tree not found from ${new java.io.File(".").getAbsolutePath}")
+    val owner = java.nio.file.Paths.get("graft", "sources", "EstateIndex.scala")
+    val offenders = files.toSeq.filterNot(_.endsWith(owner)).flatMap { f =>
+      val text = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      Seq("bucketBy(", "requireAllClusterKeysForCoPartition")
+        .filter(text.contains).map(m => s"$f: $m")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

@@ -75,29 +75,4 @@ class SignatureIndexSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS sig_idx_b")
     }
   }
-
-  test("streaming ingest gate against the persisted index flags the re-crawl as it arrives") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val base = (1 to 40).map(i => s"w$i")
-    val corpus = Seq(docRow(1L, base), docRow(2L, (1 to 40).map(i => s"x$i")))
-      .toDF("doc_id", "text", "source")
-    SignatureIndex.write(corpus, "sig_idx_live")
-    try {
-      implicit val sqlCtx = spark.sqlContext
-      val mem = MemoryStream[(Long, String)]
-      val gate = SignatureIndex.ingestStream(
-        mem.toDF().toDF("doc_id", "text"), "sig_idx_live")
-      val q = gate.writeStream.format("memory").queryName("ingest_gate")
-        .outputMode("append").start()
-      try {
-        mem.addData((201L, base.updated(3, "edit").mkString(" ")))
-        mem.addData((202L, (1 to 40).map(i => s"nn$i").mkString(" ")))
-        q.processAllAvailable()
-        val flagged = spark.table("ingest_gate").collect()
-          .map(r => (r.getAs[Long]("doc_id"), r.getAs[Long]("corpus_doc"))).distinct
-        assert(flagged.toSet == Set((201L, 1L)),
-          s"only the edited re-crawl must flag, against its original: ${flagged.toSeq}")
-      } finally q.stop()
-    } finally spark.sql("DROP TABLE IF EXISTS sig_idx_live")
-  }
 }

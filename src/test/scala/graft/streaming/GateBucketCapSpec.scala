@@ -64,4 +64,35 @@ class GateBucketCapSpec extends SparkSpec {
       assert(AudioIndex.ingestStream(arriving, "cap_au_idx", bucketCap = 0L).isEmpty)
     } finally spark.sql("DROP TABLE IF EXISTS cap_au_idx")
   }
+
+  test("a rewritten index table is gated with its own hot set and keeper map, not the old table's") {
+    // the gate's static legs are memoized per index table; every index
+    // write drops and re-creates the name, so a memo keyed by the bare
+    // name would keep serving the dropped table's derivations
+    val cap = 1L
+    val incoming = Seq(
+      901L -> base.updated(39, "edited").mkString(" "), // near_dup of 2 while its buckets are cool
+      903L -> (1 to 40).map(i => s"y$i").mkString(" "), // exact copy of doc 8, which only the rewrite holds
+    ).toDF("doc_id", "text")
+    def gate(corpus: org.apache.spark.sql.DataFrame) = {
+      SignatureIndex.write(corpus, "cap_rw_idx")
+      IngestGate.verdicts(incoming, corpus, "cap_rw_idx", bucketCap = cap)
+        .collect().map(v => v.doc_id -> v.verdict).toMap
+    }
+    try {
+      // first write: every (band, bh) bucket holds one doc — none is hot at cap 1
+      assert(gate(corpusDf)(901L) == "near_dup")
+      // rewrite: doc 6 duplicates doc 2, so each of doc 2's buckets holds
+      // two docs — over the cap, dropped whole; doc 8 brings new content
+      val rewritten = corpusDf.unionByName(Seq(
+        (6L, base.mkString(" "), "s"),
+        (8L, (1 to 40).map(i => s"y$i").mkString(" "), "s"),
+      ).toDF("doc_id", "text", "source"))
+      val after = gate(rewritten)
+      assert(after(901L) == "keep",
+        s"the rewritten table's hot buckets must be dropped, not the old table's (empty) set: $after")
+      assert(after(903L) == "exact_dup",
+        s"the keeper map must be the rewritten corpus's: $after")
+    } finally spark.sql("DROP TABLE IF EXISTS cap_rw_idx")
+  }
 }
