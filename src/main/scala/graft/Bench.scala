@@ -22,6 +22,10 @@ import org.apache.spark.sql.SparkSession
   * adjudicate). A query that throws is reported under `errors` with
   * the exception message instead of being folded into a fake wall
   * time — a broken query must never look like a fast one.
+  *
+  * An always-on [[RunAttribution.Listener]] attributes each query's
+  * LAST timed run: `queries_detail` carries its jobs, stages, task CPU,
+  * shuffle and spill, and driver gap beside the wall times.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -36,6 +40,8 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val attribution = new RunAttribution.Listener
+    spark.sparkContext.addSparkListener(attribution)
 
     // fixed-cost CANARY: one unchanging scan+shuffle plan, timed after
     // the session is warm. Its wall-clock depends only on ambient host
@@ -117,8 +123,13 @@ object Bench {
       // at least one run absorbed ambient host load; two extra runs
       // tighten the median so the artifact adjudicates itself
       var target = runs
+      // wall interval of the latest run, for its driver gap
+      var startMs = 0L
+      var endMs = 0L
       while (i < target && !failed) {
         if (memoOff) graft.core.Memo.releaseAll()
+        spark.sparkContext.setLocalProperty(RunAttribution.RunKey, s"$name#$i")
+        startMs = System.currentTimeMillis()
         val t0 = System.nanoTime()
         try { rows = fn(spark, sfDir).count() } catch {
           case e: Throwable =>
@@ -126,6 +137,8 @@ object Bench {
             errors += name -> s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}"
         }
         if (!failed) times += (System.nanoTime() - t0) / 1e9
+        endMs = System.currentTimeMillis()
+        spark.sparkContext.setLocalProperty(RunAttribution.RunKey, null)
         // scope each query's CACHED intermediates to its own run: a
         // session executing ~100 queries back to back must not accumulate
         // their caches until eviction pressure. NOTE the per-dataset
@@ -142,14 +155,17 @@ object Bench {
             median(times.toSeq) > 3 * times.min)
           target = runs + 2
       }
-      if (failed) None else Some((name, times.toSeq, rows))
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+      val att = attribution.take(s"$name#${i - 1}", startMs, endMs)
+      if (failed) None else Some((name, times.toSeq, rows, att))
     }
     def fmt(d: Double): String = String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
-    val qs = results.map { case (k, ts, _) => "\"" + k + "\":" + fmt(median(ts)) }
+    val qs = results.map { case (k, ts, _, _) => "\"" + k + "\":" + fmt(median(ts)) }
       .mkString("{", ",", "}")
-    val detail = results.map { case (k, ts, rows) =>
+    val detail = results.map { case (k, ts, rows, att) =>
       "\"" + k + "\":{\"median\":" + fmt(median(ts)) + ",\"min\":" + fmt(ts.min) +
-        ",\"rows\":" + rows + ",\"runs\":[" + ts.map(fmt).mkString(",") + "]}"
+        ",\"rows\":" + rows + ",\"runs\":[" + ts.map(fmt).mkString(",") + "]," +
+        att.jsonFields + "}"
     }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, m) =>
       "\"" + k + "\":\"" + jsonSafe(m) + "\""
@@ -157,19 +173,19 @@ object Bench {
     // min = closest to contention-free; contended = escalated queries
     // (median stayed > 3x min even after the extra runs) — the reader
     // should trust `queries_min` over `queries` for those
-    val qsMin = results.map { case (k, ts, _) => "\"" + k + "\":" + fmt(ts.min) }
+    val qsMin = results.map { case (k, ts, _, _) => "\"" + k + "\":" + fmt(ts.min) }
       .mkString("{", ",", "}")
     // run-1 wall per query: the run that pays whatever cold memo builds
     // the query composes (in memo-off mode every run does) — beside the
     // warm median, the reader sees both sides of the memo discipline
     // without a second bench invocation (VERDICT r16 Next #2b)
-    val qsCold = results.map { case (k, ts, _) => "\"" + k + "\":" + fmt(ts.head) }
+    val qsCold = results.map { case (k, ts, _, _) => "\"" + k + "\":" + fmt(ts.head) }
       .mkString("{", ",", "}")
     val contended = results.collect {
-      case (k, ts, _) if median(ts) > 3 * ts.min => "\"" + k + "\""
+      case (k, ts, _, _) if median(ts) > 3 * ts.min => "\"" + k + "\""
     }.mkString("[", ",", "]")
-    val total = results.map { case (_, ts, _) => median(ts) }.sum
-    val totalMin = results.map { case (_, ts, _) => ts.min }.sum
+    val total = results.map { case (_, ts, _, _) => median(ts) }.sum
+    val totalMin = results.map { case (_, ts, _, _) => ts.min }.sum
     // cold construction cost of every per-dataset memoized artifact
     // built during this bench (seconds at first materialization): warm
     // per-query medians + this map = the full corpus-pass story, and
@@ -215,7 +231,7 @@ object Bench {
     // regressions
     val canaryIsHot = priorRecordCanary(priorBatchBody)
       .map(p => BenchSuspects.canaryHot(math.max(canaryStart, canaryEnd), p))
-    val classified = results.flatMap { case (k, ts, _) =>
+    val classified = results.flatMap { case (k, ts, _, _) =>
       priorMins.get(k).flatMap(p =>
         BenchSuspects.classify(ts, p, canaryIsHot).map(v => (k, ts.min, p, v)))
     }
@@ -225,7 +241,7 @@ object Bench {
     }.mkString("{", ",", "}")
     val suspects = suspectJson("contended")
     val regressed = suspectJson("regressed")
-    val drift = results.toSeq.flatMap { case (k, ts, _) =>
+    val drift = results.toSeq.flatMap { case (k, ts, _, _) =>
       for {
         p1 <- priorMins.get(k)
         p2 <- prior2Mins.get(k)
@@ -241,9 +257,9 @@ object Bench {
     // the committed record's `queries_rows` map (first emitted this
     // round, so the detector arms one round after a query first lands).
     val priorRowsMap = priorRecordRows(priorBatchBody)
-    val qsRows = results.map { case (k, _, rows) => "\"" + k + "\":" + rows }
+    val qsRows = results.map { case (k, _, rows, _) => "\"" + k + "\":" + rows }
       .mkString("{", ",", "}")
-    val perrow = results.flatMap { case (k, ts, rows) =>
+    val perrow = results.flatMap { case (k, ts, rows, _) =>
       for {
         p <- priorMins.get(k)
         pr <- priorRowsMap.get(k)
@@ -346,7 +362,7 @@ object Bench {
             s""""suspect_epoch":$epochHot}"""
         }
         def fam5(nTopics: Int, family: String) = bracket {
-          def one() = StreamBench.measure(spark, 100000, 3, bucketed = false, nTopics = nTopics)
+          def one() = StreamBench.measure(spark, 100000, 3, nTopics = nTopics)
           stableWarm(() => one())
           val rs = Seq.fill(5)(one())
           StreamBench.summaryJson(rs, priorBests.get(family), priorMedians.get(family))

@@ -19,8 +19,6 @@ import graft.streaming.AnomalyPipeline
   * topics each round and persists `stream_bench.json`, so hot-path
   * regressions show up in a committed per-round artifact instead of
   * living only in SCALE.md prose.
-  *
-  * Usage: runMain graft.StreamBench [messagesPerTrigger] [triggers] [exact|bucketed] [nTopics]
   */
 object StreamBench {
 
@@ -28,17 +26,22 @@ object StreamBench {
     * (the default DSL has 2).
     */
   case class Result(msgsPerSec: Long, messages: Long, seconds: Double,
-      anomalies: Long, topics: Int, bucketed: Boolean) {
+      anomalies: Long, topics: Int) {
     def json: String =
       s"""{"msgs_per_sec":$msgsPerSec,"messages":$messages,"seconds":${"%.3f".formatLocal(java.util.Locale.ROOT, seconds)},""" +
-        s""""anomalies_emitted":$anomalies,"topics":$topics,"bucketed":$bucketed}"""
+        s""""anomalies_emitted":$anomalies,"topics":$topics}"""
   }
 
   /** Run the full per-trigger pipeline over synthetic messages; one
     * untimed warm-up trigger, then `triggers` timed ones.
+    *
+    * Each timed trigger plants one spike per configured (topic, path),
+    * so detect -> cooldown -> emit is on the clock. Triggers are 15 s
+    * apart in event time, inside the 2 min cooldown: every configured
+    * (topic, path, window) key emits exactly once, on the first timed
+    * trigger, and any other emitted count throws.
     */
-  def measure(spark: SparkSession, perTrigger: Int, triggers: Int,
-      bucketed: Boolean, nTopics: Int): Result = {
+  def measure(spark: SparkSession, perTrigger: Int, triggers: Int, nTopics: Int): Result = {
     import spark.implicits._
     val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
     // nTopics > 0: a WIDE DSL (nTopics x 2 fields) to exercise the
@@ -51,34 +54,44 @@ object StreamBench {
         "topic-a" -> Map("sub.one" -> Seq("15m"), "two" -> Seq("15m")),
         "topic-b" -> Map("rate" -> Seq("15m", "1h")),
       ))
-    val pipeline = new AnomalyPipeline(spark, dsl, cooldownMs = Dsl.CooldownMs,
-      statsBucketSec = if (bucketed) Some(60L) else None)
+    val pipeline = new AnomalyPipeline(spark, dsl, cooldownMs = Dsl.CooldownMs)
+    // far above 3 sigma while spikes stay under 9% of a window's
+    // samples, and small enough for the exact DECIMAL(18,6) sum of squares
+    val spike = 1000.0
 
     // one trigger = perTrigger messages spread over 15 s of event time
-    def batch(trigger: Int) = spark.range(perTrigger.toLong).map { i =>
+    def batch(trigger: Int, spiked: Boolean) = spark.range(perTrigger.toLong).map { n =>
+      val i: Long = n
       val s = trigger * 15000L + (i * 15000L / perTrigger)
+      // message `at` carries the spike: wide DSL, sub.one of topic-i at i
+      // and two at nTopics + i; default DSL, topic-a sub.one at 0,
+      // topic-b rate at 1, topic-a two at 2
+      def v(steady: Double, at: Long) = if (spiked && i == at) spike else steady
       val (topic, value) =
         if (nTopics > 0)
           (s"topic-${i % nTopics}",
-            s"""{"sub":{"one":${15.0 + (i % 7)}},"two":${16.0 + (i % 5)}}""")
+            s"""{"sub":{"one":${v(15.0 + (i % 7), i % nTopics)}},"two":${v(16.0 + (i % 5), nTopics + i % nTopics)}}""")
         else if (i % 2 == 0)
-          ("topic-a", s"""{"sub":{"one":${15.0 + (i % 7)}},"two":${16.0 + (i % 5)}}""")
-        else ("topic-b", s"""{"rate":${2.5 + (i % 11)}}""")
+          ("topic-a", s"""{"sub":{"one":${v(15.0 + (i % 7), 0)}},"two":${v(16.0 + (i % 5), 2)}}""")
+        else ("topic-b", s"""{"rate":${v(2.5 + (i % 11), 1)}}""")
       (topic, s"k$i", value, new Timestamp(t0 + s))
     }.toDF("topic", "key", "value", "ts")
 
     // warm-up trigger (session + codegen), not timed
-    pipeline.processBatch(batch(0), new Timestamp(t0 + 15000))
+    pipeline.processBatch(batch(0, spiked = false), new Timestamp(t0 + 15000))
 
     val start = System.nanoTime()
     var anomalies = 0L
     (1 to triggers).foreach { tr =>
-      anomalies += pipeline.processBatch(batch(tr), new Timestamp(t0 + (tr + 1) * 15000L)).count()
+      anomalies += pipeline.processBatch(batch(tr, spiked = true), new Timestamp(t0 + (tr + 1) * 15000L)).count()
     }
     val sec = (System.nanoTime() - start) / 1e9
+    val expected = dsl.topics.flatMap(_.fields.flatMap(_.windows)).size.toLong
+    if (anomalies != expected)
+      throw new IllegalStateException(
+        s"stream bench emitted $anomalies anomaly records, expected $expected (one per configured key)")
     val msgs = perTrigger.toLong * triggers
-    Result((msgs / sec).round, msgs, sec, anomalies,
-      if (nTopics > 0) nTopics else 2, bucketed)
+    Result((msgs / sec).round, msgs, sec, anomalies, if (nTopics > 0) nTopics else 2)
   }
 
   /** Throughput of the composed ADMISSION gate (docs/sec): synthetic
@@ -123,7 +136,7 @@ object StreamBench {
     val msgs = perBatch.toLong * batches
     // topics doubles as the GATE count for the admission record — four
     // since the audio landmark gate joined the composition (round 11)
-    Result((msgs / sec).round, msgs, sec, rejected, topics = 4, bucketed = false)
+    Result((msgs / sec).round, msgs, sec, rejected, topics = 4)
   }
 
   /** Median + best + self-adjudicated contention verdict over a run
@@ -180,40 +193,5 @@ object StreamBench {
     s"""{"median":${med.json},"best":${best.json},"contended":$contended,""" +
       s""""spread":$spreadS,$suspect$priorMed""" +
       s""""runs":[${rs.map(_.json).mkString(",")}]}"""
-  }
-
-  def main(args: Array[String]): Unit = {
-    val perTrigger = args.headOption.map(_.toInt).getOrElse(100000)
-    val triggers = args.drop(1).headOption.map(_.toInt).getOrElse(5)
-    val bucketed = args.drop(2).headOption.contains("bucketed")
-    val nTopics = args.drop(3).headOption.map(_.toInt).getOrElse(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus, 2]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // median-of-N with every run recorded, matching the per-round
-    // artifact Bench writes — a standalone single-shot number proved
-    // uninterpretable under sandbox contention (r7 post-mortem). A
-    // malformed env value degrades to the default run count: the bench
-    // must never abort after the session is already up over a typo.
-    val nRuns = sys.env.get("SPARK_GRAFT_STREAM_RUNS")
-      .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-      .getOrElse(3).max(1)
-    // mode "admission": time the composed admission gate instead of
-    // the anomaly pipeline (args: perBatch batches admission; corpus
-    // indexes from SPARK_GRAFT_SF_DIR)
-    val rs =
-      if (args.drop(2).headOption.contains("admission")) {
-        val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-        Seq.fill(nRuns)(admissionMeasure(spark, sfDir, perTrigger, triggers))
-      } else Seq.fill(nRuns)(measure(spark, perTrigger, triggers, bucketed, nTopics))
-    val r = rs.sortBy(_.msgsPerSec).apply(nRuns / 2)
-    println(
-      s"""{"metric":"stream_msgs_per_sec","value":${r.msgsPerSec},"unit":"msgs/sec","messages":${r.messages},"triggers":$triggers,"seconds":${r.seconds},"anomalies_emitted":${r.anomalies},"summary":${summaryJson(rs)}}""")
-    spark.stop()
   }
 }

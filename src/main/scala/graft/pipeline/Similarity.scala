@@ -710,8 +710,8 @@ object Similarity {
     * index from being silently under- or over-probed, and the ceiling
     * keeps the probed VOLUME sublinear — an uncapped k/4 probe reads
     * ~¼ of the corpus per query regardless of k (probe × n/k = n/4),
-    * which the 10× ScaleProbe measured as a 38× wall-clock blowup on
-    * q_ann_ivfpq before the cap. With the ceiling, per-query
+    * which the 10× scale probe measured as a 38× wall-clock blowup on
+    * q_ann_ivfpq before the cap (record in SCALE.md). With the ceiling, per-query
     * candidates are ≤ IvfProbeMax · n/k ≈ 16·√n at the √n cell
     * sizing. The cap binds only above 64 cells (> ~4 k vectors), so
     * every gate-scale oracle output is unchanged.
@@ -1150,7 +1150,7 @@ object Similarity {
     annIvfProbe(spark, sfDir, None)
 
   /** Probe-width-parameterized IVF search — the recall-vs-nprobe
-    * instrument ([[graft.ScaleProbe]]'s `recall_sweep` mode). The
+    * instrument (the scale probe's `recall_sweep` record in SCALE.md). The
     * registered `q_ann_ivf` always runs the production width
     * ([[ivfProbeOf]]); the override exists so the probe CAP's recall
     * cost is measurable at scale instead of asserted (the r13 10×

@@ -309,8 +309,8 @@ class AnomalyPipeline(
     * store row count (the documented 100x scale form, oracle-gated as
     * `q_window_stats_bucketed`).
     */
-  private def computeStats(windows: Seq[Long], now: java.sql.Timestamp, horizonUs: Long): DataFrame =
-    statsBucketSec match {
+  private def computeStats(windows: Seq[Long], now: java.sql.Timestamp, horizonUs: Long): DataFrame = {
+    val stats = statsBucketSec match {
       case Some(b) =>
         val buckets = bucketState.get().getOrElse {
           // restart (or first trigger): rebuild the compacted partials
@@ -333,6 +333,15 @@ class AnomalyPipeline(
           currentStore.filter(unix_micros(col("produced")) >= Param.long(horizonUs)),
           windows, Param.timestamp(now))
     }
+    // every window runs over every field: when fields differ in their
+    // windows, drop the keys no field configured, so a sample is judged
+    // (and reported) only over its own field's windows
+    if (uniformWindows) stats
+    else stats.join(broadcast(configuredKeys.toSeq.toDF("topic", "path", "window_sec")),
+      Seq("topic", "path", "window_sec"), "left_semi")
+  }
+
+  private val uniformWindows = dsl.topics.flatMap(_.fields.map(_.windows.toSet)).distinct.size <= 1
 
   /** Stored sample count (reference: Sarkac.getStats db.storedEvents,
     * lib/Sarkac.js:101-109 — a Mongo collection count). A driver-side

@@ -13,7 +13,7 @@ class StreamBenchSummarySpec extends AnyFunSuite {
 
   private def r(msgs: Long) =
     StreamBench.Result(msgs, messages = 300000, seconds = 1.0,
-      anomalies = 0, topics = 2, bucketed = false)
+      anomalies = 0, topics = 2)
 
   test("a run below a third of the committed best self-flags") {
     val s = StreamBench.summaryJson(Seq(r(18469), r(50075), r(123067)),

@@ -63,9 +63,9 @@ class IvfRecallSpec extends SparkSpec {
   test("recall is monotone in nprobe and the production width matches its override") {
     // probe sets are NESTED (top-p of the same sorted cell ranking), so
     // widening the probe budget can only add candidates — mean recall
-    // must be non-decreasing in nprobe. This is the contract the
-    // ScaleProbe recall_sweep instrument reads at 10x; pinning it here
-    // keeps the parameterized path honest at gate scale too.
+    // must be non-decreasing in nprobe. This is the contract the 10x
+    // recall_sweep record in SCALE.md reads; pinning it here keeps the
+    // parameterized path honest at gate scale too.
     val sf = "/root/testdata/sf0.001"
     def meanRecall(p: Option[Int]): Double =
       Similarity.annRecallProbe(spark, sf, p)

@@ -51,13 +51,13 @@ class SkewSpec extends SparkSpec {
     // drain still-queued events from earlier jobs BEFORE registering,
     // so the fresh listener cannot receive a predecessor's TaskEnd
     // events and pollute this measurement
-    org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+    org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
     val l = new TaskRecords
     spark.sparkContext.addSparkListener(l)
     try {
       df.collect()
       // and drain again so every TaskEnd of THIS job has been delivered
-      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
       val stages = l.snapshot().filter(_._2.sum > 0)
       assert(stages.nonEmpty, "no shuffle-read stage observed")
       val tasks = stages.maxBy(_._2.sum)._2

@@ -57,6 +57,22 @@ class AnomalyPipelineSpec extends SparkSpec {
     assert(byPath3.get("two").exists(_.contains(-100.0)), s"two spike missed: $byPath3")
   }
 
+  test("fields with different windows are judged only over their own windows") {
+    // the stats pass runs every DSL window over every field; a spike on
+    // sub.one (5m only) must not emit, or show in the stats cache, under
+    // two's extra 10m window
+    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"), "two" -> Seq("5m", "10m"))))
+    val pipeline = new AnomalyPipeline(spark, dsl, cooldownMs = 0L)
+    val out = Seq((0L, 60L), (60L, 120L), (120L, 180L)).flatMap { case (from, to) =>
+      pipeline.processBatch(generatorScript(from, to).toDF("topic", "key", "value", "ts"),
+        new Timestamp(t0 + to * 1000)).collect().toSeq
+    }
+    val keys = out.map(e => (e.topic, e.path, e.window_sec)).toSet
+    assert(keys.contains(("test-topic", "sub.one", 300L)), keys)
+    assert(keys.subsetOf(pipeline.configuredKeys), keys)
+    assert(pipeline.statsCache.map(s => (s._1, s._2, s._3)).toSet == pipeline.configuredKeys)
+  }
+
   test("cooldown suppresses re-emission across triggers") {
     val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"))))
     val pipeline = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L)
