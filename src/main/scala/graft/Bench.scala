@@ -25,7 +25,8 @@ import org.apache.spark.sql.SparkSession
   *
   * An always-on [[RunAttribution.Listener]] attributes each query's
   * LAST timed run: `queries_detail` carries its jobs, stages, task CPU,
-  * shuffle and spill, and driver gap beside the wall times.
+  * shuffle and spill, and driver gap beside the wall times (null when
+  * the listener bus does not drain in time).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -155,8 +156,13 @@ object Bench {
             median(times.toSeq) > 3 * times.min)
           target = runs + 2
       }
-      org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
-      val att = attribution.take(s"$name#${i - 1}", startMs, endMs)
+      // attribution is a side measurement: a listener bus still behind
+      // after the drain's timeout leaves this query's fields null rather
+      // than aborting the run
+      val att = scala.util.Try {
+        org.apache.spark.sql.graftbridge.ListenerBridge.drain(spark.sparkContext)
+        attribution.take(s"$name#${i - 1}", startMs, endMs)
+      }.toOption
       if (failed) None else Some((name, times.toSeq, rows, att))
     }
     def fmt(d: Double): String = String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
@@ -165,7 +171,7 @@ object Bench {
     val detail = results.map { case (k, ts, rows, att) =>
       "\"" + k + "\":{\"median\":" + fmt(median(ts)) + ",\"min\":" + fmt(ts.min) +
         ",\"rows\":" + rows + ",\"runs\":[" + ts.map(fmt).mkString(",") + "]," +
-        att.jsonFields + "}"
+        att.fold(RunAttribution.nullFields)(_.jsonFields) + "}"
     }.mkString("{", ",", "}")
     val errJson = errors.map { case (k, m) =>
       "\"" + k + "\":\"" + jsonSafe(m) + "\""

@@ -27,6 +27,11 @@ object RunAttribution {
     */
   val RunKey = "graft.bench.run"
 
+  /** The attribution fields of a run that could not be attributed. */
+  val nullFields: String =
+    Seq("jobs", "stages", "task_cpu_ms", "shuffle_mb", "spill_mb", "driver_gap_ms")
+      .map(k => s""""$k":null""").mkString(",")
+
   /** Milliseconds of `[startMs, endMs]` covered by none of `jobs`
     * (start, end) intervals; an end below zero marks a job still open
     * at `endMs`. The union of the intervals, not their sum: jobs of

@@ -333,15 +333,13 @@ class AnomalyPipeline(
           currentStore.filter(unix_micros(col("produced")) >= Param.long(horizonUs)),
           windows, Param.timestamp(now))
     }
-    // every window runs over every field: when fields differ in their
-    // windows, drop the keys no field configured, so a sample is judged
-    // (and reported) only over its own field's windows
-    if (uniformWindows) stats
-    else stats.join(broadcast(configuredKeys.toSeq.toDF("topic", "path", "window_sec")),
+    // every window runs over every field: drop the keys no field
+    // configured, so a sample is judged (and reported) only over its own
+    // field's windows. (The per-message topic-frequency sample is a
+    // constant 1.0, so its stddev is 0 and the F7 gate already drops it.)
+    stats.join(broadcast(configuredKeys.toSeq.toDF("topic", "path", "window_sec")),
       Seq("topic", "path", "window_sec"), "left_semi")
   }
-
-  private val uniformWindows = dsl.topics.flatMap(_.fields.map(_.windows.toSet)).distinct.size <= 1
 
   /** Stored sample count (reference: Sarkac.getStats db.storedEvents,
     * lib/Sarkac.js:101-109 — a Mongo collection count). A driver-side

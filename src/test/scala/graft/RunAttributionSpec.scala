@@ -27,6 +27,13 @@ class RunAttributionSpec extends SparkSpec {
     assert(driverGapMs(50, 100, Seq((10L, 60L), (90L, 200L))) == 30)
   }
 
+  test("an unattributed run writes the same six fields, each null") {
+    val keys = "\"(\\w+)\":".r
+    def names(json: String) = keys.findAllMatchIn(json).map(_.group(1)).toSeq
+    assert(names(RunAttribution.nullFields) == names(RunAttribution(1, 2, 3L, 4.0, 5.0, 6L).jsonFields))
+    assert(RunAttribution.nullFields.split(",").forall(_.endsWith(":null")), RunAttribution.nullFields)
+  }
+
   test("a Jobs.concurrently pair under the bench tag: two jobs, gap within the wall") {
     val sc = spark.sparkContext
     val listener = new RunAttribution.Listener

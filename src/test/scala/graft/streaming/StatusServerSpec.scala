@@ -41,6 +41,26 @@ class StatusServerSpec extends SparkSpec {
     p
   }
 
+  test("/dsl/computed reports each field over its own windows") {
+    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"), "two" -> Seq("5m", "10m"))))
+    val p = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L)
+    def batch(fromSec: Long, toSec: Long) =
+      (fromSec until toSec by 5).map { s =>
+        ("test-topic", s"k$s", s"""{"sub":{"one":${15.5 + s % 10}},"two":${16 + s % 7}}""",
+          new Timestamp(t0 + s * 1000))
+      }.toDF("topic", "key", "value", "ts")
+    p.processBatch(batch(0, 60), new Timestamp(t0 + 60000))
+    p.processBatch(batch(60, 120), new Timestamp(t0 + 120000))
+    val srv = new StatusServer(new Counters(spark), None, Some(p))
+    val port = srv.start()
+    try {
+      val (c, computed) = send(port, "/dsl/computed")
+      val keys = "\"([^\"]+)\": \\{".r.findAllMatchIn(computed).map(_.group(1)).toSet
+      assert(c == 200 && keys == Set(
+        "test-topic:sub.one:300", "test-topic:two:300", "test-topic:two:600"), computed)
+    } finally srv.stop()
+  }
+
   test("serves the full reference endpoint surface (S7)") {
     val counters = new Counters(spark)
     counters.analysedMessages.add(7)
