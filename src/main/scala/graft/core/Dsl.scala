@@ -52,7 +52,6 @@ object Dsl {
 
   /** Default windows (reference: lib/dsl/DSLHandler.js:12-15). */
   val DefaultFieldWindows: Seq[String] = Seq("15m")
-  val DefaultFrequencyWindows: Seq[String] = Seq("15m", "12h", "1d")
 
   /** Anomaly re-emit cooldown (reference: lib/dsl/DSLHandler.js:13). */
   val CooldownMs: Long = 120000L

@@ -23,16 +23,22 @@ object Exact {
 
   private val D = DecimalType(18, 6)
 
+  /** The largest magnitude DECIMAL(18,6) holds. */
+  private val MaxD = lit(new java.math.BigDecimal("999999999999.999999"))
+
   /** Final decimal->double conversion, made cross-engine-identical by
     * first trimming the sum back to DECIMAL(18,6): the unscaled value
     * then fits in 2^53, so `double(raw)/double(10^6)` (DuckDB's int-path
     * cast) and BigDecimal.doubleValue (Spark) both yield the correctly
     * rounded double. A direct DECIMAL(38,12)->DOUBLE cast is NOT
     * correctly rounded in DuckDB (int128 conversion) and differs from
-    * Spark by 1 ulp. Requires |sum| < 1e12 and true scale <= 6 — holds
-    * for all gate data.
+    * Spark by 1 ulp. The trim needs |sum| within DECIMAL(18,6) (all gate
+    * data is); a larger sum (a sum of squares past 1e12, e.g. one
+    * sample of 1e6) would fail the trim under ANSI mode, so it is cast
+    * to double directly instead.
     */
-  private def toDouble(sumDec: Column): Column = sumDec.cast(D).cast("double")
+  private def toDouble(sumDec: Column): Column =
+    when(abs(sumDec) <= MaxD, sumDec.cast(D).cast("double")).otherwise(sumDec.cast("double"))
 
   /** Exact sum: sum(cast(x as decimal(18,6))), trimmed, cast to double.
     * Oracle shape: `CAST(CAST(SUM(CAST(x AS DECIMAL(18,6))) AS DECIMAL(18,6)) AS DOUBLE)`.

@@ -101,17 +101,6 @@ object WindowStats {
     finishStats(mergeAgg(bucketPartials(samples, bucketSec), windows, now))
   }
 
-  /** Raw (unrounded, same validity gates) bucketed stats over
-    * pre-computed partials — the incremental streaming form: partials
-    * are built once per store segment ([[bucketPartials]]) and merged
-    * per trigger, so the per-trigger cost is O(keys x buckets in
-    * retention), independent of both batch size and raw store size.
-    * The caller guarantees window/bucket alignment (AnomalyPipeline
-    * enforces it at construction).
-    */
-  def rawBucketedStats(buckets: DataFrame, windows: Seq[Long], now: Column): DataFrame =
-    rawFinish(mergeAgg(buckets, windows, now))
-
   /** Per-(topic, path, bucket) partial sums of one sample relation.
     * Exact-decimal partials: count/sum/sumsq merge associatively, so
     * merging per-segment partials equals aggregating the raw union.
@@ -130,8 +119,8 @@ object WindowStats {
       )
 
   /** Window merge over bucket partials: `bucket_us in [now - w, now)`
-    * per exploded window, exact-decimal sums trimmed before the double
-    * cast (see Exact.toDouble).
+    * per exploded window, exact-decimal sums finished by
+    * [[graft.functions.Exact.finishSum]].
     */
   private def mergeAgg(buckets: DataFrame, windows: Seq[Long], now: Column): DataFrame = {
     val nowUs = unix_micros(now)
@@ -143,8 +132,8 @@ object WindowStats {
       .groupBy(col("topic"), col("path"), col("window_sec"))
       .agg(
         sum(col("p_cnt")).as("cnt"),
-        sum(col("p_sum")).cast(org.apache.spark.sql.types.DecimalType(18, 6)).cast("double").as("sumv"),
-        sum(col("p_sumsq")).cast(org.apache.spark.sql.types.DecimalType(18, 6)).cast("double").as("sumsq"),
+        finishSum(sum(col("p_sum"))).as("sumv"),
+        finishSum(sum(col("p_sumsq"))).as("sumsq"),
       )
   }
 

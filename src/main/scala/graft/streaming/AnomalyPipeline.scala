@@ -40,30 +40,13 @@ class AnomalyPipeline(
     dsl: Dsl,
     cooldownMs: Long = Dsl.CooldownMs,
     stateDir: Option[String] = None,
-    statsBucketSec: Option[Long] = None,
 ) extends Serializable {
-
-  statsBucketSec.foreach { b =>
-    require(dsl.topics.flatMap(_.fields.flatMap(_.windows)).forall(_ % b == 0),
-      s"statsBucketSec=$b requires every DSL window to be a multiple of it")
-  }
 
   // stage ids shift as the segment union widens: id-free class names let triggers share compiled code
   spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
 
   import spark.implicits._
 
-  /** Accumulated long-format sample store (the sigma relation), kept as
-    * SEGMENTS: one cached chunk per trigger, each tagged with its max
-    * event time. Retention drops whole expired chunks instead of
-    * rewriting the full store every trigger (the previous
-    * full-localCheckpoint approach was O(store) per trigger — quadratic
-    * over a run). Chunk count is bounded by retention / trigger
-    * interval. This mirrors a segment/compaction-based event store; at
-    * cluster scale the chunks are partitions of a Delta/parquet table.
-    * With `stateDir` set the segments are additionally persisted for
-    * restart.
-    */
   /** One store segment: its cached chunk, max event time, and (with
     * `stateDir`) the IMMUTABLE parquet directory persisting it. State
     * I/O is per-segment: each trigger appends one O(batch) directory
@@ -84,8 +67,8 @@ class AnomalyPipeline(
 
   /** Bumped by every truncate. A trigger captures the epoch at its
     * start and re-checks it before publishing results (segments,
-    * snapshot, bucket partials) — a truncate that landed mid-trigger
-    * must not be overwritten by that trigger's pre-truncate state.
+    * snapshot) — a truncate that landed mid-trigger must not be
+    * overwritten by that trigger's pre-truncate state.
     */
   private[streaming] val truncateEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -158,7 +141,18 @@ class AnomalyPipeline(
     })
   }
 
-  /** Restored store: absent (first start) is empty; the manifest is
+  /** Accumulated long-format sample store (the sigma relation), kept as
+    * SEGMENTS: one cached chunk per trigger, each tagged with its max
+    * event time. Retention drops whole expired chunks instead of
+    * rewriting the full store every trigger (the previous
+    * full-localCheckpoint approach was O(store) per trigger — quadratic
+    * over a run). Chunk count is bounded by retention / trigger
+    * interval. This mirrors a segment/compaction-based event store; at
+    * cluster scale the chunks are partitions of a Delta/parquet table.
+    * With `stateDir` set the segments are additionally persisted for
+    * restart.
+    *
+    * Restored store: absent (first start) is empty; the manifest is
     * the only record of what was committed, so with none, nothing was.
     * A committed segment that is missing or unreadable throws, naming
     * its dir — dropping it would silently shrink every trailing window.
@@ -222,36 +216,6 @@ class AnomalyPipeline(
   /** Stats snapshot from the previous trigger (the DSLHandler cache). */
   private val snapshot = new AtomicReference[Option[DataFrame]](None)
 
-  /** Bucketed-stats mode only: the COMPACTED per-(topic, path, bucket)
-    * partial-sum store — one localCheckpointed relation of bounded size
-    * (keys x buckets in retention), folded with each new batch's
-    * partials per trigger. Keeping it compacted (instead of one cached
-    * partial relation per segment) bounds the per-trigger merge to ONE
-    * small shuffle over bounded rows, not O(segments x partitions)
-    * tasks. Initialized lazily from the restored store on restart.
-    */
-  private val bucketState = new AtomicReference[Option[DataFrame]](None)
-
-  /** Fold fresh partials into the compacted store, pruning buckets past
-    * the retention horizon. Fold types are stable — p_sum DECIMAL(28,6),
-    * p_sumsq DECIMAL(38,12) — so repeated folding is value-identical to
-    * one-shot aggregation (decimal addition at fixed scale is
-    * associative; no intermediate rounding).
-    */
-  private def foldBuckets(fresh: DataFrame, horizonUs: Long, bucketSec: Long): DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
-    val horizonBucketUs = horizonUs / (bucketSec * 1000000L) * (bucketSec * 1000000L)
-    bucketState.get().map(_.union(fresh)).getOrElse(fresh)
-      .filter(col("bucket_us") >= Param.long(horizonBucketUs))
-      .groupBy(col("topic"), col("path"), col("bucket_us"))
-      .agg(
-        sum(col("p_cnt")).as("p_cnt"),
-        sum(col("p_sum")).cast(DecimalType(28, 6)).as("p_sum"),
-        sum(col("p_sumsq")).cast(DecimalType(38, 12)).as("p_sumsq"),
-      )
-      .localCheckpoint(eager = true)
-  }
-
   /** Process counters mirroring lib/Sarkac.js:29-36. */
   val counters = new Counters(spark)
 
@@ -302,44 +266,16 @@ class AnomalyPipeline(
   }
   def currentSnapshot: Option[DataFrame] = snapshot.get()
 
-  /** Stats over the live store, anchored at `now`: exact trailing form
-    * by default; with `statsBucketSec` set, a merge of the cached
-    * per-segment bucket partials anchored at the bucket-floored `now` —
-    * per-trigger cost O(keys x buckets in retention), independent of
-    * store row count (the documented 100x scale form, oracle-gated as
-    * `q_window_stats_bucketed`).
-    */
-  private def computeStats(windows: Seq[Long], now: java.sql.Timestamp, horizonUs: Long): DataFrame = {
-    val stats = statsBucketSec match {
-      case Some(b) =>
-        val buckets = bucketState.get().getOrElse {
-          // restart (or first trigger): rebuild the compacted partials
-          // from the restored raw store in one pass. The prune uses the
-          // BUCKET-FLOORED horizon (same rule as foldBuckets) so the
-          // horizon-straddling bucket keeps its full sums — a plain
-          // horizonUs row filter would truncate that bucket and make
-          // post-restart stats diverge from a continuous run.
-          val horizonBucketUs = horizonUs / (b * 1000000L) * (b * 1000000L)
-          val init = WindowStats.bucketPartials(
-            currentStore.filter(unix_micros(col("produced")) >= Param.long(horizonBucketUs)), b)
-            .localCheckpoint(eager = true)
-          bucketState.set(Some(init))
-          init
-        }
-        val nowBUs = unixMicrosOf(now) / (b * 1000000L) * (b * 1000000L)
-        WindowStats.rawBucketedStats(buckets, windows, Param.timestampMicros(nowBUs))
-      case None =>
-        WindowStats.rawTrailingStats(
-          currentStore.filter(unix_micros(col("produced")) >= Param.long(horizonUs)),
-          windows, Param.timestamp(now))
-    }
-    // every window runs over every field: drop the keys no field
-    // configured, so a sample is judged (and reported) only over its own
-    // field's windows. (The per-message topic-frequency sample is a
-    // constant 1.0, so its stddev is 0 and the F7 gate already drops it.)
-    stats.join(broadcast(configuredKeys.toSeq.toDF("topic", "path", "window_sec")),
-      Seq("topic", "path", "window_sec"), "left_semi")
-  }
+  /** Exact trailing stats over the live store, anchored at `now`. */
+  private def computeStats(windows: Seq[Long], now: java.sql.Timestamp, horizonUs: Long): DataFrame =
+    WindowStats.rawTrailingStats(
+        currentStore.filter(unix_micros(col("produced")) >= Param.long(horizonUs)),
+        windows, Param.timestamp(now))
+      // every window runs over every field: drop the keys no field
+      // configured, so a sample is judged (and reported) only over its
+      // own field's windows
+      .join(broadcast(configuredKeys.toSeq.toDF("topic", "path", "window_sec")),
+        Seq("topic", "path", "window_sec"), "left_semi")
 
   /** Stored sample count (reference: Sarkac.getStats db.storedEvents,
     * lib/Sarkac.js:101-109 — a Mongo collection count). A driver-side
@@ -371,14 +307,13 @@ class AnomalyPipeline(
     * the sigma collection, lib/HttpServer.js:87-89): releases all
     * cached segments (which also deletes their persisted directories,
     * so a restart does not resurrect the data) and clears the stats
-    * snapshot and bucket partials (both derive from the store and are
-    * rebuilt on the next trigger). The cooldown cache is kept, matching
-    * the reference (truncate does not reset anomaly suppression).
+    * snapshot (it derives from the store and is rebuilt on the next
+    * trigger). The cooldown cache is kept, matching the reference
+    * (truncate does not reset anomaly suppression).
     */
   def truncate(): Unit = storeLock.synchronized {
     truncateEpoch.incrementAndGet()
     snapshot.set(None)
-    bucketState.set(None)
     // commit the empty store immediately (a crash before the deferred
     // release must not resurrect pre-truncate data on restart) ...
     stateDir.foreach(writeManifest(_, Vector.empty))
@@ -430,22 +365,11 @@ class AnomalyPipeline(
     val extracted = Extraction.fromJsonMessagesMulti(
         batch, col("topic"), col("value"), col("ts"),
         dsl.topics.map(tc => tc.topic -> tc.fields.map(_.path)),
-        includeFrequency = true,
         carry = Seq("original_message" -> col("value")))
       .persist()
 
     val maxRet = (dsl.topics.map(_.retentionSeconds) ++ Seq(0L)).max
     val horizonUs = unixMicrosOf(now) - maxRet * 1000000L
-    // raw-store segment expiry must use the SAME horizon rule as the
-    // bucket-partial prune (bucket-floored in bucketed mode): dropping a
-    // segment at the exact horizon while the compacted partials keep the
-    // straddling bucket's full sums would leave the raw store unable to
-    // rebuild those sums on restart — post-restart stats would diverge
-    // from the continuous run (pinned by RestartSpec's equality test).
-    val segHorizonUs = statsBucketSec match {
-      case Some(b) => horizonUs / (b * 1000000L) * (b * 1000000L)
-      case None => horizonUs
-    }
 
     // restart path: no in-memory snapshot but a restored store ->
     // recompute stats from pre-batch data (exactly the "stats as of the
@@ -480,14 +404,12 @@ class AnomalyPipeline(
     // payload is NOT stored — stats only need (topic, path, value,
     // produced)); drop whole segments that fell entirely outside the
     // retention horizon (their caches are released) — no rewrite of
-    // surviving data. In bucketed mode the batch is additionally
-    // reduced to bucket partials ONCE and folded into the compacted
-    // partial store.
+    // surviving data.
     val seg0 = mkSegment(extracted.select("topic", "path", "value", "produced").persist())
     // persist the new segment as its own immutable parquet dir —
     // O(batch) state I/O per trigger, never an O(store) rewrite
     val seg = stateDir match {
-      case Some(d) if seg0.maxTsUs >= segHorizonUs =>
+      case Some(d) if seg0.maxTsUs >= horizonUs =>
         val p = s"$d/store/${segDirName(seg0.maxTsUs)}"
         seg0.df.write.mode("error").parquet(p)
         seg0.copy(path = Some(p))
@@ -499,18 +421,14 @@ class AnomalyPipeline(
         // pre-truncate data — drop it instead of publishing it
         seg.release()
       } else {
-        val (keep, expired) = (segments.get() :+ seg).partition(_.maxTsUs >= segHorizonUs)
-        // LSM-style compaction (exact mode only): when retention
-        // outlives many triggers the segment vector (and with it the
-        // per-trigger union width and task count of every stats
-        // re-scan) grows linearly — merge into ONE checkpointed chunk
-        // past a threshold; amortized cost O(store / threshold) per
-        // trigger. In bucketed mode the raw store is COLD state (read
-        // only on restart; stats come from the compacted partials), so
-        // re-materializing it would be pure overhead — at cluster
-        // scale it is an appended Delta/parquet table either way.
+        val (keep, expired) = (segments.get() :+ seg).partition(_.maxTsUs >= horizonUs)
+        // LSM-style compaction: when retention outlives many triggers
+        // the segment vector (and with it the per-trigger union width
+        // and task count of every stats re-scan) grows linearly — merge
+        // into ONE checkpointed chunk past a threshold; amortized cost
+        // O(store / threshold) per trigger.
         val (merged, superseded) =
-          if (statsBucketSec.isEmpty && keep.size > AnomalyPipeline.CompactSegments) {
+          if (keep.size > AnomalyPipeline.CompactSegments) {
             val all = keep.map(_.df).reduce(_ union _)
               .filter(unix_micros(col("produced")) >= Param.long(horizonUs))
               .localCheckpoint(eager = true)
@@ -535,17 +453,7 @@ class AnomalyPipeline(
         segments.set(merged)
       }
     } // storeLock
-    // (on restart the restart branch above has already rebuilt the
-    // compacted partials from the restored store, so the fold below
-    // never loses pre-restart history)
-    if (truncateEpoch.get() == epoch0) statsBucketSec.foreach { b =>
-      val folded = foldBuckets(WindowStats.bucketPartials(seg.df, b), horizonUs, b)
-      storeLock.synchronized {
-        if (truncateEpoch.get() == epoch0) bucketState.set(Some(folded))
-      }
-    }
-    // 4. recompute the snapshot for the NEXT trigger (bucketed mode:
-    // merge of cached per-segment partials, no raw re-scan)
+    // 4. recompute the snapshot for the NEXT trigger
     val windows = dsl.topics.flatMap(_.fields.flatMap(_.windows)).distinct
     if (windows.nonEmpty && truncateEpoch.get() == epoch0) {
       val stats = computeStats(windows, now, horizonUs)

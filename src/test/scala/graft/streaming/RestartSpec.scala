@@ -63,61 +63,44 @@ class RestartSpec extends SparkSpec {
       s"expected the 210 s spike emitted after restart, got ${out3.toSeq}")
   }
 
-  test("restart works in bucketed stats mode (partials rebuilt from the restored store)") {
-    val dir = Files.createTempDirectory("graft_state_b").toFile.getAbsolutePath
+  test("exact stats match a continuous run across restarts") {
+    // 22 triggers of 30 s against a 5m retention, with the pipeline
+    // rebuilt from the stateDir before triggers 8, 15 and 22: after
+    // every trigger the restarted run's stats equal the continuous
+    // run's, bit for bit. The last trigger's horizon cuts a live
+    // segment (its max event time is inside retention, its older rows
+    // are not), so the restored store must keep that segment whole and
+    // the stats must still drop its expired rows.
     val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"))))
-    def mk() = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L,
-      stateDir = Some(dir), statsBucketSec = Some(60L))
-    val p1 = mk()
-    p1.processBatch(script(0, 60).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 60000))
-    val out1 = p1.processBatch(script(60, 120).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 120000))
-      .collect()
-    assert(out1.map(_.produced_us).toSeq == Seq((t0 + 90000) * 1000L))
-    val p2 = mk()
-    val out2 = p2.processBatch(script(120, 180).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 180000))
-      .collect()
-    assert(out2.isEmpty, s"cooldown lost across bucketed-mode restart: ${out2.toSeq}")
-    val out3 = p2.processBatch(script(180, 240).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 240000))
-      .collect()
-    assert(out3.map(_.produced_us).toSeq == Seq((t0 + 210000) * 1000L),
-      s"bucketed-mode detection broken after restart: ${out3.toSeq}")
-  }
-
-  test("bucketed stats are value-identical across a restart on a horizon-straddling bucket") {
-    // the sharp case: the retention horizon (now - 5m) cuts MID-bucket,
-    // and the segment holding the straddling bucket's older rows has
-    // already aged past the exact horizon. Segment expiry must use the
-    // bucket-floored horizon (same rule as the partial prune) or the
-    // restart rebuild cannot reproduce the straddling bucket's sums and
-    // post-restart stats silently diverge from the continuous run.
-    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"))))
-    def mk(dir: String) = new AnomalyPipeline(spark, dsl, cooldownMs = 0L,
-      stateDir = Some(dir), statsBucketSec = Some(60L))
+    def mk(dir: String) = new AnomalyPipeline(spark, dsl, cooldownMs = 0L, stateDir = Some(dir))
     def msgs(fromSec: Long, toSec: Long): Seq[(String, String, String, Timestamp)] =
       (fromSec until toSec by 5).map { s =>
         ("test-topic", s"k$s", s"""{"sub":{"one":${s % 17 + 0.5}}}""", new Timestamp(t0 + s * 1000))
       }
-    // 21 triggers of 30 s; the last (now = 630 s) has horizon 330 s —
-    // inside bucket [300, 360) — and segment [300, 330) is older than
-    // the exact horizon but inside the floored one
+    // the last trigger (now = 650 s, horizon 350 s) keeps the segment
+    // [330, 360) whole and aggregates its rows from 350 s on
     val script = (0 until 21).map { k =>
       (msgs(k * 30L, (k + 1) * 30L), new Timestamp(t0 + (k + 1) * 30000L))
+    } :+ ((msgs(630L, 648L), new Timestamp(t0 + 650000L)))
+    def run(restartBefore: Set[Int]): (Seq[Seq[(String, String, Long, Double, Double)]], AnomalyPipeline) = {
+      val dir = Files.createTempDirectory("graft_exact_eq").toFile.getAbsolutePath
+      var p = mk(dir)
+      val stats = script.zipWithIndex.map { case ((b, now), k) =>
+        if (restartBefore(k + 1)) p = mk(dir)
+        p.processBatch(b.toDF("topic", "key", "value", "ts"), now)
+        p.statsCache.sorted
+      }
+      (stats, p)
     }
-    def run(dir: String, restartAfterFullScript: Boolean): Seq[(String, String, Long, Double, Double)] = {
-      val p1 = mk(dir)
-      script.foreach { case (b, now) => p1.processBatch(b.toDF("topic", "key", "value", "ts"), now) }
-      // one more trigger at now = 650 s (horizon 350 s, floor 300 s),
-      // run either on the same instance or on a restarted one
-      val p2 = if (restartAfterFullScript) mk(dir) else p1
-      p2.processBatch(msgs(630L, 648L).toDF("topic", "key", "value", "ts"),
-        new Timestamp(t0 + 650000L))
-      p2.statsCache.sorted
+    val (continuous, _) = run(Set.empty)
+    val (restarted, last) = run(Set(8, 15, 22))
+    assert(continuous.forall(_.nonEmpty), "a trigger produced no stats")
+    val horizon = new Timestamp(t0 + 350000L)
+    assert(last.currentStore.filter(col("produced") < horizon).count() > 0L,
+      "no live segment straddles the last trigger's horizon")
+    continuous.zip(restarted).zipWithIndex.foreach { case ((c, r), k) =>
+      assert(r == c, s"trigger ${k + 1}: post-restart stats diverged:\n  continuous=$c\n  restarted =$r")
     }
-    val continuous = run(Files.createTempDirectory("graft_beq_a").toFile.getAbsolutePath, restartAfterFullScript = false)
-    val restarted = run(Files.createTempDirectory("graft_beq_b").toFile.getAbsolutePath, restartAfterFullScript = true)
-    assert(continuous.nonEmpty, "no stats produced")
-    assert(restarted == continuous,
-      s"post-restart bucketed stats diverged:\n  continuous=$continuous\n  restarted =$restarted")
   }
 
   test("discovery-driven DSL growth: new field tracked after pipeline rebuild, state preserved") {
@@ -170,10 +153,10 @@ class RestartSpec extends SparkSpec {
       p1.processBatch(script(tr * 5, tr * 5 + 5).toDF("topic", "key", "value", "ts"),
         new Timestamp(t0 + (tr + 1) * 5000))
     }
-    // 1 message/trigger x (sub.one + __topic_frequency) = 2 samples
-    assert(p1.currentStore.count() == 28L)
+    // 1 message/trigger x 1 configured field = 1 sample
+    assert(p1.currentStore.count() == 14L)
     val p2 = new AnomalyPipeline(spark, dsl, cooldownMs = 0L, stateDir = Some(dir))
-    assert(p2.currentStore.count() == 28L, "compacted store not restored intact")
+    assert(p2.currentStore.count() == 14L, "compacted store not restored intact")
   }
 
   test("cooldown snapshot stays config-bounded and restore drops stale keys") {

@@ -49,8 +49,8 @@ class StoreManifestSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_truncate").toFile.getAbsolutePath
     val p = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
     p.processBatch(batch(0, 60), new Timestamp(t0 + 60000))
-    // store rows per batch (each message yields its field row plus the
-    // __topic_frequency row) — batches below have the same message count
+    // store rows per batch (one row per present field value) — batches
+    // below have the same message count
     val rowsPerBatch = p.storedEventCount
     assert(rowsPerBatch > 0)
     val segDirs = new java.io.File(s"$dir/store").listFiles().count(_.getName.startsWith("seg_"))

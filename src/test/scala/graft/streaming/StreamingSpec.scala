@@ -61,8 +61,7 @@ class AnomalyPipelineSpec extends SparkSpec {
     // the stats pass runs every DSL window over every field; a spike on
     // sub.one (5m only) must not emit, or show in the stats cache, under
     // two's extra 10m window. Either DSL shape caches exactly its
-    // configured keys: the topic-frequency sample (constant 1.0, stddev
-    // 0) never passes the F7 gate.
+    // configured keys.
     def driven(fields: Map[String, Seq[String]]) = {
       val pipeline = new AnomalyPipeline(spark, Dsl.parse(Map("test-topic" -> fields)), cooldownMs = 0L)
       val out = Seq((0L, 60L), (60L, 120L), (120L, 180L)).flatMap { case (from, to) =>
@@ -149,7 +148,42 @@ class AnomalyPipelineSpec extends SparkSpec {
     // and the 100-topic pipeline actually runs
     val p = new AnomalyPipeline(spark, many, cooldownMs = 0L)
     p.processBatch(batch, new Timestamp(t0 + 1000))
-    assert(p.currentStore.count() == 2L) // v sample + __topic_frequency
+    assert(p.currentStore.count() == 1L) // the v sample
+  }
+
+  test("the store holds only configured field samples") {
+    // every third message lacks `two`, and one message's topic is not
+    // configured: the store keeps one row per present configured value
+    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"), "two" -> Seq("5m"))))
+    val p = new AnomalyPipeline(spark, dsl, cooldownMs = 0L)
+    val msgs = (0L until 60L by 5).map { s =>
+      val v = if (s % 15 == 0) """{"sub":{"one":15.5}}""" else """{"sub":{"one":15.5},"two":16}"""
+      ("test-topic", s"k$s", v, new Timestamp(t0 + s * 1000))
+    } :+ (("other-topic", "kx", """{"sub":{"one":1},"two":2}""", new Timestamp(t0)))
+    p.processBatch(msgs.toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 60000))
+    val paths = p.currentStore.select("topic", "path").distinct().as[(String, String)].collect().toSet
+    assert(paths == Set(("test-topic", "sub.one"), ("test-topic", "two")), paths)
+    assert(p.storedEventCount == 12L + 8L, s"stored ${p.storedEventCount}, present values 20")
+  }
+
+  test("a sample whose square passes DECIMAL(18,6) is judged and emitted") {
+    // the exact stats sum squares as decimals: a window holding 1e6 has
+    // a sum of squares past 1e12, beyond the DECIMAL(18,6) trim ahead of
+    // the double cast. The trigger that folds the spike in must finish,
+    // and its stats stay the exact ones.
+    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"))))
+    val p = new AnomalyPipeline(spark, dsl, cooldownMs = 0L)
+    def msgs(fromSec: Long, toSec: Long) = (fromSec until toSec by 5).map { s =>
+      val one = if (s == 30) 150.5 else if (s == 90) 1e6 else 15.5
+      ("test-topic", s"k$s", s"""{"sub":{"one":$one}}""", new Timestamp(t0 + s * 1000))
+    }.toDF("topic", "key", "value", "ts")
+    p.processBatch(msgs(0, 60), new Timestamp(t0 + 60000))
+    val out = p.processBatch(msgs(60, 120), new Timestamp(t0 + 120000)).collect()
+    assert(out.map(e => (e.path, e.value)).toSeq == Seq(("sub.one", 1e6)), out.toSeq)
+    // 22 samples of 15.5, one of 150.5 and one of 1e6
+    val mean = (22 * 15.5 + 150.5 + 1e6) / 24
+    val stddev = math.sqrt(math.max((22 * 15.5 * 15.5 + 150.5 * 150.5 + 1e12) / 24 - mean * mean, 0.0))
+    assert(p.statsCache == Seq(("test-topic", "sub.one", 300L, mean, stddev)), p.statsCache)
   }
 
   test("empty batches and empty DSLs are harmless (no crash, no emission)") {
@@ -167,26 +201,6 @@ class AnomalyPipelineSpec extends SparkSpec {
     assert(pEmpty.processBatch(
       generatorScript(0, 60).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 60000)).isEmpty)
     assert(pEmpty.storedEventCount == 0L)
-  }
-
-  test("bucketed stats mode emits the same anomalies as exact mode (scale form)") {
-    // minute-aligned triggers + minute-multiple windows + samples in
-    // bucket interiors -> identical sample sets per window; decimal
-    // partial sums merge associatively -> identical stats -> identical
-    // emissions. This pins the incremental per-segment-partials path to
-    // the exact path end to end.
-    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"), "two" -> Seq("5m"))))
-    def runAll(p: AnomalyPipeline) =
-      (0 until 3).flatMap { tr =>
-        p.processBatch(
-          generatorScript(tr * 60L, (tr + 1) * 60L).toDF("topic", "key", "value", "ts"),
-          new Timestamp(t0 + (tr + 1) * 60000L)
-        ).collect().map(e => (e.topic, e.path, e.window_sec, e.produced_us, e.value))
-      }.toSet
-    val exact = runAll(new AnomalyPipeline(spark, dsl, cooldownMs = 0L))
-    val bucketed = runAll(new AnomalyPipeline(spark, dsl, cooldownMs = 0L, statsBucketSec = Some(60L)))
-    assert(exact.nonEmpty, "equivalence is vacuous: no anomalies emitted")
-    assert(bucketed == exact, "bucketed-mode emissions diverged from exact mode")
   }
 
   test("beforeMessageProcessing hook: alter, drop, and error per message (H1)") {
@@ -233,26 +247,23 @@ class AnomalyPipelineSpec extends SparkSpec {
     assert(emitted(1) > 0L) // spikes alarm on second trigger
   }
 
-  test("steady-state triggers compile no generated code (exact and bucketed stats)") {
+  test("steady-state triggers compile no generated code") {
     // per-trigger values (now, horizons) enter plans as bound params,
     // so from trigger 2 on every stage's source repeats and hits the
     // codegen cache; a value inlined as a literal recompiles per trigger
     val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"), "two" -> Seq("5m"))))
-    for (bucketSec <- Seq(None, Some(60L))) {
-      val dir = java.nio.file.Files.createTempDirectory("graft_codegen").toFile.getAbsolutePath
-      val p = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L,
-        stateDir = Some(dir), statsBucketSec = bucketSec)
-      val compiles = (0 until 6).map { tr =>
-        val emitted = p.processBatch(
-          generatorScript(tr * 60L, (tr + 1) * 60L).toDF("topic", "key", "value", "ts"),
-          new Timestamp(t0 + (tr + 1) * 60000L))
-        p.toAnomalyRecords(emitted).collect()
-        org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-      }
-      assert(p.storedEventCount > 0L && p.cooldownSnapshot.nonEmpty, "the triggers did no work")
-      assert(compiles.drop(2).distinct.size == 1,
-        s"statsBucketSec=$bucketSec: Janino compile count per trigger end moved after trigger 2: $compiles")
+    val dir = java.nio.file.Files.createTempDirectory("graft_codegen").toFile.getAbsolutePath
+    val p = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
+    val compiles = (0 until 6).map { tr =>
+      val emitted = p.processBatch(
+        generatorScript(tr * 60L, (tr + 1) * 60L).toDF("topic", "key", "value", "ts"),
+        new Timestamp(t0 + (tr + 1) * 60000L))
+      p.toAnomalyRecords(emitted).collect()
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     }
+    assert(p.storedEventCount > 0L && p.cooldownSnapshot.nonEmpty, "the triggers did no work")
+    assert(compiles.drop(2).distinct.size == 1,
+      s"Janino compile count per trigger end moved after trigger 2: $compiles")
   }
 }
 
