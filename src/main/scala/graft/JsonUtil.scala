@@ -1,9 +1,10 @@
 package graft
 
-/** Minimal JSON string escaping shared by the artifact writers (`Verify`
-  * dumps oracle_sql.json, `Bench` writes the one-line result contract).
+/** Minimal JSON string escaping shared by every JSON writer (`Verify`
+  * dumps oracle_sql.json, `Bench` writes the one-line result contract,
+  * `StatusServer` renders topic and path names from untrusted payloads).
   * One definition so a hardening (new control char, surrogate handling)
-  * can never land in one writer and miss the other.
+  * can never land in one writer and miss another.
   */
 object JsonUtil {
 

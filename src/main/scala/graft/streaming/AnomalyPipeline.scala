@@ -26,7 +26,16 @@ import graft.operators.Extraction.FieldCol
   *    (lib/db/model/SigmaModel.js:54): the injected `now` per batch.
   *  - **Retention** = max window (lib/dsl/DSLHandler.js:91): the store
   *    is pruned each trigger.
-  *  - **Cooldown** via keyed state ([[CooldownState]]).
+  *  - **Cooldown** (lib/dsl/DSLHandler.js:13,200-210): a driver-held
+  *    last-emit map per (topic, path, window) seeds, by broadcast, the
+  *    distributed per-key greedy ([[CooldownState.greedyEmit]]); the map
+  *    is committed with the store in the trigger's state record.
+  *
+  * A trigger computes, commits once, then publishes. With `stateDir`
+  * the store is immutable segment dirs under `store/`, and
+  * `store/_MANIFEST` is the one state record: the live segments and the
+  * cooldown map, written by tmp + rename once per trigger. A restart
+  * reads that record and the dirs it lists, nothing else.
   *
   * Scale notes: the event store kept per (topic, path) is the engine's
   * shuffle spine; at cluster scale it would be a partitioned Delta/
@@ -58,31 +67,12 @@ class AnomalyPipeline(
     def release(): Unit = { df.unpersist(); path.foreach(AnomalyPipeline.deletePath(spark, _)) }
   }
 
-  /** Serializes store mutations (trigger thread) against the HTTP
-    * surface (truncate, counts) — segment release deletes caches and
-    * parquet dirs, so a racing reader must never observe a released
-    * segment.
+  /** Serializes triggers against [[truncate]]: a truncate waits for at
+    * most one in-flight trigger, so it never releases a segment a
+    * running job still scans, and a trigger never publishes over a
+    * truncate. Readers take no lock; they read the published references.
     */
-  private val storeLock = new Object
-
-  /** Bumped by every truncate. A trigger captures the epoch at its
-    * start and re-checks it before publishing results (segments,
-    * snapshot) — a truncate that landed mid-trigger must not be
-    * overwritten by that trigger's pre-truncate state.
-    */
-  private[streaming] val truncateEpoch = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** True while a micro-batch is between its boundary and its final
-    * publish; [[truncate]] consults it to defer segment release.
-    */
-  private[streaming] val triggerActive = new java.util.concurrent.atomic.AtomicBoolean(false)
-
-  /** Set when a truncate arrived mid-trigger: the segment release is
-    * deferred to the next trigger boundary (the in-flight jobs still
-    * read those caches/dirs; deleting them under the job would fail
-    * the batch with FileNotFoundException).
-    */
-  private[streaming] val pendingTruncate = new java.util.concurrent.atomic.AtomicBoolean(false)
+  private[streaming] val triggerLock = new Object
 
   /** Build a segment from a (persisted or checkpointed) chunk, reading
     * its max event time and row count (which materializes the cache;
@@ -101,43 +91,44 @@ class AnomalyPipeline(
 
   private def manifestPath(d: String) = new org.apache.hadoop.fs.Path(s"$d/store/_MANIFEST")
 
-  /** Commit the live segment set: `store/_MANIFEST` lists the dir names
-    * that are part of the store. Written (tmp + rename) AFTER new dirs
-    * exist and BEFORE superseded ones are deleted — the commit point
-    * that makes compaction crash-safe: a crash between the merged-dir
-    * write and the input deletion does not double-restore those rows,
-    * because restore trusts only manifest-listed dirs and removes the
-    * rest as orphans. A failed commit throws: continuing would delete
-    * the dirs the old manifest still lists while the new segment stays
-    * unlisted, so a restart would restore fewer rows than were stored.
-    * The rename replaces the old manifest in one step where the file
-    * system allows it (the local one does); elsewhere the old one is
-    * deleted first.
+  /** Commit the state record: the live segments and the cooldown map.
+    * Written (tmp + rename) AFTER new dirs exist and BEFORE superseded
+    * ones are deleted — the commit point that makes compaction
+    * crash-safe: a crash between the merged-dir write and the input
+    * deletion does not double-restore those rows, because restore
+    * trusts only listed dirs and removes the rest as orphans. A failed
+    * commit throws: continuing would delete the dirs the old record
+    * still lists while the new segment stays unlisted, so a restart
+    * would restore fewer rows than were stored. The rename replaces the
+    * old record in one step where the file system allows it (the local
+    * one does); elsewhere the old one is deleted first.
     */
-  private def writeManifest(d: String, live: Vector[Segment]): Unit = {
+  private def writeState(d: String, live: Vector[Segment], cooldown: Map[(String, String, Long), Long]): Unit = {
     val mf = manifestPath(d)
     val fs = hadoopFs(mf)
     val tmp = new org.apache.hadoop.fs.Path(s"$d/store/_MANIFEST.tmp")
+    val rec = AnomalyPipeline.StateRecord(
+      live.flatMap(s => s.path.map(p => (new org.apache.hadoop.fs.Path(p).getName, s.maxTsUs, s.rows))),
+      cooldown)
     val out = fs.create(tmp, true)
-    try out.write(live.flatMap(_.path)
-      .map(p => new org.apache.hadoop.fs.Path(p).getName)
-      .mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    try out.write(AnomalyPipeline.StateRecord.encode(rec).getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     if (!fs.rename(tmp, mf) && !(fs.delete(mf, false) && fs.rename(tmp, mf)))
-      throw new java.io.IOException(s"segment manifest commit failed: cannot rename $tmp to $mf")
+      throw new java.io.IOException(s"state record commit failed: cannot rename $tmp to $mf")
   }
 
-  /** Names listed in the store manifest; None when no manifest exists.
-    * A manifest that is present but unreadable throws, naming it.
+  /** The committed state record; None when none exists (first start).
+    * A record that is present but unreadable, or that lacks the format
+    * header, throws, naming it.
     */
-  private def readManifest(d: String): Option[Set[String]] = {
+  private def readState(d: String): Option[AnomalyPipeline.StateRecord] = {
     val mf = manifestPath(d)
     val fs = hadoopFs(mf)
     if (!fs.exists(mf)) None
     else Some(AnomalyPipeline.readingState(mf.toString) {
       val in = fs.open(mf)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      txt.split('\n').map(_.trim).filter(_.nonEmpty).toSet
+      AnomalyPipeline.StateRecord.decode(
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close())
     })
   }
 
@@ -151,52 +142,90 @@ class AnomalyPipeline(
     * cluster scale the chunks are partitions of a Delta/parquet table.
     * With `stateDir` set the segments are additionally persisted for
     * restart.
-    *
-    * Restored store: absent (first start) is empty; the manifest is
-    * the only record of what was committed, so with none, nothing was.
-    * A committed segment that is missing or unreadable throws, naming
-    * its dir — dropping it would silently shrink every trailing window.
     */
-  private val segments = new AtomicReference[Vector[Segment]]({
-    stateDir.flatMap { d =>
-      val storePath = new org.apache.hadoop.fs.Path(s"$d/store")
-      val fsys = hadoopFs(storePath)
-      if (!fsys.exists(storePath)) None
-      else {
-        // one subdirectory per persisted segment, named
-        // seg_<maxTsUs>_<unique>; directories are immutable once
-        // written, so reads never race a rewrite and no checkpoint
-        // copy is needed. The manifest is the commit record: dirs it
-        // does not list are leftovers of a crash mid-commit (e.g.
-        // compaction wrote its merged dir but died before deleting
-        // the inputs) and must NOT be restored — doing so would
-        // double-count their rows.
-        val names = readManifest(d).getOrElse(Set.empty)
-        val dirs = fsys.listStatus(storePath).filter(_.isDirectory).toVector
-          .filter(_.getPath.getName.startsWith("seg_"))
-        val missing = names -- dirs.map(_.getPath.getName)
-        if (missing.nonEmpty)
-          throw new IllegalStateException(
-            s"segment dirs listed in ${manifestPath(d)} are missing: " +
-              missing.toSeq.sorted.map(n => s"$storePath/$n").mkString(", "))
-        val (live, orphans) = dirs.partition(st => names(st.getPath.getName))
-        orphans.foreach { st =>
-          log.warn(s"removing uncommitted segment dir ${st.getPath} (crash leftover)")
-          try fsys.delete(st.getPath, true) catch { case _: Throwable => () }
-        }
-        val segs = live.map { st =>
-          val p = st.getPath.toString
-          AnomalyPipeline.readingState(p) {
-            val ts = st.getPath.getName.split('_')(1).toLong
-            val df = spark.read.parquet(p).persist()
-            try Segment(ts, df, df.count(), Some(p))
-            catch { case e: Throwable => df.unpersist(); throw e }
-          }
-        }
-        if (segs.isEmpty) None else Some(segs.sortBy(_.maxTsUs))
+  private val segments = new AtomicReference(Vector.empty[Segment])
+
+  /** Stats snapshot from the previous trigger (the DSLHandler cache). */
+  private val snapshot = new AtomicReference[Option[DataFrame]](None)
+
+  /** Driver-held cooldown map: (topic, path, window) -> last emitted
+    * event-time micros — the Spark analog of the reference's in-memory
+    * TTL cache (lib/dsl/DSLHandler.js:13). The per-batch greedy itself
+    * runs DISTRIBUTED (per-key flatMapGroups seeded by a broadcast of
+    * this map); the map is refreshed from a per-key max aggregate — one
+    * row per configured (topic, path, window), never the anomaly rows
+    * themselves — and committed in the state record.
+    */
+  private val cooldownCache = new AtomicReference(Map.empty[(String, String, Long), Long])
+
+  /** The configured stat keys (topic, path, window) — the hard bound on
+    * everything the driver holds per key: the cooldown cache, its lines
+    * in the state record, and the stats snapshot all have AT MOST this
+    * many rows. A DSL of T topics x F fields x W windows bounds driver
+    * state at T*F*W entries regardless of message volume; a bound
+    * violation throws (in [[processBatch]]) instead of growing until the
+    * driver OOMs.
+    */
+  lazy val configuredKeys: Set[(String, String, Long)] =
+    dsl.topics.iterator.flatMap(t =>
+      t.fields.iterator.flatMap(f => f.windows.iterator.map(w => (t.topic, f.path, w)))).toSet
+
+  private val windows: Seq[Long] = dsl.topics.flatMap(_.fields.flatMap(_.windows)).distinct
+
+  stateDir.foreach(restore)
+
+  /** Restore the store and the cooldown map from the state record.
+    * Absent (first start) is empty; the record is the only account of
+    * what was committed, so with none, nothing was. A listed segment
+    * that is missing, unreadable, or holds a different row count than
+    * the record says throws, naming its dir — restoring it short would
+    * silently shrink every trailing window. Segment dirs are immutable
+    * once written, so reads never race a rewrite. Dirs the record does
+    * not list are leftovers of a crash mid-commit (e.g. compaction wrote
+    * its merged dir but died before the commit) and are removed, not
+    * restored — doing so would double-count their rows. Cooldown keys
+    * the current DSL does not configure are dropped: a record written
+    * under an older, wider DSL must not carry stale keys past the
+    * configured-cardinality bound.
+    */
+  private def restore(d: String): Unit = {
+    val record = readState(d)
+    val listed = record.toSeq.flatMap(_.segments).map { case (n, ts, rows) => n -> (ts, rows) }.toMap
+    val storePath = new org.apache.hadoop.fs.Path(s"$d/store")
+    val fsys = hadoopFs(storePath)
+    val dirs =
+      if (!fsys.exists(storePath)) Vector.empty
+      else fsys.listStatus(storePath).toVector
+        .filter(st => st.isDirectory && st.getPath.getName.startsWith("seg_"))
+    val missing = listed.keySet -- dirs.map(_.getPath.getName)
+    if (missing.nonEmpty)
+      throw new IllegalStateException(
+        s"segment dirs listed in ${manifestPath(d)} are missing: " +
+          missing.toSeq.sorted.map(n => s"$storePath/$n").mkString(", "))
+    val (live, orphans) = dirs.partition(st => listed.contains(st.getPath.getName))
+    orphans.foreach { st =>
+      log.warn(s"removing uncommitted segment dir ${st.getPath} (crash leftover)")
+      try fsys.delete(st.getPath, true) catch { case _: Throwable => () }
+    }
+    val segs = live.map { st =>
+      val p = st.getPath.toString
+      val (ts, rows) = listed(st.getPath.getName)
+      val seg = AnomalyPipeline.readingState(p) {
+        val df = spark.read.parquet(p).persist()
+        try Segment(ts, df, df.count(), Some(p))
+        catch { case e: Throwable => df.unpersist(); throw e }
       }
-    }.getOrElse(Vector.empty)
-  })
+      if (seg.rows != rows) {
+        seg.df.unpersist()
+        throw new IllegalStateException(
+          s"segment dir $p holds ${seg.rows} rows, but ${manifestPath(d)} committed $rows")
+      }
+      seg
+    }
+    segments.set(segs.sortBy(_.maxTsUs))
+    cooldownCache.set(record.fold(Map.empty[(String, String, Long), Long])(
+      _.cooldown.filter { case (k, _) => configuredKeys(k) }))
+  }
 
   /** Collision-proof persisted-segment directory name: the max
     * event-time alone can repeat across restarts (coarse timestamps) and
@@ -206,70 +235,24 @@ class AnomalyPipeline(
   private def segDirName(maxTsUs: Long): String =
     s"seg_${maxTsUs}_${java.util.UUID.randomUUID().toString.take(8)}"
 
-  private def emptyStore: DataFrame =
-    spark.emptyDataset[(String, String, Double, java.sql.Timestamp)]
-      .toDF("topic", "path", "value", "produced")
-
   private def unixMicrosOf(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
-
-  /** Stats snapshot from the previous trigger (the DSLHandler cache). */
-  private val snapshot = new AtomicReference[Option[DataFrame]](None)
 
   /** Process counters mirroring lib/Sarkac.js:29-36. */
   val counters = new Counters(spark)
 
-  /** Driver-held cooldown restart snapshot: (topic, path, window) ->
-    * last emitted event-time micros — the Spark analog of the
-    * reference's in-memory TTL cache (lib/dsl/DSLHandler.js:13). The
-    * per-batch greedy itself runs DISTRIBUTED (per-key flatMapGroups
-    * seeded by a broadcast of this map); the map is refreshed from a
-    * per-key max aggregate — one row per configured (topic, path,
-    * window), never the anomaly rows themselves — and persisted for
-    * restart.
-    */
-  private val cooldownCache =
-    new AtomicReference[Map[(String, String, Long), Long]]({
-      stateDir.map(d => new org.apache.hadoop.fs.Path(s"$d/cooldown"))
-        .filter(p => hadoopFs(p).exists(p)) // absent: first start
-        .map { p =>
-          // present but unreadable throws: an empty map would re-arm
-          // every cooldown and emit duplicate anomaly records. Restore
-          // only keys the CURRENT DSL configures: a snapshot written
-          // under an older, wider DSL must not carry stale keys past
-          // the configured-cardinality bound below
-          AnomalyPipeline.readingState(p.toString) {
-            spark.read.parquet(p.toString)
-              .collect()
-              .map(r => ((r.getString(0), r.getString(1), r.getLong(2)), r.getLong(3)))
-              .filter { case (k, _) => configuredKeys(k) }
-              .toMap
-          }
-        }.getOrElse(Map.empty)
-    })
+  private def storeOf(segs: Vector[Segment]): DataFrame =
+    if (segs.isEmpty)
+      spark.emptyDataset[(String, String, Double, java.sql.Timestamp)].toDF("topic", "path", "value", "produced")
+    else segs.map(_.df).reduce(_ union _)
 
-  /** The configured stat keys (topic, path, window) — the hard bound on
-    * everything the driver holds per key: the cooldown cache, its
-    * restart parquet, and the stats snapshot all have AT MOST this many
-    * rows. A DSL of T topics x F fields x W windows bounds driver state
-    * at T*F*W entries regardless of message volume; a bound violation
-    * throws (in [[processBatch]]) instead of growing until the driver
-    * OOMs.
-    */
-  lazy val configuredKeys: Set[(String, String, Long)] =
-    dsl.topics.iterator.flatMap(t =>
-      t.fields.iterator.flatMap(f => f.windows.iterator.map(w => (t.topic, f.path, w)))).toSet
-
-  def currentStore: DataFrame = {
-    val segs = segments.get()
-    if (segs.isEmpty) emptyStore else segs.map(_.df).reduce(_ union _)
-  }
+  def currentStore: DataFrame = storeOf(segments.get())
   def currentSnapshot: Option[DataFrame] = snapshot.get()
 
-  /** Exact trailing stats over the live store, anchored at `now`. */
-  private def computeStats(windows: Seq[Long], now: java.sql.Timestamp, horizonUs: Long): DataFrame =
+  /** Exact trailing stats over the store `live`, anchored at `now`. */
+  private def computeStats(live: Vector[Segment], now: java.sql.Timestamp, horizonUs: Long): DataFrame =
     WindowStats.rawTrailingStats(
-        currentStore.filter(unix_micros(col("produced")) >= Param.long(horizonUs)),
+        storeOf(live).filter(unix_micros(col("produced")) >= Param.long(horizonUs)),
         windows, Param.timestamp(now))
       // every window runs over every field: drop the keys no field
       // configured, so a sample is judged (and reported) only over its
@@ -281,9 +264,7 @@ class AnomalyPipeline(
     * lib/Sarkac.js:101-109 — a Mongo collection count). A driver-side
     * sum of cached per-segment counts — no Spark job per HTTP scrape.
     */
-  def storedEventCount: Long = storeLock.synchronized {
-    segments.get().map(_.rows).sum
-  }
+  def storedEventCount: Long = segments.get().map(_.rows).sum
 
   /** Stats-cache read-back, one row per (topic, path, window) with the
     * reference's {median, stdDev} value shape (the DSLHandler cache,
@@ -304,60 +285,44 @@ class AnomalyPipeline(
   def cooldownSnapshot: Map[(String, String, Long), Long] = cooldownCache.get()
 
   /** Truncate the event store (reference: DELETE /db/truncate clears
-    * the sigma collection, lib/HttpServer.js:87-89): releases all
-    * cached segments (which also deletes their persisted directories,
-    * so a restart does not resurrect the data) and clears the stats
-    * snapshot (it derives from the store and is rebuilt on the next
-    * trigger). The cooldown cache is kept, matching the reference
-    * (truncate does not reset anomaly suppression).
+    * the sigma collection, lib/HttpServer.js:87-89). Waits for an
+    * in-flight trigger, then clears the stats snapshot (it derives from
+    * the store and is rebuilt on the next trigger), commits an empty
+    * store, and releases every segment (which also deletes its persisted
+    * directory). The cooldown map is kept and committed with the empty
+    * store, matching the reference (truncate does not reset anomaly
+    * suppression).
     */
-  def truncate(): Unit = storeLock.synchronized {
-    truncateEpoch.incrementAndGet()
+  def truncate(): Unit = triggerLock.synchronized {
     snapshot.set(None)
-    // commit the empty store immediately (a crash before the deferred
-    // release must not resurrect pre-truncate data on restart) ...
-    stateDir.foreach(writeManifest(_, Vector.empty))
-    if (triggerActive.get()) {
-      // ... but defer the cache/dir release itself: the in-flight
-      // trigger's jobs still scan these segments, and yanking them
-      // mid-job fails the batch. The epoch bump above stops that batch
-      // from re-publishing its pre-truncate results.
-      pendingTruncate.set(true)
-    } else {
-      segments.get().foreach(_.release())
-      segments.set(Vector.empty)
-    }
+    stateDir.foreach(writeState(_, Vector.empty, cooldownCache.get()))
+    segments.getAndSet(Vector.empty).foreach(_.release())
   }
 
   /** One micro-batch step: returns the emitted anomalies.
     *
     * `batch` must be normalized messages: (topic, value: json string,
     * ts timestamp). `now` anchors the trailing windows (batch time).
+    *
+    * The trigger computes everything first (steps 1-5), commits the
+    * state record once (6), then publishes (7) and releases what it
+    * superseded (8). A trigger that throws before its commit publishes
+    * nothing and releases the segments it wrote, cache and dir alike.
     */
-  def processBatch(batch: DataFrame, now: java.sql.Timestamp): Dataset[CooldownState.AnomalyEvent] = {
-    // trigger boundary: apply a truncate that arrived mid-previous-
-    // trigger (its segment release was deferred — no job is in flight
-    // now), then mark this trigger active and capture the truncate
-    // epoch; store/snapshot publishes below re-check it so a truncate
-    // landing mid-trigger is never overwritten by pre-truncate state.
-    val epoch0 = storeLock.synchronized {
-      if (pendingTruncate.getAndSet(false)) {
-        segments.get().foreach(_.release())
-        segments.set(Vector.empty)
-      }
-      triggerActive.set(true)
-      truncateEpoch.get()
+  def processBatch(batch: DataFrame, now: java.sql.Timestamp): Dataset[CooldownState.AnomalyEvent] =
+    triggerLock.synchronized {
+      // the segments this trigger makes, released if it fails before publishing them
+      val made = scala.collection.mutable.ListBuffer.empty[Segment]
+      try trigger(batch, now, made)
+      catch { case e: Throwable => made.foreach(_.release()); throw e }
     }
-    try processBatchInner(batch, now, epoch0)
-    finally triggerActive.set(false)
-  }
 
-  private def processBatchInner(
-      batch: DataFrame, now: java.sql.Timestamp, epoch0: Long,
+  private def trigger(
+      batch: DataFrame, now: java.sql.Timestamp, made: scala.collection.mutable.ListBuffer[Segment],
   ): Dataset[CooldownState.AnomalyEvent] = {
     counters.analysedMessages.add(batch.count())
 
-    // 1. single-pass long-format projection: one plan regardless of
+    // single-pass long-format projection: one plan regardless of
     // topic count (broadcast (topic, path) dim -> get_json_object on the
     // joined path), carrying the raw payload for originalMessage.
     // Persisted for the batch: it feeds the detection join AND the store
@@ -370,25 +335,18 @@ class AnomalyPipeline(
 
     val maxRet = (dsl.topics.map(_.retentionSeconds) ++ Seq(0L)).max
     val horizonUs = unixMicrosOf(now) - maxRet * 1000000L
+    val live0 = segments.get()
 
-    // restart path: no in-memory snapshot but a restored store ->
-    // recompute stats from pre-batch data (exactly the "stats as of the
-    // previous trigger" staleness semantics)
-    if (snapshot.get().isEmpty && segments.get().nonEmpty) {
-      val windows0 = dsl.topics.flatMap(_.fields.flatMap(_.windows)).distinct
-      // eagerly checkpointed (mirrors step 4): the lazy plan would scan
-      // the restored segments only at step 5's count, AFTER step 3 may
-      // have released them (horizon expiry or compaction) — a recompute
-      // would then read deleted parquet dirs and kill the first
-      // post-restart micro-batch
-      if (windows0.nonEmpty)
-        snapshot.set(Some(computeStats(windows0, now, horizonUs).localCheckpoint(eager = true)))
-    }
-
-    // 2. judge against the PREVIOUS snapshot (staleness semantics); the
+    // 1. judge against the PREVIOUS snapshot (staleness semantics); the
     // raw message rides through the detect join into the emitted record
-    // (reference embeds it per anomaly, lib/dsl/DSLHandler.js:217-227)
-    val anomalies: Dataset[CooldownState.AnomalyEvent] = snapshot.get() match {
+    // (reference embeds it per anomaly, lib/dsl/DSLHandler.js:217-227).
+    // Restart path: no in-memory snapshot but a restored store ->
+    // recompute stats from pre-batch data (exactly the "stats as of the
+    // previous trigger" staleness semantics), checkpointed like step 4's
+    val previous = snapshot.get().orElse(
+      if (live0.isEmpty || windows.isEmpty) None
+      else Some(computeStats(live0, now, horizonUs).localCheckpoint(eager = true)))
+    val anomalies: Dataset[CooldownState.AnomalyEvent] = previous match {
       case None => spark.emptyDataset[CooldownState.AnomalyEvent]
       case Some(stats) =>
         Anomaly.detect(extracted, stats, Param.timestamp(now))
@@ -400,68 +358,43 @@ class AnomalyPipeline(
           .as[CooldownState.AnomalyEvent]
     }
 
-    // 3. fold the batch in as a new cached segment (narrow: the raw
+    // track a segment this trigger made; with `stateDir` and `withDir`,
+    // write it as its own immutable parquet dir — O(batch) state I/O per
+    // trigger, never an O(store) rewrite
+    def track(s: Segment, withDir: Boolean): Segment = {
+      val m = (if (withDir) stateDir else None)
+        .fold(s)(d => s.copy(path = Some(s"$d/store/${segDirName(s.maxTsUs)}")))
+      made += m
+      m.path.foreach(m.df.write.mode("error").parquet(_))
+      m
+    }
+
+    // 2. fold the batch in as a new cached segment (narrow: the raw
     // payload is NOT stored — stats only need (topic, path, value,
-    // produced)); drop whole segments that fell entirely outside the
-    // retention horizon (their caches are released) — no rewrite of
-    // surviving data.
+    // produced)); one already past the retention horizon gets no dir
     val seg0 = mkSegment(extracted.select("topic", "path", "value", "produced").persist())
-    // persist the new segment as its own immutable parquet dir —
-    // O(batch) state I/O per trigger, never an O(store) rewrite
-    val seg = stateDir match {
-      case Some(d) if seg0.maxTsUs >= horizonUs =>
-        val p = s"$d/store/${segDirName(seg0.maxTsUs)}"
-        seg0.df.write.mode("error").parquet(p)
-        seg0.copy(path = Some(p))
-      case _ => seg0
-    }
-    storeLock.synchronized {
-      if (truncateEpoch.get() != epoch0) {
-        // a truncate landed mid-trigger: this batch's segment is
-        // pre-truncate data — drop it instead of publishing it
-        seg.release()
-      } else {
-        val (keep, expired) = (segments.get() :+ seg).partition(_.maxTsUs >= horizonUs)
-        // LSM-style compaction: when retention outlives many triggers
-        // the segment vector (and with it the per-trigger union width
-        // and task count of every stats re-scan) grows linearly — merge
-        // into ONE checkpointed chunk past a threshold; amortized cost
-        // O(store / threshold) per trigger.
-        val (merged, superseded) =
-          if (keep.size > AnomalyPipeline.CompactSegments) {
-            val all = keep.map(_.df).reduce(_ union _)
-              .filter(unix_micros(col("produced")) >= Param.long(horizonUs))
-              .localCheckpoint(eager = true)
-            val maxTs = keep.map(_.maxTsUs).max
-            val nRows = all.count()
-            val one = stateDir match {
-              case Some(d) =>
-                val p = s"$d/store/${segDirName(maxTs)}"
-                all.write.mode("error").parquet(p)
-                Segment(maxTs, all, nRows, Some(p))
-              case None => Segment(maxTs, all, nRows)
-            }
-            (Vector(one), expired ++ keep)
-          } else (keep, expired)
-        // commit point: the manifest names the new live set BEFORE any
-        // superseded dir is deleted, so a crash anywhere around
-        // compaction restores exactly the committed set (dirs written
-        // but not listed are removed as orphans on restart — no
-        // double-restored rows)
-        stateDir.foreach(writeManifest(_, merged))
-        superseded.foreach(_.release())
-        segments.set(merged)
-      }
-    } // storeLock
-    // 4. recompute the snapshot for the NEXT trigger
-    val windows = dsl.topics.flatMap(_.fields.flatMap(_.windows)).distinct
-    if (windows.nonEmpty && truncateEpoch.get() == epoch0) {
-      val stats = computeStats(windows, now, horizonUs)
-        .localCheckpoint(eager = true)
-      storeLock.synchronized {
-        if (truncateEpoch.get() == epoch0) snapshot.set(Some(stats))
-      }
-    }
+    val seg = track(seg0, withDir = seg0.maxTsUs >= horizonUs)
+
+    // 3. drop whole segments that fell entirely outside the retention
+    // horizon — no rewrite of surviving data. LSM-style compaction: when
+    // retention outlives many triggers the segment vector (and with it
+    // the per-trigger union width and task count of every stats
+    // re-scan) grows linearly — merge into ONE checkpointed chunk past a
+    // threshold; amortized cost O(store / threshold) per trigger.
+    val (keep, expired) = (live0 :+ seg).partition(_.maxTsUs >= horizonUs)
+    val (live, superseded) =
+      if (keep.size > AnomalyPipeline.CompactSegments) {
+        val all = storeOf(keep)
+          .filter(unix_micros(col("produced")) >= Param.long(horizonUs))
+          .localCheckpoint(eager = true)
+        (Vector(track(Segment(keep.map(_.maxTsUs).max, all, all.count()), withDir = true)),
+          expired ++ keep)
+      } else (keep, expired)
+
+    // 4. the snapshot for the NEXT trigger, over the new live set
+    val stats =
+      if (windows.isEmpty) None
+      else Some(computeStats(live, now, horizonUs).localCheckpoint(eager = true))
     counters.scanRuns.add(1)
 
     // 5. cooldown across triggers: the shared greedy
@@ -485,8 +418,8 @@ class AnomalyPipeline(
     // broadcast instead of leaking one per trigger over a long run
     cacheB.destroy()
 
-    // refresh the restart snapshot from the per-key last-emit aggregate:
-    // one row per configured key, config-bounded cardinality
+    // the new last-emit map from the per-key max aggregate: one row per
+    // configured key, config-bounded cardinality
     var cache = cooldownCache.get()
     emitted.groupBy(col("topic"), col("path"), col("window_sec"))
       .agg(max(col("produced_us")).as("last_us"))
@@ -495,16 +428,19 @@ class AnomalyPipeline(
     require(cache.size <= configuredKeys.size,
       s"cooldown cache holds ${cache.size} keys but the DSL configures " +
         s"${configuredKeys.size} — driver-held state must stay config-bounded")
-    cooldownCache.set(cache)
 
-    // 6. persist the cooldown cache for restart (the store was already
-    // persisted segment-wise in step 3; this relation is one row per
-    // configured key)
-    stateDir.foreach { d =>
-      cache.toSeq.map { case ((t, p, w), us) => (t, p, w, us) }
-        .toDF("topic", "path", "window_sec", "last_emit_us")
-        .write.mode("overwrite").parquet(s"$d/cooldown")
-    }
+    // 6. the one commit: the new live set and the cooldown map
+    stateDir.foreach(writeState(_, live, cache))
+
+    // 7. publish
+    segments.set(live)
+    snapshot.set(stats)
+    cooldownCache.set(cache)
+    made.clear()
+
+    // 8. release what the commit superseded (expired and compacted
+    // segments, caches and dirs)
+    superseded.foreach(_.release())
     extracted.unpersist()
     emitted
   }
@@ -515,14 +451,55 @@ class AnomalyPipeline(
     * window set (a handful of literals) — no per-row UDF.
     */
   def toAnomalyRecords(emitted: Dataset[CooldownState.AnomalyEvent]): DataFrame =
-    AnomalyPipeline.recordShape(
-      emitted.toDF(), dsl.topics.flatMap(_.fields.flatMap(_.windows)).distinct)
+    AnomalyPipeline.recordShape(emitted.toDF(), windows)
 }
 
 object AnomalyPipeline {
 
   /** Segment-count threshold that triggers store compaction. */
   val CompactSegments = 12
+
+  /** The stream's one state record, `store/_MANIFEST`: the live
+    * segments (dir name, max event-time micros, row count) and the
+    * cooldown map ((topic, path, window_sec) -> last emitted event-time
+    * micros). Text: a format header, then one tab-separated entry per
+    * line. Strings are URL-encoded (UTF-8 percent-encoding, space as
+    * `+`), so any topic or path round-trips, tabs and newlines included.
+    */
+  private[streaming] final case class StateRecord(
+      segments: Seq[(String, Long, Long)],
+      cooldown: Map[(String, String, Long), Long],
+  )
+
+  private[streaming] object StateRecord {
+    val Header = "graft-stream-state 1"
+
+    private def enc(s: String): String = java.net.URLEncoder.encode(s, "UTF-8")
+    private def dec(s: String): String = java.net.URLDecoder.decode(s, "UTF-8")
+
+    def encode(r: StateRecord): String = {
+      val segs = r.segments.map { case (n, ts, rows) => s"seg\t${enc(n)}\t$ts\t$rows" }
+      val cds = r.cooldown.toSeq.sortBy(_._1).map { case ((t, p, w), us) =>
+        s"cooldown\t${enc(t)}\t${enc(p)}\t$w\t$us"
+      }
+      (Header +: (segs ++ cds)).mkString("", "\n", "\n")
+    }
+
+    /** Throws on a missing header: the names-only manifest of older
+      * builds has no migration path.
+      */
+    def decode(txt: String): StateRecord = {
+      val lines = txt.split('\n').toSeq
+      if (!lines.headOption.contains(Header))
+        throw new IllegalStateException(s"not a state record: no '$Header' header")
+      val (segs, cds) = lines.tail.filter(_.nonEmpty).map(_.split("\t", -1).toSeq).partitionMap {
+        case Seq("seg", n, ts, rows) => Left((dec(n), ts.toLong, rows.toLong))
+        case Seq("cooldown", t, p, w, us) => Right((dec(t), dec(p), w.toLong) -> us.toLong)
+        case f => throw new IllegalStateException(s"malformed state-record line: ${f.mkString("\t")}")
+      }
+      StateRecord(segs, cds.toMap)
+    }
+  }
 
   /** Run one restore read of persisted state at `path`; any failure
     * rethrows naming the path (present-but-unreadable state must not

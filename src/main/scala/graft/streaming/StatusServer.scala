@@ -5,6 +5,8 @@ import java.nio.charset.StandardCharsets
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 
+import graft.JsonUtil.quote
+
 /** HTTP observability surface mirroring the reference's endpoint set
   * (reference: lib/HttpServer.js:34-89) from the driver, using the
   * JDK's built-in HttpServer (no extra dependencies):
@@ -22,7 +24,8 @@ import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
   *  - GET    /discovery/hashes   per-topic schema hashes
   *  - GET    /anomalies/cooldown cooldown cache read-back (last emit per key)
   *  - GET    /metrics            Prometheus text exposition (extension)
-  *  - DELETE /db/truncate        clear the event store
+  *  - DELETE /db/truncate        clear the event store; waits for at most
+  *                               one in-flight trigger
   *  - anything else -> 404, wrong method -> 405.
   */
 class StatusServer(
@@ -34,26 +37,12 @@ class StatusServer(
 
   private var server: Option[HttpServer] = None
 
-  /** JSON string escape (same rules as Verify's oracle dump): quote,
-    * backslash, and control chars — topic/path names come from
-    * untrusted payloads and must not break the JSON.
-    */
-  private def q(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Render a finite double as a JSON number (NaN/Inf are not valid
     * JSON — quote them like JS `JSON.stringify` would not, but the
     * stats gates upstream make them unreachable in practice).
     */
   private def num(d: Double): String =
-    if (d.isNaN || d.isInfinite) q(d.toString) else d.toString
+    if (d.isNaN || d.isInfinite) quote(d.toString) else d.toString
 
   private val index: Seq[(String, String)] = Seq(
     "Info" -> "graft",
@@ -77,27 +66,27 @@ class StatusServer(
     // index; unknown paths 404 (the reference's express default)
     s.createContext("/", exchange => route(exchange) {
       case ("GET", "/") =>
-        (200, jsonObject(index.map { case (k, v) => s"${q(k)}: ${q(v)}" }))
+        (200, jsonObject(index.map { case (k, v) => s"${quote(k)}: ${quote(v)}" }))
     })
     s.createContext("/status", exchange => route(exchange) {
       case ("GET", _) =>
         val sarkac = jsonObject(
-          counters.snapshot.toSeq.sortBy(_._1).map { case (k, v) => s"${q(k)}: $v" })
+          counters.snapshot.toSeq.sortBy(_._1).map { case (k, v) => s"${quote(k)}: $v" })
         val db = jsonObject(Seq(
-          s"${q("storedEvents")}: ${pipeline.map(_.storedEventCount).getOrElse(0L)}"))
+          s"${quote("storedEvents")}: ${pipeline.map(_.storedEventCount).getOrElse(0L)}"))
         val (compiles, compileMs) = StatusServer.codegenTotals
         val codegen = jsonObject(Seq(
-          s"${q("compiles")}: $compiles", s"${q("compileMs")}: $compileMs"))
+          s"${quote("compiles")}: $compiles", s"${quote("compileMs")}: $compileMs"))
         val (entries, builds, bytes) = StatusServer.memoTotals
         val memo = jsonObject(Seq(
-          s"${q("entries")}: $entries", s"${q("builds")}: $builds",
-          s"${q("storageBytes")}: $bytes"))
+          s"${quote("entries")}: $entries", s"${quote("builds")}: $builds",
+          s"${quote("storageBytes")}: $bytes"))
         (200, jsonObject(Seq(
-          s"${q("stream")}: null", // no broker wired in this environment
-          s"${q("db")}: $db",
-          s"${q("sarkac")}: $sarkac",
-          s"${q("codegen")}: $codegen",
-          s"${q("memo")}: $memo")))
+          s"${quote("stream")}: null", // no broker wired in this environment
+          s"${quote("db")}: $db",
+          s"${quote("sarkac")}: $sarkac",
+          s"${quote("codegen")}: $codegen",
+          s"${quote("memo")}: $memo")))
     })
     s.createContext("/healthcheck", exchange => route(exchange) {
       case ("GET", _) => (200, "")
@@ -109,24 +98,24 @@ class StatusServer(
           pipeline.map(_.statsCache).getOrElse(Nil)
             .sortBy { case (t, p, w, _, _) => (t, p, w) }
             .map { case (t, p, w, median, stdDev) =>
-              s"${q(s"$t:$p:$w")}: ${jsonObject(Seq(
-                s"${q("median")}: ${num(median)}", s"${q("stdDev")}: ${num(stdDev)}"))}"
+              s"${quote(s"$t:$p:$w")}: ${jsonObject(Seq(
+                s"${quote("median")}: ${num(median)}", s"${quote("stdDev")}: ${num(stdDev)}"))}"
             }))
       case ("GET", "/dsl/topics") =>
         (200, jsonArray(
-          discovery.map(_.dsl.topicNames).getOrElse(Nil).sorted.map(q)))
+          discovery.map(_.dsl.topicNames).getOrElse(Nil).sorted.map(quote)))
     })
     s.createContext("/discovery", exchange => route(exchange) {
       case ("GET", "/discovery/topics") =>
-        (200, jsonArray(discovery.map(_.topics.toSeq.sorted).getOrElse(Nil).map(q)))
+        (200, jsonArray(discovery.map(_.topics.toSeq.sorted).getOrElse(Nil).map(quote)))
       case ("GET", "/discovery/fields") =>
         (200, jsonObject(
           discovery.map(_.discoveredFields.toSeq.sortBy(_._1)).getOrElse(Nil)
-            .map { case (t, ps) => s"${q(t)}: ${jsonArray(ps.map(q))}" }))
+            .map { case (t, ps) => s"${quote(t)}: ${jsonArray(ps.map(quote))}" }))
       case ("GET", "/discovery/hashes") =>
         (200, jsonObject(
           discovery.map(_.hashes.toSeq.sortBy(_._1)).getOrElse(Nil)
-            .map { case (t, h) => s"${q(t)}: $h" }))
+            .map { case (t, h) => s"${quote(t)}: $h" }))
     })
     s.createContext("/metrics", exchange => route(exchange) {
       case ("GET", _) =>
@@ -154,12 +143,12 @@ class StatusServer(
       case ("GET", _) =>
         (200, jsonObject(
           pipeline.map(_.cooldownSnapshot.toSeq.sortBy(_._1)).getOrElse(Nil)
-            .map { case ((t, p, w), us) => s"${q(s"$t:$p:$w")}: $us" }))
+            .map { case ((t, p, w), us) => s"${quote(s"$t:$p:$w")}: $us" }))
     })
     s.createContext("/db/truncate", exchange => route(exchange) {
       case ("DELETE", _) =>
         pipeline.foreach(_.truncate())
-        (200, jsonObject(Seq(s"${q("truncated")}: true")))
+        (200, jsonObject(Seq(s"${quote("truncated")}: true")))
     })
     s.setExecutor(null)
     s.start()
@@ -198,8 +187,8 @@ class StatusServer(
 
   private def dslJson: String = jsonObject(
     discovery.map(_.dsl.topics).getOrElse(Nil).map { tc =>
-      s"${q(tc.topic)}: ${jsonObject(tc.fields.map(f =>
-        s"${q(f.path)}: [${f.windows.mkString(",")}]"))}"
+      s"${quote(tc.topic)}: ${jsonObject(tc.fields.map(f =>
+        s"${quote(f.path)}: [${f.windows.mkString(",")}]"))}"
     })
 }
 

@@ -160,43 +160,58 @@ class RestartSpec extends SparkSpec {
   }
 
   test("cooldown snapshot stays config-bounded and restore drops stale keys") {
-    // the driver-held restart snapshot is one row per configured
+    // the driver-held cooldown map is one entry per configured
     // (topic, path, window) — T*F*W, independent of message volume.
     val dir = Files.createTempDirectory("graft_state_cb").toFile.getAbsolutePath
-    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"))))
-    val p1 = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
-    assert(p1.configuredKeys == Set(("test-topic", "sub.one", 300L)))
-    p1.processBatch(script(0, 60).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 60000))
-    p1.processBatch(script(60, 120).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 120000))
+    val wide = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"), "sub.two" -> Seq("5m"))))
+    def msgs(fromSec: Long, toSec: Long) = (fromSec until toSec by 5).map { s =>
+      val v = if (spikeSecs(s)) 150.5 else 15.5
+      ("test-topic", s"k$s", s"""{"sub":{"one":$v,"two":$v}}""", new Timestamp(t0 + s * 1000))
+    }.toDF("topic", "key", "value", "ts")
+    val p1 = new AnomalyPipeline(spark, wide, cooldownMs = 120000L, stateDir = Some(dir))
+    assert(p1.configuredKeys == Set(("test-topic", "sub.one", 300L), ("test-topic", "sub.two", 300L)))
+    p1.processBatch(msgs(0, 60), new Timestamp(t0 + 60000))
+    p1.processBatch(msgs(60, 120), new Timestamp(t0 + 120000))
     assert(p1.cooldownSnapshot.size == p1.configuredKeys.size,
-      "every configured key emitted once -> snapshot row count == configured-key count")
-    assert(spark.read.parquet(s"$dir/cooldown").count() == p1.configuredKeys.size)
+      "every configured key emitted once -> snapshot size == configured-key count")
+    val record = AnomalyPipeline.StateRecord.decode(
+      new String(Files.readAllBytes(new java.io.File(s"$dir/store/_MANIFEST").toPath), "UTF-8"))
+    assert(record.cooldown == p1.cooldownSnapshot, "the state record commits the cooldown map")
 
-    // a snapshot written under a wider (older) DSL: the stale key must
-    // not survive the restore into a narrower configuration
-    Seq(("test-topic", "sub.one", 300L, 1L), ("gone-topic", "x.y", 60L, 2L))
-      .toDF("topic", "path", "window_sec", "last_emit_us")
-      .write.mode("overwrite").parquet(s"$dir/cooldown")
-    val p2 = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
+    // a restart under a narrower DSL: the key it no longer configures
+    // must not survive the restore
+    val narrow = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"))))
+    val p2 = new AnomalyPipeline(spark, narrow, cooldownMs = 120000L, stateDir = Some(dir))
     assert(p2.cooldownSnapshot.keySet == Set(("test-topic", "sub.one", 300L)),
       "restore must filter to configured keys")
   }
 
-  test("an unreadable cooldown snapshot fails the restore, naming its path") {
-    val dir = Files.createTempDirectory("graft_state_badcd").toFile.getAbsolutePath
+  test("restore reads only the state record and the segment dirs it lists") {
+    val dir = Files.createTempDirectory("graft_state_only").toFile.getAbsolutePath
     val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"))))
     val p1 = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
     p1.processBatch(script(0, 60).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 60000))
-    p1.processBatch(script(60, 120).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 120000))
-    assert(p1.cooldownSnapshot.nonEmpty)
+    val out1 = p1.processBatch(script(60, 120).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 120000))
+      .collect()
+    assert(out1.map(_.produced_us).toSeq == Seq((t0 + 90000) * 1000L), "expected the 90 s spike emitted")
+    val storeRows = p1.storedEventCount
 
-    // an empty map would re-arm every cooldown (duplicate records)
-    val parts = new java.io.File(s"$dir/cooldown").listFiles().filter(_.getName.startsWith("part-"))
-    assert(parts.nonEmpty)
-    parts.foreach(f => Files.write(f.toPath, "not parquet".getBytes("UTF-8")))
-    val e = intercept[IllegalStateException] {
-      new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
-    }
-    assert(e.getMessage.contains(s"$dir/cooldown"), e.getMessage)
+    // everything else in the state dir is gone — the state a crash
+    // leaves inside any other write
+    val mf = new java.io.File(s"$dir/store/_MANIFEST")
+    val listed = AnomalyPipeline.StateRecord.decode(new String(Files.readAllBytes(mf.toPath), "UTF-8"))
+      .segments.map(_._1).toSet
+    assert(listed.nonEmpty)
+    def rmrf(f: java.io.File): Unit = { Option(f.listFiles()).foreach(_.foreach(rmrf)); f.delete() }
+    new java.io.File(dir).listFiles().filter(_.getName != "store").foreach(rmrf)
+    new java.io.File(s"$dir/store").listFiles()
+      .filterNot(f => f.getName == "_MANIFEST" || listed(f.getName)).foreach(rmrf)
+
+    val p2 = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
+    assert(p2.storedEventCount == storeRows, "store not restored from the record")
+    // the 150 s spike is 60 s after the pre-restart emission
+    val out2 = p2.processBatch(script(120, 180).toDF("topic", "key", "value", "ts"), new Timestamp(t0 + 180000))
+      .collect()
+    assert(out2.isEmpty, s"cooldown re-armed across restart: ${out2.toSeq}")
   }
 }

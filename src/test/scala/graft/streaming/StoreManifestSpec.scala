@@ -2,18 +2,23 @@ package graft.streaming
 
 import java.nio.file.Files
 import java.sql.Timestamp
+import java.util.concurrent.CountDownLatch
+
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration._
 
 import graft.SparkSpec
 import graft.core.Dsl
 
-/** The segment manifest (`store/_MANIFEST`) is the store's commit
-  * record: restore trusts only manifest-listed dirs. These specs pin
-  * the two crash windows it closes — compaction's write-then-delete
-  * (uncommitted dirs must not double-restore) — and the deferred
-  * truncate (a truncate landing mid-trigger must survive a crash even
-  * though its segment release waits for the trigger boundary) — and
-  * that a commit or restore which cannot honor the manifest fails
-  * loudly instead of silently restoring a different row set.
+/** The state record (`store/_MANIFEST`) is the stream's one commit
+  * record: restore trusts only the segment dirs it lists and the
+  * cooldown map it holds. These specs pin the crash windows it closes —
+  * compaction's write-then-delete (uncommitted dirs must not
+  * double-restore), a truncate racing a trigger (it waits for the
+  * trigger, then commits) — and that a commit or restore which cannot
+  * honor the record fails loudly instead of silently restoring a
+  * different row set.
   */
 class StoreManifestSpec extends SparkSpec {
   import spark.implicits._
@@ -25,6 +30,22 @@ class StoreManifestSpec extends SparkSpec {
     (fromSec until toSec by 5).map { s =>
       ("test-topic", s"k$s", s"""{"sub":{"one":${15.5 + s % 3}}}""", new Timestamp(t0 + s * 1000))
     }.toDF("topic", "key", "value", "ts")
+
+  // spikes at 30 s (seeds variance), 90 s and 210 s (emitted under the
+  // default 2-minute cooldown)
+  private def spiky(fromSec: Long, toSec: Long) =
+    (fromSec until toSec by 5).map { s =>
+      val one = if (Set(30L, 90L, 210L)(s)) 150.5 else 15.5
+      ("test-topic", s"k$s", s"""{"sub":{"one":$one}}""", new Timestamp(t0 + s * 1000))
+    }.toDF("topic", "key", "value", "ts")
+
+  private def rmrf(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(rmrf))
+    f.delete()
+  }
+
+  private def segDirs(dir: String) =
+    new java.io.File(s"$dir/store").listFiles().filter(_.getName.startsWith("seg_")).sortBy(_.getName)
 
   test("uncommitted segment dir (crash leftover) is not restored and is removed") {
     val dir = Files.createTempDirectory("graft_manifest").toFile.getAbsolutePath
@@ -45,7 +66,7 @@ class StoreManifestSpec extends SparkSpec {
     assert(!new java.io.File(orphan).exists(), "orphan dir should be deleted on restore")
   }
 
-  test("mid-trigger truncate defers segment release to the boundary but commits immediately") {
+  test("a truncate during a trigger waits for it, then commits and releases") {
     val dir = Files.createTempDirectory("graft_truncate").toFile.getAbsolutePath
     val p = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
     p.processBatch(batch(0, 60), new Timestamp(t0 + 60000))
@@ -53,28 +74,29 @@ class StoreManifestSpec extends SparkSpec {
     // below have the same message count
     val rowsPerBatch = p.storedEventCount
     assert(rowsPerBatch > 0)
-    val segDirs = new java.io.File(s"$dir/store").listFiles().count(_.getName.startsWith("seg_"))
-    assert(segDirs == 1)
+    assert(segDirs(dir).length == 1)
 
-    // simulate a trigger in flight: the release must be deferred (the
-    // running jobs still scan these dirs) ...
-    p.triggerActive.set(true)
-    val epochBefore = p.truncateEpoch.get()
-    p.truncate()
-    assert(p.truncateEpoch.get() == epochBefore + 1)
-    assert(p.pendingTruncate.get(), "mid-trigger truncate must defer the release")
-    assert(new java.io.File(s"$dir/store").listFiles().exists(_.getName.startsWith("seg_")),
-      "segment dirs must survive until the trigger boundary")
-    assert(p.statsCache.isEmpty, "stats snapshot cleared immediately")
+    // a trigger in flight: another thread holds the trigger lock
+    val held = new CountDownLatch(1)
+    val done = new CountDownLatch(1)
+    val trigger = Future(p.triggerLock.synchronized { held.countDown(); done.await() })
+    held.await()
+    val truncated = Future(p.truncate())
+    Thread.sleep(500)
+    assert(!truncated.isCompleted, "truncate must wait for the in-flight trigger")
+    assert(p.storedEventCount == rowsPerBatch, "nothing is released under a running trigger")
+    assert(segDirs(dir).length == 1, "segment dirs survive while the trigger runs")
+    done.countDown()
+    Await.result(trigger, 30.seconds)
+    Await.result(truncated, 30.seconds)
 
-    // ... but the empty store is already durable: a restart BEFORE the
-    // next trigger (crash after truncate) must not resurrect the data
+    assert(p.storedEventCount == 0)
+    assert(p.statsCache.isEmpty, "stats snapshot cleared")
+    assert(segDirs(dir).isEmpty, "truncate deletes the segment dirs once the trigger is done")
     val p2 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
-    assert(p2.storedEventCount == 0, "truncate must be crash-durable via the manifest")
+    assert(p2.storedEventCount == 0, "a restart after the truncate restores an empty store")
 
-    // next trigger boundary: deferred release runs, then the new batch
-    // becomes the only store content
-    p.triggerActive.set(false)
+    // the next trigger's batch becomes the only store content
     p.processBatch(batch(60, 120), new Timestamp(t0 + 120000))
     assert(p.storedEventCount == rowsPerBatch,
       s"post-truncate store must hold only the new batch: ${p.storedEventCount} vs $rowsPerBatch")
@@ -108,30 +130,71 @@ class StoreManifestSpec extends SparkSpec {
     assert(e.getMessage.contains(bad.getName), e.getMessage)
   }
 
-  private def rmrf(f: java.io.File): Unit = {
-    Option(f.listFiles()).foreach(_.foreach(rmrf))
-    f.delete()
-  }
-
-  private def segDirs(dir: String) =
-    new java.io.File(s"$dir/store").listFiles().filter(_.getName.startsWith("seg_")).sortBy(_.getName)
-
   test("a failed manifest commit fails the trigger; a restart restores every committed row") {
     val dir = Files.createTempDirectory("graft_manifest_commit").toFile.getAbsolutePath
     val p1 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
-    p1.processBatch(batch(0, 60), new Timestamp(t0 + 60000))
+    p1.processBatch(spiky(0, 60), new Timestamp(t0 + 60000))
+    p1.processBatch(spiky(60, 120), new Timestamp(t0 + 120000))
     val committedRows = p1.storedEventCount
+    val cooldown = p1.cooldownSnapshot
+    assert(cooldown.nonEmpty, "the 90 s spike arms a cooldown")
+    val committedDirs = segDirs(dir).map(_.getName).toSeq
     // the commit's tmp file cannot be created: a non-empty directory
     // stands in its place
     val blocker = new java.io.File(s"$dir/store/_MANIFEST.tmp")
     assert(blocker.mkdirs() && new java.io.File(blocker, "x").createNewFile())
-    intercept[java.io.IOException](p1.processBatch(batch(60, 120), new Timestamp(t0 + 120000)))
+    // the 210 s spike is past the cooldown: the trigger would move it
+    intercept[java.io.IOException](p1.processBatch(spiky(180, 240), new Timestamp(t0 + 240000)))
     assert(p1.storedEventCount == committedRows, "an uncommitted segment must not join the store")
+    assert(p1.cooldownSnapshot == cooldown, "a failed trigger publishes no cooldown")
+    assert(segDirs(dir).map(_.getName).toSeq == committedDirs,
+      "a failed trigger removes the segment dir it wrote")
     rmrf(blocker)
     val p2 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
     assert(p2.storedEventCount == committedRows,
       s"restart must restore the committed rows: ${p2.storedEventCount} vs $committedRows")
-    assert(segDirs(dir).length == 1, "the uncommitted segment dir is removed as an orphan")
+    assert(p2.cooldownSnapshot == cooldown, "restart must restore the committed cooldown")
+    assert(segDirs(dir).map(_.getName).toSeq == committedDirs)
+    val retried = p2.processBatch(spiky(180, 240), new Timestamp(t0 + 240000)).collect()
+    assert(retried.map(_.produced_us).toSeq == Seq((t0 + 210000) * 1000L),
+      s"the retried trigger emits the 210 s spike: ${retried.toSeq}")
+  }
+
+  test("restore checks each segment's row count against the record") {
+    val dir = Files.createTempDirectory("graft_manifest_rows").toFile.getAbsolutePath
+    val p1 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
+    p1.processBatch(batch(0, 60).repartition(4), new Timestamp(t0 + 60000))
+    val seg = segDirs(dir).head
+    val parts = seg.listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length >= 2, s"expected a segment of several part files: ${parts.toSeq}")
+    // a lost part file leaves a readable dir with fewer rows: restoring
+    // it would silently shrink every trailing window
+    assert(parts.head.delete())
+    val e = intercept[IllegalStateException](new AnomalyPipeline(spark, dsl, stateDir = Some(dir)))
+    assert(e.getMessage.contains(seg.getName), e.getMessage)
+  }
+
+  test("the state record round-trips any topic or path") {
+    val odd = Seq("", "tab\there", "line\nbreak", "sp ace", "100%", "q\"uote", "ünï©ødé ✓", "a+b", "%41")
+    val rec = AnomalyPipeline.StateRecord(
+      Seq(("seg_1_abcd", 1L, 10L), ("seg_-5_ef01", -5L, 0L)),
+      (for (t <- odd; p <- odd) yield (t, p, 60L) -> Long.MinValue).toMap + (("t", "p", 300L) -> 42L))
+    val txt = AnomalyPipeline.StateRecord.encode(rec)
+    assert(txt.linesIterator.length == 1 + rec.segments.size + rec.cooldown.size,
+      "one line per entry after the header: no string may break a line")
+    assert(AnomalyPipeline.StateRecord.decode(txt) == rec)
+  }
+
+  test("a names-only manifest of an older build fails the restore, naming it") {
+    val dir = Files.createTempDirectory("graft_manifest_old").toFile.getAbsolutePath
+    val p1 = new AnomalyPipeline(spark, dsl, stateDir = Some(dir))
+    p1.processBatch(batch(0, 60), new Timestamp(t0 + 60000))
+    val mf = new java.io.File(s"$dir/store/_MANIFEST")
+    Files.write(mf.toPath, segDirs(dir).map(_.getName).mkString("\n").getBytes("UTF-8"))
+    new java.io.File(s"$dir/store/._MANIFEST.crc").delete() // a checksum mismatch would mask the format
+    val e = intercept[IllegalStateException](new AnomalyPipeline(spark, dsl, stateDir = Some(dir)))
+    assert(e.getMessage.contains("_MANIFEST") && e.getMessage.contains("header"), e.getMessage)
+    assert(segDirs(dir).length == 1, "a failed restore must not delete committed segments")
   }
 
   test("an unreadable manifest fails the restore, naming it") {
