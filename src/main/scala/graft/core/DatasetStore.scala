@@ -2,14 +2,16 @@ package graft.core
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
-/** Cross-JOB persistence for DATASET-STABLE relations — artifacts that
-  * are pure functions of a dataset's files (corpus fingerprints,
-  * merged component labels, ...). The per-(application, dataset)
-  * [[Memo]] keeps a relation hot within a JVM; this store keeps its
-  * BYTES across JVMs, which is the production shape: a crawl pays its
-  * derivation once at ingest, and every later job — including every
-  * later bench run — reads the materialized layout instead of
-  * re-deriving it from raw data.
+/** [[Memo]]'s disk tier: cross-JOB persistence for DATASET-STABLE
+  * relations — artifacts that are pure functions of a dataset's files
+  * (corpus fingerprints, merged component labels, ...). A memo keeps a
+  * relation hot within a JVM; a [[Memo.persisted]] memo routes its
+  * builds through this store, which keeps the BYTES across JVMs. That
+  * is the production shape: a crawl pays its derivation once at
+  * ingest, and every later job — including every later bench run —
+  * reads the materialized layout instead of re-deriving it from raw
+  * data. Callers outside `core` declare a persisted memo; only
+  * [[warehousePath]] is public.
   *
   * The artifact lands as plain parquet under the session warehouse dir
   * (a PATH, not a catalog table — the default catalog is in-memory,
@@ -29,8 +31,8 @@ object DatasetStore {
 
   /** The persisted relation `name` of dataset `sfDir`: read if the
     * stored signature matches, else `build` + publish + stamp. Returns
-    * an eager localCheckpoint of the stored relation (the memo-entry
-    * shape every consumer already expects).
+    * an eager localCheckpoint of the stored relation (a checkpoint
+    * leaf, which the memo stores as it is).
     *
     * `version` is the DERIVATION's fingerprint — a constant the caller
     * bumps whenever the build's code or constants change (sampling
@@ -51,7 +53,7 @@ object DatasetStore {
     * (tests build throwaway datasets in temp dirs; without GC their
     * stores would accumulate in the shared warehouse forever).
     */
-  def persisted(spark: SparkSession, sfDir: String, name: String,
+  private[core] def persisted(spark: SparkSession, sfDir: String, name: String,
       version: String)(
       build: => DataFrame): DataFrame = {
     import java.nio.file.Files
@@ -244,7 +246,7 @@ object DatasetStore {
     * names, sizes, mtimes — for directories, of their children) —
     * changes exactly when the driver regenerates the data.
     */
-  def datasetSignature(sfDir: String): String = {
+  private[core] def datasetSignature(sfDir: String): String = {
     import java.nio.file.{Files, Path, Paths}
     def list(p: Path): Seq[Path] = {
       val s = Files.list(p)

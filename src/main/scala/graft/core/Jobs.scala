@@ -8,12 +8,13 @@ import org.apache.spark.sql.SparkSession
   * second job's tasks back-fill executors freed by the first job's
   * tail — wall-clock becomes max(leg) instead of sum(leg).
   *
-  * Same concurrency hygiene as the keep-list legs (Curate, round 10):
-  * a DEDICATED short-lived pool (never the shared global EC), the
-  * caller's job group / description and the thread-confined Mat seam
-  * re-scoped onto the workers, and a zipped await that fails as soon
-  * as EITHER leg fails, cancelling the captured job group so the
-  * surviving leg's jobs stop instead of running detached.
+  * The keep list's curate and components legs run through here.
+  * Concurrency hygiene: a DEDICATED short-lived pool (never the shared
+  * global EC), the caller's job group / description and the
+  * thread-confined Mat seam re-scoped onto the workers, and a zipped
+  * await that fails as soon as EITHER leg fails, cancelling the
+  * captured job group so the surviving leg's jobs stop instead of
+  * running detached.
   */
 object Jobs {
 

@@ -19,6 +19,10 @@ import org.apache.spark.sql.DataFrame
   * once and reading it back; executor loss mid-query is the accepted
   * trade, as with every localCheckpoint in this engine.)
   *
+  * Per-dataset artifacts do not call this boundary: [[Memo]]
+  * materializes every entry it builds. `Mat` is the per-call form, for
+  * a relation one query derives and reads from several branches.
+  *
   * [[withTransparent]] is a test seam for the plan guards only:
   * PlanSpec asserts properties of subplans (codegen expressions,
   * window partitioning) that an eager checkpoint hides behind an RDD
@@ -27,16 +31,17 @@ import org.apache.spark.sql.DataFrame
   * is THREAD-CONFINED (a DynamicVariable, not a process global):
   * under parallel test execution or concurrent plan construction, one
   * thread's transparent window can never leak into another thread's
-  * plans. Callers that fan plan construction out to worker threads
-  * (e.g. the keep-list legs) capture the current value and re-scope
-  * it on the workers. Production and the driver contract always run
-  * with the boundary on.
+  * plans. [[Jobs.concurrently]], which fans plan construction out to
+  * worker threads, captures the current value and re-scopes it on the
+  * workers; both the seam and its reads stay inside `core`. Inside the
+  * seam a memo returns its build as built (see [[Memo]]). Production
+  * and the driver contract always run with the boundary on.
   */
 object Mat {
   private val transparentVar = new scala.util.DynamicVariable[Boolean](false)
 
   /** Whether the current THREAD is inside a transparent window. */
-  private[graft] def isTransparent: Boolean = transparentVar.value
+  private[core] def isTransparent: Boolean = transparentVar.value
 
   /** Run `body` with the boundary flipped to identity (or explicitly
     * re-scoped, for propagating a captured value onto a worker
@@ -66,11 +71,7 @@ object Mat {
     */
   private[core] def rightSizeStored(df: DataFrame,
       bytesPerPartition: Long = 8L << 20): DataFrame = {
-    val isLeaf = df.queryExecution.analyzed match {
-      case _: org.apache.spark.sql.execution.LogicalRDD => true
-      case _ => false
-    }
-    if (!isLeaf) return df
+    if (!isCheckpointLeaf(df)) return df
     val ids = rddIdsOf(df)
     if (ids.isEmpty) return df
     val bytes = df.sparkSession.sparkContext.getRDDStorageInfo
@@ -89,6 +90,19 @@ object Mat {
       // [[apply]].
       df.coalesce(target).localCheckpoint(eager = true)
   }
+
+  /** Whether `df` is a checkpoint leaf: its analyzed plan is one RDD
+    * scan (what an eager `localCheckpoint` returns).
+    */
+  private def isCheckpointLeaf(df: DataFrame): Boolean =
+    df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
+
+  /** `df` eagerly checkpointed, or `df` itself when it already is a
+    * checkpoint leaf (a relation is never checkpointed twice). The
+    * memo's materialization step.
+    */
+  private[core] def checkpointed(df: DataFrame): DataFrame =
+    if (isCheckpointLeaf(df)) df else df.localCheckpoint(eager = true)
 
   private def rddIdsOf(df: DataFrame): Set[Int] =
     try df.queryExecution.analyzed.collect {

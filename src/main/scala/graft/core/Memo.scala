@@ -9,43 +9,58 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * (keep list, cluster pair graph, component labels, corpus
   * signatures, passage spans, ...), scalar snapshot anchors (max/min
   * ts, row counts), persisted-table names, frozen fits, and tuples of
-  * those. Every consumer writes `memo(spark, sfDir) { build }`; the
-  * memo forms the per-(application, dataset) key itself, and a
-  * `variant` discriminates the artifacts one dataset has several of
-  * (a band width, a posting cap, a key set).
+  * those. Every consumer writes `memo(spark, sfDir) { build }` with a
+  * plain, lazy build; the memo forms the per-(application, dataset)
+  * key itself, and a `variant` discriminates the artifacts one
+  * dataset has several of (a band width, a posting cap, a key set).
   *
   * Contracts:
   *
+  *  - '''Materialized here.''' Every DataFrame a built value holds —
+  *    the value itself, or a component of a pair or triple — is
+  *    eagerly `localCheckpoint`ed unless it already is a checkpoint
+  *    leaf, then re-laid to a size-derived partition count
+  *    ([[Mat.rightSizeStored]]). A build checkpoints inside itself
+  *    only where the checkpoint guards a resource it releases
+  *    afterwards (a broadcast destroyed on exit), or for one part of
+  *    a tuple it computes from.
+  *  - '''Optionally on disk.''' A [[Memo.persisted]] memo also keeps
+  *    each built relation across JVMs in its private disk tier
+  *    ([[DatasetStore]]), under the store name `name`, or
+  *    `name_variant` for a variant. [[Memo.releaseAll]] drops the
+  *    in-memory entry and leaves the store, so the next lookup reads
+  *    it back instead of re-deriving it.
   *  - '''Bounded.''' Entries are LRU-evicted past [[maxEntries]], and
   *    eviction RELEASES every checkpoint the evicted value holds
   *    (best-effort unpersist of the checkpointed RDDs, then the strong
   *    reference drops so the ContextCleaner can finish the job). A
   *    long-lived session touching many datasets does not accumulate
   *    pinned block-manager storage without bound.
-  *  - '''Timed.''' Each build's wall-clock lands in a process-wide
-  *    registry ([[Memo.buildLog]]), so the bench reports the COLD
-  *    construction cost of every artifact explicitly instead of
-  *    folding it into the first consumer's first run.
+  *  - '''Timed.''' Each build's wall-clock, checkpoint and store
+  *    included, lands in a process-wide registry ([[Memo.buildLog]]),
+  *    so the bench reports the COLD construction cost of every
+  *    artifact explicitly instead of folding it into the first
+  *    consumer's first run.
   *  - '''Releasable.''' [[Memo.releaseAll]] is the public "done with
   *    these datasets" path: it drops every entry of every memo —
   *    scalars and fits included — so a dataset rewritten in place is
-  *    re-derived from its new contents. It is also the test seam.
-  *  - '''Not transparent.''' A build inside
-  *    [[Mat.withTransparent]] is returned but neither read from nor
-  *    written to the cache: the plan-inspection seam must see the full
-  *    operator tree, and an un-materialized plan must never be served
-  *    to a later production call.
+  *    re-derived from its new contents (a stored relation by its file
+  *    signature). It is also the test seam.
+  *  - '''Not transparent.''' A build inside [[Mat.withTransparent]]
+  *    is returned as built: neither cached, checkpointed nor stored.
+  *    The plan-inspection seam must see the full operator tree, and an
+  *    un-materialized plan must never be served to a later production
+  *    call.
   *
-  * A checkpoint held by a value — the value itself, or a component of
-  * a pair or triple — is re-laid to a size-derived partition count
-  * ([[Mat.rightSizeStored]]), released with its entry, and counted by
-  * [[Memo.storageBytes]].
+  * A checkpoint held by a value is released with its entry and
+  * counted by [[Memo.storageBytes]].
   *
   * Builds are serialized per memo (a concurrent build of the same
   * entry would run the expensive work twice and leak the loser's
   * checkpoint); distinct memos build concurrently.
   */
-final class Memo[V] private (val name: String, val maxEntries: Int, perApplication: Boolean) {
+final class Memo[V] private (val name: String, val maxEntries: Int, perApplication: Boolean,
+    storeVersion: Option[String] = None) {
   Memo.register(this)
 
   // LinkedHashMap in access order via explicit re-insertion: last = MRU
@@ -62,10 +77,19 @@ final class Memo[V] private (val name: String, val maxEntries: Int, perApplicati
           v
         case None =>
           val t0 = System.nanoTime()
-          // size-derived storage layout: a small artifact built 32-wide
-          // must not pin one scan task per build core for every later
-          // consumer; the re-layout pass is part of the timed cold build
-          val v = Memo.mapFrames(build)(Mat.rightSizeStored(_)).asInstanceOf[V]
+          val built = storeVersion match {
+            case Some(version) =>
+              val store = if (variant.isEmpty) name else s"${name}_$variant"
+              DatasetStore.persisted(spark, dataset, store, version)(
+                build.asInstanceOf[DataFrame]).asInstanceOf[V]
+            case None => build
+          }
+          // checkpoint, then a size-derived storage layout: a small
+          // artifact built 32-wide must not pin one scan task per build
+          // core for every later consumer; both passes are part of the
+          // timed cold build
+          val v = Memo.mapFrames(built)(df => Mat.rightSizeStored(Mat.checkpointed(df)))
+            .asInstanceOf[V]
           Memo.logBuild(name, key, (System.nanoTime() - t0) / 1e9)
           entries.put(key, v)
           while (entries.size > maxEntries) {
@@ -109,6 +133,17 @@ object Memo {
     */
   def apply[V](name: String, maxEntries: Int = 4): Memo[V] =
     new Memo[V](name, maxEntries, perApplication = true)
+
+  /** A per-(application, dataset) DataFrame memo whose entries are
+    * also stored on disk per dataset ([[DatasetStore]]), under the
+    * store name `name`, or `name_variant` for a variant. `version` is
+    * the derivation's fingerprint: bump it whenever the build's code
+    * or constants change, and every stored copy rebuilds. Only
+    * relations that are deterministic functions of the dataset's
+    * files may be persisted.
+    */
+  def persisted(name: String, version: String, maxEntries: Int = 4): Memo[DataFrame] =
+    new Memo[DataFrame](name, maxEntries, perApplication = true, Some(version))
 
   /** A frozen-fit memo: keyed by the dataset alone (one dataset fitted
     * under two sessions is still one fit) and never evicting, so

@@ -53,27 +53,63 @@ object WindowStats {
     // produced-bounds filters for window w
     val sw = ws.init.foldRight(lit(ws.last): Column)((w, acc) =>
       when(age <= lit(w * 1000000L), lit(w)).otherwise(acc))
-    val partials = samples
+    val partials = partialAgg(samples
       .filter(age >= 0L && age <= lit(ws.max * 1000000L))
-      .withColumn("sw", sw)
+      .withColumn("sw", sw), col("sw"))
+    mergePartials(partials
+      .withColumn("window_sec", explode(array(ws.map(lit): _*)))
+      .filter(col("window_sec") >= col("sw")))
+  }
+
+  /** Per-(topic, path, `sub`) partial sums of one sample relation.
+    *
+    * Exact-decimal partials: count/sum/sumsq merge associatively, so
+    * merging partials equals aggregating the raw union. The exact path
+    * holds a value only inside DECIMAL(18,6) (|value| < 1e12) and a sum
+    * of squares only inside DECIMAL(38,12) (< 1e26). A value outside
+    * the first range (an epoch-millis leaf, ~1.7e12) is routed to a
+    * double sum, and a sum of squares past the second becomes null
+    * instead of throwing under ANSI mode; [[mergePartials]] then takes
+    * the group's double sums. A group that stays inside both ranges
+    * keeps the exact decimal result bit for bit.
+    */
+  private def partialAgg(samples: DataFrame, sub: Column): DataFrame =
+    samples
       // one explicit decimal conversion per row (the double→decimal
       // cast allocates via BigDecimal.valueOf — don't rely on
       // subexpression elimination inside the aggregate)
-      .withColumn("vd", col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-      .groupBy(col("topic"), col("path"), col("sw"))
+      .withColumn("vd", col("value").try_cast(org.apache.spark.sql.types.DecimalType(18, 6)))
+      .groupBy(col("topic"), col("path"), sub)
       .agg(
         count(lit(1)).as("p_cnt"),
         sum(col("vd")).as("p_sum"),
-        sum(col("vd") * col("vd")).as("p_sumsq"),
+        try_sum(col("vd") * col("vd")).as("p_sumsq"),
+        // the values the exact cast could not hold, and every square in
+        // double: the fallback of a group that leaves the exact range
+        sum(when(col("vd").isNull, col("value"))).as("p_bsum"),
+        sum(col("value") * col("value")).as("p_fsumsq"),
       )
+
+  /** Merge [[partialAgg]] rows per (topic, path, window_sec): the
+    * exact-decimal sums finished by [[graft.functions.Exact.finishSum]],
+    * or, for a group with a value past DECIMAL(18,6) or a sum of squares
+    * past DECIMAL(38,12), the double sums (past 1e12 an exact sum also
+    * reaches the variance formula as a rounded double).
+    */
+  private def mergePartials(partials: DataFrame): DataFrame = {
+    // a partial whose exact sum of squares overflowed: null, though it
+    // holds exact values (a partial with none has a null p_sum too)
+    val overflowed = max(col("p_sumsq").isNull && col("p_sum").isNotNull)
+    val bsum = sum(col("p_bsum"))
+    val sumsq = try_sum(col("p_sumsq"))
     partials
-      .withColumn("window_sec", explode(array(ws.map(lit): _*)))
-      .filter(col("window_sec") >= col("sw"))
       .groupBy(col("topic"), col("path"), col("window_sec"))
       .agg(
         coalesce(sum(col("p_cnt")), lit(0L)).as("cnt"),
-        finishSum(sum(col("p_sum"))).as("sumv"),
-        finishSum(sum(col("p_sumsq"))).as("sumsq"),
+        when(bsum.isNull, finishSum(sum(col("p_sum"))))
+          .otherwise(coalesce(sum(col("p_sum")).cast("double"), lit(0.0)) + bsum).as("sumv"),
+        when(bsum.isNull && !overflowed && sumsq.isNotNull, finishSum(sumsq))
+          .otherwise(sum(col("p_fsumsq"))).as("sumsq"),
       )
   }
 
@@ -106,35 +142,21 @@ object WindowStats {
     * merging per-segment partials equals aggregating the raw union.
     */
   def bucketPartials(samples: DataFrame, bucketSec: Long = 60L): DataFrame =
-    samples
+    partialAgg(samples
       .withColumn("bucket_us",
-        (unix_micros(col("produced")) / lit(bucketSec * 1000000L)) * lit(bucketSec * 1000000L))
-      // one explicit decimal conversion per row (see nestedTrailingAgg)
-      .withColumn("vd", col("value").cast(org.apache.spark.sql.types.DecimalType(18, 6)))
-      .groupBy(col("topic"), col("path"), col("bucket_us"))
-      .agg(
-        count(lit(1)).as("p_cnt"),
-        sum(col("vd")).as("p_sum"),
-        sum(col("vd") * col("vd")).as("p_sumsq"),
-      )
+        (unix_micros(col("produced")) / lit(bucketSec * 1000000L)) * lit(bucketSec * 1000000L)),
+      col("bucket_us"))
 
   /** Window merge over bucket partials: `bucket_us in [now - w, now)`
-    * per exploded window, exact-decimal sums finished by
-    * [[graft.functions.Exact.finishSum]].
+    * per exploded window, merged by [[mergePartials]].
     */
   private def mergeAgg(buckets: DataFrame, windows: Seq[Long], now: Column): DataFrame = {
     val nowUs = unix_micros(now)
-    buckets
+    mergePartials(buckets
       .filter(col("bucket_us") < nowUs)
       .filter(col("bucket_us") >= nowUs - lit(windows.max * 1000000L))
       .withColumn("window_sec", explode(array(windows.map(lit): _*)))
-      .filter(col("bucket_us") >= nowUs - col("window_sec") * lit(1000000L))
-      .groupBy(col("topic"), col("path"), col("window_sec"))
-      .agg(
-        sum(col("p_cnt")).as("cnt"),
-        finishSum(sum(col("p_sum"))).as("sumv"),
-        finishSum(sum(col("p_sumsq"))).as("sumsq"),
-      )
+      .filter(col("bucket_us") >= nowUs - col("window_sec") * lit(1000000L)))
   }
 
   /** Shared tail: derive mean/stddev_pop from exact sums and apply the

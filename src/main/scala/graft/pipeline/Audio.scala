@@ -54,7 +54,7 @@ object Audio {
   val AudioBucketCap = 256
 
   /** Derivation fingerprint of the audio lane's persisted artifacts —
-    * salts [[graft.core.DatasetStore]] signatures so a change to the
+    * salts the persisted memos' store signatures so a change to the
     * sampling expression or the lane's constants rebuilds every store
     * automatically. "cpsamp3" marks the round-14 native
     * [[graft.functions.CodepointAt]] sampler (v3 — v2 was the
@@ -193,8 +193,6 @@ object Audio {
       .select(col("asset_id"), col("fp"), col("slot"),
         expr("shiftright(fp, 9 * slot) % 512").as("lmv"))
 
-  private val fpsMemo = graft.core.Memo[DataFrame]("audio_fps")
-
   /** The corpus fingerprint relation — memoized per (application,
     * dataset) AND persisted per dataset (the `ProfileStateStore`
     * discipline brought to the audio lane): the 64-substr sampling
@@ -211,10 +209,9 @@ object Audio {
     * — a stale table would hash-mismatch every audio query.
     */
   private[graft] def corpusFps(spark: SparkSession, sfDir: String): DataFrame =
-    fpsMemo(spark, sfDir)(
-      graft.core.DatasetStore.persisted(spark, sfDir, "audio_fps",
-        version = DerivationVersion)(
-        packedFps(Tables.documents(spark, sfDir))))
+    fpsMemo(spark, sfDir)(packedFps(Tables.documents(spark, sfDir)))
+
+  private val fpsMemo = graft.core.Memo.persisted("audio_fps", version = DerivationVersion)
 
   /** q_audio_dup_pairs: near-duplicate track pairs at ≥
     * [[MinLandmarkAgree]]/7 aligned-landmark agreement, with the
@@ -223,9 +220,7 @@ object Audio {
     * fingerprints in the candidate join's own projection.
     */
   def audioDupPairs(spark: SparkSession, sfDir: String): DataFrame =
-    if (graft.core.Mat.isTransparent) audioDupPairsFromFp(corpusFps(spark, sfDir))
-    else dupPairsMemo(spark, sfDir)(
-      audioDupPairsFromFp(corpusFps(spark, sfDir)).localCheckpoint(eager = true))
+    dupPairsMemo(spark, sfDir)(audioDupPairsFromFp(corpusFps(spark, sfDir)))
 
   // the verified member-pair relation is output-sized and read by TWO
   // registered consumers (the pair query itself and the recall eval's
@@ -602,12 +597,10 @@ object Audio {
   def audioIncremental(spark: SparkSession, sfDir: String): DataFrame =
     // persisted per dataset like the text/image merged states
     // (deterministic, oracle-hash-gated), memoized per application
-    mergedStateMemo(spark, sfDir)(
-      graft.core.DatasetStore.persisted(spark, sfDir, "audio_merged_state",
-        version = DerivationVersion)(
-        computeAudioIncremental(spark, sfDir)))
+    mergedStateMemo(spark, sfDir)(computeAudioIncremental(spark, sfDir))
 
-  private val mergedStateMemo = graft.core.Memo[DataFrame]("audio_merged_state")
+  private val mergedStateMemo =
+    graft.core.Memo.persisted("audio_merged_state", version = DerivationVersion)
   private val estateMemo = graft.core.Memo[DataFrame]("audio_estate_components")
 
   private def computeAudioIncremental(spark: SparkSession, sfDir: String): DataFrame = {
@@ -645,8 +638,7 @@ object Audio {
       .distinct())
     val aLabels = estateMemo(spark, sfDir)(
       Dedup.componentsOfPairs(stars(0).unionAll(repPairs(bandsA)))
-        .select(col("doc_id"), col("cluster_root"))
-        .localCheckpoint(eager = true))
+        .select(col("doc_id"), col("cluster_root")))
     Dedup.quotientMerge(aLabels, stars(1).unionAll(repPairs(bandsB)), bridges)
       .select(col("doc_id").as("asset_id"), col("cluster_root"), col("cluster_size"))
   }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.Tables
-import graft.core.Mat.MatOps
 
 /** q_curate: the end-to-end curation DECISION RECORD — one row per
   * document stating whether it enters the training corpus, the FIRST
@@ -59,8 +58,7 @@ object Curate {
     * cost lands in the bench `artifacts` map.
     */
   private[pipeline] def curateMat(spark: SparkSession, sfDir: String): DataFrame =
-    curateMemo(spark, sfDir)(
-      computeCurate(spark, sfDir).localCheckpoint(eager = true))
+    curateMemo(spark, sfDir)(computeCurate(spark, sfDir))
 
   private val curateMemo = graft.core.Memo[DataFrame]("curate")
 
@@ -148,70 +146,19 @@ object Curate {
     * observationally pure.
     */
   def keepList(spark: SparkSession, sfDir: String): DataFrame =
-    keepListMemo(spark, sfDir)(
-      computeKeepList(spark, sfDir).localCheckpoint(eager = true))
+    keepListMemo(spark, sfDir)(computeKeepList(spark, sfDir))
 
   private val keepListMemo = graft.core.Memo[DataFrame]("keep_list")
 
   private def computeKeepList(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
     // The verdict (curate) and cluster (components) legs are
-    // INDEPENDENT lineages that only meet at the survivor join, so
-    // their materializations run concurrently — on a cluster these are
-    // separate job DAGs the scheduler interleaves across executors;
-    // serializing them (the old shape) left the cluster idle during
-    // each leg's driver-side steps. Each leg is an eager
-    // self-releasing checkpoint: cur is read twice (survivor filter +
-    // final join) and comp's label-prop result must not re-run its
-    // iterative subplan at assembly time — narrow rows,
-    // ContextCleaner-released (the components discipline).
-    //
-    // Concurrency hygiene (round-10): a DEDICATED 2-thread pool, not
-    // the shared global EC (an unbounded block there starves every
-    // other library user of the pool); the caller's job group /
-    // description and the thread-confined Mat seam are captured here
-    // and re-scoped onto the workers, so caller-side cancellation
-    // still covers the legs' jobs and a transparent-plan test window
-    // survives the thread hop; the two legs are awaited as ONE zipped
-    // future, which fails as soon as EITHER leg fails (no indefinite
-    // wait on a doomed sibling) — and on failure the captured job
-    // group is cancelled so the surviving leg's Spark jobs stop
-    // instead of running detached.
-    val sc = spark.sparkContext
-    val jobGroup = Option(sc.getLocalProperty("spark.jobGroup.id"))
-    val jobDesc = Option(sc.getLocalProperty("spark.job.description"))
-    val transparent = graft.core.Mat.isTransparent
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2, r => {
-      val t = new Thread(r, "graft-keeplist-leg")
-      t.setDaemon(true)
-      t
-    })
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    def leg[T](body: => T): Future[T] = Future {
-      jobGroup.foreach(g => sc.setJobGroup(g, jobDesc.getOrElse("keep-list leg"), false))
-      graft.core.Mat.withTransparent(transparent)(body)
-    }
-    val (cur, comp) =
-      try {
-        // curate materializes via its own per-dataset memo — the future
-        // exists to run that materialization concurrently with the
-        // components leg, not to add a second checkpoint on top
-        val curF = leg { curateMat(spark, sfDir) }
-        val compF = leg {
-          // Dedup.components materializes via its own per-dataset memo —
-          // the future exists to run that materialization concurrently
-          // with curate's, not to add a second checkpoint on top
-          Dedup.components(spark, sfDir).select(col("doc_id"), col("cluster_root"))
-        }
-        try Await.result(curF.zip(compF), Duration.Inf)
-        catch {
-          case e: Throwable =>
-            jobGroup.foreach(g => try sc.cancelJobGroup(g) catch { case _: Throwable => () })
-            throw e
-        }
-      } finally pool.shutdown()
+    // INDEPENDENT lineages that only meet at the survivor join, and each
+    // materializes through its own per-dataset memo — so the two builds
+    // run concurrently: on a cluster these are separate job DAGs the
+    // scheduler interleaves across executors.
+    val (cur, comp) = graft.core.Jobs.concurrently(spark,
+      curateMat(spark, sfDir),
+      Dedup.components(spark, sfDir).select(col("doc_id"), col("cluster_root")))
     val nch = Tables.documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
     resolveNearDups(cur, comp, nch)
   }
@@ -283,8 +230,7 @@ object Curate {
     * each used to re-join the three gate legs per call.
     */
   def keepListEstate(spark: SparkSession, sfDir: String): DataFrame =
-    keepListEstateMemo(spark, sfDir)(
-      computeKeepListEstate(spark, sfDir).localCheckpoint(eager = true))
+    keepListEstateMemo(spark, sfDir)(computeKeepListEstate(spark, sfDir))
 
   private val keepListEstateMemo = graft.core.Memo[DataFrame]("keep_list_estate")
 

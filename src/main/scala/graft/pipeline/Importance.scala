@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.queries.Tables
-import graft.core.Mat.MatOps
 
 /** DSIR-style data selection via hashed-n-gram importance weights (Xie
   * et al. 2023, arXiv 2302.03169): score every document by how much
@@ -101,8 +100,7 @@ object Importance {
     * cost lands in the bench `artifacts` map like every memo build.
     */
   def scoredWeightsMat(spark: SparkSession, sfDir: String): DataFrame =
-    scoredMemo(spark, sfDir)(
-      scoredWeights(spark, sfDir).localCheckpoint(eager = true))
+    scoredMemo(spark, sfDir)(scoredWeights(spark, sfDir))
 
   private val scoredMemo = graft.core.Memo[DataFrame]("dsir_scored")
 

@@ -83,14 +83,12 @@ object IncrementalCurate {
   /** Snapshot A's state (even doc ids — the historical estate). */
   private[pipeline] def stateA(spark: SparkSession, sfDir: String): DataFrame =
     stateMemoA(spark, sfDir)(
-      stateOf(Tables.documents(spark, sfDir).filter(col("doc_id") % 2 === 0))
-        .localCheckpoint(eager = true))
+      stateOf(Tables.documents(spark, sfDir).filter(col("doc_id") % 2 === 0)))
 
   /** Snapshot B's state (odd doc ids — the arriving crawl). */
   private[pipeline] def stateB(spark: SparkSession, sfDir: String): DataFrame =
     stateMemoB(spark, sfDir)(
-      stateOf(Tables.documents(spark, sfDir).filter(col("doc_id") % 2 === 1))
-        .localCheckpoint(eager = true))
+      stateOf(Tables.documents(spark, sfDir).filter(col("doc_id") % 2 === 1)))
 
   /** History's eval-gram set — part of A's persisted curation
     * artifact (with it, B's arrival re-checks history only against
@@ -99,8 +97,7 @@ object IncrementalCurate {
   private def evalGramsA(spark: SparkSession, sfDir: String): DataFrame =
     evalGramsMemo(spark, sfDir)(
       stateA(spark, sfDir).filter(col("is_eval"))
-        .select(explode(col("hs")).as("sh")).distinct()
-        .localCheckpoint(eager = true))
+        .select(explode(col("hs")).as("sh")).distinct())
 
   /** History's contaminated doc ids vs history's OWN eval grams — the
     * verdict bits A's last full run already paid for.
@@ -112,7 +109,6 @@ object IncrementalCurate {
         .select(col("doc_id"), explode(col("hs")).as("sh"))
         .join(broadcast(evalGramsA(spark, sfDir)), Seq("sh"), "left_semi")
         .select(col("doc_id")).distinct()
-        .localCheckpoint(eager = true)
     }
 
   /** q_keep_list_incremental: the keep list over A∪B assembled from
@@ -123,8 +119,7 @@ object IncrementalCurate {
     * cost of each state lands in the bench `artifacts` map.
     */
   def keepListIncremental(spark: SparkSession, sfDir: String): DataFrame =
-    keepListMemo(spark, sfDir)(
-      assemble(spark, sfDir).localCheckpoint(eager = true))
+    keepListMemo(spark, sfDir)(assemble(spark, sfDir))
 
   /** The narrow nightly pass (the spec seam — not memoized). */
   private[pipeline] def assemble(spark: SparkSession, sfDir: String): DataFrame = {
@@ -148,8 +143,7 @@ object IncrementalCurate {
     * build per invocation).
     */
   private[pipeline] def curateIncremental(spark: SparkSession, sfDir: String): DataFrame =
-    curateIncMemo(spark, sfDir)(
-      computeCurateIncremental(spark, sfDir).localCheckpoint(eager = true))
+    curateIncMemo(spark, sfDir)(computeCurateIncremental(spark, sfDir))
 
   private val curateIncMemo = graft.core.Memo[DataFrame]("curate_incremental")
 

@@ -162,7 +162,6 @@ object Sampling {
       Dedup.shingleHashes(Tables.spread(docs, col("doc_id")), n = DecontamN)
         .join(evalTag(docs), "doc_id")
         .select(col("doc_id"), col("is_eval"), col("hs"))
-        .localCheckpoint(eager = true)
     }
 
   def decontaminate(spark: SparkSession, sfDir: String): DataFrame = {

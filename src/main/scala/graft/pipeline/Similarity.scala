@@ -57,7 +57,7 @@ object Similarity {
     * This is the declared exact baseline that anchors LSH/IVF recall.
     */
   def annTopk(spark: SparkSession, sfDir: String): DataFrame =
-    annTopkMemo(spark, sfDir)(annTopkBuild(spark, sfDir).mat)
+    annTopkMemo(spark, sfDir)(annTopkBuild(spark, sfDir))
 
   // the exact-truth leg is read by q_ann_topk, three recall evals, AND
   // the probe-width calibration's ladder walk — one O(probes · n) scan
@@ -373,7 +373,7 @@ object Similarity {
     * stop-loss on top.
     */
   def annLsh(spark: SparkSession, sfDir: String): DataFrame =
-    signPairsMemo(spark, sfDir)(annLshBuild(spark, sfDir).mat)
+    signPairsMemo(spark, sfDir)(annLshBuild(spark, sfDir))
 
   // bounded + timed + releasable (graft.core.Memo): q_dedup_embed IS
   // annLsh filtered — one LSH pair build per corpus snapshot, read by
@@ -1120,7 +1120,7 @@ object Similarity {
     * [[knnGraph]] so the assignment cannot drift between them.
     */
   private def assignedCells(spark: SparkSession, sfDir: String): DataFrame =
-    assignedCellsMemo(spark, sfDir)(assignedCellsBuild(spark, sfDir).mat)
+    assignedCellsMemo(spark, sfDir)(assignedCellsBuild(spark, sfDir))
 
   // the corpus-side assignment (the IVF index itself) is read by
   // q_ann_ivf, q_ivf_stats, the recall evals, and every width of the
@@ -1971,15 +1971,13 @@ object Similarity {
     * re-proves per run (the `q_profile_incremental` contract). Both
     * snapshot indexes are cell-bucketed, so the lane self-joins and the
     * bridge join are exchange-free; the merged labels persist per
-    * dataset ([[graft.core.DatasetStore]]) and memoize per application.
+    * dataset and memoize per application ([[graft.core.Memo.persisted]]).
     */
   def embedIncremental(spark: SparkSession, sfDir: String): DataFrame =
-    embedMergedMemo(spark, sfDir)(
-      graft.core.DatasetStore.persisted(spark, sfDir, "embed_merged_state",
-        version = s"1:$KnnCellCap:$SemDedupThreshold")(
-        computeEmbedIncremental(spark, sfDir)))
+    embedMergedMemo(spark, sfDir)(computeEmbedIncremental(spark, sfDir))
 
-  private val embedMergedMemo = graft.core.Memo[DataFrame]("embed_merged_state")
+  private val embedMergedMemo = graft.core.Memo.persisted("embed_merged_state",
+    version = s"1:$KnnCellCap:$SemDedupThreshold")
   private val embedEstateMemo = graft.core.Memo[DataFrame]("embed_estate_components")
 
   /** The three edge legs (A-lane pairs, B-lane pairs, B→A bridges) —
@@ -2010,8 +2008,7 @@ object Similarity {
     val (aPairs, bPairs, bridges) = embedIncrementalEdges(spark, sfDir)
     val aLabels = embedEstateMemo(spark, sfDir)(
       Dedup.componentsOfPairs(aPairs)
-        .select(col("doc_id"), col("cluster_root"))
-        .localCheckpoint(eager = true))
+        .select(col("doc_id"), col("cluster_root")))
     Dedup.quotientMerge(aLabels, bPairs, graft.core.Mat(bridges))
       .select(col("doc_id").as("vec_id"), col("cluster_root"), col("cluster_size"))
   }

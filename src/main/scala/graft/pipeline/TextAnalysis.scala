@@ -416,8 +416,7 @@ object TextAnalysis {
     * artifacts map.
     */
   private[graft] def bm25Topn(spark: SparkSession, sfDir: String): DataFrame =
-    bm25Memo(spark, sfDir)(
-      bm25Build(spark, sfDir).localCheckpoint(eager = true))
+    bm25Memo(spark, sfDir)(bm25Build(spark, sfDir))
 
   private val bm25Memo = graft.core.Memo[DataFrame]("bm25_topn")
 

@@ -7,7 +7,6 @@ import graft.core.Dsl
 import graft.operators.{Anomaly, Cooldown, Extraction, WindowStats}
 import graft.operators.Extraction.FieldCol
 import graft.functions.SchemaFlatten
-import graft.core.Mat.MatOps
 
 /** The sarkac-core query surface over the driver's `events` table, each
   * paired with a DuckDB oracle (SparkEntry.oracleSql).
@@ -66,7 +65,7 @@ object CoreQueries {
     statsMemo(spark, sfDir)(
       WindowStats.rawTrailingStats(
         eventSamplesMat(spark, sfDir).select("topic", "path", "value", "produced"),
-        Windows, nowOfDataset(spark, sfDir)).localCheckpoint(eager = true))
+        Windows, nowOfDataset(spark, sfDir)))
 
   /** min(ts) twin of [[nowUsOfDataset]] (q_set_diff's anchor). */
   private val minUsMemo = graft.core.Memo[Long]("events_min_ts")
@@ -81,32 +80,17 @@ object CoreQueries {
     * deterministic per snapshot and was re-run — and re-checkpointed
     * via `.mat` — by every anomaly-family query per call. Queries that
     * don't need the id drop it; the relation is narrow (topic, path,
-    * value, produced, event_id).
+    * value, produced, event_id). The raw props payload deliberately
+    * does NOT ride the spine: it was ~25 of the checkpoint's 29 MB, and
+    * localCheckpoint readers pay full row width regardless of their
+    * projection. q_anomaly_records (the one consumer that needs it)
+    * attaches props post-detection by event identity instead (guide
+    * §8: decide on the narrow rows, attach the heavy bytes once).
     */
   private val samplesMemo = graft.core.Memo[DataFrame]("event_samples")
 
   def eventSamplesMat(spark: SparkSession, sfDir: String): DataFrame =
-    samplesMemo(spark, sfDir) {
-      val ev = Tables.events(spark, sfDir)
-      Extraction.longFormat(
-        Tables.spread(ev, col("event_id")),
-        topic = col("event_type"),
-        ts = col("ts"),
-        fields = Seq(
-          FieldCol("value", col("value")),
-          FieldCol("props.k", SchemaFlatten.jsonByPath(col("props"), "k").try_cast("double")),
-        ),
-        // event identity for the detection joins. The raw props
-        // payload deliberately does NOT ride the spine: it was ~25 of
-        // the checkpoint's 29 MB and localCheckpoint readers pay full
-        // row width regardless of their projection, so every family
-        // member re-deserialized the payload it never used.
-        // q_anomaly_records (the one consumer that needs it) attaches
-        // props post-detection by event identity instead (guide §8:
-        // decide on the narrow rows, attach the heavy bytes once).
-        carry = Seq("event_id" -> col("event_id")),
-      ).localCheckpoint(eager = true)
-    }
+    samplesMemo(spark, sfDir)(eventSamples(Tables.events(spark, sfDir), carryId = true))
 
   /** The two tracked fields of the events table in long format.
     * The input is spread first (Tables.spread): extraction JSON-parses

@@ -41,7 +41,6 @@ object DriftQueries {
         .join(broadcast(med).as("m"), col("e.event_type") === col("m.topic"))
         .groupBy(col("m.topic").as("topic"), col("m.med").as("med"))
         .agg(round(percentile(abs(col("e.value") - col("m.med")), lit(0.5)), 6).as("mad"))
-        .localCheckpoint(eager = true)
     }
 
   // ---- q_mad_anomaly -------------------------------------------------

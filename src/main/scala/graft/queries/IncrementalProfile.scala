@@ -104,8 +104,7 @@ object IncrementalProfile {
   private[queries] def stateA(spark: SparkSession, sfDir: String): DataFrame =
     stateMemoA(spark, sfDir)(
       stateOf(Tables.events(spark, sfDir)
-        .filter(coalesce(pmod(col("event_id"), lit(2)), lit(1L)) === 0))
-        .localCheckpoint(eager = true))
+        .filter(coalesce(pmod(col("event_id"), lit(2)), lit(1L)) === 0)))
 
   /** Snapshot B's state (odd or null event ids — the arriving crawl;
     * the coalesce keeps A ∪ B == the whole table even for null ids).
@@ -113,8 +112,7 @@ object IncrementalProfile {
   private[queries] def stateB(spark: SparkSession, sfDir: String): DataFrame =
     stateMemoB(spark, sfDir)(
       stateOf(Tables.events(spark, sfDir)
-        .filter(coalesce(pmod(col("event_id"), lit(2)), lit(1L)) =!= 0))
-        .localCheckpoint(eager = true))
+        .filter(coalesce(pmod(col("event_id"), lit(2)), lit(1L)) =!= 0)))
 
   private def kmvEstimate(nk: Column, kth: Column): Column =
     coalesce(

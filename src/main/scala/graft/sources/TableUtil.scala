@@ -79,8 +79,7 @@ private[graft] object TableUtil {
       spark.table(table)
         .groupBy(keys.map(col): _*).agg(count(lit(1)).as("c"))
         .filter(col("c") > cap)
-        .select(keys.map(col): _*)
-        .localCheckpoint(true))
+        .select(keys.map(col): _*))
   }
 
   // one entry per (dataset, family) index table a session gates against

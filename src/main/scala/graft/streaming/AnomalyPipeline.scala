@@ -29,7 +29,10 @@ import graft.operators.Extraction.FieldCol
   *  - **Cooldown** (lib/dsl/DSLHandler.js:13,200-210): a driver-held
   *    last-emit map per (topic, path, window) seeds, by broadcast, the
   *    distributed per-key greedy ([[CooldownState.greedyEmit]]); the map
-  *    is committed with the store in the trigger's state record.
+  *    is committed with the store in the trigger's state record, so the
+  *    next trigger's greedy continues where this one stopped. This map
+  *    is the stream's only cooldown state: there is no keyed
+  *    (flatMapGroupsWithState) form.
   *
   * A trigger computes, commits once, then publishes. With `stateDir`
   * the store is immutable segment dirs under `store/`, and

@@ -1,19 +1,15 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders}
-import org.apache.spark.sql.streaming.GroupState
-
-import graft.core.Dsl
-
-/** Streaming form of the anomaly re-emit cooldown (reference:
-  * lib/dsl/DSLHandler.js:13,200-210): keyed state holding the last
-  * emitted event-time per (topic, path, window_sec); an anomaly is
-  * emitted iff no anomaly for its key was emitted in the previous
-  * `cooldownMs` of event time.
+/** The anomaly re-emit cooldown (reference:
+  * lib/dsl/DSLHandler.js:13,200-210): an anomaly is emitted iff no
+  * anomaly for its (topic, path, window_sec) key was emitted in the
+  * previous `cooldownMs` of event time.
   *
-  * Used with `KeyValueGroupedDataset.flatMapGroupsWithState`; the batch
-  * oracle is [[graft.operators.Cooldown.applyBatch]] — the two are
-  * asserted equivalent on replayed input in StreamingSpec.
+  * [[AnomalyPipeline]] runs [[greedyEmit]] distributed per key, seeded
+  * with the last emit of the key that its state record carries across
+  * triggers; the batch oracle is [[graft.operators.Cooldown.applyBatch]]
+  * — CooldownStateSpec asserts the two equal on input replayed over two
+  * seeded calls.
   */
 object CooldownState {
 
@@ -29,13 +25,10 @@ object CooldownState {
       original_message: String = null,
   )
 
-  final case class LastEmit(lastEmitUs: Long)
-
-  /** The cooldown greedy itself, shared by the keyed-state streaming
-    * path ([[update]]) and the per-group distributed batch path
-    * (AnomalyPipeline.processBatch): sort by event time and emit rows
+  /** The cooldown greedy of one key: sort by event time and emit rows
     * >= `cooldownMs` past the last emitted one, starting from `last0`
-    * (`Long.MinValue` = no prior emission for the key).
+    * (`Long.MinValue` = no prior emission for the key). A later call
+    * seeded with the last emit of this one continues the same greedy.
     */
   def greedyEmit(
       cooldownMs: Long, last0: Long, rows: Iterator[AnomalyEvent],
@@ -50,32 +43,5 @@ object CooldownState {
       }
     }
     out.result()
-  }
-
-  /** Per-key state update: greedy emit continuing from the stored
-    * last-emit. State persists across triggers, so suppression spans
-    * micro-batches.
-    */
-  def update(
-      cooldownMs: Long,
-  )(key: (String, String, Long), rows: Iterator[AnomalyEvent], state: GroupState[LastEmit]): Iterator[AnomalyEvent] = {
-    val emitted =
-      greedyEmit(cooldownMs, state.getOption.map(_.lastEmitUs).getOrElse(Long.MinValue), rows)
-    if (emitted.nonEmpty) state.update(LastEmit(emitted.last.produced_us))
-    emitted.iterator
-  }
-
-  /** Apply over a (possibly streaming) typed Dataset. */
-  def apply(
-      ds: Dataset[AnomalyEvent],
-      cooldownMs: Long = Dsl.CooldownMs,
-      outputMode: org.apache.spark.sql.streaming.OutputMode = org.apache.spark.sql.streaming.OutputMode.Update(),
-  ): Dataset[AnomalyEvent] = {
-    import org.apache.spark.sql.streaming.GroupStateTimeout
-    implicit val keyEnc = Encoders.tuple(Encoders.STRING, Encoders.STRING, Encoders.scalaLong)
-    implicit val evEnc = Encoders.product[AnomalyEvent]
-    implicit val stateEnc = Encoders.product[LastEmit]
-    ds.groupByKey(e => (e.topic, e.path, e.window_sec))
-      .flatMapGroupsWithState(outputMode, GroupStateTimeout.NoTimeout)(update(cooldownMs))
   }
 }

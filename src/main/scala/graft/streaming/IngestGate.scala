@@ -153,8 +153,7 @@ object IngestGate {
   private def keeperMap(corpus: DataFrame, indexTable: String): DataFrame =
     keeperMemo(corpus.sparkSession,
         graft.sources.TableUtil.tableVersion(corpus.sparkSession, indexTable))(
-      corpus.groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("keeper"))
-        .localCheckpoint(eager = true))
+      corpus.groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("keeper")))
 
   /** The text gate's scored band rows BEFORE the per-doc collapse —
     * the shared leg [[verdicts]] consumes alone and [[admissionStream]]
@@ -569,8 +568,7 @@ object IngestGate {
     * map.
     */
   def estateAdmission(spark: SparkSession, sfDir: String): DataFrame =
-    admissionMemo(spark, sfDir)(
-      computeEstateAdmission(spark, sfDir).localCheckpoint(eager = true))
+    admissionMemo(spark, sfDir)(computeEstateAdmission(spark, sfDir))
 
   private val admissionMemo = graft.core.Memo[DataFrame]("estate_admission")
 

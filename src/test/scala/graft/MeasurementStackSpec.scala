@@ -23,6 +23,17 @@ class MeasurementStackSpec extends AnyFunSuite {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
+  test("only core/ materializes memo entries: no DatasetStore.persisted or Mat seam outside it") {
+    // a per-dataset artifact is a memo; Memo decides its checkpoint and
+    // its disk tier, and only core/ reads or sets the transparent seam
+    val core = java.nio.file.Paths.get("src/main/scala/graft/core")
+    val banned = Seq("DatasetStore.persisted", "Mat.isTransparent", "Mat.withTransparent")
+    val offenders = sources.collect {
+      case (f, text) if !f.startsWith(core) => banned.filter(text.contains).map(b => s"$f: $b")
+    }.flatten
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   test("def main( only in Bench, Verify, EntrySmoke, PlanAudit and StreamDemo") {
     val allowed = Set("Bench.scala", "Verify.scala", "EntrySmoke.scala", "PlanAudit.scala", "StreamDemo.scala")
     val offenders = sources.collect {

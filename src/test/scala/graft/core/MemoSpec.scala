@@ -2,6 +2,7 @@ package graft.core
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 import graft.SparkSpec
@@ -122,6 +123,69 @@ class MemoSpec extends SparkSpec {
     assert(builds == 3 && stored.queryExecution.analyzed.isInstanceOf[LogicalRDD])
     assert(get() eq stored)
     m.clear()
+  }
+
+  test("a plain build is stored as a checkpoint leaf, in a tuple too") {
+    val m = Memo[DataFrame]("memospec_plain")
+    val stored = m(spark, "k")(spark.range(0, 50, 1, 1).toDF("id").filter(col("id") % 2 === 0))
+    assert(stored.queryExecution.analyzed.isInstanceOf[LogicalRDD], "the memo must checkpoint the build")
+    assert(checkpointRdds(stored).forall(_.getStorageLevel != StorageLevel.NONE))
+    assert(stored.count() == 25L)
+    val pairs = Memo[(Long, DataFrame)]("memospec_plain_pair")
+    val (_, inPair) = pairs(spark, "k")((1L, spark.range(0, 8, 1, 1).toDF("id")))
+    assert(inPair.queryExecution.analyzed.isInstanceOf[LogicalRDD], "a tuple's frame is checkpointed too")
+    m.clear()
+    pairs.clear()
+  }
+
+  test("an already-checkpointed build is not checkpointed again") {
+    val m = Memo[DataFrame]("memospec_ckpt_once")
+    val built = spark.range(0, 10, 1, 1).toDF("id").localCheckpoint(eager = true)
+    val stored = m(spark, "k")(built)
+    val ids = checkpointRdds(stored).map(_.id)
+    assert(ids.size == 1, s"one checkpoint leaf expected, got $ids")
+    assert(ids == checkpointRdds(built).map(_.id), "the memo must keep the build's own checkpoint")
+    m.clear()
+  }
+
+  test("a transparent build is neither cached nor checkpointed") {
+    val m = Memo[DataFrame]("memospec_transparent_plain")
+    var builds = 0
+    def get() = m(spark, "k") { builds += 1; spark.range(5).toDF("id").filter(col("id") > 1) }
+    val seen = Mat.withTransparent()(get())
+    assert(checkpointRdds(seen).isEmpty, "the transparent build must carry its full plan")
+    assert(builds == 1 && m.snapshot.isEmpty, "a transparent build must never be cached")
+    assert(checkpointRdds(get()).nonEmpty && builds == 2)
+    m.clear()
+  }
+
+  test("a persisted entry is read from its store after releaseAll, under the DatasetStore name") {
+    val ds = java.nio.file.Files.createTempDirectory("memo_store").toString
+    spark.range(10).select(col("id"), (col("id") * 2).as("v"))
+      .coalesce(1).write.parquet(s"$ds/base.parquet")
+    val m = Memo.persisted("memospec_stored", version = "v1")
+    var builds = 0
+    def get() = m(spark, ds, "cap8") {
+      builds += 1
+      spark.read.parquet(s"$ds/base.parquet").filter(col("id") < 5)
+    }
+    // the name a DatasetStore.persisted(spark, ds, "memospec_stored_cap8", ...)
+    // call published under: existing stores stay readable
+    val dir = DatasetStore.warehousePath(spark)
+      .resolve(s"graft_memospec_stored_cap8_${ds.replaceAll("[^A-Za-z0-9]+", "_")}")
+    try {
+      val rows = get().collect().toSet
+      assert(builds == 1 && rows.size == 5)
+      assert(java.nio.file.Files.isRegularFile(dir.resolve("_graft_sig")), s"no store at $dir")
+      Memo.releaseAll()
+      val again = get()
+      assert(builds == 1, "the store must serve the entry after releaseAll, with no build")
+      assert(again.queryExecution.analyzed.isInstanceOf[LogicalRDD] && again.collect().toSet == rows)
+    } finally {
+      m.clear()
+      graft.sources.TableUtil.deletePath(dir.toString)
+      graft.sources.TableUtil.deletePath(ds)
+    }
   }
 
   test("a second memo under a taken name throws") {

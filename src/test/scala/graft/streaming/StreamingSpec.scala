@@ -186,6 +186,55 @@ class AnomalyPipelineSpec extends SparkSpec {
     assert(p.statsCache == Seq(("test-topic", "sub.one", 300L, mean, stddev)), p.statsCache)
   }
 
+  test("a field at 1e12 or more is judged and leaves the other fields' exact stats alone") {
+    // an epoch-millis leaf (about 1.7e12, a numeric leaf field discovery
+    // tracks) is past DECIMAL(18,6): under ANSI the exact path's input
+    // cast must not stop the stream
+    def msgs(fromSec: Long, toSec: Long, withBig: Boolean) =
+      (fromSec until toSec by 5).map { s =>
+        val one = if (s % 30 == 0 && s > 0) 150.5 else 15.5
+        val big = if (withBig) s""","ts_ms":${1700000000000L + s * 1000}""" else ""
+        ("test-topic", s"k$s", s"""{"sub":{"one":$one}$big}""", new Timestamp(t0 + s * 1000))
+      }.toDF("topic", "key", "value", "ts")
+    def run(withBig: Boolean) = {
+      val fields = Map("sub.one" -> Seq("5m")) ++ (if (withBig) Map("ts_ms" -> Seq("5m")) else Map.empty)
+      val p = new AnomalyPipeline(spark, Dsl.parse(Map("test-topic" -> fields)), cooldownMs = 0L)
+      p.processBatch(msgs(0, 60, withBig), new Timestamp(t0 + 60000))
+      val out = p.processBatch(msgs(60, 120, withBig), new Timestamp(t0 + 120000)).collect()
+      (p.statsCache, out.filter(_.path == "sub.one").map(e => (e.produced_us, e.value)).toSet)
+    }
+    val (stats, emitted) = run(withBig = true)
+    val (plain, plainEmitted) = run(withBig = false)
+    val big = stats.filter(_._2 == "ts_ms")
+    big.foreach { case (_, _, _, mean, sd) =>
+      assert(!mean.isNaN && !mean.isInfinite && !sd.isNaN && !sd.isInfinite, big)
+      // 24 samples, 1.7e12 + 0 s .. 115 s
+      assert(math.abs(mean - (1700000000000.0 + 57500.0)) < 1.0, big)
+    }
+    assert(stats.filter(_._2 == "sub.one") == plain.filter(_._2 == "sub.one"),
+      s"sub.one's stats moved: $stats vs $plain")
+    assert(plain.exists(_._2 == "sub.one") && emitted == plainEmitted && emitted.nonEmpty,
+      s"$emitted vs $plainEmitted")
+  }
+
+  test("a window whose sum of squares passes DECIMAL(38,12) is judged") {
+    // 2,000 samples of about 5e11: each value fits DECIMAL(18,6), but
+    // their squares sum to about 5e26, past the DECIMAL(38,12) sum
+    val dsl = Dsl.parse(Map("test-topic" -> Map("v" -> Seq("5m"))))
+    val p = new AnomalyPipeline(spark, dsl, cooldownMs = 0L)
+    def msgs(from: Int, to: Int) = (from until to).map { i =>
+      ("test-topic", s"k$i", s"""{"v":${500000000000L + i % 10}}""", new Timestamp(t0 + i * 100L))
+    }.toDF("topic", "key", "value", "ts")
+    p.processBatch(msgs(0, 2000), new Timestamp(t0 + 200000))
+    p.processBatch(msgs(2000, 2100), new Timestamp(t0 + 210000))
+    assert(p.storedEventCount == 2100L)
+    // the stats are finite, or the F7 gate drops a row whose variance
+    // rounds to zero at this magnitude
+    p.statsCache.foreach { case (_, _, _, mean, sd) =>
+      assert(!sd.isNaN && !sd.isInfinite && math.abs(mean - 500000000004.5) < 1.0, p.statsCache)
+    }
+  }
+
   test("empty batches and empty DSLs are harmless (no crash, no emission)") {
     val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"))))
     val p = new AnomalyPipeline(spark, dsl, cooldownMs = 0L)
@@ -273,7 +322,7 @@ class CooldownStateSpec extends SparkSpec {
   private def ev(sec: Long, topic: String = "t", path: String = "f") =
     CooldownState.AnomalyEvent(topic, path, 60L, sec * 1000000L, 1.0, 0.0, 1.0, 2.0)
 
-  test("streaming state function matches the batch oracle on replayed input") {
+  test("greedyEmit seeded across two calls matches the batch oracle on replayed input") {
     val events = Seq(0L, 60L, 119L, 121L, 300L).map(ev(_))
     // batch oracle
     val batchDf = events.map(e => (e.topic, e.path, e.window_sec,
@@ -281,19 +330,12 @@ class CooldownStateSpec extends SparkSpec {
       .toDF("topic", "path", "window_sec", "produced", "value")
     val oracle = Cooldown.applyBatch(batchDf, cooldownMs = 120000L)
       .collect().map(_.getAs[Timestamp]("produced").getTime * 1000).sorted
-    // streaming state fn over a MemoryStream
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[CooldownState.AnomalyEvent]
-    val out = CooldownState(mem.toDS(), cooldownMs = 120000L)
-    val q = out.writeStream.format("memory").queryName("cooldown_out")
-      .outputMode("update").start()
-    mem.addData(events.take(2)) // 0s, 60s in trigger 1
-    q.processAllAvailable()
-    mem.addData(events.drop(2)) // 119s, 121s, 300s in trigger 2
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.table("cooldown_out").collect().map(_.getAs[Long]("produced_us")).sorted
-    assert(got.toSeq == oracle.toSeq, "streaming cooldown != batch oracle")
+    // the pipeline's cross-trigger contract: call 1 gets 0 s and 60 s;
+    // call 2 is seeded with call 1's last emit and gets 119 s, 121 s, 300 s
+    val first = CooldownState.greedyEmit(120000L, Long.MinValue, events.take(2).iterator)
+    val second = CooldownState.greedyEmit(120000L, first.last.produced_us, events.drop(2).iterator)
+    val got = (first ++ second).map(_.produced_us).sorted
+    assert(got.toSeq == oracle.toSeq, "seeded greedy != batch oracle")
     assert(got.toSeq == Seq(0L, 121000000L, 300000000L))
   }
 }
