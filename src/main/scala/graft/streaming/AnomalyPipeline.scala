@@ -2,7 +2,10 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import scala.collection.mutable.ListBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
 import org.apache.spark.sql.types.{StructType, TimestampType}
@@ -59,12 +62,14 @@ class AnomalyPipeline(
 
   import spark.implicits._
 
-  /** One store segment: its cached chunk, max event time, and (with
-    * `stateDir`) the IMMUTABLE parquet directory persisting it. State
-    * I/O is per-segment: each trigger appends one O(batch) directory
-    * and deletes expired ones — never an O(store) rewrite (the
+  /** One store segment: its cached chunk, max event time, row count,
+    * and (with `stateDir`) the IMMUTABLE parquet directory persisting
+    * it. State I/O is per-segment: each trigger appends one O(batch)
+    * directory and deletes expired ones — never an O(store) rewrite (the
     * overwrite-whole-store form would dominate every trigger once the
-    * retention horizon holds much more than a batch).
+    * retention horizon holds much more than a batch). The cached row
+    * count makes storedEventCount a driver-side sum instead of a
+    * per-scrape Spark job.
     */
   private final case class Segment(maxTsUs: Long, df: DataFrame, rows: Long, path: Option[String] = None) {
     def release(): Unit = { df.unpersist(); path.foreach(AnomalyPipeline.deletePath(spark, _)) }
@@ -76,16 +81,6 @@ class AnomalyPipeline(
     * truncate. Readers take no lock; they read the published references.
     */
   private[streaming] val triggerLock = new Object
-
-  /** Build a segment from a (persisted or checkpointed) chunk, reading
-    * its max event time and row count (which materializes the cache;
-    * the cached count also makes storedEventCount a driver-side sum
-    * instead of a per-scrape Spark job).
-    */
-  private def mkSegment(df: DataFrame): Segment = {
-    val agg = df.agg(max(unix_micros(col("produced"))), count(lit(1))).head()
-    Segment(if (agg.isNullAt(0)) Long.MinValue else agg.getLong(0), df, agg.getLong(1))
-  }
 
   @transient private lazy val log = org.slf4j.LoggerFactory.getLogger(classOf[AnomalyPipeline])
 
@@ -155,9 +150,10 @@ class AnomalyPipeline(
     * event-time micros — the Spark analog of the reference's in-memory
     * TTL cache (lib/dsl/DSLHandler.js:13). The per-batch greedy itself
     * runs DISTRIBUTED (per-key flatMapGroups seeded by a broadcast of
-    * this map); the map is refreshed from a per-key max aggregate — one
-    * row per configured (topic, path, window), never the anomaly rows
-    * themselves — and committed in the state record.
+    * this map); the map is refreshed from the last emit per key that the
+    * greedy's tasks report — one entry per configured (topic, path,
+    * window), never the anomaly rows themselves — and committed in the
+    * state record.
     */
   private val cooldownCache = new AtomicReference(Map.empty[(String, String, Long), Long])
 
@@ -174,6 +170,11 @@ class AnomalyPipeline(
       t.fields.iterator.flatMap(f => f.windows.iterator.map(w => (t.topic, f.path, w)))).toSet
 
   private val windows: Seq[Long] = dsl.topics.flatMap(_.fields.flatMap(_.windows)).distinct
+
+  /** No field is configured: the extraction is empty, and the optimizer
+    * prunes the batch out of its plan, so no job runs it.
+    */
+  private val extractsNothing = dsl.topics.forall(_.fields.isEmpty)
 
   stateDir.foreach(restore)
 
@@ -230,13 +231,32 @@ class AnomalyPipeline(
       _.cooldown.filter { case (k, _) => configuredKeys(k) }))
   }
 
-  /** Collision-proof persisted-segment directory name: the max
-    * event-time alone can repeat across restarts (coarse timestamps) and
-    * the trigger counter resets, so a random suffix prevents a new
-    * segment from silently overwriting a restored one's directory.
+  /** An observation of `metric`, its name unique: a segment's plan
+    * keeps the observations it was built under, and the store's union of
+    * segments may not define one name twice.
     */
-  private def segDirName(maxTsUs: Long): String =
-    s"seg_${maxTsUs}_${java.util.UUID.randomUUID().toString.take(8)}"
+  private def observation(metric: String): Observation =
+    Observation(s"$metric ${java.util.UUID.randomUUID()}")
+
+  /** Make a segment of the cached chunk `df` by its one action, which
+    * also fills the cache: with `stateDir`, the write of the segment's
+    * own immutable parquet dir (O(batch) state I/O, never an O(store)
+    * rewrite); without, a noop write. Its max event time and row count
+    * are observed on that write. The segment is in `made` before the
+    * write, so a trigger that fails releases its cache and dir. The dir
+    * name is random: the max event time is known only once the dir is
+    * written, and the record carries it.
+    */
+  private def materialize(df: DataFrame, made: ListBuffer[Segment]): Segment = {
+    val seg = Segment(Long.MinValue, df, 0L,
+      stateDir.map(d => s"$d/store/seg_${java.util.UUID.randomUUID()}"))
+    made += seg
+    val o = observation("segment max event time and row count")
+    val w = df.observe(o, max(unix_micros(col("produced"))), count(lit(1))).write
+    seg.path.fold(w.format("noop").mode("overwrite").save())(w.mode("error").parquet(_))
+    val r = AnomalyPipeline.observed(o)
+    seg.copy(maxTsUs = if (r.isNullAt(0)) Long.MinValue else r.getLong(0), rows = r.getLong(1))
+  }
 
   private def unixMicrosOf(t: java.sql.Timestamp): Long =
     t.getTime * 1000L + (t.getNanos % 1000000) / 1000L
@@ -311,27 +331,33 @@ class AnomalyPipeline(
     * state record once (6), then publishes (7) and releases what it
     * superseded (8). A trigger that throws before its commit publishes
     * nothing and releases the segments it wrote, cache and dir alike.
+    * No job only counts or collects: each count rides a job the trigger
+    * runs anyway — the analysed messages and the segment's max event
+    * time and row count ride the segment's write (step 2), the compacted
+    * row count the compaction's write (3), and the detected count and
+    * the new last emit per key the cooldown greedy (5).
     */
   def processBatch(batch: DataFrame, now: java.sql.Timestamp): Dataset[CooldownState.AnomalyEvent] =
     triggerLock.synchronized {
       // the segments this trigger makes, released if it fails before publishing them
-      val made = scala.collection.mutable.ListBuffer.empty[Segment]
+      val made = ListBuffer.empty[Segment]
       try trigger(batch, now, made)
       catch { case e: Throwable => made.foreach(_.release()); throw e }
     }
 
   private def trigger(
-      batch: DataFrame, now: java.sql.Timestamp, made: scala.collection.mutable.ListBuffer[Segment],
+      batch: DataFrame, now: java.sql.Timestamp, made: ListBuffer[Segment],
   ): Dataset[CooldownState.AnomalyEvent] = {
-    counters.analysedMessages.add(batch.count())
-
     // single-pass long-format projection: one plan regardless of
     // topic count (broadcast (topic, path) dim -> get_json_object on the
     // joined path), carrying the raw payload for originalMessage.
     // Persisted for the batch: it feeds the detection join AND the store
-    // segment, so json extraction runs once.
+    // segment, so json extraction runs once. The analysed count is
+    // observed on the job that first fills the cache (step 2's write).
+    val analysed = observation("analysed messages")
     val extracted = Extraction.fromJsonMessagesMulti(
-        batch, col("topic"), col("value"), col("ts"),
+        if (extractsNothing) batch else batch.observe(analysed, count(lit(1))),
+        col("topic"), col("value"), col("ts"),
         dsl.topics.map(tc => tc.topic -> tc.fields.map(_.path)),
         carry = Seq("original_message" -> col("value")))
       .persist()
@@ -349,34 +375,15 @@ class AnomalyPipeline(
     val previous = snapshot.get().orElse(
       if (live0.isEmpty || windows.isEmpty) None
       else Some(computeStats(live0, now, horizonUs).localCheckpoint(eager = true)))
-    val anomalies: Dataset[CooldownState.AnomalyEvent] = previous match {
-      case None => spark.emptyDataset[CooldownState.AnomalyEvent]
-      case Some(stats) =>
-        Anomaly.detect(extracted, stats, Param.timestamp(now))
-          .select(
-            col("topic"), col("path"), col("window_sec"),
-            unix_micros(col("produced")).as("produced_us"),
-            col("value"), col("mean"), col("stddev_pop"), col("three_sigma"),
-            col("original_message"))
-          .as[CooldownState.AnomalyEvent]
-    }
-
-    // track a segment this trigger made; with `stateDir` and `withDir`,
-    // write it as its own immutable parquet dir — O(batch) state I/O per
-    // trigger, never an O(store) rewrite
-    def track(s: Segment, withDir: Boolean): Segment = {
-      val m = (if (withDir) stateDir else None)
-        .fold(s)(d => s.copy(path = Some(s"$d/store/${segDirName(s.maxTsUs)}")))
-      made += m
-      m.path.foreach(m.df.write.mode("error").parquet(_))
-      m
-    }
 
     // 2. fold the batch in as a new cached segment (narrow: the raw
     // payload is NOT stored — stats only need (topic, path, value,
-    // produced)); one already past the retention horizon gets no dir
-    val seg0 = mkSegment(extracted.select("topic", "path", "value", "produced").persist())
-    val seg = track(seg0, withDir = seg0.maxTsUs >= horizonUs)
+    // produced)). Its write fills both caches; a batch already past the
+    // retention horizon expires at once (step 3), so the committed
+    // record never lists its dir
+    val seg = materialize(extracted.select("topic", "path", "value", "produced").persist(), made)
+    counters.analysedMessages.add(
+      if (extractsNothing) batch.count() else AnomalyPipeline.observed(analysed).getLong(0))
 
     // 3. drop whole segments that fell entirely outside the retention
     // horizon — no rewrite of surviving data. LSM-style compaction: when
@@ -390,8 +397,7 @@ class AnomalyPipeline(
         val all = storeOf(keep)
           .filter(unix_micros(col("produced")) >= Param.long(horizonUs))
           .localCheckpoint(eager = true)
-        (Vector(track(Segment(keep.map(_.maxTsUs).max, all, all.count()), withDir = true)),
-          expired ++ keep)
+        (Vector(materialize(all, made)), expired ++ keep)
       } else (keep, expired)
 
     // 4. the snapshot for the NEXT trigger, over the new live set
@@ -400,34 +406,19 @@ class AnomalyPipeline(
       else Some(computeStats(live, now, horizonUs).localCheckpoint(eager = true))
     counters.scanRuns.add(1)
 
-    // 5. cooldown across triggers: the shared greedy
-    // (CooldownState.greedyEmit) runs DISTRIBUTED per (topic, path,
-    // window) group, seeded by a broadcast of the driver-held last-emit
-    // map — a regime shift that flags most of a batch stays on the
-    // executors. localCheckpoint severs the result from the transient
-    // foreachBatch source so callers can consume it after this method.
-    val detected = anomalies.persist()
-    counters.anomaliesDetected.add(detected.count())
-    val cacheB = spark.sparkContext.broadcast(cooldownCache.get())
-    val cd = cooldownMs
-    val emitted = detected
-      .groupByKey(e => (e.topic, e.path, e.window_sec))
-      .flatMapGroups { (key: (String, String, Long), rows: Iterator[CooldownState.AnomalyEvent]) =>
-        CooldownState.greedyEmit(cd, cacheB.value.getOrElse(key, Long.MinValue), rows).iterator
-      }
-      .localCheckpoint(eager = true)
-    detected.unpersist()
-    // the greedy has run (emitted is materialized) — release the
-    // broadcast instead of leaking one per trigger over a long run
-    cacheB.destroy()
-
-    // the new last-emit map from the per-key max aggregate: one row per
-    // configured key, config-bounded cardinality
-    var cache = cooldownCache.get()
-    emitted.groupBy(col("topic"), col("path"), col("window_sec"))
-      .agg(max(col("produced_us")).as("last_us"))
-      .collect()
-      .foreach(r => cache += ((r.getString(0), r.getString(1), r.getLong(2)) -> r.getLong(3)))
+    // 5. detect against step 1's snapshot, then the cooldown across triggers
+    val (emitted, cache) = previous match {
+      case None => (spark.emptyDataset[CooldownState.AnomalyEvent], cooldownCache.get())
+      case Some(prev) =>
+        cooldown(
+          Anomaly.detect(extracted, prev, Param.timestamp(now))
+            .select(
+              col("topic"), col("path"), col("window_sec"),
+              unix_micros(col("produced")).as("produced_us"),
+              col("value"), col("mean"), col("stddev_pop"), col("three_sigma"),
+              col("original_message"))
+            .as[CooldownState.AnomalyEvent])
+    }
     require(cache.size <= configuredKeys.size,
       s"cooldown cache holds ${cache.size} keys but the DSL configures " +
         s"${configuredKeys.size} — driver-held state must stay config-bounded")
@@ -448,6 +439,40 @@ class AnomalyPipeline(
     emitted
   }
 
+  /** The cooldown greedy (CooldownState.greedyEmit) runs DISTRIBUTED per
+    * (topic, path, window) group, seeded by a broadcast of the
+    * driver-held last-emit map — a regime shift that flags most
+    * of a batch stays on the executors. localCheckpoint severs the
+    * result from the transient foreachBatch source so callers can
+    * consume it after the trigger. The greedy's job also carries the
+    * detected count (an observation on its input) and each key's new
+    * last emit (an accumulator entry per key that emitted; a recomputed
+    * group repeats its entry, which the per-key max absorbs). Returns
+    * the emitted anomalies and the new last-emit map.
+    */
+  private def cooldown(
+      anomalies: Dataset[CooldownState.AnomalyEvent],
+  ): (Dataset[CooldownState.AnomalyEvent], Map[(String, String, Long), Long]) = {
+    val last = cooldownCache.get()
+    val detected = observation("detected anomalies")
+    val lastEmits = spark.sparkContext.collectionAccumulator[((String, String, Long), Long)]
+    val lastB = spark.sparkContext.broadcast(last)
+    val cd = cooldownMs
+    val emitted = anomalies.observe(detected, count(lit(1)))
+      .groupByKey(e => (e.topic, e.path, e.window_sec))
+      .flatMapGroups { (key: (String, String, Long), rows: Iterator[CooldownState.AnomalyEvent]) =>
+        val out = CooldownState.greedyEmit(cd, lastB.value.getOrElse(key, Long.MinValue), rows)
+        out.lastOption.foreach(e => lastEmits.add(key -> e.produced_us))
+        out.iterator
+      }
+      .localCheckpoint(eager = true)
+    // the greedy has run (emitted is materialized) — release the
+    // broadcast instead of leaking one per trigger over a long run
+    lastB.destroy()
+    counters.anomaliesDetected.add(AnomalyPipeline.observed(detected).getLong(0))
+    (emitted, last ++ lastEmits.value.asScala.groupMapReduce(_._1)(_._2)(math.max))
+  }
+
   /** Shape emitted anomalies like the reference's output record
     * (lib/dsl/DSLHandler.js:217-227): id hash, humanWindow,
     * originalMessage, etc. The humanWindow map is built from the DSL's
@@ -461,6 +486,23 @@ object AnomalyPipeline {
 
   /** Segment-count threshold that triggers store compaction. */
   val CompactSegments = 12
+
+  /** How long [[observed]] waits for an observation's metrics. */
+  private[streaming] val ObservationWait: scala.concurrent.duration.FiniteDuration =
+    scala.concurrent.duration.FiniteDuration(30, "seconds")
+
+  /** The metrics of `o`, which the listener bus delivers shortly after
+    * the action that ran the observed plan. `Observation.get` waits
+    * without a bound, so an observation no action ran would hang the
+    * trigger; this throws after [[ObservationWait]] instead, naming it.
+    */
+  private[streaming] def observed(o: Observation): Row =
+    try scala.concurrent.Await.result(o.future, ObservationWait)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"observation '${o.name}' was not delivered within $ObservationWait: no action ran its plan")
+    }
 
   /** The stream's one state record, `store/_MANIFEST`: the live
     * segments (dir name, max event-time micros, row count) and the

@@ -252,6 +252,92 @@ class AnomalyPipelineSpec extends SparkSpec {
     assert(pEmpty.storedEventCount == 0L)
   }
 
+  // four triggers of a two-field DSL (retention 300 s): odd rows the
+  // guards drop, two sub.one spikes 30 s apart (the second inside the
+  // 120 s cooldown), an empty batch, and a batch already past the
+  // retention horizon on arrival (now 400 s, horizon 100 s)
+  private val counterBatches: Seq[(Seq[(String, String, String, Timestamp)], Long)] = Seq(
+    (generatorScript(0, 60) ++ Seq(
+      ("other-topic", "ku", """{"sub":{"one":1.0},"two":2}""", new Timestamp(t0 + 10000)), // unconfigured
+      ("test-topic", "km", """{"sub":{"one":""", new Timestamp(t0 + 20000))), 60L), // malformed payload
+    (generatorScript(60, 120), 120L),
+    (Seq.empty, 180L),
+    (generatorScript(0, 60), 400L))
+
+  for (durable <- Seq(false, true))
+    test(s"per-trigger counters, cooldown and state record over odd batches (stateDir ${if (durable) "on" else "off"})") {
+      val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"), "two" -> Seq("5m"))))
+      val dir = if (durable) Some(java.nio.file.Files.createTempDirectory("graft_counters").toFile.getAbsolutePath)
+        else None
+      val p = new AnomalyPipeline(spark, dsl, stateDir = dir)
+      // without a cooldown every detection is emitted: the detections
+      val uncooled = new AnomalyPipeline(spark, dsl, cooldownMs = 0L)
+      val key = ("test-topic", "sub.one", 300L)
+      val us = (sec: Long) => (t0 + sec * 1000) * 1000L
+      val expected = Seq( // (stored rows, cooldown map, committed (max event time, rows) per segment)
+        (24L, Map.empty[(String, String, Long), Long], Seq(us(55) -> 24L)),
+        (48L, Map(key -> us(60)), Seq(us(55) -> 24L, us(115) -> 24L)),
+        (48L, Map(key -> us(60)), Seq(us(55) -> 24L, us(115) -> 24L)),
+        (24L, Map(key -> us(60)), Seq(us(115) -> 24L)))
+      val detections = counterBatches.zip(expected).zipWithIndex.map { case (((rows, nowSec), (stored, cd, segs)), i) =>
+        val before = (p.counters.analysedMessages.value, p.counters.anomaliesDetected.value)
+        val now = new Timestamp(t0 + nowSec * 1000)
+        val emitted = p.processBatch(rows.toDF("topic", "key", "value", "ts"), now).collect()
+        val detected = uncooled.processBatch(rows.toDF("topic", "key", "value", "ts"), now).collect()
+        assert(p.counters.analysedMessages.value - before._1 == rows.size, s"trigger $i analysed")
+        assert(p.counters.anomaliesDetected.value - before._2 == detected.length, s"trigger $i detected")
+        assert(p.storedEventCount == stored, s"trigger $i stored")
+        assert(p.cooldownSnapshot == cd, s"trigger $i cooldown")
+        dir.foreach { d =>
+          val rec = AnomalyPipeline.StateRecord.decode(new String(
+            java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$d/store/_MANIFEST")), "UTF-8"))
+          assert(rec.segments.map(s => s._2 -> s._3).sorted == segs, s"trigger $i record segments")
+          assert(rec.cooldown == cd, s"trigger $i record cooldown")
+        }
+        (detected.length, emitted.length, emitted.map(e => (e.topic, e.path, e.window_sec)).toSet)
+      }
+      // trigger 2: both sub.one spikes are detected, the cooldown emits the first
+      assert(detections(1)._1 == 2 && detections(1)._2 == 1 && detections(1)._3 == Set(key), detections)
+      assert(detections.map(_._1) == Seq(0, 2, 0, 0), detections)
+    }
+
+  test("a steady trigger runs 12 Spark jobs, its sink's collect included") {
+    // the counts and the last-emit map ride jobs the trigger runs anyway
+    val sc = spark.sparkContext
+    val dsl = Dsl.parse(Map("test-topic" -> Map("sub.one" -> Seq("5m"), "two" -> Seq("5m"))))
+    val dir = java.nio.file.Files.createTempDirectory("graft_jobs").toFile.getAbsolutePath
+    val p = new AnomalyPipeline(spark, dsl, cooldownMs = 120000L, stateDir = Some(dir))
+    val tag = "graft.spec.trigger"
+    val jobs = scala.collection.concurrent.TrieMap.empty[String, Int]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(pr => Option(pr.getProperty(tag)))
+          .foreach(t => jobs(t) = jobs.getOrElse(t, 0) + 1) // one listener-bus thread
+    }
+    sc.addSparkListener(listener)
+    try (0 until 4).foreach { tr =>
+      sc.setLocalProperty(tag, s"trigger-$tr")
+      try {
+        val emitted = p.processBatch(
+          generatorScript(tr * 60L, (tr + 1) * 60L).toDF("topic", "key", "value", "ts"),
+          new Timestamp(t0 + (tr + 1) * 60000L))
+        p.toAnomalyRecords(emitted).collect()
+      } finally sc.setLocalProperty(tag, null)
+    } finally {
+      org.apache.spark.sql.graftbridge.ListenerBridge.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    val perTrigger = (0 until 4).map(tr => jobs.getOrElse(s"trigger-$tr", 0))
+    assert(perTrigger.drop(2) == Seq(12, 12), s"jobs per trigger: $perTrigger")
+  }
+
+  test("an observation no action ran fails the wait, naming its metric") {
+    val o = org.apache.spark.sql.Observation("never-run rows")
+    spark.range(3).observe(o, count(lit(1))) // observed, never run
+    val e = intercept[IllegalStateException](AnomalyPipeline.observed(o))
+    assert(e.getMessage.contains("never-run rows"), e.getMessage)
+  }
+
   test("beforeMessageProcessing hook: alter, drop, and error per message (H1)") {
     val counters = new Counters(spark)
     val batch = Seq(
